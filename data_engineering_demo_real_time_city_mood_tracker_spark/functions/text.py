@@ -86,10 +86,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     """fraction of characters that are not alphanumeric/space."""
     stripped = F.regexp_replace(text, r"[a-zA-Z0-9 ]", "")
@@ -107,12 +103,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
 def fingerprint(text: Column) -> Column:
     """md5 of the normalized text — exact-dup key (engine-portable)."""
     return F.md5(normalize(text))
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    """stopword-hit count per candidate language."""
-    toks = tokens(text)
-    return lang_scores_from_tokens(toks)
 
 
 def lang_scores_from_tokens(toks: Column) -> dict[str, Column]:

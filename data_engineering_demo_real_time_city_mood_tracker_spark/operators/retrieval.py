@@ -131,18 +131,6 @@ def bm25_rank(
     return release_after(out, tf)
 
 
-def _postings(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, tok, tf, dl) term-frequency postings — ONE tokenize
-    pass, one (doc, token)-keyed shuffle."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import tokens
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
-
-    base = _spread(docs).select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_toks")
-    )
-    return _postings_from_base(base)
-
-
 def _postings_from_base(base: DataFrame) -> DataFrame:
     """postings from an already-tokenized (doc_id, _toks) frame — split
     out so build_text_index can pin an Observation on the pre-explode

@@ -2,6 +2,13 @@
 ``(spark, sf_dir) -> DataFrame`` callable plus (where SQL-expressible)
 a DuckDB oracle producing byte-identical values.
 
+One definition per query: a query is its SQL string
+(``register_sql``) when that string analyzes in Spark with the
+builder's physical plan — Spark then runs the oracle text itself. A
+DataFrame builder (``@register``) is kept only when the plan needs it
+(a join order or pre-aggregation the SQL does not state) or when it
+exercises a package operator or source.
+
 Engine-parity rules used throughout (see SURVEY.md §3/§5):
 - money/metric sums go through ``CAST(x AS DECIMAL(18,s))`` so the sum
   is exact and partition-order independent; the final value is cast to
@@ -20,7 +27,7 @@ The ``events`` table stands in for the reference's three Kafka streams
 
 from __future__ import annotations
 
-import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,6 +52,7 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.operators import (
     similarity,
     windows,
 )
+from data_engineering_demo_real_time_city_mood_tracker_spark.schemas import TESTDATA_TABLES
 from data_engineering_demo_real_time_city_mood_tracker_spark.session import ensure_shipped
 from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
 
@@ -69,6 +77,24 @@ def register(name: str, oracle: str | None = None):
         return wrapped
 
     return deco
+
+
+def _table_views(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
+    for t in tables:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+
+
+def register_sql(name: str, sql: str) -> None:
+    """Define a query by its oracle SQL alone: Spark runs the same text
+    over temp views of just the testdata tables it names."""
+    tables = [t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", sql)]
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _table_views(spark, sf_dir, tables)
+        return spark.sql(sql)
+
+    QUERIES[name] = run
+    ORACLES[name] = sql
 
 
 # --------------------------------------------------------------------------
@@ -166,18 +192,6 @@ def _views(spark, sf_dir):
         F.element_at(F.array(*[F.lit(c) for c in WEATHER_CODES]), (k % 22) + 1).alias(
             "weather"
         ),
-    )
-
-
-def _errors(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    return ev.filter(F.col("event_type") == "error").select(
-        "event_id",
-        F.date_trunc("minute", "ts").alias("minute"),
-        F.when(F.col("value") < 150, "negative")
-        .when(F.col("value") < 300, "neutral")
-        .otherwise("positive")
-        .alias("sentiment"),
     )
 
 
@@ -450,7 +464,8 @@ def q_mood_distribution(spark, sf_dir):
 # general OLAP
 
 
-@register(
+# TPC-H Q1-style pricing summary: one scan-filter-agg shuffle, pruned at the scan.
+register_sql(
     "pricing_summary",
     """SELECT l_returnflag, l_linestatus,
        SUM(l_quantity) AS sum_qty,
@@ -465,34 +480,10 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2000-12-01'
 GROUP BY l_returnflag, l_linestatus""",
 )
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-style pricing summary. Scan-heavy single-shuffle agg;
-    filter + column pruning push into the parquet scan."""
-    li = load_table(spark, sf_dir, "lineitem")
-    dec2 = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    disc_price = dec2("l_extendedprice") * (F.lit(1) - dec2("l_discount"))
-    charge = disc_price.cast("decimal(18,4)") * (F.lit(1) + dec2("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            F.sum(charge).cast("double").alias("sum_charge"),
-            (F.sum("l_quantity").cast("double") / F.count("l_quantity")).alias(
-                "avg_qty"
-            ),
-            (dsum(F.col("l_extendedprice")) / F.count("l_extendedprice")).alias(
-                "avg_price"
-            ),
-            (dsum(F.col("l_discount")) / F.count("l_discount")).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
 
 
-@register(
+# TPC-H Q10-style top-N; the sort is on exact decimals, so the LIMIT is deterministic.
+register_sql(
     "top_customers",
     """SELECT c_custkey, c_name,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -503,23 +494,6 @@ GROUP BY c_custkey, c_name
 ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) DESC, c_custkey
 LIMIT 20""",
 )
-def q_top_customers(spark, sf_dir):
-    """Q10-style revenue top-N. customer is tiny relative to lineitem →
-    broadcast; sort is on exact decimals so the LIMIT is deterministic."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    dec2 = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    rev = F.sum(dec2("l_extendedprice") * (F.lit(1) - dec2("l_discount")))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(rev.alias("rev_dec"))
-        .orderBy(F.col("rev_dec").desc(), F.col("c_custkey"))
-        .limit(20)
-        .select("c_custkey", "c_name", F.col("rev_dec").cast("double").alias("revenue"))
-    )
 
 
 @register(
@@ -556,7 +530,8 @@ def q_regional_revenue(spark, sf_dir):
     )
 
 
-@register(
+# TPC-H Q4-style EXISTS, planned as a left-semi join.
+register_sql(
     "order_priority",
     """SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders
@@ -566,19 +541,10 @@ WHERE EXISTS (
 )
 GROUP BY o_orderpriority""",
 )
-def q_order_priority(spark, sf_dir):
-    """Q4-style EXISTS → left-semi join."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    sel = orders.join(
-        li,
-        (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
-        "left_semi",
-    )
-    return sel.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("order_count"))
 
 
-@register(
+# TPC-H Q3-style: the segment and date filters push into the scans before the joins.
+register_sql(
     "shipping_priority",
     """SELECT l_orderkey, o_orderdate, o_orderpriority,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -592,38 +558,10 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) DESC, l_orderkey
 LIMIT 10""",
 )
-def q_shipping_priority(spark, sf_dir):
-    """TPC-H Q3-style: unshipped high-revenue orders for one segment.
-    Segment filter prunes customer before its broadcast; both date
-    filters push into the scans."""
-    cust = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1999-01-01").cast("timestamp")
-    )
-    dec2 = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    rev = F.sum(dec2("l_extendedprice") * (F.lit(1) - dec2("l_discount")))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(rev.alias("rev_dec"))
-        .orderBy(F.col("rev_dec").desc(), "l_orderkey")
-        .limit(10)
-        .select(
-            "l_orderkey",
-            "o_orderdate",
-            "o_orderpriority",
-            F.col("rev_dec").cast("double").alias("revenue"),
-        )
-    )
 
 
-@register(
+# TPC-H Q6-style: every predicate pushes to the scan; no data rows shuffle.
+register_sql(
     "revenue_filter",
     """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
        COUNT(*) AS n_items
@@ -631,26 +569,10 @@ FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
   AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""",
 )
-def q_revenue_filter(spark, sf_dir):
-    """TPC-H Q6-style scan-filter-agg: every predicate pushes to the
-    parquet scan; one partial+final agg, no shuffle of data rows."""
-    li = load_table(spark, sf_dir, "lineitem")
-    dec2 = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("l_discount") >= 0.03)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.sum(dec2("l_extendedprice") * dec2("l_discount"))
-        .cast("double")
-        .alias("revenue"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
 
 
-@register(
+# TPC-H Q18-style large-volume orders (HAVING over a join aggregate).
+register_sql(
     "big_orders",
     """SELECT c_name, o_orderkey, o_orderdate, o_totalprice,
        SUM(l_quantity) AS total_qty
@@ -660,39 +582,20 @@ JOIN lineitem ON l_orderkey = o_orderkey
 GROUP BY c_name, o_orderkey, o_orderdate, o_totalprice
 HAVING SUM(l_quantity) > 300""",
 )
-def q_big_orders(spark, sf_dir):
-    """TPC-H Q18-style large-volume orders (HAVING over a join agg)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_name", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 300)
-    )
 
 
-@register(
+# NOT EXISTS, planned as a left-anti join (orphan orders per status).
+register_sql(
     "orders_no_lineitem",
     """SELECT o_orderstatus, COUNT(*) AS n_orders
 FROM orders o
 WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
 GROUP BY o_orderstatus""",
 )
-def q_orders_no_lineitem(spark, sf_dir):
-    """NOT EXISTS → left-anti join (orphan orders per status)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey, "left_anti")
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
 
 
-@register(
+# part broadcasts, so lineitem never shuffles before the small final agg on brand.
+register_sql(
     "brand_revenue",
     """SELECT p_brand,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -700,23 +603,6 @@ def q_orders_no_lineitem(spark, sf_dir):
 FROM lineitem JOIN part ON l_partkey = p_partkey
 GROUP BY p_brand""",
 )
-def q_brand_revenue(spark, sf_dir):
-    """dim-join rollup: part broadcasts, lineitem never shuffles before
-    the (tiny) final agg on brand."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    dec2 = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.sum(dec2("l_extendedprice") * (F.lit(1) - dec2("l_discount")))
-            .cast("double")
-            .alias("revenue"),
-            F.sum("l_quantity").alias("total_qty"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
 
 
 @register(
@@ -994,7 +880,8 @@ def q_event_type_pivot(spark, sf_dir):
     )
 
 
-@register(
+# MERGE-style upsert: latest change per key full-outer-joined onto the snapshot.
+register_sql(
     "dim_upsert",
     """WITH latest AS (
   SELECT o_custkey AS c_custkey, o_totalprice AS new_balance
@@ -1011,39 +898,10 @@ SELECT COALESCE(c.c_custkey, latest.c_custkey) AS c_custkey,
        new_balance IS NOT NULL AS updated
 FROM customer c FULL OUTER JOIN latest ON c.c_custkey = latest.c_custkey""",
 )
-def q_dim_upsert(spark, sf_dir):
-    """MERGE-style dimension upsert without a table format: the latest
-    change per key (window, deterministic tie-break) full-outer-joined
-    onto the snapshot, COALESCE picking new-over-old — matched rows
-    update, unmatched changes insert, untouched rows carry forward.
-    Change-log dedup and join both shuffle on the same key."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= "2001-01-01"
-    )
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    latest = (
-        orders.select("o_custkey", "o_totalprice", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("o_custkey").alias("chg_custkey"),
-            F.col("o_totalprice").alias("new_balance"),
-        )
-    )
-    return (
-        cust.join(latest, cust.c_custkey == latest.chg_custkey, "full_outer")
-        .select(
-            F.coalesce("c_custkey", "chg_custkey").alias("c_custkey"),
-            "c_name",
-            F.coalesce("new_balance", "c_acctbal").alias("balance"),
-            F.col("new_balance").isNotNull().alias("updated"),
-        )
-    )
 
 
-@register(
+# Daily partials merged into months; mergeable sums make avg equal a direct scan.
+register_sql(
     "reaggregate_monthly",
     """WITH daily AS (
   SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d, event_type,
@@ -1056,46 +914,18 @@ SELECT CAST(EXTRACT(year FROM d) AS BIGINT) AS yr,
        CAST(SUM(s) AS DOUBLE)/SUM(n) AS avg_value
 FROM daily GROUP BY 1, 2, 3""",
 )
-def q_reaggregate_monthly(spark, sf_dir):
-    """re-aggregatable rollup: daily partials (count + exact decimal
-    sum) merged into monthly figures — the incremental-ETL pattern
-    where yesterday's aggregates are never recomputed, only merged.
-    Works because every aggregate carried is MERGEABLE (sums of sums);
-    avg is re-derived from the merged moments, bitwise-equal to a
-    direct monthly scan."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.to_date("ts").alias("d"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,6)")).alias("s"),
-    )
-    return daily.groupBy(
-        F.year("d").cast("long").alias("yr"),
-        F.month("d").cast("long").alias("mo"),
-        "event_type",
-    ).agg(
-        F.sum("n").alias("n"),
-        (F.sum("s").cast("double") / F.sum("n")).alias("avg_value"),
-    )
 
 
-_GSETS_SQL = """SELECT event_type,
+# Per-type and per-hour margins in one pass: one partial per grouping set, one shuffle.
+register_sql(
+    "grouping_sets_mixed",
+    """SELECT event_type,
        CAST(EXTRACT(hour FROM CAST(ts AS TIMESTAMP)) AS BIGINT) AS hr,
        COUNT(*) AS n,
        CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)/COUNT(value) AS avg_value
-FROM {events}
-GROUP BY GROUPING SETS ((event_type), (CAST(EXTRACT(hour FROM CAST(ts AS TIMESTAMP)) AS BIGINT)))"""
-
-
-@register("grouping_sets_mixed", _GSETS_SQL.format(events="events"))
-def q_grouping_sets_mixed(spark, sf_dir):
-    """explicit GROUPING SETS (the third grouping-set surface next to
-    mood_rollup's ROLLUP and events_cube's CUBE): per-type and per-hour
-    margins in ONE pass — each map task emits one partial per set, one
-    shuffle total. Exercises the SQL frontend path."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_gs_v")
-    return spark.sql(_GSETS_SQL.format(events="events_gs_v"))
+FROM events
+GROUP BY GROUPING SETS ((event_type), (CAST(EXTRACT(hour FROM CAST(ts AS TIMESTAMP)) AS BIGINT)))""",
+)
 
 
 @register(
@@ -1186,18 +1016,12 @@ def q_user_running_total(spark, sf_dir):
     )
 
 
-@register(
+# Exact distinct counts; Spark plans the partial distinct map-side.
+register_sql(
     "distinct_counts",
     """SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events
 FROM events GROUP BY event_type""",
 )
-def q_distinct_counts(spark, sf_dir):
-    """exact distinct: two-phase shuffle (partial distinct map-side)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
 
 
 @register(
@@ -1306,22 +1130,16 @@ def q_events_cube(spark, sf_dir):
     )
 
 
-_ABOVE_AVG_SQL = """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-FROM {orders} o
+# Catalyst decorrelates the scalar subquery into an aggregate + equi-join on o_custkey.
+register_sql(
+    "above_avg_orders",
+    """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
+FROM orders o
 WHERE o.o_totalprice > 1.5 * (
   SELECT CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,6))) AS DOUBLE)/COUNT(o2.o_totalprice)
-  FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey
-)"""
-
-
-@register("above_avg_orders", _ABOVE_AVG_SQL.format(orders="orders"))
-def q_above_avg_orders(spark, sf_dir):
-    """correlated scalar subquery: orders 1.5× above their customer's
-    average. Catalyst decorrelates it into an aggregate + equi-join on
-    o_custkey (one shuffle, no per-row subquery execution) — the SQL
-    frontend surface, not just the DataFrame API, is supported."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(_ABOVE_AVG_SQL.format(orders="orders_v"))
+  FROM orders o2 WHERE o2.o_custkey = o.o_custkey
+)""",
+)
 
 
 @register(
@@ -1455,7 +1273,8 @@ def q_top_supplier(spark, sf_dir):
     )
 
 
-@register(
+# TPC-H Q19-style: Catalyst pulls common bounds out of the OR; both scans prune.
+register_sql(
     "disjunctive_filter",
     """SELECT COUNT(*) AS n,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -1464,27 +1283,6 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1
    OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
    OR (p_brand = 'Brand#4'  AND p_size BETWEEN 1 AND 50 AND l_quantity BETWEEN 20 AND 30)""",
 )
-def q_disjunctive_filter(spark, sf_dir):
-    """Q19-style OR-of-ANDs over a fact⋈dim join. Catalyst extracts the
-    common l_quantity bounds (1..30) as a pushable lineitem predicate
-    and the brand/size union as a part predicate, so both scans prune
-    BEFORE the broadcast join evaluates the full disjunction."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    dec2 = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    q = F.col("l_quantity")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15) & q.between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 25) & q.between(10, 20))
-        | ((F.col("p_brand") == "Brand#4") & F.col("p_size").between(1, 50) & q.between(20, 30))
-    )
-    return j.filter(cond).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec2("l_extendedprice") * (F.lit(1) - dec2("l_discount")))
-        .cast("double")
-        .alias("revenue"),
-    )
 
 
 @register(
@@ -1611,7 +1409,8 @@ def q_moving_avg_range(spark, sf_dir):
     )
 
 
-@register(
+# All five window functions share one window sort on user_id; event_id breaks every tie.
+register_sql(
     "window_distribution",
     """SELECT user_id, event_id, value,
        CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
@@ -1624,30 +1423,10 @@ FROM events
 WHERE event_type = 'purchase'
 WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)""",
 )
-def q_window_distribution(spark, sf_dir):
-    """distribution window functions over per-user purchase values:
-    ntile quartiles, percent_rank, cume_dist, lead, and an
-    unbounded-frame first_value — all five share ONE window sort, so
-    the whole query is a single shuffle on user_id (tie-break on
-    event_id makes every rank deterministic)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    w = Window.partitionBy("user_id").orderBy("value", "event_id")
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return ev.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.ntile(4).over(w).cast("long").alias("quartile"),
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"),
-        F.lead("value", 1).over(w).alias("next_value"),
-        F.first("value").over(wf).alias("min_value"),
-    )
 
 
-@register(
+# SCD type 2: readings become [valid_from, valid_to) intervals, one window shuffle.
+register_sql(
     "scd2_intervals",
     """SELECT user_id, CAST(ts AS TIMESTAMP) AS valid_from,
        LEAD(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS valid_to,
@@ -1655,44 +1434,16 @@ def q_window_distribution(spark, sf_dir):
        LEAD(CAST(ts AS TIMESTAMP), 1) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) IS NULL AS is_current
 FROM events WHERE event_type = 'view'""",
 )
-def q_scd2_intervals(spark, sf_dir):
-    """SCD-type-2 dimension build: point-in-time readings → validity
-    intervals [valid_from, valid_to) via lead(), open-ended row flagged
-    current — the standard warehouse historization pass, one window
-    shuffle on the natural key (this is also what the asof_join
-    consumes on its build side)."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "view")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = F.lead("ts", 1).over(w)
-    return ev.select(
-        "user_id",
-        F.col("ts").alias("valid_from"),
-        nxt.alias("valid_to"),
-        "value",
-        nxt.isNull().alias("is_current"),
-    )
 
 
-@register(
+# Bucketing is a projection: one partial-agg shuffle over bounded buckets.
+register_sql(
     "value_histogram",
     """SELECT event_type, CAST(FLOOR(value / 25) AS BIGINT) AS bucket,
        COUNT(*) AS n,
        CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
 FROM events GROUP BY event_type, CAST(FLOOR(value / 25) AS BIGINT)""",
 )
-def q_value_histogram(spark, sf_dir):
-    """fixed-width value histogram per event type — the profiling scan
-    behind quality dashboards. Bucketing is a pure projection (floor
-    division), so the whole query is one partial-agg shuffle; bucket
-    cardinality is bounded, no skew risk at any scale."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        "event_type",
-        F.floor(F.col("value") / 25).cast("long").alias("bucket"),
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum(F.col("value"), 6).alias("value_sum"),
-    )
 
 
 @register(
@@ -3464,7 +3215,8 @@ def q_mixture_sample(spark, sf_dir):
     )
 
 
-@register(
+# Exact population variance from integer power sums, unlike float var_pop.
+register_sql(
     "corpus_stats",
     """SELECT lang, source, COUNT(*) AS n_docs,
        CAST(SUM(n_chars) AS DOUBLE)/COUNT(*) AS avg_chars,
@@ -3473,20 +3225,6 @@ def q_mixture_sample(spark, sf_dir):
          AS var_chars
 FROM documents GROUP BY lang, source""",
 )
-def q_corpus_stats(spark, sf_dir):
-    """per-(lang, source) corpus profile with EXACT population variance
-    from integer power sums (E[x²] − E[x]²): both moments ride one
-    shuffle as map-side partial long sums — deterministic to the bit,
-    unlike float-accumulating var_pop, and mergeable at any scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    x = F.col("n_chars")
-    cnt = F.count(F.lit(1))
-    mean = F.sum(x).cast("double") / cnt
-    return docs.groupBy("lang", "source").agg(
-        cnt.alias("n_docs"),
-        mean.alias("avg_chars"),
-        (F.sum(x * x).cast("double") / cnt - mean * mean).alias("var_chars"),
-    )
 
 
 @register(
@@ -3886,7 +3624,8 @@ def q_late_sole_suppliers(spark, sf_dir):
     )
 
 
-@register(
+# The global cumsum runs over the per-part aggregate (dimension-bounded).
+register_sql(
     "revenue_concentration",
     """WITH pv AS (
   SELECT l_partkey,
@@ -3906,49 +3645,6 @@ FROM ranked
 WHERE CAST(COALESCE(cum_before, 0) AS DOUBLE) < CAST(total AS DOUBLE) * 0.8
 ORDER BY revenue DESC, l_partkey""",
 )
-def q_revenue_concentration(spark, sf_dir):
-    """Pareto concentration: the smallest prefix of parts (by revenue)
-    covering 80% of total revenue. Pattern: exact-decimal per-key agg,
-    then an ordered cumulative share over the AGGREGATED frame. The
-    global window runs over dimension-cardinality rows (parts), not
-    the fact table — at 100 TB that is still millions at most; if the
-    dimension itself is huge, the same two-level scan used by
-    sequence_packing applies."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pv = li.groupBy("l_partkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(18,4)"
-            )
-        ).alias("val")
-    )
-    w_cum = Window.orderBy(F.col("val").desc(), F.col("l_partkey")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w_all = Window.partitionBy()
-    ranked = pv.select(
-        "l_partkey",
-        "val",
-        F.sum("val").over(w_cum).alias("cum_before"),
-        F.sum("val").over(w_all).alias("total"),
-    )
-    # boundary compare in DOUBLE on BOTH engines (identical expression
-    # shape: cast each exact-decimal side to double, THEN scale by the
-    # float 0.8) — mixing decimal and double promotion rules across
-    # engines can flip a row within one ulp of the 80% boundary
-    at_boundary = (
-        F.coalesce("cum_before", F.lit(0)).cast("double")
-        < F.col("total").cast("double") * 0.8
-    )
-    return (
-        ranked.filter(at_boundary)
-        .select(
-            "l_partkey",
-            F.col("val").cast("double").alias("revenue"),
-            F.lit(True).alias("in_top80"),
-        )
-        .orderBy(F.col("revenue").desc(), "l_partkey")
-    )
 
 
 @register(
@@ -4118,7 +3814,8 @@ def q_doc_chunking(spark, sf_dir):
     )
 
 
-@register(
+# TPC-H Q7-shaped: lineitem-orders is the only fact-fact join.
+register_sql(
     "nation_trade_volume",
     """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS l_year,
@@ -4133,42 +3830,10 @@ JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
 WHERE n1.n_nationkey <> n2.n_nationkey
 GROUP BY 1, 2, 3""",
 )
-def q_nation_trade_volume(spark, sf_dir):
-    """TPC-H Q7-shaped: cross-border revenue per (supplier nation,
-    customer nation, ship year). The one genuinely big join is
-    lineitem⋈orders (both fact-sized → sort-merge on orderkey); every
-    other side is dimension-sized. nation (25 rows) broadcasts
-    explicitly; customer/supplier are left to AQE — broadcast at test
-    SF, shuffle-hash at 100 TB where they no longer fit. The <> filter
-    runs post-join on the two broadcast keys — essentially free."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    n1 = F.broadcast(nat.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")))
-    n2 = F.broadcast(nat.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(n1, F.col("s_nationkey") == F.col("s_nk"))
-        .join(n2, F.col("c_nationkey") == F.col("c_nk"))
-        .filter(F.col("s_nk") != F.col("c_nk"))
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year"))
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
 
 
-@register(
+# TPC-H Q8-shaped: exact decimal sums; the share is one double division at the end.
+register_sql(
     "nation_market_share",
     """WITH base AS (
   SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
@@ -4191,50 +3856,6 @@ SELECT o_year,
        CAST(SUM(vol) AS DOUBLE) AS total_volume
 FROM base GROUP BY o_year""",
 )
-def q_nation_market_share(spark, sf_dir):
-    """TPC-H Q8-shaped: NATION_2's share of ECONOMY-part revenue sold
-    into ASIA, per order year. Both sums are exact DECIMAL (partition-
-    order independent); the share is ONE double division at the end so
-    Spark and the oracle agree bitwise. Part is filtered to 1/6 of
-    rows BEFORE its join (predicate pushed to the scan); region/nation
-    broadcast; lineitem⋈orders stays the only fact-fact shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n2 = nat.join(
-        F.broadcast(reg), nat.n_regionkey == reg.r_regionkey
-    ).select(F.col("n_nationkey").alias("c_nk"))
-    n1 = nat.select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    )
-    base = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .select(
-            F.year("o_orderdate").cast("long").alias("o_year"),
-            vol.alias("vol"),
-            "supp_nation",
-        )
-    )
-    zero = F.lit(0).cast("decimal(18,4)")
-    return base.groupBy("o_year").agg(
-        (
-            F.sum(F.when(F.col("supp_nation") == "NATION_2", F.col("vol")).otherwise(zero)).cast("double")
-            / F.sum("vol").cast("double")
-        ).alias("mkt_share"),
-        F.sum("vol").cast("double").alias("total_volume"),
-    )
 
 
 @register(
@@ -4526,10 +4147,7 @@ def q_corpus_prep_pipeline(spark, sf_dir):
 def register_tables(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view so raw
     ``spark.sql`` works against the same data the queries use."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.schemas import TESTDATA_TABLES
-
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    _table_views(spark, sf_dir, TESTDATA_TABLES)
 
 
 def register_query_views(
@@ -5089,7 +4707,8 @@ def q_ewma_minutes(spark, sf_dir):
     return windows.ewma_daily(ev, "event_type", "ts", "value")
 
 
-@register(
+# The |types|x24 profile broadcasts back; the top-50 is a TakeOrdered, not a sort.
+register_sql(
     "seasonal_baseline",
     f"""WITH prof AS (
   SELECT event_type, EXTRACT(hour FROM ts) AS hod,
@@ -5103,33 +4722,6 @@ JOIN prof p ON e.event_type = p.event_type
           AND EXTRACT(hour FROM e.ts) = p.hod
 ORDER BY ABS(e.value - p.expected) DESC, e.event_id LIMIT 50""",
 )
-def q_seasonal_baseline(spark, sf_dir):
-    """seasonal-profile anomaly screen: per (event_type, hour-of-day)
-    expected value learned in one agg pass (exact-decimal avg), then
-    every event scored against its seasonal slot — top-50 deviations.
-    The companion to robust_outliers for metrics with daily rhythm
-    (traffic volume at 3am ≠ at rush hour). Profile is bounded at
-    |types|×24 rows → broadcast back; facts are scanned twice, never
-    shuffled; top-50 via TakeOrdered, no global sort."""
-    ev = load_table(spark, sf_dir, "events")
-    prof = ev.groupBy(
-        "event_type", F.hour("ts").alias("hod")
-    ).agg(davg(F.col("value")).alias("expected"), F.count(F.lit(1)).alias("n_obs"))
-    return (
-        ev.select("event_id", "event_type", F.hour("ts").alias("hod"), "value")
-        .join(F.broadcast(prof), ["event_type", "hod"])
-        .select(
-            "event_id",
-            "event_type",
-            "hod",
-            "value",
-            "expected",
-            "n_obs",
-            (F.col("value") - F.col("expected")).alias("deviation"),
-        )
-        .orderBy(F.abs(F.col("deviation")).desc(), "event_id")
-        .limit(50)
-    )
 
 
 @register(
@@ -5279,7 +4871,8 @@ def q_clustering_coefficient(spark, sf_dir):
 # OLAP additions: Q12/Q13/Q17 shapes
 
 
-@register(
+# TPC-H Q12 shape: both conditional counts ride one aggregation.
+register_sql(
     "priority_linestatus",
     """SELECT l_linestatus,
        CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -5290,26 +4883,6 @@ FROM orders JOIN lineitem ON o_orderkey = l_orderkey
 WHERE l_shipdate >= DATE '1995-03-01' AND l_shipdate < DATE '1995-09-01'
 GROUP BY l_linestatus""",
 )
-def q_priority_linestatus(spark, sf_dir):
-    """TPC-H Q12 shape: fact-fact join + dual conditional counts per
-    line status over a shipdate slice. The date filter is pushed to
-    the lineitem scan (PushedFilters) so the join sees only the
-    window; both counts ride one aggregation — never two filtered
-    sub-joins. At 100×: sort-merge on orderkey with AQE; the orders
-    side prunes to (o_orderkey, o_orderpriority) via column pruning."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1995-03-01") & (F.col("l_shipdate") < "1995-09-01")
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(hi, 1).otherwise(0)).cast("long").alias("high_line_count"),
-            F.sum(F.when(~hi, 1).otherwise(0)).cast("long").alias("low_line_count"),
-        )
-    )
 
 
 @register(
@@ -6750,7 +6323,8 @@ def q_important_parts(spark, sf_dir):
     )
 
 
-@register(
+# TPC-H Q16: supply derived from lineitem; excluded suppliers are anti-joined.
+register_sql(
     "supplier_part_variety",
     """WITH supply AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
 excl AS (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
@@ -6763,33 +6337,6 @@ WHERE p_brand != 'Brand#11'
   AND l_suppkey NOT IN (SELECT s_suppkey FROM excl)
 GROUP BY p_brand, p_type, p_size""",
 )
-def q_supplier_part_variety(spark, sf_dir):
-    """TPC-H Q16: how many distinct suppliers can provide each
-    (brand, type, size) — the supply relation derived from lineitem
-    (the schema has no partsupp), excluded suppliers (negative
-    balance, the complaints stand-in) removed by a broadcast
-    anti-join BEFORE the distinct so they never reach the exchange.
-    part is a broadcast dim with the brand/size slice pushed to its
-    scan; one (partkey, suppkey) distinct shuffle + one
-    distinct-count shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#11")
-        & F.col("p_size").isin([1, 5, 9, 13, 17, 21, 25, 29, 33, 37, 41, 45, 49])
-    )
-    excl = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
-        F.col("s_suppkey").alias("l_suppkey")
-    )
-    supply = (
-        li.select("l_partkey", "l_suppkey")
-        .join(F.broadcast(excl), "l_suppkey", "left_anti")
-        .distinct()
-    )
-    return (
-        supply.join(F.broadcast(part), supply.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").cast("long").alias("supplier_cnt"))
-    )
 
 
 @register(
@@ -9257,7 +8804,8 @@ def q_ngram_novelty(spark, sf_dir):
     )
 
 
-@register(
+# Reports group sizes, never the quasi-identifiers; FLOOR buckets doubles exactly.
+register_sql(
     "k_anonymity",
     """WITH g AS (
   SELECT c_nationkey, c_mktsegment,
@@ -9271,41 +8819,10 @@ SELECT CAST(gsize AS BIGINT) AS group_size,
        gsize < 5 AS below_k5
 FROM g GROUP BY gsize""",
 )
-def q_k_anonymity(spark, sf_dir):
-    """k-anonymity audit over the customer quasi-identifier tuple
-    (nation, market segment, account-balance bucket) — the privacy
-    gate a warehouse runs BEFORE exporting a table: any
-    quasi-identifier group smaller than k re-identifies its members
-    (Sweeney 2002). Emits the group-size DISTRIBUTION (size → #groups,
-    #rows, below-k flag at k=5), never the identifying tuples
-    themselves — the report is safe to ship even when the table is
-    not. FLOOR(bal/1000) buckets the double exactly (FLOOR has no
-    rounding rule to disagree on — the _portable_mean idea); both
-    aggs are integer. ONE quasi-key shuffle with map-side combine,
-    then a group-size-bounded rollup. Linear at any scale; the output
-    is bounded by the distinct group sizes."""
-    cust = load_table(spark, sf_dir, "customer")
-    g = (
-        cust.select(
-            "c_nationkey",
-            "c_mktsegment",
-            F.floor(F.col("c_acctbal") / 1000).cast("long").alias("bal_bucket"),
-        )
-        .groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
-        .agg(F.count(F.lit(1)).alias("gsize"))
-    )
-    return g.groupBy("gsize").agg(
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.sum("gsize").cast("long").alias("n_rows"),
-    ).select(
-        F.col("gsize").cast("long").alias("group_size"),
-        "n_groups",
-        "n_rows",
-        (F.col("gsize") < 5).alias("below_k5"),
-    )
 
 
-@register(
+# One row per FK edge: child rows and orphans, found by LEFT join probes.
+register_sql(
     "fk_integrity_audit",
     """SELECT * FROM (
   SELECT 'lineitem->orders' AS relationship,
@@ -9344,56 +8861,14 @@ def q_k_anonymity(spark, sf_dir):
   FROM nation LEFT JOIN region ON n_regionkey = r_regionkey
 ) t""",
 )
-def q_fk_integrity_audit(spark, sf_dir):
-    """referential-integrity audit across every FK edge of the star
-    schema — the load-time data-quality gate that catches orphaned
-    fact rows before they silently vanish from inner-join dashboards:
-    one row per relationship with child-row and orphan counts. Each
-    edge is a LEFT join probing the parent key for NULL; the parent
-    sides are dimension-sized, so AQE broadcasts every probe except
-    the fact-fact edges, where the join keys are the tables' natural
-    shuffle keys. At 100 TB this is the same plan a production
-    dbt-style relationship test compiles to. All-integer — hash-gated."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    part = load_table(spark, sf_dir, "part")
-    supp = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-
-    def edge(name, child, ck, parent, pk):
-        j = child.select(F.col(ck)).join(
-            parent.select(F.col(pk)), F.col(ck) == F.col(pk), "left"
-        )
-        return j.agg(
-            F.lit(name).alias("relationship"),
-            F.count(F.lit(1)).cast("long").alias("n_child_rows"),
-            F.sum(F.when(F.col(pk).isNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_orphans"),
-        )
-
-    edges = [
-        edge("lineitem->orders", li, "l_orderkey", orders, "o_orderkey"),
-        edge("lineitem->part", li, "l_partkey", part, "p_partkey"),
-        edge("lineitem->supplier", li, "l_suppkey", supp, "s_suppkey"),
-        edge("orders->customer", orders, "o_custkey", cust, "c_custkey"),
-        edge("customer->nation", cust, "c_nationkey", nation, "n_nationkey"),
-        edge("supplier->nation", supp, "s_nationkey", nation, "n_nationkey"),
-        edge("nation->region", nation, "n_regionkey", region, "r_regionkey"),
-    ]
-    out = edges[0]
-    for e in edges[1:]:
-        out = out.unionAll(e)
-    return out
 
 
 # --------------------------------------------------------------------------
 # r7 additions: privacy twin, statistical data-quality, temporal statistics
 
 
-@register(
+# Distinct sensitive buckets per quasi-identifier group; reports only the distribution.
+register_sql(
     "l_diversity",
     """WITH g AS (
   SELECT c_nationkey, c_mktsegment,
@@ -9407,40 +8882,6 @@ SELECT CAST(l AS BIGINT) AS l_value,
        l < 3 AS below_l3
 FROM g GROUP BY l""",
 )
-def q_l_diversity(spark, sf_dir):
-    """l-diversity audit — k_anonymity's sibling gate (Machanavajjhala
-    et al. 2007): a quasi-identifier group can be large (k-anonymous)
-    yet still leak if every member shares the SAME sensitive value, so
-    the gate counts DISTINCT sensitive values per group. Quasi key =
-    (nation, market segment); sensitive attribute = the account-balance
-    bucket (FLOOR(bal/1000) — exact on doubles, the k_anonymity
-    bucketing). Emits the l-DISTRIBUTION (l → #groups, #rows, below-l
-    flag at l=3), never the groups themselves — like k_anonymity, the
-    report ships even when the table can't. One quasi-key shuffle with
-    a distinct-agg (Spark plans partial distinct map-side), then a
-    bounded rollup over the distinct l values."""
-    cust = load_table(spark, sf_dir, "customer")
-    g = (
-        cust.select(
-            "c_nationkey",
-            "c_mktsegment",
-            F.floor(F.col("c_acctbal") / 1000).cast("long").alias("sens"),
-        )
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(
-            F.countDistinct("sens").alias("l"),
-            F.count(F.lit(1)).alias("gsize"),
-        )
-    )
-    return g.groupBy("l").agg(
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.sum("gsize").cast("long").alias("n_rows"),
-    ).select(
-        F.col("l").cast("long").alias("l_value"),
-        "n_groups",
-        "n_rows",
-        (F.col("l") < 3).alias("below_l3"),
-    )
 
 
 # Benford first-digit expectation log10(1+1/d) in exact parts-per-
@@ -10065,7 +9506,8 @@ def q_keyword_rake(spark, sf_dir):
     )
 
 
-@register(
+# Ranks by the 95% Wilson lower bound: exact counts, one mirrored float tree.
+register_sql(
     "wilson_ranking",
     """WITH s AS (
   SELECT l_suppkey AS suppkey,
@@ -10087,48 +9529,6 @@ SELECT w.suppkey, s_name, CAST(n AS BIGINT) AS n, CAST(r AS BIGINT) AS r,
 FROM w JOIN supplier ON w.suppkey = s_suppkey
 ORDER BY wilson_lb DESC, w.suppkey LIMIT 25""",
 )
-def q_wilson_ranking(spark, sf_dir):
-    """top-25 suppliers by the WILSON LOWER BOUND of their
-    non-return rate (Wilson 1927; the "how not to sort by average
-    rating" ranking): a 4/4 supplier must not outrank a 196/200 one,
-    so rank by the 95% lower confidence bound of the binomial
-    proportion instead of the raw rate. Hash-gated the acf_lag way:
-    n and r stay EXACT BIGINTs off one supplier-keyed agg, and the
-    bound is ONE fixed float expression tree over them (single IEEE
-    ops, z=1.96 / z²=3.8416 literals parse to identical doubles,
-    sqrt is correctly rounded by IEEE mandate) — mirrored
-    parenthesis-for-parenthesis in the oracle. n ≥ 20 floor keeps the
-    normal approximation honest; (bound DESC, suppkey) is a total
-    order so the top-25 boundary is deterministic. One fact shuffle +
-    a broadcast dim join + a k-bounded TakeOrdered; linear at any
-    scale."""
-    li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    s = li.groupBy(F.col("l_suppkey").alias("suppkey")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias("r"),
-    )
-    nd = F.col("n").cast("double")
-    phat = (F.col("n") - F.col("r")).cast("double") / nd
-    z, z2 = F.lit(1.96), F.lit(3.8416)
-    wilson = (
-        phat
-        + z2 / (F.lit(2.0) * nd)
-        - z * F.sqrt((phat * (F.lit(1.0) - phat) + z2 / (F.lit(4.0) * nd)) / nd)
-    ) / (F.lit(1.0) + z2 / nd)
-    return (
-        s.filter(F.col("n") >= 20)
-        .join(F.broadcast(supp), F.col("suppkey") == F.col("s_suppkey"))
-        .select(
-            "suppkey",
-            "s_name",
-            F.col("n").cast("long").alias("n"),
-            F.col("r").cast("long").alias("r"),
-            wilson.alias("wilson_lb"),
-        )
-        .orderBy(F.col("wilson_lb").desc(), "suppkey")
-        .limit(25)
-    )
 
 
 @register(
@@ -10351,7 +9751,8 @@ def q_attribution_last_touch(spark, sf_dir):
     )
 
 
-@register(
+# Header vs line totals in exact cents (BIGINT sums), bucketed by deviation.
+register_sql(
     "order_total_reconciliation",
     """WITH lc AS (
   SELECT l_orderkey,
@@ -10380,47 +9781,6 @@ SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_orders,
        CAST(MAX(dev_cents) AS BIGINT) AS max_dev_cents
 FROM b GROUP BY bucket""",
 )
-def q_order_total_reconciliation(spark, sf_dir):
-    """order-header vs line-detail financial reconciliation — the
-    month-end audit that catches partial loads and drifted charge
-    logic: per order, header total minus the recomputed
-    Σ extprice·(1−disc)·(1+tax), both in EXACT cents (per-line round
-    half-up on one fixed float tree, then BIGINT sums — no float
-    accumulation), bucketed into an exact / ≤1-unit / ≤100-unit /
-    large / no-lineitems histogram with per-bucket deviation extrema.
-    Headerless-order handling is explicit (LEFT join + no_lines
-    bucket, the orders_no_lineitem population). One fact shuffle on
-    the natural join key + a broadcast-sized rollup; linear at any
-    scale."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    line_cents = F.round(
-        F.col("l_extendedprice")
-        * (1 - F.col("l_discount"))
-        * (1 + F.col("l_tax"))
-        * 100,
-        0,
-    ).cast("long")
-    lc = li.groupBy("l_orderkey").agg(F.sum(line_cents).alias("line_cents"))
-    d = orders.join(lc, orders.o_orderkey == lc.l_orderkey, "left").select(
-        (
-            F.round(F.col("o_totalprice") * 100, 0).cast("long")
-            - F.coalesce(F.col("line_cents"), F.lit(0))
-        ).alias("dev_cents"),
-        F.col("line_cents").isNull().alias("no_lines"),
-    )
-    bucket = (
-        F.when(F.col("no_lines"), "no_lineitems")
-        .when(F.col("dev_cents") == 0, "exact")
-        .when(F.abs("dev_cents") <= 100, "within_1_unit")
-        .when(F.abs("dev_cents") <= 10000, "within_100_units")
-        .otherwise("large")
-    )
-    return d.select(bucket.alias("bucket"), "dev_cents").groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.min("dev_cents").cast("long").alias("min_dev_cents"),
-        F.max("dev_cents").cast("long").alias("max_dev_cents"),
-    )
 
 
 @register(
@@ -11129,7 +10489,8 @@ def q_domain_token_lift(spark, sf_dir):
 # changepoint, and RFM customer segmentation.
 
 
-@register(
+# Doubled midranks keep ties in int64; the cumsum runs over distinct cents values.
+register_sql(
     "mann_whitney_u",
     """WITH j AS (
   SELECT CAST(round(o_totalprice*100,0) AS BIGINT) AS cents,
@@ -11156,73 +10517,10 @@ SELECT na AS n_a, nb AS n_b,
                    / (CAST(na+nb AS DOUBLE)*(CAST(na+nb AS DOUBLE)-1.0)))) AS z
 FROM s""",
 )
-def q_mann_whitney_u(spark, sf_dir):
-    """Mann–Whitney U rank-sum test (Mann & Whitney 1947): does the
-    BUILDING segment spend differently per order than everyone else?
-    — the nonparametric A/B primitive that needs no normality
-    assumption (chi2_independence's categorical sibling; Wilson/
-    Kendall complete the inference suite). The portability work is
-    making RANKS exact without ranking rows: group the pooled sample
-    by exact cents value, one ordered cumsum over the distinct-VALUE
-    frame (revenue_gini's distribution trick) gives each value's rank
-    block, and DOUBLED midranks 2·below+t+1 keep the tie-midrank
-    .5s in int64 — so 2·U_A and the Σ(t³−t) tie correction are EXACT
-    integers, and U/z are one mirrored IEEE tree (a correctly-rounded
-    sqrt, no float ever summed). Scale: one fact join + one value agg
-    with map-side combine; the window runs over distinct cents values
-    (dimension-bounded, plan_audit-allowlisted); single-row output."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", (F.col("c_mktsegment") == "BUILDING").alias("ga")
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    j = o.join(F.broadcast(cust), o.o_custkey == cust.c_custkey).select(
-        "cents", "ga"
-    )
-    v = j.groupBy(F.col("cents").alias("val")).agg(
-        F.sum(F.when(F.col("ga"), 1).otherwise(0)).alias("ca"),
-        F.sum(F.when(F.col("ga"), 0).otherwise(1)).alias("cb"),
-    )
-    w = Window.orderBy("val")
-    wv = v.select(
-        "ca",
-        "cb",
-        (F.col("ca") + F.col("cb")).alias("t"),
-        (
-            F.sum(F.col("ca") + F.col("cb")).over(w)
-            - (F.col("ca") + F.col("cb"))
-        ).alias("below"),
-    )
-    s = wv.agg(
-        F.sum("ca").alias("na"),
-        F.sum("cb").alias("nb"),
-        F.sum(F.col("ca") * (2 * F.col("below") + F.col("t") + 1)).alias("r2a"),
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")).alias("tcorr"),
-    )
-    nad = F.col("na").cast("double")
-    nbd = F.col("nb").cast("double")
-    nd = (F.col("na") + F.col("nb")).cast("double")
-    u2 = F.col("r2a") - F.col("na") * (F.col("na") + 1)
-    z = (u2.cast("double") / F.lit(2.0) - nad * nbd / F.lit(2.0)) / F.sqrt(
-        nad
-        * nbd
-        / F.lit(12.0)
-        * (
-            (nd + F.lit(1.0))
-            - F.col("tcorr").cast("double") / (nd * (nd - F.lit(1.0)))
-        )
-    )
-    return s.select(
-        F.col("na").cast("long").alias("n_a"),
-        F.col("nb").cast("long").alias("n_b"),
-        (u2.cast("double") / F.lit(2.0)).alias("u_a"),
-        z.alias("z"),
-    )
 
 
-@register(
+# Both leads share one user-keyed window sort; the top-20 is a TakeOrdered.
+register_sql(
     "session_path_topk",
     """WITH p AS (
   SELECT event_type AS e1,
@@ -11233,29 +10531,6 @@ c AS (SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS n
       FROM p WHERE e3 IS NOT NULL GROUP BY 1,2,3)
 SELECT e1, e2, e3, n FROM c ORDER BY n DESC, e1, e2, e3 LIMIT 20""",
 )
-def q_session_path_topk(spark, sf_dir):
-    """top-20 three-step user paths (event trigrams) — the path-mining
-    view behind "how do users actually reach a purchase?" dashboards,
-    and the order-3 extension of event_transition_matrix's bigram
-    model (a path that outcounts its transition-product is a
-    correlated FLOW, not two independent hops). Both leads ride the
-    SAME user-keyed window sort (one fact exchange — the plan pin
-    asserts one Window and one scan), the trigram agg is types³-
-    bounded, and the top-k is a TakeOrdered on the total
-    (n DESC, path) order. All-integer; linear at any corpus size."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    p = ev.select(
-        F.col("event_type").alias("e1"),
-        F.lead("event_type", 1).over(w).alias("e2"),
-        F.lead("event_type", 2).over(w).alias("e3"),
-    ).filter(F.col("e3").isNotNull())
-    c = p.groupBy("e1", "e2", "e3").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        c.orderBy(F.col("n").desc(), "e1", "e2", "e3")
-        .limit(20)
-        .select("e1", "e2", "e3", F.col("n").cast("long").alias("n"))
-    )
 
 
 @register(
@@ -11457,33 +10732,6 @@ def q_rfm_segmentation(spark, sf_dir):
 # r7 fourth batch: data-profiling FDs and wavelet timescale energy.
 
 
-def _fd_candidate(df, lhs: str, rhs: str, table: str):
-    """one FD candidate profile: LHS-keyed distinct-RHS agg, then a
-    single-row rollup — both integer; reused by q_fd_discovery for
-    every candidate (each is an independent one-shuffle job)."""
-    g = df.groupBy(F.col(lhs).alias("k")).agg(
-        F.countDistinct(rhs).alias("nd")
-    )
-    return g.agg(
-        F.lit(f"{table}.{lhs}").alias("lhs"),
-        F.lit(f"{table}.{rhs}").alias("rhs"),
-        F.count(F.lit(1)).alias("n_lhs_groups"),
-        F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).alias("n_violating"),
-        F.max("nd").alias("max_rhs_per_lhs"),
-    ).select(
-        "lhs",
-        "rhs",
-        F.col("n_lhs_groups").cast("long").alias("n_lhs_groups"),
-        F.col("n_violating").cast("long").alias("n_violating"),
-        F.col("max_rhs_per_lhs").cast("long").alias("max_rhs_per_lhs"),
-        (F.col("n_violating") == 0).alias("holds"),
-        (
-            F.col("n_violating").cast("double")
-            / F.col("n_lhs_groups").cast("double")
-        ).alias("violation_rate"),
-    )
-
-
 def _fd_candidate_sql(table: str, lhs: str, rhs: str) -> str:
     return f"""SELECT '{table}.{lhs}' AS lhs, '{table}.{rhs}' AS rhs,
        CAST(COUNT(*) AS BIGINT) AS n_lhs_groups,
@@ -11505,39 +10753,11 @@ _FD_CANDIDATES = [
 ]
 
 
-@register(
+# Each FD candidate is an independent one-shuffle distinct-count profile.
+register_sql(
     "fd_discovery",
     "\nUNION ALL\n".join(_fd_candidate_sql(t, l, r) for t, l, r in _FD_CANDIDATES),
 )
-def q_fd_discovery(spark, sf_dir):
-    """functional-dependency profiling (the Metanome/Papenbrock data-
-    profiling family, restricted to a declared candidate set — the
-    honest distributed shape: exhaustive lattice search is a driver
-    algorithm, per-candidate verification is the cluster job): for
-    each candidate LHS→RHS over the star schema, the number of LHS
-    groups, how many witness a violation (>1 distinct RHS), the worst
-    group's RHS count, an exact holds verdict, and the violation
-    rate — the schema-inference signal that catches denormalization
-    drift (a violated c_custkey→c_mktsegment would mean duplicated
-    customers disagree) and documents real-world key-likeness the FK
-    audit can't see. Exactness: per candidate ONE LHS-keyed
-    distinct-count agg (partial-distinct map-side) and an all-integer
-    rollup; violation_rate is the single int/int IEEE division. The
-    candidate verifications are independent single-shuffle jobs
-    unioned into one 6-row frame — linear each, no interaction.
-    Complements fk_integrity_audit (inclusion) with dependency
-    discovery."""
-    cust = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    frames = {"customer": cust, "orders": o, "lineitem": li}
-    parts = [
-        _fd_candidate(frames[t], l, r, t) for t, l, r in _FD_CANDIDATES
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
 
 
 _HAAR_LEVELS = range(1, 7)
@@ -11889,7 +11109,8 @@ def q_ks_test(spark, sf_dir):
     )
 
 
-@register(
+# Doubled midranks from cumsums over distinct values; int64 to ~1e6 customers.
+register_sql(
     "spearman_rho",
     """WITH o AS (
   SELECT o_custkey, CAST(round(o_totalprice*100,0) AS BIGINT) AS cents
@@ -11918,71 +11139,6 @@ SELECT n AS n_customers,
          AS spearman_rho
 FROM s""",
 )
-def q_spearman_rho(spark, sf_dir):
-    """Spearman rank correlation between a customer's order COUNT and
-    lifetime REVENUE — the monotone-association question ("do
-    frequent buyers spend more overall?") answered without Pearson's
-    linearity/outlier fragility, and the third correlation primitive
-    next to Kendall τ (k-bounded pairs) and the moment-based
-    assortativity: this one ranks the FULL customer base with NO
-    per-row global sort — midranks come from the distribution trick
-    (one cumsum per metric over its distinct-value frame), DOUBLED
-    (2·below+t+1) so tie-midrank halves stay int64 (mann_whitney_u's
-    move), and Pearson-on-ranks is scale-invariant so the doubled
-    ranks give the same ρ through the same mirrored IEEE tree. The
-    rank maps join back as broadcast value→rank dictionaries. Moment
-    sums Σr² ≤ 4n³ keep int64 to ~1e6 customers — beyond that,
-    rescale to HUGEINT or sample (documented, the grad_match
-    discipline). One fact agg + two value aggs; single-row output."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    per = o.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("f"), F.sum("cents").alias("m")
-    )
-
-    def ranked(col, alias):
-        v = per.groupBy(F.col(col).alias("val")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        return v.select(
-            "val",
-            (
-                2 * (F.sum("cnt").over(Window.orderBy("val")) - F.col("cnt"))
-                + F.col("cnt")
-                + 1
-            ).alias(alias),
-        )
-
-    rf = ranked("f", "r2f")
-    rm = ranked("m", "r2m")
-    j = (
-        per.join(F.broadcast(rf), per.f == rf.val)
-        .drop("val")
-        .join(F.broadcast(rm), per.m == rm.val)
-        .drop("val")
-    )
-    s = j.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("r2f").alias("sx"),
-        F.sum("r2m").alias("sy"),
-        F.sum(F.col("r2f") * F.col("r2m")).alias("sxy"),
-        F.sum(F.col("r2f") * F.col("r2f")).alias("sxx"),
-        F.sum(F.col("r2m") * F.col("r2m")).alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
-    return s.select(
-        F.col("n").cast("long").alias("n_customers"),
-        (
-            (nd * F.col("sxy").cast("double") - sxd * syd)
-            / (
-                F.sqrt(nd * F.col("sxx").cast("double") - sxd * sxd)
-                * F.sqrt(nd * F.col("syy").cast("double") - syd * syd)
-            )
-        ).alias("spearman_rho"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -11990,7 +11146,8 @@ def q_spearman_rho(spark, sf_dir):
 # the IVF recall-vs-nprobe curve, and isotonic (PAVA) calibration.
 
 
-@register(
+# The user-keyed self-join fans out at most types^2 pairs per user.
+register_sql(
     "bipartite_projection",
     """WITH ut AS (
   SELECT DISTINCT user_id, event_type FROM events
@@ -12010,55 +11167,6 @@ FROM (
 JOIN tc ta ON ta.event_type = p.type_a
 JOIN tc tb ON tb.event_type = p.type_b""",
 )
-def q_bipartite_projection(spark, sf_dir):
-    """weighted bipartite graph projection: the user × event_type
-    biadjacency collapsed onto the TYPE side — for every type pair,
-    how many distinct users touch both, plus the Jaccard overlap of
-    their audiences (the 'users who did X also did Y' affinity matrix
-    every recommender bootstrap runs; generalizes the co-activity
-    edge builder the graph family shares, ops/graph.py
-    cooccurrence_edges, with the projection axis flipped to the
-    BOUNDED side). Scale shape: the self-join is keyed on user_id and
-    fans out ≤ T² pairs per user with T = the type DIMENSION (never
-    corpus-sized), the audience counts ride a broadcast; integer
-    counts + ONE IEEE division (|A∩B| / |A∪B|) keep it on the oracle
-    surface. Reference behavior source: the mood tracker's per-type
-    stream fan-in (/root/reference/jobs/spark_mood_tracker.py) treats
-    types as the finite dimension; this is the same taxonomy used as
-    a graph layer."""
-    ev = load_table(spark, sf_dir, "events")
-    ut = ev.select("user_id", "event_type").distinct()
-    a, b = ut.alias("a"), ut.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
-    tc = ut.groupBy("event_type").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    ta = tc.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a"))
-    tb = tc.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b"))
-    return (
-        pairs.join(F.broadcast(ta), "type_a")
-        .join(F.broadcast(tb), "type_b")
-        .select(
-            "type_a",
-            "type_b",
-            "n_common",
-            "n_a",
-            "n_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-    )
 
 
 @register(
@@ -12363,7 +11471,8 @@ def q_isotonic_calibration(spark, sf_dir):
 # apportionment, and the dedup threshold knob document.
 
 
-@register(
+# Smoothed target encoding, pseudo-count m=100: exact sums, one mirrored float tree.
+register_sql(
     "target_encoding",
     """WITH o AS (
   SELECT c_mktsegment AS seg,
@@ -12382,49 +11491,6 @@ SELECT seg, n, s,
          AS encoded_cents
 FROM per CROSS JOIN g""",
 )
-def q_target_encoding(spark, sf_dir):
-    """smoothed mean target encoding (the micci-barreca / CatBoost-
-    style categorical encoder every tabular-ML pipeline fits): per
-    customer market segment, the average order value shrunk toward
-    the global prior with pseudo-count m=100 — enc = (Σy + m·prior) /
-    (n + m). The dictionary a feature store persists (categories ×
-    1 row, never per-row output). Exactness: per-segment and global
-    sums are exact cents BIGINTs; prior = ONE IEEE division, the
-    encoder one more mirrored add/divide tree — identical in both
-    engines. Scale: one fact-dim join (customer broadcastable /
-    SMJ at 100 TB), one map-side-combined segment agg, the global
-    prior a broadcast 1-row frame."""
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .join(
-            load_table(spark, sf_dir, "customer").select(
-                "c_custkey", "c_mktsegment"
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .select(
-            F.col("c_mktsegment").alias("seg"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-        )
-    )
-    g = o.agg(
-        F.count(F.lit(1)).cast("long").alias("nn"),
-        F.sum("cents").cast("long").alias("ss"),
-    )
-    per = o.groupBy("seg").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("s"),
-    )
-    return per.crossJoin(F.broadcast(g)).select(
-        "seg",
-        "n",
-        "s",
-        (F.col("s").cast("double") / F.col("n")).alias("raw_mean_cents"),
-        (
-            (F.col("s") + 100 * (F.col("ss").cast("double") / F.col("nn")))
-            / (F.col("n") + 100)
-        ).alias("encoded_cents"),
-    )
 
 
 @register(
@@ -12517,7 +11583,8 @@ def q_time_decay_ltv(spark, sf_dir):
     )
 
 
-@register(
+# Exact centi-unit sums off one agg, one float tree; degenerate sides give NULL.
+register_sql(
     "welch_ttest",
     """WITH q AS (
   SELECT event_type,
@@ -12551,62 +11618,6 @@ SELECT event_type, n1, n2,
             ELSE NULL END AS t_stat
 FROM s""",
 )
-def q_welch_ttest(spark, sf_dir):
-    """Welch's unequal-variance t statistic for day-vs-night value
-    means per event type — the PARAMETRIC twin of mann_whitney_u
-    (which settles the same A/B question rank-based); a curation
-    pipeline runs both before trusting a shift. Exactness: counts and
-    centi-unit sums/squares are exact BIGINTs off ONE conditional
-    agg; the statistic is a single mirrored IEEE tree (divisions,
-    one correctly-rounded sqrt — ln/exp never appear). Degenerate
-    guards (a side smaller than 2, zero pooled variance) yield NULL
-    identically in both engines. Scale: one map-side-combined scan;
-    output is one row per type. int64 headroom: Σcv² ≤ 1e8·rows —
-    exact to ~9e10 rows per type; past that, drop the centi-unit
-    scaling or widen to DECIMAL (revenue_gini's documented escape)."""
-    ev = load_table(spark, sf_dir, "events")
-    q = ev.select(
-        "event_type",
-        F.when(F.hour("ts") < 12, 1).otherwise(0).alias("is_day"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cv"),
-    )
-    s = q.groupBy("event_type").agg(
-        F.sum("is_day").cast("long").alias("n1"),
-        F.sum(F.when(F.col("is_day") == 1, F.col("cv")).otherwise(0))
-        .cast("long")
-        .alias("s1"),
-        F.sum(F.when(F.col("is_day") == 1, F.col("cv") * F.col("cv")).otherwise(0))
-        .cast("long")
-        .alias("q1"),
-        F.sum(1 - F.col("is_day")).cast("long").alias("n2"),
-        F.sum(F.when(F.col("is_day") == 0, F.col("cv")).otherwise(0))
-        .cast("long")
-        .alias("s2"),
-        F.sum(F.when(F.col("is_day") == 0, F.col("cv") * F.col("cv")).otherwise(0))
-        .cast("long")
-        .alias("q2"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    se1 = (d("q1") - d("s1") * F.col("s1") / F.col("n1")) / (
-        F.col("n1") * (F.col("n1") - 1)
-    )
-    se2 = (d("q2") - d("s2") * F.col("s2") / F.col("n2")) / (
-        F.col("n2") * (F.col("n2") - 1)
-    )
-    return s.select(
-        "event_type",
-        "n1",
-        "n2",
-        (d("s1") / (100 * F.col("n1"))).alias("mean_day"),
-        (d("s2") / (100 * F.col("n2"))).alias("mean_night"),
-        F.when(
-            (F.col("n1") >= 2) & (F.col("n2") >= 2) & (se1 + se2 > 0),
-            (d("s1") / F.col("n1") - d("s2") / F.col("n2"))
-            / F.sqrt(se1 + se2),
-        )
-        .otherwise(F.lit(None).cast("double"))
-        .alias("t_stat"),
-    )
 
 
 @register(
@@ -13758,7 +12769,8 @@ def q_log_rank(spark, sf_dir):
     )
 
 
-@register(
+# Scaled by M the statistic stays BIGINT; windows run on the span-bounded minutes.
+register_sql(
     "page_hinkley",
     """WITH m AS (
   SELECT event_type, date_trunc('minute', ts) AS minute,
@@ -13792,61 +12804,6 @@ SELECT event_type, CAST(MAX(t) AS BIGINT) AS n_minutes,
        MIN(CASE WHEN gap > 200000 * mm THEN minute END) AS first_alarm_minute
 FROM g2 GROUP BY event_type""",
 )
-def q_page_hinkley(spark, sf_dir):
-    """Page–Hinkley upward-drift alarm over the per-minute value
-    series, per event type — cusum_alerts' mean-drift companion (PH
-    is the classic sequential test for a sustained mean INCREASE;
-    cusum catches level shifts against a reference block). The
-    μ0-referenced variant (reference mean = the series' own global
-    mean — the standard offline calibration) makes the whole monitor
-    EXACT INTEGER: with M minutes and total S cents, the statistic
-    m_t = Σ_{i≤t}(x_i − S/M − δ) scales by M to
-    M·cum_t − t·S − t·δ·M (δ = 100 cents/minute allowance), and the
-    alarm gap m_t − min_{i≤t} m_i > λ scales to gap > λ·M
-    (λ = 200000 cents) — BIGINT throughout, no float ever. Headroom:
-    M is SPAN-bounded (≤43200 minutes at any corpus size), so
-    M·cum ≤ 4e4·Σcents — exact to ~2e14 total cents per type
-    (≈ sf1000; rescale-to-units escape documented). Scale: one
-    map-side-combined minute agg is the only corpus pass; the two
-    running windows ride the span-bounded minute frame partitioned
-    by type (never SinglePartition). Alarm indexing is
-    sample-sequence PH over observed minutes (absent minutes carry
-    no sample — the standard sample-indexed form). A planted-drift
-    detection test asserts the alarm actually fires."""
-    ev = load_table(spark, sf_dir, "events")
-    m = ev.groupBy(
-        "event_type", F.date_trunc("minute", F.col("ts")).alias("minute")
-    ).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-        .cast("long")
-        .alias("x")
-    )
-    st = m.groupBy("event_type").agg(
-        F.sum("x").cast("long").alias("s"),
-        F.count(F.lit(1)).cast("long").alias("mm"),
-    )
-    w = Window.partitionBy("event_type").orderBy("minute")
-    cumw = w.rowsBetween(Window.unboundedPreceding, 0)
-    ph = (
-        m.join(st, "event_type")
-        .withColumn("t", F.row_number().over(w).cast("long"))
-        .withColumn("cum", F.sum("x").over(cumw).cast("long"))
-        .withColumn(
-            "mt",
-            F.col("mm") * F.col("cum")
-            - F.col("t") * F.col("s")
-            - F.col("t") * F.lit(100) * F.col("mm"),
-        )
-        .withColumn("minm", F.min("mt").over(cumw))
-        .withColumn("gap", F.col("mt") - F.col("minm"))
-    )
-    alarm = F.col("gap") > F.lit(200000) * F.col("mm")
-    return ph.groupBy("event_type").agg(
-        F.max("t").cast("long").alias("n_minutes"),
-        F.max("gap").cast("long").alias("max_gap_scaled"),
-        F.sum(F.when(alarm, 1).otherwise(0)).cast("long").alias("n_alarms"),
-        F.min(F.when(alarm, F.col("minute"))).alias("first_alarm_minute"),
-    )
 
 
 @register(
@@ -13973,7 +12930,8 @@ def q_group_sequential(spark, sf_dir):
     )
 
 
-@register(
+# Exact bucket sums off one agg; each output float is a single mirrored division.
+register_sql(
     "calibration_curve",
     """WITH q AS (
   SELECT CAST(FLOOR(value / 30) AS BIGINT) AS bucket,
@@ -13992,46 +12950,6 @@ SELECT bucket, n, pos,
        (CAST(pos AS DOUBLE) / n) - CAST(s AS DOUBLE) / (60000 * n) AS gap
 FROM b""",
 )
-def q_calibration_curve(spark, sf_dir):
-    """reliability diagram of the value score against the is-purchase
-    label — the calibration EVALUATION that pairs with
-    isotonic_calibration's calibration FIT (a model can rank well and
-    still be miscalibrated; the diagram is what shows it): per score
-    bucket (~20 equal-width bins over the generator's 600 cap), the
-    mean predicted probability (score/600 as the [0,1] proxy, exact
-    cents / 60000·n), the observed positive rate, and the signed gap
-    — ECE is the n-weighted |gap| fold any consumer can run on the
-    ≤20-row output. Exactness: bucket counts / cent-sums / positives
-    are exact BIGINTs off ONE map-side-combined agg (the only corpus
-    pass); each output float is a single mirrored IEEE division (gap
-    = one subtraction of two such) — no float ever sums across rows,
-    so no fold discipline is even needed. Scale: bounded output,
-    linear scan, no joins."""
-    ev = load_table(spark, sf_dir, "events")
-    b = (
-        ev.select(
-            F.floor(F.col("value") / 30).cast("long").alias("bucket"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("c"),
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("c").cast("long").alias("s"),
-            F.sum("y").cast("long").alias("pos"),
-        )
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    return b.select(
-        "bucket",
-        "n",
-        "pos",
-        (d("s") / (F.lit(60000) * F.col("n"))).alias("mean_pred"),
-        (d("pos") / F.col("n")).alias("frac_pos"),
-        (
-            (d("pos") / F.col("n")) - d("s") / (F.lit(60000) * F.col("n"))
-        ).alias("gap"),
-    )
 
 
 @register(
@@ -14160,7 +13078,8 @@ def q_jackknife_ratio_se(spark, sf_dir):
     )
 
 
-@register(
+# CUPED reduces to arm-level integer moments; exact to about sf100.
+register_sql(
     "cuped_adjustment",
     """WITH pu AS (
   SELECT user_id % 2 AS arm,
@@ -14207,87 +13126,6 @@ SELECT arm, n AS n_users, th.theta AS theta,
          AS var_y_adj
 FROM a CROSS JOIN th""",
 )
-def q_cuped_adjustment(spark, sf_dir):
-    """CUPED variance reduction for the A/B family (Deng et al.,
-    WSDM'13 — the pre-experiment-covariate adjustment every large
-    experimentation platform applies before reading a treatment
-    effect): per deterministic arm (user_id % 2), the post-period
-    (days 16–30) revenue mean before and after adjusting by the
-    pre-period (days 1–15) covariate, plus the variance the
-    adjustment removes. θ = cov(Y,X)/var(X) is pooled across arms
-    (the standard unbiased-under-randomization choice);
-    Y_adj = Y − θ(X − X̄) per user REDUCES ALGEBRAICALLY to arm-level
-    moments, so no per-user float is ever materialized. Exactness:
-    per-user pre/post cent totals and the arm-level Σx, Σy, Σx²,
-    Σy², Σxy are exact BIGINTs off ONE user-keyed agg (the only
-    corpus pass) and a 2-row arm rollup; θ, the adjusted means, and
-    var_y_adj = var_y − 2θ·cov + θ²·var_x are each ONE mirrored IEEE
-    tree over those integers — no float ever sums across rows.
-    var(X)=0 degenerates to θ=0 (adjusted ≡ unadjusted) in both
-    engines. int64 headroom: Σxy ≤ (per-user cents)² · users —
-    per-user activity is SF-invariant (~70 events × ≤60000 cents),
-    so exact to ~sf100; past that, widen to DECIMAL (revenue_gini's
-    documented escape). Scale: one user shuffle, then 2-row
-    arithmetic; broadcast of the 1-row pooled frame."""
-    ev = load_table(spark, sf_dir, "events")
-    pu = (
-        ev.groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.dayofmonth("ts") <= 15,
-                    F.round(F.col("value") * 100, 0).cast("long"),
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("x"),
-            F.sum(
-                F.when(
-                    F.dayofmonth("ts") >= 16,
-                    F.round(F.col("value") * 100, 0).cast("long"),
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("y"),
-        )
-        .select((F.col("user_id") % 2).alias("arm"), "x", "y")
-    )
-    arm = pu.groupBy("arm").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    tot = arm.agg(
-        F.sum("n").cast("long").alias("tn"),
-        F.sum("sx").cast("long").alias("tsx"),
-        F.sum("sy").cast("long").alias("tsy"),
-        F.sum("sxx").cast("long").alias("tsxx"),
-        F.sum("sxy").cast("long").alias("tsxy"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    j = arm.join(F.broadcast(tot))
-    varx_t = d("tn") * d("tsxx") - d("tsx") * d("tsx")
-    theta = F.when(
-        varx_t > 0, (d("tn") * d("tsxy") - d("tsx") * d("tsy")) / varx_t
-    ).otherwise(F.lit(0.0))
-    mean_x_all = d("tsx") / d("tn")
-    mean_y = d("sy") / d("n")
-    mean_x = d("sx") / d("n")
-    var_y = (d("syy") - d("sy") * d("sy") / d("n")) / (d("n") - 1)
-    var_x = (d("sxx") - d("sx") * d("sx") / d("n")) / (d("n") - 1)
-    cov = (d("sxy") - d("sx") * d("sy") / d("n")) / (d("n") - 1)
-    return j.select(
-        "arm",
-        F.col("n").alias("n_users"),
-        theta.alias("theta"),
-        mean_y.alias("mean_y"),
-        (mean_y - theta * (mean_x - mean_x_all)).alias("mean_y_adj"),
-        var_y.alias("var_y"),
-        (var_y - 2 * theta * cov + theta * theta * var_x).alias("var_y_adj"),
-    )
 
 
 @register(
@@ -14426,7 +13264,8 @@ def q_kruskal_wallis(spark, sf_dir):
     )
 
 
-@register(
+# The pairwise self-join runs on the <=31-day daily frame (days^2, not corpus^2).
+register_sql(
     "mann_kendall_trend",
     """WITH dly AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
@@ -14470,77 +13309,6 @@ SELECT s.event_type, nt.n AS n_days, s.s AS s_stat,
 FROM s JOIN nt ON s.event_type = nt.event_type
 JOIN ties ON s.event_type = ties.event_type""",
 )
-def q_mann_kendall_trend(spark, sf_dir):
-    """Mann–Kendall monotone-trend test on each type's DAILY revenue
-    series — theil_sen_trend's significance companion (Theil–Sen
-    gives the slope, MK says whether a monotone trend exists at all,
-    with no distribution or linearity assumption) and the trend
-    member of the drift-monitor family (page_hinkley/cusum watch
-    LEVEL shifts; MK watches persistent direction). S = Σ_{i<j}
-    sign(x_j − x_i) over the ≤31-day daily frame per type is an
-    EXACT integer via a bounded self-join (≤465 pairs/type — days²,
-    not corpus²); the tie term Σt(t−1)(2t+5) likewise. var(S) and
-    the continuity-corrected z = (S∓1)/√var are one mirrored IEEE
-    tree (sqrt only); zero variance (constant series) → NULL, S=0 →
-    z=0, identically in both engines. Scale: ONE map-side-combined
-    (type,day) agg is the only corpus pass; everything after runs on
-    the span-bounded daily frame. Output one row per type."""
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-        .cast("long")
-        .alias("x")
-    )
-    a = dly.select(
-        F.col("event_type").alias("et"),
-        F.col("d").alias("da"),
-        F.col("x").alias("xa"),
-    )
-    b = dly.select(
-        F.col("event_type").alias("et"),
-        F.col("d").alias("db"),
-        F.col("x").alias("xb"),
-    )
-    s = (
-        a.join(b, "et")
-        .filter(F.col("da") < F.col("db"))
-        .groupBy("et")
-        .agg(
-            F.sum(F.signum(F.col("xb") - F.col("xa")).cast("long"))
-            .cast("long")
-            .alias("s")
-        )
-    )
-    nt = dly.groupBy(F.col("event_type").alias("et")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    ties = (
-        dly.groupBy(F.col("event_type").alias("et"), "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("t"))
-        .groupBy("et")
-        .agg(
-            F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5))
-            .cast("long")
-            .alias("ts3")
-        )
-    )
-    j = s.join(nt, "et").join(ties, "et")
-    nd = F.col("n").cast("double")
-    var = (nd * (nd - 1) * (2 * nd + 5) - F.col("ts3").cast("double")) / 18
-    sd = F.col("s").cast("double")
-    z = F.when(
-        var > 0,
-        F.when(F.col("s") > 0, (sd - 1) / F.sqrt(var))
-        .when(F.col("s") < 0, (sd + 1) / F.sqrt(var))
-        .otherwise(F.lit(0.0)),
-    ).otherwise(F.lit(None).cast("double"))
-    return j.select(
-        F.col("et").alias("event_type"),
-        F.col("n").alias("n_days"),
-        F.col("s").alias("s_stat"),
-        var.alias("var_s"),
-        z.alias("z"),
-    )
 
 
 @register(
@@ -15325,7 +14093,8 @@ def q_heaps_curve(spark, sf_dir):
 # ---- batch 6 additions (auc_score, roc_threshold_tuning) ----
 
 
-@register(
+# AUC via the rank-sum identity; the cumsum runs over distinct cents, not rows.
+register_sql(
     "auc_score",
     """WITH j AS (
   SELECT CAST(round(value * 100, 0) AS BIGINT) AS cents,
@@ -15351,57 +14120,6 @@ SELECT na AS n_pos, nb AS n_neg,
          AS gini_coef
 FROM s""",
 )
-def q_auc_score(spark, sf_dir):
-    """ROC-AUC of the value score predicting the is-purchase label
-    (plus the Gini coefficient 2·AUC−1) — the RANKING quality scalar
-    that completes the classifier-eval triptych: best_split_gini
-    scores a single threshold, calibration_curve audits probability
-    calibration, AUC says how well the score ORDERS positives above
-    negatives at every threshold at once. Computed via the rank-sum
-    identity AUC = (R⁺ − n⁺(n⁺+1)/2)/(n⁺n⁻) — exactly Mann–Whitney
-    U normalized — so the whole statistic rides mann_whitney_u's
-    distribution trick: one distinct-cents agg, a bounded cumsum
-    window (the documented ks_test allowlist shape, never a row
-    sort), DOUBLED midranks 2·below+t+1 keeping tie midranks exact
-    in int64. 2·AUC's numerator is an EXACT integer; AUC and Gini
-    are one mirrored IEEE division each. Single-row output; one
-    map-side-combined corpus pass."""
-    ev = load_table(spark, sf_dir, "events")
-    j = ev.select(
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    )
-    v = j.groupBy(F.col("cents").alias("val")).agg(
-        F.sum("y").cast("long").alias("ca"),
-        F.sum(1 - F.col("y")).cast("long").alias("cb"),
-    )
-    w = Window.orderBy("val")
-    wv = v.select(
-        "ca",
-        "cb",
-        (F.col("ca") + F.col("cb")).alias("t"),
-        (
-            F.sum(F.col("ca") + F.col("cb")).over(w)
-            - (F.col("ca") + F.col("cb"))
-        ).alias("below"),
-    )
-    s = wv.agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-        F.sum(F.col("ca") * (2 * F.col("below") + F.col("t") + 1))
-        .cast("long")
-        .alias("r2a"),
-    )
-    u2 = F.col("r2a") - F.col("na") * (F.col("na") + 1)
-    auc = u2.cast("double") / (
-        F.lit(2.0) * F.col("na").cast("double") * F.col("nb").cast("double")
-    )
-    return s.select(
-        F.col("na").alias("n_pos"),
-        F.col("nb").alias("n_neg"),
-        auc.alias("auc"),
-        (F.lit(2.0) * auc - 1).alias("gini_coef"),
-    )
 
 
 @register(
@@ -15790,7 +14508,8 @@ def q_lsh_bucket_balance(spark, sf_dir):
 # lang_id_kappa) ----
 
 
-@register(
+# Zero differences drop; doubled midranks over distinct |d| values stay exact.
+register_sql(
     "wilcoxon_signed_rank",
     """WITH pu AS (
   SELECT user_id,
@@ -15829,86 +14548,6 @@ SELECT n AS n_nonzero,
             ELSE NULL END AS z
 FROM s""",
 )
-def q_wilcoxon_signed_rank(spark, sf_dir):
-    """Wilcoxon signed-rank test on the PAIRED per-user day-vs-night
-    revenue difference — the within-subject member that completes
-    the rank-test suite (mann_whitney_u compares two INDEPENDENT
-    samples; here each user is their own control, which removes
-    between-user variance exactly the way cuped_adjustment does
-    parametrically). Zero differences drop (the standard Wilcoxon
-    convention) with the identical filter in both engines; |d| ranks
-    are exact with NO row sort via the distribution trick (distinct-
-    |d| cumsum, DOUBLED midranks 2·below+t+1), so 2·W⁺ and the
-    Σ(t³−t) tie term are EXACT integers; 2·(W⁺−μ) over √(4σ²) —
-    written as (2W⁺−n(n+1)/2·2)/√(4var), i.e. the doubled-scale
-    identity — is one mirrored IEEE tree (sqrt only); zero variance
-    → NULL both. One user-keyed agg is the only corpus pass; the
-    window runs over distinct |d| values (user-bounded, documented
-    allowlist shape); 1-row output."""
-    ev = load_table(spark, sf_dir, "events")
-    pu = (
-        ev.groupBy("user_id")
-        .agg(
-            (
-                F.sum(
-                    F.when(
-                        F.hour("ts") < 12,
-                        F.round(F.col("value") * 100, 0).cast("long"),
-                    ).otherwise(0)
-                )
-                - F.sum(
-                    F.when(
-                        F.hour("ts") >= 12,
-                        F.round(F.col("value") * 100, 0).cast("long"),
-                    ).otherwise(0)
-                )
-            )
-            .cast("long")
-            .alias("dd")
-        )
-        .filter(F.col("dd") != 0)
-    )
-    v = pu.groupBy(F.abs(F.col("dd")).alias("ad")).agg(
-        F.sum(F.when(F.col("dd") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("cp"),
-        F.sum(F.when(F.col("dd") < 0, 1).otherwise(0))
-        .cast("long")
-        .alias("cn"),
-    )
-    w = Window.orderBy("ad")
-    wv = v.select(
-        "cp",
-        "cn",
-        (F.col("cp") + F.col("cn")).alias("t"),
-        (
-            F.sum(F.col("cp") + F.col("cn")).over(w)
-            - (F.col("cp") + F.col("cn"))
-        ).alias("below"),
-    )
-    s = wv.agg(
-        F.sum(F.col("cp") + F.col("cn")).cast("long").alias("n"),
-        F.sum(F.col("cp") * (2 * F.col("below") + F.col("t") + 1))
-        .cast("long")
-        .alias("w2p"),
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
-        .cast("long")
-        .alias("tcorr"),
-    )
-    nd = F.col("n").cast("double")
-    mu2 = nd * (nd + 1) / 2
-    var4 = (
-        nd * (nd + 1) * (2 * nd + 1) / F.lit(6.0)
-        - F.col("tcorr").cast("double") / 2
-    )
-    z = F.when(
-        var4 > 0, (F.col("w2p").cast("double") - mu2) / F.sqrt(var4)
-    ).otherwise(F.lit(None).cast("double"))
-    return s.select(
-        F.col("n").alias("n_nonzero"),
-        (F.col("w2p").cast("double") / 2).alias("w_plus"),
-        z.alias("z"),
-    )
 
 
 @register(
@@ -16355,7 +14994,8 @@ def q_skyline_docs(spark, sf_dir):
     )
 
 
-@register(
+# Only discordant pairs count; the max-clamp makes b=c give 0, and b+c=0 gives NULL.
+register_sql(
     "mcnemar_test",
     """WITH pu AS (
   SELECT user_id,
@@ -16387,82 +15027,10 @@ SELECT n_users, b, c, n_both, n_neither,
             ELSE NULL END AS chi2
 FROM s""",
 )
-def q_mcnemar_test(spark, sf_dir):
-    """McNemar's test on PAIRED binary outcomes: does a user's
-    day-half purchase propensity differ from their night-half? —
-    the binary member of the within-subject family
-    (wilcoxon_signed_rank handles the paired continuous case; here
-    each user contributes one 2×2 cell and only the DISCORDANT pairs
-    b, c carry information — the classic before/after conversion
-    test chi2_independence gets wrong by ignoring pairing).
-    Continuity-corrected χ² = (max(|b−c|−1,0))²/(b+c), the Edwards
-    form, with the max-clamp mirrored (greatest) so b=c degenerates
-    to 0 not 1/(b+c); b+c=0 → NULL both engines. Exactness: the
-    concordant/discordant counts are exact BIGINTs off ONE
-    user-keyed agg (the only corpus pass) + one 5-sum rollup; χ² is
-    one mirrored IEEE tree. Single-row output."""
-    ev = load_table(spark, sf_dir, "events")
-    pu = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.hour("ts") < 12), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("day_p"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.hour("ts") >= 12), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("night_p"),
-    )
-    s = pu.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum(
-            F.when(
-                (F.col("day_p") == 1) & (F.col("night_p") == 0), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("b"),
-        F.sum(
-            F.when(
-                (F.col("day_p") == 0) & (F.col("night_p") == 1), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("c"),
-        F.sum(
-            F.when(
-                (F.col("day_p") == 1) & (F.col("night_p") == 1), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_both"),
-        F.sum(
-            F.when(
-                (F.col("day_p") == 0) & (F.col("night_p") == 0), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_neither"),
-    )
-    d = lambda c_: F.col(c_).cast("double")  # noqa: E731
-    num = F.greatest(
-        F.abs(F.col("b") - F.col("c")).cast("double") - 1, F.lit(0.0)
-    )
-    chi2 = F.when(
-        F.col("b") + F.col("c") > 0,
-        num * num / (d("b") + F.col("c")),
-    ).otherwise(F.lit(None).cast("double"))
-    return s.select(
-        "n_users", "b", "c", "n_both", "n_neither", chi2.alias("chi2")
-    )
 
 
-@register(
+# Runs from two type-partitioned LAG windows on the span-bounded daily frame.
+register_sql(
     "runs_test",
     """WITH dly AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
@@ -16506,64 +15074,6 @@ SELECT event_type, n1 AS n_up, n2 AS n_down, runs AS n_runs,
             ELSE NULL END AS z
 FROM g""",
 )
-def q_runs_test(spark, sf_dir):
-    """Wald–Wolfowitz runs test on each type's daily up/down moves —
-    the RANDOMNESS check that completes the daily-series inference
-    trio (mann_kendall asks "is there a monotone trend?",
-    runs asks "is the sequence even random?" — too FEW runs means
-    positive autocorrelation/regimes, too MANY means oscillation;
-    acf_lag quantifies the correlation this test alarms on). Zero
-    diffs drop with the identical filter both engines; runs count =
-    Σ(sign ≠ previous sign) + first, via two type-partitioned
-    span-bounded LAG windows (never a global sort); n_up/n_down/R
-    exact integers; the normal z with its exact mean/variance is one
-    mirrored IEEE tree (sqrt only); a one-sided (all-up or all-down)
-    series → NULL both. One (type,day) map-side agg is the only
-    corpus pass; one row per type."""
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-        .cast("long")
-        .alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("d")
-    mv = dly.select(
-        "event_type", "d", (F.col("x") - F.lag("x").over(w)).alias("diff")
-    ).filter(F.col("diff").isNotNull() & (F.col("diff") != 0))
-    sg = mv.select(
-        "event_type", "d", F.signum(F.col("diff")).cast("long").alias("s")
-    )
-    ch = sg.select(
-        "event_type",
-        "s",
-        F.when(
-            F.lag("s").over(w).isNull() | (F.lag("s").over(w) != F.col("s")),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_run"),
-    )
-    g = ch.groupBy("event_type").agg(
-        F.sum(F.when(F.col("s") > 0, 1).otherwise(0)).cast("long").alias("n1"),
-        F.sum(F.when(F.col("s") < 0, 1).otherwise(0)).cast("long").alias("n2"),
-        F.sum("new_run").cast("long").alias("runs"),
-    )
-    d = lambda c_: F.col(c_).cast("double")  # noqa: E731
-    n1, n2 = d("n1"), d("n2")
-    nn = n1 + n2
-    mu = 2 * n1 * n2 / nn + 1
-    var = 2 * n1 * n2 * (2 * n1 * n2 - n1 - n2) / (nn * nn * (nn - 1))
-    z = F.when(
-        (F.col("n1") > 0) & (F.col("n2") > 0) & (var > 0),
-        (d("runs") - mu) / F.sqrt(var),
-    ).otherwise(F.lit(None).cast("double"))
-    return g.select(
-        "event_type",
-        F.col("n1").alias("n_up"),
-        F.col("n2").alias("n_down"),
-        F.col("runs").alias("n_runs"),
-        z.alias("z"),
-    )
 # ---- batch 10 additions (stump_forest, cross_corr_lagged,
 # poisson_dispersion) ----
 
@@ -17246,7 +15756,8 @@ def q_xbar_chart(spark, sf_dir):
     )
 
 
-@register(
+# Cochran's Q over four six-hour blocks: exact BIGINT totals off one user-keyed agg.
+register_sql(
     "cochran_q",
     """WITH pu AS (
   SELECT user_id,
@@ -17289,63 +15800,5 @@ SELECT n_users, t0 AS t_block0, t1 AS t_block1, t2 AS t_block2,
             ELSE NULL END AS q_stat
 FROM s""",
 )
-def q_cochran_q(spark, sf_dir):
-    """Cochran's Q test: does a user's purchase propensity differ
-    across the FOUR six-hour day blocks? — the k-treatment
-    generalization of mcnemar_test (k=2 blocks reduces to McNemar
-    exactly), on the same within-subject design: each user is one
-    row of k binary outcomes, so between-user heterogeneity cancels
-    by construction. Q = k(k−1)·Σ_j(T_j−S/k)² / (k·S−Σu²) with
-    block totals T_j, S = Σu_i, and Σu_i² ALL exact BIGINTs off ONE
-    user-keyed agg (the only corpus pass) + a 7-sum rollup; the
-    k=4 squared-deviation sum is a fixed literal left-assoc tree
-    (no fold needed at literal k) and Q is one mirrored IEEE
-    division; an all-concordant family (denominator 0) → NULL both
-    engines. Single-row output."""
-    ev = load_table(spark, sf_dir, "events")
-    pu = ev.groupBy("user_id").agg(
-        *[
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.floor(F.hour("ts") / 6) == j),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias(f"x{j}")
-            for j in range(4)
-        ]
-    )
-    u = pu.select(
-        *[F.col(f"x{j}") for j in range(4)],
-        (F.col("x0") + F.col("x1") + F.col("x2") + F.col("x3")).alias("ui"),
-    )
-    s = u.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        *[F.sum(f"x{j}").cast("long").alias(f"t{j}") for j in range(4)],
-        F.sum("ui").cast("long").alias("su"),
-        F.sum(F.col("ui") * F.col("ui")).cast("long").alias("su2"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    k = F.lit(4.0)
-    tbar = d("su") / k
-    num_terms = None
-    for j in range(4):
-        t = (d(f"t{j}") - tbar) * (d(f"t{j}") - tbar)
-        num_terms = t if num_terms is None else num_terms + t
-    denom = (4 * F.col("su") - F.col("su2")).cast("double")
-    q = F.when(
-        denom > 0, k * (k - 1) * num_terms / denom
-    ).otherwise(F.lit(None).cast("double"))
-    return s.select(
-        "n_users",
-        F.col("t0").alias("t_block0"),
-        F.col("t1").alias("t_block1"),
-        F.col("t2").alias("t_block2"),
-        F.col("t3").alias("t_block3"),
-        F.col("su").alias("s_total"),
-        q.alias("q_stat"),
-    )
 
 

@@ -32,7 +32,10 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.schemas import TEST
 # schema change (missing columns null-fill silently): overwriting a
 # path with a different schema inside one session would otherwise
 # serve the stale StructType. A changed token re-infers; non-local
-# paths (no os.stat) skip the memo rather than risk staleness.
+# paths (no os.stat) skip the memo rather than risk staleness. For a
+# directory path the token is the directory's own stat, which changes
+# only when top-level entries are added, removed or renamed: rewriting
+# a data file inside the directory in place is NOT detected.
 _SCHEMA_MEMO: dict[tuple[str, str], tuple[tuple[int, int], T.StructType]] = {}
 
 

@@ -666,6 +666,43 @@ def test_plan_audit_sort_vs_agg_discrimination(spark, sf_dir):
     mm = pa.audit_plan(plan_of(QUERIES["multimodal_meta"](spark, sf_dir)))
     assert mm["python"] >= 1 and "multimodal_meta" in pa.PYTHON_OK
 
+    # shuffle exchanges and join strategies are counted per node; a
+    # broadcast shows as its join strategy, not as an exchange
+    a, b = spark.range(10), spark.range(10)
+    smj = pa.audit_plan(plan_of(a.join(b.hint("merge"), "id")))
+    assert smj["SortMergeJoin"] == 1 and smj["exchanges"] == 2
+    assert smj["BroadcastHashJoin"] == 0
+    bhj = pa.audit_plan(plan_of(a.join(b.hint("broadcast"), "id")))
+    assert bhj["BroadcastHashJoin"] == 1 and bhj["exchanges"] == 0
+    assert bhj["SortMergeJoin"] == bhj["ShuffledHashJoin"] == 0
+
+
+def test_sql_defined_queries_load_only_the_tables_they_scan(spark, sf_dir, monkeypatch):
+    """every register_sql query loads each table its SQL scans exactly
+    once and no other table: construction must not regress to
+    registering every testdata table per query."""
+    import collections
+    import re
+
+    from data_engineering_demo_real_time_city_mood_tracker_spark.plans import queries as Q
+
+    real = Q.load_table
+    sql_defined = [
+        n for n, fn in QUERIES.items() if fn.__qualname__.startswith("register_sql.")
+    ]
+    assert len(sql_defined) >= 40
+    for name in sql_defined:
+        loads = collections.Counter()
+
+        def counting(spark, sf_dir, table, loads=loads):
+            loads[table] += 1
+            return real(spark, sf_dir, table)
+
+        monkeypatch.setattr(Q, "load_table", counting)
+        df = QUERIES[name](spark, sf_dir)
+        scanned = {re.search(r"/(\w+)\.parquet", f).group(1) for f in df.inputFiles()}
+        assert loads == collections.Counter(scanned), name
+
 
 def test_session_path_single_window_takeordered(spark, sf_dir):
     """session_path_topk: both leads ride ONE user-keyed window sort

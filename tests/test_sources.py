@@ -82,9 +82,9 @@ def test_schema_memo_refreshes_on_overwrite(spark, tmp_path):
     session must not serve the stale memoized StructType (explicit-
     schema reads null-fill missing columns silently, so staleness
     would corrupt, not fail): the (mtime_ns, size) freshness token
-    forces re-inference."""
+    forces re-inference. The rewrite has a different row count, so the
+    size half of the token changes whatever the mtime granularity."""
     import os
-    import time
 
     from data_engineering_demo_real_time_city_mood_tracker_spark.sources import batch
 
@@ -94,11 +94,12 @@ def test_schema_memo_refreshes_on_overwrite(spark, tmp_path):
     assert set(first.columns) == {"id", "a"}
     # second read is served from the memo (same token)
     assert set(batch._read_parquet(spark, p).columns) == {"id", "a"}
-    time.sleep(0.01)  # ensure a distinct mtime_ns even on coarse clocks
-    spark.range(3).selectExpr("id", "id * 3 as b").toPandas().to_parquet(p)
+    size_before = batch._path_token(p)[1]
+    spark.range(5).selectExpr("id", "id * 3 as b").toPandas().to_parquet(p)
+    assert batch._path_token(p)[1] != size_before
     refreshed = batch._read_parquet(spark, p)
     assert set(refreshed.columns) == {"id", "b"}
-    assert [r.b for r in refreshed.orderBy("id").collect()] == [0, 3, 6]
+    assert [r.b for r in refreshed.orderBy("id").collect()] == [0, 3, 6, 9, 12]
     os.remove(p)
 
 

@@ -13,6 +13,11 @@ can't cover exhaustively:
                   exchange feeding a final scalar HashAggregate is
                   the normal two-phase global agg and is NOT counted.
 - scans:          parquet scans in the tree (plan-size context)
+- exchanges:      shuffle Exchange nodes (broadcasts show up as the
+                  join strategy instead)
+- one counter per join strategy (SortMergeJoin, BroadcastHashJoin,
+  ShuffledHashJoin, BroadcastNestedLoopJoin), so two audit JSONs
+  diff as a plan-equivalence check
 
 Counting happens in the TREE section only (blocks[0] — "formatted"
 repeats every node in the detail blocks); the SinglePartition
@@ -49,8 +54,9 @@ PYTHON_OK = {
 
 # Documented bounded-frame global sorts: every entry must name a frame
 # whose size is DIMENSION- or SPAN-bounded (never corpus-bounded) in
-# its query docstring. A new offender means either add the docstring
-# argument and list it here, or fix the plan.
+# its query docstring (a SQL-defined query: its comment). A new
+# offender means either add that argument and list it here, or fix
+# the plan.
 GLOBAL_SORT_OK = {
     # distinct-revenue-value frame (dimension-bounded)
     "revenue_gini",
@@ -85,6 +91,13 @@ GLOBAL_SORT_OK = {
     # NTILEs are now scored map-only against ntile_boundary_values
     # literals (zero global sorts; the r7 verdict's ask)
 }
+
+JOIN_STRATEGIES = (
+    "SortMergeJoin",
+    "BroadcastHashJoin",
+    "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin",
+)
 
 
 def audit_plan(plan: str) -> dict:
@@ -126,6 +139,8 @@ def audit_plan(plan: str) -> dict:
         ),
         "global_sort": global_sorts,
         "scans": tree.count("Scan parquet"),
+        "exchanges": len(re.findall(r"\bExchange \(\d+\)", tree)),
+        **{j: len(re.findall(rf"\b{j}\b", tree)) for j in JOIN_STRATEGIES},
     }
 
 
