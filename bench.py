@@ -1,13 +1,18 @@
-"""Benchmark harness: runs every registered query at
+"""Benchmark harness: times registered queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
-Queries are materialized with the noop sink so the full plan executes
-JVM-side (no driver collect overhead in the timing).
+    python bench.py [--plans-dir DIR] [name ...]
+
+With no names every query is timed and the streaming probe runs; with
+names only those queries are timed. Queries are materialized with the
+noop sink so the full plan executes JVM-side (no driver collect
+overhead in the timing).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -20,13 +25,49 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.session import get_
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="time registry queries")
+    ap.add_argument("--plans-dir", help="write each query's formatted plan to DIR/<name>.txt")
+    ap.add_argument("names", nargs="*", help="queries to time (default: all)")
+    args = ap.parse_args()
+    unknown = [n for n in args.names if n not in QUERIES]
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, sf_dir)
 
-    # warm the JVM/codegen path and every table's file listing once so
-    # per-query numbers reflect steady-state execution, not startup.
+    # Each query runs REPEAT times and reports the MIN: host-level
+    # contention on shared VMs sweeps through in multi-minute phases
+    # and can inflate a single timing 5-8×; the min of two spaced runs
+    # is the steady-state number the plan actually earns. The headline
+    # value is the sum of per-query minima (not wall clock, which
+    # would double-count the repeats).
+    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "2"))
+    timings, layers = time_queries(
+        spark, sf_dir, args.names or sorted(QUERIES), repeat, args.plans_dir
+    )
+
+    # streaming throughput: replay the events table through the REAL
+    # Structured Streaming mood pipeline (file source → stateful agg →
+    # memory sink, availableNow) and report source rows/sec. The
+    # reference's consumers process ~1 event/sec/producer; this is the
+    # single-node number to beat. Only a full-registry run pays for it.
+    streaming = {}
+    if not args.names:
+        try:
+            streaming = _stream_throughput(spark, sf_dir)
+        except Exception as e:  # never let the throughput probe kill bench
+            streaming = {"error": str(e)[:200]}
+
+    print(json.dumps(record(timings, layers, sf, streaming)))
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM/codegen path and every table's file listing once so
+    per-query numbers reflect steady-state execution, not startup."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
 
     for t in ("events", "documents", "embeddings", "lineitem", "orders", "customer"):
@@ -40,65 +81,98 @@ def main() -> None:
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
 
-    # Each query runs REPEAT times and reports the MIN: host-level
-    # contention on shared VMs sweeps through in multi-minute phases
-    # and can inflate a single timing 5-8×; the min of two spaced runs
-    # is the steady-state number the plan actually earns. The headline
-    # value is the sum of per-query minima (not wall clock, which
-    # would double-count the repeats).
-    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "2"))
+
+def time_queries(
+    spark, sf_dir: str, names: list[str], repeat: int, plans_dir: str | None = None
+) -> tuple[dict[str, float], dict[str, dict]]:
+    """Per-query minimum over ``repeat`` passes of the timed region
+    (builder call + noop save), and the layer split of that fastest
+    pass: construct vs exec seconds, and the Spark jobs, stages and
+    tasks the query ran end to end (read from its job group)."""
+    sc = spark.sparkContext
+    if plans_dir:
+        os.makedirs(plans_dir, exist_ok=True)
     timings: dict[str, float] = {}
-    for _ in range(repeat):
-        for name in sorted(QUERIES):
+    layers: dict[str, dict] = {}
+    for rep in range(repeat):
+        for name in names:
+            group = f"bench:{rep}:{name}"
+            sc.setJobGroup(group, name)
             t0 = time.time()
             df = QUERIES[name](spark, sf_dir)
+            t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
+            t2 = time.time()
+            sc.setJobGroup(None, None)
+            dt = round(t2 - t0, 3)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
+                # read the status tracker now, before the jobs it
+                # retains roll over
+                layers[name] = {
+                    "construct_sec": round(t1 - t0, 3),
+                    "exec_sec": round(t2 - t1, 3),
+                    **_job_counts(sc, group),
+                }
+            if plans_dir and rep == 0:
+                plan = sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+                    f.write(plan)
             # queries that persist intermediates (dedup candidate tables)
             # must not tax later queries' timings with their cached blocks
             spark.catalog.clearCache()
             # localCheckpoint RDDs (iterative operators) bypass the SQL
             # cache manager; unpersist them too or they pile up in the
             # block manager and tax later queries with GC pressure.
-            for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            for rdd in list(sc._jsc.getPersistentRDDs().values()):
                 rdd.unpersist()
+    return timings, layers
+
+
+def _job_counts(sc, group: str) -> dict[str, int]:
+    """Jobs of ``group`` and the stages and tasks they ran (skipped
+    stages, which reuse an earlier shuffle, are not counted)."""
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    n_stages = n_tasks = 0
+    for jid in job_ids:
+        ji = tracker.getJobInfo(jid)
+        if ji is None:
+            continue
+        for sid in ji.stageIds:
+            si = tracker.getStageInfo(sid)
+            if si is not None and si.numCompletedTasks > 0:
+                n_stages += 1
+                n_tasks += si.numCompletedTasks
+    return {"n_jobs": len(job_ids), "n_stages": n_stages, "n_tasks": n_tasks}
+
+
+def record(
+    timings: dict[str, float], layers: dict[str, dict], sf: float, streaming: dict
+) -> dict:
+    """The printed JSON object. A record that truncates this line keeps
+    only its TAIL, and "queries" alphabetizes — so the bulky per-query
+    layers come first and the headline (best_sum) and the slowest-10
+    detail are the LAST keys: any suffix of the line that survives
+    still carries the numbers that matter."""
     total = round(sum(timings.values()), 3)
-
-    # streaming throughput: replay the events table through the REAL
-    # Structured Streaming mood pipeline (file source → stateful agg →
-    # memory sink, availableNow) and report source rows/sec. The
-    # reference's consumers process ~1 event/sec/producer; this is the
-    # single-node number to beat.
-    streaming = {}
-    try:
-        streaming = _stream_throughput(spark, sf_dir)
-    except Exception as e:  # never let the throughput probe kill bench
-        streaming = {"error": str(e)[:200]}
-
-    # The driver's round record keeps only the TAIL of this line when it
-    # truncates, and "queries" alphabetizes — so repeat the headline
-    # (best_sum) and the slowest-10 detail as the LAST keys: any suffix
-    # of the line that survives still carries the numbers that matter.
     slowest10 = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
-    print(
-        json.dumps(
-            {
-                "metric": "all_queries_best_sum_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "streaming": streaming,
-                "n_queries": len(timings),
-                "best_sum": total,
-                "slowest10": slowest10,
-            }
-        )
-    )
+    return {
+        "metric": "all_queries_best_sum_sec",
+        "value": total,
+        "unit": "sec",
+        "layers": layers,
+        "queries": timings,
+        "sf": sf,
+        "streaming": streaming,
+        "n_queries": len(timings),
+        "best_sum": total,
+        "slowest10": slowest10,
+    }
 
 
 def _stream_throughput(spark, sf_dir: str) -> dict:

@@ -6,6 +6,10 @@ The reference implements these as row-at-a-time Python UDFs
 Here they are ``F.when`` chains: Catalyst folds them into whole-stage
 codegen, so at 100 TB the scoring costs nothing beyond the scan —
 there is no Python round-trip per row.
+
+The exact averages below (``dsum``/``davg``) sum in DECIMAL, so the
+result does not depend on partition order: a batch run, a streaming
+run and the DuckDB oracle (``davg_sql``) agree bit for bit.
 """
 
 from __future__ import annotations
@@ -36,6 +40,20 @@ STRESSFUL_WEATHER = [
     "thunderstorm",
     "thunderstorm_with_hail",
 ]
+
+
+def dsum(c: Column, scale: int = 2) -> Column:
+    """exact decimal sum → double (partition-order independent)."""
+    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
+
+
+def davg(c: Column, scale: int = 6) -> Column:
+    """exact-sum / count average — bitwise equal across engines."""
+    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(c)
+
+
+def davg_sql(x: str, scale: int = 6) -> str:
+    return f"CAST(SUM(CAST({x} AS DECIMAL(18,{scale}))) AS DOUBLE)/COUNT({x})"
 
 
 def traffic_condition(speed: Column) -> Column:

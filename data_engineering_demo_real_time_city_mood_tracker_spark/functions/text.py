@@ -37,6 +37,21 @@ def normalize_sql(text: str) -> str:
     )
 
 
+def hex4(col: Column, off: int, mod: int) -> Column:
+    """4 hex digits of ``col`` starting at 1-based ``off`` as an integer
+    mod ``mod``; ``hex4(F.md5(x), 1, n)`` is the md5 token-bucket hash."""
+    return F.conv(F.substring(col, off, 4), 16, 10).cast("long") % mod
+
+
+def hex4_sql(col: str, off: int, mod: int) -> str:
+    """DuckDB rendering of :func:`hex4`."""
+    d = [
+        f"(strpos('0123456789abcdef', substr({col}, {off + i}, 1)) - 1)"
+        for i in range(4)
+    ]
+    return f"(((({d[0]} * 16 + {d[1]}) * 16 + {d[2]}) * 16 + {d[3]}) % {mod})"
+
+
 def tokens(text: Column) -> Column:
     """whitespace tokens of the normalized text (array<string>)."""
     return F.split(normalize(text), " ")

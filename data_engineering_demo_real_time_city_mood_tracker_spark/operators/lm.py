@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import tokens
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import hex4, tokens
 from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread, _toked
 
 # Quantization scale for conditional probabilities / likelihood
@@ -182,7 +182,7 @@ def dsir_scores(docs: DataFrame, is_target, text_col: str = "text",
         .select("id", "_tgt", tokens(F.col("_txt")).alias("_toks"))
         .select("id", "_tgt", F.explode("_toks").alias("token"))
     )
-    b = F.conv(F.substring(F.md5(F.col("token")), 1, 4), 16, 10).cast("long") % n_buckets
+    b = hex4(F.md5(F.col("token")), 1, n_buckets)
     # No persist (r4 ADVICE): tb is an aggregation — its three
     # references (source totals, target totals, the scoring join)
     # reuse one Exchange subtree within the single consumer action;
@@ -234,7 +234,7 @@ def dsir_weight_table(docs: DataFrame, is_target, text_col: str = "text",
         .select("id", "_tgt", tokens(F.col("_txt")).alias("_toks"))
         .select("id", "_tgt", F.explode("_toks").alias("token"))
     )
-    b = F.conv(F.substring(F.md5(F.col("token")), 1, 4), 16, 10).cast("long") % n_buckets
+    b = hex4(F.md5(F.col("token")), 1, n_buckets)
     tb = tok.select("_tgt", b.alias("b"))
     agg = (
         tb.groupBy("b")
@@ -307,7 +307,7 @@ def hashed_presence_features(docs: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id",
                              n_buckets: int = 256) -> DataFrame:
     """(id, b) — binary hashed-unigram presence features (md5 bucket
-    mod ``n_buckets``, the dsir _hex4 idiom) plus a sentinel row
+    mod ``n_buckets``, the dsir hex4 idiom) plus a sentinel row
     ``b = -1`` on every document. The sentinel carries weight 0
     forever; its "gradient" is sum_i resid_i, so the scalar centering
     correction rides the same single per-round collect as the real
@@ -316,10 +316,7 @@ def hashed_presence_features(docs: DataFrame, text_col: str = "text",
         _toked(docs, text_col, id_col)
         .select("id", F.explode("_toks").alias("token"))
     )
-    b = (
-        F.conv(F.substring(F.md5(F.col("token")), 1, 4), 16, 10).cast("long")
-        % n_buckets
-    )
+    b = hex4(F.md5(F.col("token")), 1, n_buckets)
     feats = tok.select("id", b.alias("b")).distinct()
     sentinel = docs.select(
         F.col(id_col).alias("id"), F.lit(-1).cast("long").alias("b")

@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import davg
 from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import read_jsonl_valid
 
 REQUIRED_FIELDS = ("event_time", "intersection", "weather", "avg_speed")
@@ -83,14 +84,15 @@ def load_valid(spark: SparkSession, path: str) -> DataFrame:
 
 def daily_summary_job(mood_df: DataFrame, for_date: str) -> DataFrame:
     """One day's (intersection, mood) rollup (ref summarize_mood_data).
-    The date filter prunes before the shuffle."""
+    The date filter prunes before the shuffle; the exact-decimal
+    averages make the result independent of partition order."""
     return (
         mood_df.filter(F.to_date("event_time") == F.lit(for_date).cast("date"))
         .groupBy("intersection", "mood")
         .agg(
             F.count(F.lit(1)).alias("records_count"),
-            F.avg("avg_speed").alias("avg_speed"),
-            F.avg("avg_temp").alias("avg_temp"),
+            davg(F.col("avg_speed")).alias("avg_speed"),
+            davg(F.col("avg_temp")).alias("avg_temp"),
         )
     )
 

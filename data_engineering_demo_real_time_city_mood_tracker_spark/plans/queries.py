@@ -36,12 +36,16 @@ from pyspark.sql import functions as F
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions import text as T
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions import vectors as V
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import (
+    davg,
+    davg_sql,
+    dsum,
     mood_label,
     mood_label_sql,
     traffic_condition,
     traffic_condition_sql,
 )
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.sentiment import sentiment, sentiment_sql
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import hex4, hex4_sql
 from data_engineering_demo_real_time_city_mood_tracker_spark.operators import (
     bpe,
     dedup,
@@ -127,20 +131,6 @@ WEATHER_CODES = [
     "thunderstorm_with_hail",
 ]
 _CODES_SQL = "[" + ", ".join(f"'{c}'" for c in WEATHER_CODES) + "]"
-
-
-def dsum(c, scale: int = 2):
-    """exact decimal sum → double (partition-order independent)."""
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
-
-
-def davg(c, scale: int = 6):
-    """exact-sum / count average — bitwise equal across engines."""
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(c)
-
-
-def davg_sql(x: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST({x} AS DECIMAL(18,{scale}))) AS DOUBLE)/COUNT({x})"
 
 
 def _query_vectors(sf_dir: str, max_id: int) -> list[tuple[int, list[float]]]:
@@ -5420,21 +5410,6 @@ def q_join_key_skew_profile(spark, sf_dir):
 # (round-2 additions beyond the first LLM-pipeline block)
 
 
-def _hex4_sql(col: str, off: int, mod: int) -> str:
-    """DuckDB: 4 hex digits of ``col`` starting at 1-based ``off`` as an
-    integer mod ``mod`` — mirrors Spark ``conv(substring(col,off,4),16,10)``."""
-    d = [
-        f"(strpos('0123456789abcdef', substr({col}, {off + i}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return f"(((({d[0]} * 16 + {d[1]}) * 16 + {d[2]}) * 16 + {d[3]}) % {mod})"
-
-
-def _hex4(col, off: int, mod: int):
-    """Spark twin of :func:`_hex4_sql`."""
-    return F.conv(F.substring(col, off, 4), 16, 10).cast("long") % mod
-
-
 @register(
     "dedup_report",
     f"""WITH normd AS (
@@ -5475,7 +5450,7 @@ def q_dedup_report(spark, sf_dir):
 @register(
     "stratified_kfold",
     f"""WITH assigned AS (
-  SELECT lang, {_hex4_sql("md5(CAST(doc_id AS VARCHAR))", 1, 5)} AS fold
+  SELECT lang, {hex4_sql("md5(CAST(doc_id AS VARCHAR))", 1, 5)} AS fold
   FROM documents
 ),
 g AS (
@@ -5495,7 +5470,7 @@ def q_stratified_kfold(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     assigned = docs.select(
         "lang",
-        _hex4(F.md5(F.col("doc_id").cast("string")), 1, 5).alias("fold"),
+        hex4(F.md5(F.col("doc_id").cast("string")), 1, 5).alias("fold"),
     )
     g = assigned.groupBy("fold", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
@@ -5576,8 +5551,8 @@ _BLOOM_M = 4096  # bits; sized ~10x the sf0.01 corpus keys (see docstring)
 ),
 pos AS (
   SELECT doc_id, fp,
-         {_hex4_sql('fp', 1, _BLOOM_M)} AS p0, {_hex4_sql('fp', 5, _BLOOM_M)} AS p1,
-         {_hex4_sql('fp', 9, _BLOOM_M)} AS p2, {_hex4_sql('fp', 13, _BLOOM_M)} AS p3
+         {hex4_sql('fp', 1, _BLOOM_M)} AS p0, {hex4_sql('fp', 5, _BLOOM_M)} AS p1,
+         {hex4_sql('fp', 9, _BLOOM_M)} AS p2, {hex4_sql('fp', 13, _BLOOM_M)} AS p3
   FROM fps
 ),
 corpus AS (SELECT * FROM pos WHERE doc_id % 10 != 0),
@@ -5619,7 +5594,7 @@ def q_bloom_dedup(spark, sf_dir):
     pos = fps.select(
         "doc_id",
         "fp",
-        *[_hex4(F.col("fp"), 4 * j + 1, _BLOOM_M).alias(f"p{j}") for j in range(4)],
+        *[hex4(F.col("fp"), 4 * j + 1, _BLOOM_M).alias(f"p{j}") for j in range(4)],
     )
     corpus = pos.filter(F.col("doc_id") % 10 != 0)
     bits = sorted(
@@ -6977,7 +6952,7 @@ def q_bigram_lm_score(spark, sf_dir):
   FROM documents
 ),
 tb AS (
-  SELECT id, is_tgt, {_hex4_sql("md5(token)", 1, 4096)} AS b, COUNT(*) AS c
+  SELECT id, is_tgt, {hex4_sql("md5(token)", 1, 4096)} AS b, COUNT(*) AS c
   FROM tok GROUP BY id, is_tgt, b
 ),
 srcc AS (SELECT b, SUM(c) AS sc FROM tb GROUP BY b),
@@ -6995,7 +6970,7 @@ LIMIT (SELECT GREATEST(1, COUNT(*) // 4) FROM documents)""",
 )
 def q_dsir_sample(spark, sf_dir):
     """DSIR importance resampling (Xie et al. 2023), portable variant:
-    hashed-unigram features (md5 bucket mod 4096 — the _hex4 idiom),
+    hashed-unigram features (md5 bucket mod 4096 — the hex4 idiom),
     add-one-smoothed target/source ratio quantized to BIGINT, keep the
     top quarter by score with doc_id tiebreak (total order, so the
     LIMIT boundary is engine-independent). Target exemplars here are
@@ -7322,7 +7297,7 @@ y AS MATERIALIZED (
 ),
 f AS MATERIALIZED (
   SELECT DISTINCT doc_id AS id,
-         CAST({_hex4_sql("md5(token)", 1, _QC_B)} AS BIGINT) AS b
+         CAST({hex4_sql("md5(token)", 1, _QC_B)} AS BIGINT) AS b
   FROM (SELECT doc_id, unnest(string_split({_docs_norm_sql()}, ' ')) AS token
         FROM documents)
   UNION ALL
@@ -8046,7 +8021,7 @@ def q_domain_cap_sample(spark, sf_dir):
 @register(
     "group_holdout_split",
     f"""SELECT doc_id, source,
-       CASE WHEN {_hex4_sql("md5(source)", 1, 10)} < 8
+       CASE WHEN {hex4_sql("md5(source)", 1, 10)} < 8
             THEN 'train' ELSE 'heldout' END AS split
 FROM documents""",
 )
@@ -8058,10 +8033,7 @@ def q_group_holdout_split(spark, sf_dir):
     semantics train_test_split's per-doc hash cannot give). Map-only,
     no shuffle; deterministic across engines and re-runs."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("source")), 1, 4), 16, 10).cast("long")
-        % 10
-    )
+    bucket = hex4(F.md5(F.col("source")), 1, 10)
     return docs.select(
         "doc_id",
         "source",

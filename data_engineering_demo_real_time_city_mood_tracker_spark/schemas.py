@@ -7,16 +7,7 @@ weather_producer.py:50-55, news_producer.py:23-30.
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import DoubleType, StringType, StructType, TimestampType
 
 TRAFFIC_SCHEMA = (
     StructType()
@@ -39,17 +30,6 @@ NEWS_SCHEMA = (
     .add("timestamp", TimestampType())
     .add("headline", StringType())
     .add("sentiment", StringType())
-)
-
-# Multimodal: opaque payload + typed metadata (decode is stubbed —
-# see operators/multimodal.py).
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("meta", MapType(StringType(), StringType())),
-    ]
 )
 
 TESTDATA_TABLES = [

@@ -20,13 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import mood_label
-
-
-def _davg(c):
-    # exact decimal sum → double; incremental-friendly and identical
-    # between the batch and streaming evaluations of the same data
-    return F.sum(c.cast("decimal(18,6)")).cast("double") / F.count(c)
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import davg, mood_label
 
 
 def unified_events(
@@ -98,76 +92,14 @@ def mood_from_unified(u: DataFrame, watermark: str = "2 minutes") -> DataFrame:
         u.groupBy(F.window("event_time", "1 minute").alias("w"), "intersection")
         .agg(
             F.count(F.when(is_t, 1)).alias("n_traffic"),
-            _davg(F.when(is_t, F.col("speed"))).alias("avg_speed"),
-            _davg(F.when(is_w, F.col("temp"))).alias("avg_temp"),
+            davg(F.when(is_t, F.col("speed"))).alias("avg_speed"),
+            davg(F.when(is_w, F.col("temp"))).alias("avg_temp"),
             F.min(F.when(is_w, F.col("weather"))).alias("weather"),
             F.min(F.when(is_n, F.col("sentiment"))).alias("sentiment"),
         )
         .filter(F.col("n_traffic") > 0)  # left-join semantics: traffic drives
     )
     return agg.select(
-        F.col("w.start").alias("event_time"),
-        "intersection",
-        "avg_speed",
-        "avg_temp",
-        "weather",
-        "sentiment",
-        mood_label(F.col("avg_speed"), F.col("weather"), F.col("sentiment")).alias(
-            "mood"
-        ),
-    )
-
-
-def mood_stream_highcard(
-    traffic: DataFrame,
-    weather: DataFrame,
-    news: DataFrame,
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Aggregate-then-join mood pipeline for HIGH-CARDINALITY key sets.
-
-    ``mood_stream`` replicates every weather/news row across the
-    intersection list before aggregating — the right trade at the
-    reference's 4 intersections (one stateful operator, one shuffle),
-    but a ×|intersections| input blow-up that is wrong at 10⁴ keys.
-    Crossover: fan-out input cost is |meta rows|×|keys|, this
-    variant's extra cost is two more stateful operators and a join
-    whose small side is ONE aggregated row per minute — so prefer
-    fan-out below ~10² keys, aggregate-then-join above.
-
-    Shape (3 stateful aggs + chained stream-stream join, supported in
-    Spark ≥3.5 append mode when the join key is the time window):
-
-        traffic → groupBy(window, intersection) → per-key agg
-        weather → groupBy(window)                → 1 row/min
-        news    → groupBy(window)                → 1 row/min
-        t ⟕ w ⟕ n  ON window  → mood_label
-
-    Weather/news state is O(windows), not O(windows × keys); their
-    per-minute aggregates broadcast-join onto the keyed traffic agg.
-    Matches the reference's three-agg + two-left-join DAG
-    (jobs/spark_mood_tracker.py:64-79) without its per-row Python.
-    Batch inputs skip the watermark; ``mood_stream`` and this function
-    produce identical rows on the same input (asserted in tests).
-    """
-    if traffic.isStreaming:
-        traffic = traffic.withWatermark("event_time", watermark)
-    if weather.isStreaming:
-        weather = weather.withWatermark("event_time", watermark)
-    if news.isStreaming:
-        news = news.withWatermark("event_time", watermark)
-    w1 = F.window("event_time", "1 minute").alias("w")
-    t_agg = traffic.groupBy(w1, "intersection").agg(
-        F.count(F.lit(1)).alias("n_traffic"),
-        _davg(F.col("speed")).alias("avg_speed"),
-    )
-    w_agg = weather.groupBy(w1).agg(
-        _davg(F.col("temp")).alias("avg_temp"),
-        F.min("weather").alias("weather"),
-    )
-    n_agg = news.groupBy(w1).agg(F.min("sentiment").alias("sentiment"))
-    joined = t_agg.join(w_agg, "w", "left").join(n_agg, "w", "left")
-    return joined.select(
         F.col("w.start").alias("event_time"),
         "intersection",
         "avg_speed",

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import tokens
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import hex4, tokens
 
 
 def quality_score_expr(w: dict[int, int], kc: int, text_col: str,
@@ -38,8 +38,7 @@ def quality_score_expr(w: dict[int, int], kc: int, text_col: str,
     buckets = F.array_distinct(
         F.transform(
             tokens(F.col(text_col)),
-            lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long")
-            % n_buckets,
+            lambda t: hex4(F.md5(t), 1, n_buckets),
         )
     )
     score = F.aggregate(
@@ -79,8 +78,7 @@ def dsir_score_expr(w: dict[int, int], text_col: str,
     )
     buckets = F.transform(
         tokens(F.col(text_col)),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long")
-        % n_buckets,
+        lambda t: hex4(F.md5(t), 1, n_buckets),
     )
     s = F.aggregate(
         buckets,

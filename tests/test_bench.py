@@ -1,0 +1,25 @@
+"""bench.py's timing loop, run in-process on two registry queries."""
+
+from __future__ import annotations
+
+import bench
+
+
+def test_time_queries_reports_minima_and_layers(spark, sf_dir):
+    names = ["pricing_summary", "top_customers"]
+    timings, layers = bench.time_queries(spark, sf_dir, names, repeat=2)
+    rec = bench.record(timings, layers, 0.001, {})
+    assert list(rec) == [
+        "metric", "value", "unit", "layers", "queries", "sf", "streaming",
+        "n_queries", "best_sum", "slowest10",
+    ]
+    assert list(rec["queries"]) == names
+    assert all(isinstance(v, float) for v in rec["queries"].values())
+    assert rec["value"] == rec["best_sum"] == round(sum(timings.values()), 3)
+    assert list(rec["layers"]) == names
+    for name in names:
+        row = layers[name]
+        # three roundings to 1 ms apart
+        assert abs(row["construct_sec"] + row["exec_sec"] - timings[name]) <= 0.0015
+        assert row["n_jobs"] >= 1
+        assert row["n_tasks"] >= row["n_stages"] >= 1

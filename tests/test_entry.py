@@ -94,7 +94,7 @@ def test_survey_checklist_matches_registry():
         "plans/pipelines.py", "run_with_alert", "plans/orchestration.py",
         "merge_agg_partials", "streaming/producers.py", "streaming/monitor.py",
         "sources/maintenance.py", "sources/layout.py", "register_tables",
-        "build_ivf_index", "build_dedup_index", "mood_stream_highcard",
+        "build_ivf_index", "build_dedup_index",
         "sessionize_stream_tws", "streaming/app.py", "streaming/dedup.py",
         "dedup_ingest_stream", "read_orc", "simhash_portable",
         "observed_write",

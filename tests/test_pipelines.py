@@ -5,6 +5,7 @@ against the real mood frame with injected sinks (no Mongo/Postgres/S3).
 from __future__ import annotations
 
 import datetime as dt
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,18 +75,46 @@ def test_export_pipeline_roundtrip(spark, sf_dir, tmp_path):
     assert back == orig
 
 
+def _exact_avg(values):
+    """davg on the driver: each double as Spark casts it to
+    decimal(18,6), an exact sum, then float(sum) / n."""
+    vs = [
+        Decimal(repr(v)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+        for v in values
+        if v is not None
+    ]
+    return float(sum(vs)) / len(vs) if vs else None
+
+
 def test_daily_summary_job_matches_manual(spark, sf_dir):
-    m = _mood(spark, sf_dir)
-    day = str(m.select(F.to_date(F.min("event_time"))).first()[0])
-    out = daily_summary_job(m, day)
-    manual = (
-        m.filter(F.to_date("event_time") == day)
-        .groupBy("intersection", "mood")
-        .count()
+    """counts and exact-decimal averages bitwise equal to a driver-side
+    Decimal recomputation, whatever the partitioning. Every mood row is
+    moved onto one day so each (intersection, mood) group is large; a
+    plain float avg misses on several groups here."""
+    m = _mood(spark, sf_dir).withColumn(
+        "event_time", F.timestamp_seconds(F.unix_timestamp("event_time") % 86400)
     )
-    got = {(r.intersection, r.mood): r.records_count for r in out.collect()}
-    expect = {(r.intersection, r.mood): r["count"] for r in manual.collect()}
-    assert got == expect and got
+    rows = m.collect()
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault((r.intersection, r.mood), []).append(r)
+    expect = {
+        k: (len(rs), _exact_avg([r.avg_speed for r in rs]),
+            _exact_avg([r.avg_temp for r in rs]))
+        for k, rs in groups.items()
+    }
+    assert len(expect) > 1
+    local = spark.createDataFrame(rows, m.schema)
+    for parts in (1, 8):
+        out = daily_summary_job(local.repartition(parts), "1970-01-01")
+        got = {
+            (r.intersection, r.mood): (r.records_count, r.avg_speed, r.avg_temp)
+            for r in out.collect()
+        }
+        # floats compared by repr: bitwise equal
+        assert {k: tuple(map(repr, v)) for k, v in got.items()} == {
+            k: tuple(map(repr, v)) for k, v in expect.items()
+        }
 
 
 def test_backfill_deterministic_and_shaped(spark):

@@ -17,7 +17,6 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch impor
 from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.mood_pipeline import (
     mood_from_unified,
     mood_stream,
-    mood_stream_highcard,
     unified_events,
 )
 from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.sinks import (
@@ -121,55 +120,6 @@ def test_stream_append_mode_with_watermark(spark, sf_dir, tmp_path):
     )
     out = mood_from_unified(stream)
     qname = f"moodapp_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {tuple(str(v) for v in row) for row in spark.table(qname).collect()}
-    assert got, "append mode should emit some closed windows"
-    assert got <= batch_rows
-
-
-def test_highcard_variant_matches_fanout_on_batch(spark, sf_dir):
-    """mood_stream (fan-out, right at few keys) and mood_stream_highcard
-    (aggregate-then-join, right at many keys) are two physical plans
-    for the SAME semantics — identical rows on identical input."""
-    traffic, weather, news = _typed_frames(spark, sf_dir)
-    fanout = {
-        tuple(str(v) for v in row)
-        for row in mood_stream(traffic, weather, news, INTERSECTIONS).collect()
-    }
-    highcard = {
-        tuple(str(v) for v in row)
-        for row in mood_stream_highcard(traffic, weather, news).collect()
-    }
-    assert fanout, "batch mood result should be non-empty"
-    assert highcard == fanout
-
-
-@pytest.mark.slow  # excluded from the driver-window gate (pytest.ini); run via -m slow
-def test_highcard_variant_streaming_append(spark, sf_dir, tmp_path):
-    """the aggregate-then-join pipeline runs as a streaming query with
-    chained stateful operators (3 windowed aggs + window-keyed joins);
-    append mode emits a non-empty subset of the batch result."""
-    traffic, weather, news = _typed_frames(spark, sf_dir)
-    batch_rows = {
-        tuple(str(v) for v in row)
-        for row in mood_stream_highcard(traffic, weather, news).collect()
-    }
-    streams = {}
-    for name, df in [("traffic", traffic), ("weather", weather), ("news", news)]:
-        d = str(tmp_path / name)
-        df.orderBy("event_time").coalesce(1).write.mode("overwrite").parquet(d)
-        streams[name] = spark.readStream.schema(df.schema).parquet(d)
-    out = mood_stream_highcard(
-        streams["traffic"], streams["weather"], streams["news"]
-    )
-    qname = f"moodhc_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
