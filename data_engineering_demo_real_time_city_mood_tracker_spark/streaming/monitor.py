@@ -4,7 +4,8 @@ per-micro-batch progress (rows, throughput, state size, durations).
 The reference stack watches its pipeline from the outside (Kafka UI +
 Mongo Express containers in docker-compose.yml); Spark exposes richer
 engine-side signals — input rows per trigger, processedRowsPerSecond,
-stateOperators numRowsTotal/numRowsUpdated, per-phase durationMs —
+stateOperators numRowsTotal/numRowsUpdated/memoryUsedBytes and
+late rows numRowsDroppedByWatermark, per-phase durationMs —
 through the listener API. ``ProgressRecorder`` turns those into plain
 dicts (in memory, optionally appended to a JSONL file) so tests,
 dashboards, or alert rules can consume them without scraping logs.
@@ -39,6 +40,7 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        ops = p.stateOperators or []
         rec = {
             "query_id": str(p.id),
             "name": p.name,
@@ -48,11 +50,11 @@ class ProgressRecorder(StreamingQueryListener):
             "input_rows_per_sec": p.inputRowsPerSecond,
             "processed_rows_per_sec": p.processedRowsPerSecond,
             "duration_ms": dict(p.durationMs or {}),
-            "state_rows_total": sum(
-                s.numRowsTotal for s in (p.stateOperators or [])
-            ),
-            "state_rows_updated": sum(
-                s.numRowsUpdated for s in (p.stateOperators or [])
+            "state_rows_total": sum(s.numRowsTotal for s in ops),
+            "state_rows_updated": sum(s.numRowsUpdated for s in ops),
+            "state_memory_bytes": sum(s.memoryUsedBytes for s in ops),
+            "rows_dropped_by_watermark": sum(
+                s.numRowsDroppedByWatermark for s in ops
             ),
         }
         self.progress.append(rec)

@@ -1,0 +1,110 @@
+"""session.py: the per-process zip-directory fix that every Python
+worker installs by importing the package."""
+
+from __future__ import annotations
+
+import importlib
+import sys
+import zipfile
+import zipimport
+
+from data_engineering_demo_real_time_city_mood_tracker_spark import session
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import ensure_shipped
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+def test_zip_directory_reread_only_when_archive_changes(tmp_path, monkeypatch):
+    zpath = str(tmp_path / "mods.zip")
+    _write_zip(zpath, {"zmod_first": "VALUE = 1\n"})
+    monkeypatch.syspath_prepend(zpath)
+    try:
+        assert importlib.import_module("zmod_first").VALUE == 1
+        importlib.invalidate_caches()  # records the archive's stat
+
+        reads: list[str] = []
+        real = zipimport._read_directory
+
+        def counting(path):
+            if path == zpath:
+                reads.append(path)
+            return real(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counting)
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        if sys.version_info < (3, 13):
+            assert reads == [], "an unchanged zip must not be re-read"
+
+        _write_zip(zpath, {"zmod_first": "VALUE = 1\n", "zmod_second": "VALUE = 2\n"})
+        importlib.invalidate_caches()
+        if sys.version_info < (3, 13):
+            assert reads == [zpath], "a rewritten zip must be re-read once"
+        assert importlib.import_module("zmod_second").VALUE == 2
+    finally:
+        for name in ("zmod_first", "zmod_second"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(zpath, None)
+        zipimport._zip_directory_cache.pop(zpath, None)
+
+
+def test_python_313_keeps_the_stdlib_method(monkeypatch):
+    def stdlib_method(self):
+        pass
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib_method)
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0))
+    session.skip_unchanged_zip_rereads()
+    assert zipimport.zipimporter.invalidate_caches is stdlib_method
+
+
+def test_python_worker_tasks_skip_unchanged_zip_rereads(spark):
+    """Guard: every Python task imports the package when it unpickles
+    its closure, so in a worker's second task the per-task
+    ``importlib.invalidate_caches()`` re-reads no archive. Counts calls;
+    times nothing."""
+    ensure_shipped(spark)
+
+    def probe(rows):
+        import importlib
+        import os
+        import zipimport
+
+        import data_engineering_demo_real_time_city_mood_tracker_spark  # noqa: F401
+
+        for _ in rows:  # a worker that leaves input unread is not reused
+            pass
+        reads = []
+        real = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return real(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        marked = getattr(zipimport.zipimporter.invalidate_caches, "skips_unchanged_zips", False)
+        return [(os.getpid(), len(reads), marked)]
+
+    # Idle workers are reused first-in first-out, so a worker runs the
+    # probe a second time once the job count passes the idle-pool size.
+    sc = spark.sparkContext
+    seen: set[int] = set()
+    for _ in range(4 * sc.defaultParallelism + 1):
+        (pid, reads, marked), = sc.parallelize([0], 1).mapPartitions(probe).collect()
+        if sys.version_info >= (3, 13):
+            assert not marked
+            return
+        assert marked, "the worker did not install skip_unchanged_zip_rereads"
+        if pid in seen:
+            assert reads == 0, f"a worker's second task re-read {reads} zip directories"
+            return
+        seen.add(pid)
+    raise AssertionError(f"no Python worker was reused across {len(seen)} tasks")

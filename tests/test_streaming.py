@@ -925,6 +925,9 @@ def test_progress_recorder_captures_metrics(spark, sf_dir, tmp_path):
     assert any(p["state_rows_total"] > 0 for p in fed), (
         "stateful agg must report state rows"
     )
+    assert any(p["state_memory_bytes"] > 0 for p in fed)
+    # one in-watermark pass over the table: no row is late
+    assert all(p["rows_dropped_by_watermark"] == 0 for p in rec.progress)
     assert all("triggerExecution" in p["duration_ms"] for p in fed)
     with open(jsonl) as fh:
         lines = [json.loads(line) for line in fh]
