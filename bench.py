@@ -175,6 +175,11 @@ def record(
     }
 
 
+# a probe still running after this long is stopped and reported as an
+# error, never as a throughput over the timeout
+STREAM_TIMEOUT_S = 300
+
+
 def _stream_throughput(spark, sf_dir: str) -> dict:
     import shutil
     import tempfile
@@ -182,26 +187,17 @@ def _stream_throughput(spark, sf_dir: str) -> dict:
 
     from pyspark.sql import functions as F
 
-    from data_engineering_demo_real_time_city_mood_tracker_spark.plans.queries import WEATHER_CODES
+    from data_engineering_demo_real_time_city_mood_tracker_spark.plans.queries import _clicks, _views
     from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
     from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.mood_pipeline import mood_stream
 
     ev = load_table(spark, sf_dir, "events")
     n_events = ev.count()
-    traffic = ev.filter(F.col("event_type") == "click").select(
-        F.col("ts").alias("event_time"),
-        F.concat(F.lit("int_"), (F.col("user_id") % 4).cast("string")).alias(
-            "intersection"
-        ),
-        F.col("value").alias("speed"),
+    traffic = _clicks(spark, sf_dir).select(
+        F.col("ts").alias("event_time"), "intersection", "speed"
     )
-    k = F.get_json_object("props", "$.k").cast("int")
-    weather = ev.filter(F.col("event_type") == "view").select(
-        F.col("ts").alias("event_time"),
-        F.col("value").alias("temp"),
-        F.element_at(
-            F.array(*[F.lit(c) for c in WEATHER_CODES]), (k % 22) + 1
-        ).alias("weather"),
+    weather = _views(spark, sf_dir).select(
+        F.col("ts").alias("event_time"), "temp", "weather"
     )
     news = ev.filter(F.col("event_type") == "error").select(
         F.col("ts").alias("event_time"),
@@ -231,8 +227,11 @@ def _stream_throughput(spark, sf_dir: str) -> dict:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        finished = q.awaitTermination(STREAM_TIMEOUT_S)
         wall = time.time() - t0
+        if not finished:
+            q.stop()
+            return {"error": f"mood_stream still running after {STREAM_TIMEOUT_S} s; stopped"}
         n_out = spark.table(qname).count()
         return {
             "pipeline": "mood_stream availableNow, file source -> memory sink",

@@ -97,24 +97,6 @@ def word_shingles_sql(text: str, k: int) -> str:
     )
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
-def punct_ratio(text: Column) -> Column:
-    """fraction of characters that are not alphanumeric/space."""
-    stripped = F.regexp_replace(text, r"[a-zA-Z0-9 ]", "")
-    return F.when(F.length(text) > 0, F.length(stripped) / F.length(text)).otherwise(
-        F.lit(0.0)
-    )
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = tokens(text)
-    hits = F.size(F.filter(toks, lambda t: t.isin(LANG_STOPWORDS[lang])))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def fingerprint(text: Column) -> Column:
     """md5 of the normalized text — exact-dup key (engine-portable)."""
     return F.md5(normalize(text))

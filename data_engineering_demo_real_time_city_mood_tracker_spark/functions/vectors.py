@@ -26,10 +26,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def sign_bucket(a: Column, nbits: int) -> Column:
     """Axis-aligned hyperplane LSH: bucket id from the sign bits of the
     first ``nbits`` dimensions. Deterministic, engine-portable, and a

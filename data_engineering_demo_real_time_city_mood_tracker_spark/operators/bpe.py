@@ -225,7 +225,6 @@ def encode_bpe(
 def subword_counts(
     docs: DataFrame,
     text_col: str,
-    id_col: str,
     merges: list[tuple[str, str]],
     group_col: str,
 ) -> DataFrame:

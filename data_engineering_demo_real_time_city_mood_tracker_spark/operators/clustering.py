@@ -142,7 +142,6 @@ def assign_clusters(
     vec_col: str,
     id_col: str,
     centroids: list[list[float]],
-    use_blas: bool | None = None,
 ) -> DataFrame:
     """(id, cluster, vec): nearest-centroid assignment, map-only.
 
@@ -152,19 +151,12 @@ def assign_clusters(
     evaluation (measured: k=156 k-means 30.7 s vs 4 s at sf1) — so
     large k ships the matrix as ONE broadcast row instead: identical
     arithmetic on the same doubles (createDataFrame round-trips float
-    bits exactly), plan size O(1) in k.
-
-    ``use_blas`` makes the path choice explicit (ADVICE r3): the BLAS
-    path computes ||c||² − 2v·c, which can argmin differently from
-    the per-dimension fold on near-tie distances. Default ``None``
-    keeps the size-based switch; pass ``False`` to force fold-exact
-    semantics at any k (paying interpreted eval past the codegen
-    budget), ``True`` to force the matmul path at small k."""
+    bits exactly), plan size O(1) in k. The BLAS path computes
+    ||c||² − 2v·c, which can argmin differently from the
+    per-dimension fold on near-tie distances."""
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     base = df.select(F.col(id_col).alias("id"), vec.alias("vec"))
-    if use_blas is None:
-        use_blas = len(centroids) > _LITERAL_K_MAX
-    if use_blas:
+    if len(centroids) > _LITERAL_K_MAX:
         return _assign_clusters_np(base, centroids)
     dists = F.expr(_dists_sql("vec", centroids))
     return (
@@ -502,8 +494,6 @@ def kmeans(
     id_col: str,
     k: int = 8,
     max_iter: int = 5,
-    dim: int | None = None,
-    initial_centroids: list[list[float]] | None = None,
     np_rounds: bool | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's iterations; returns (assignments df, final centroids).
@@ -512,13 +502,7 @@ def kmeans(
     centroids with one map-only pass, so nothing is persisted between
     iterations and there is no lineage blow-up (each iteration's plan
     depends only on literal centroids, not the previous plan).
-    ``dim`` is accepted for API stability but no longer needed — the
-    (cluster, pos)-keyed update infers it from the data.
-    ``initial_centroids`` skips the init job when the caller already
-    holds the k smallest-md5(id) seed vectors (build_ivfpq_index
-    collects coarse + PQ seeds in ONE TakeOrdered job); passing
-    anything else changes the result, so callers must preserve the
-    md5-order contract. ``np_rounds`` switches each Lloyd round to the
+    ``np_rounds`` switches each Lloyd round to the
     fold-exact numpy partials pass (_round_partials_np —
     bitwise-identical centroids, test-asserted). Default ``None``
     applies the measured crossover: numpy above _LITERAL_K_MAX (where
@@ -543,10 +527,7 @@ def kmeans(
     if np_rounds is None:
         np_rounds = k > _LITERAL_K_MAX
     with _no_aqe(df.sparkSession):
-        if initial_centroids is not None:
-            centroids = [list(c) for c in initial_centroids]
-        else:
-            centroids = init_centroids(base, "vec", "id", k)
+        centroids = init_centroids(base, "vec", "id", k)
         for _ in range(max_iter):
             new_centroids = [list(c) for c in centroids]
             if np_rounds:

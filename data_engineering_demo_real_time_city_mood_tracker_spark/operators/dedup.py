@@ -1098,7 +1098,6 @@ def embedding_banded_near_dup_pairs(
     id_col: str,
     threshold: float = 0.95,
     bands: int = 4,
-    bits_per_band: int | None = None,
     target_bucket_size: int = 64,
     dim: int = 64,
 ) -> DataFrame:
@@ -1107,10 +1106,10 @@ def embedding_banded_near_dup_pairs(
     as minhash-LSH, in the embedding space): a pair is a candidate if
     it agrees on ANY band's sign bits, so recall is strictly ≥ the
     single-bucket filter at the same total bit budget, while the cost
-    stays band-bucket-bounded (per-band occupancy n/2^bits_per_band).
+    stays band-bucket-bounded (per-band occupancy n/2^bits).
 
-    ``bits_per_band`` defaults to ADAPTIVE (same adaptive_nbits rule
-    as the single-bucket path, min 4): a fixed width is a scale
+    The per-band width is ADAPTIVE (same adaptive_nbits rule as the
+    single-bucket path, min 4): a fixed width is a scale
     killer — measured at the 10× corpus, fixed 4 bits (16 buckets per
     band forever) went 3.1 s → 79.6 s (exponent 1.41, O(n²/16)
     in-bucket pairs); adaptive width pins per-band occupancy near
@@ -1124,11 +1123,10 @@ def embedding_banded_near_dup_pairs(
     agree on several bands), then one id-keyed join-back for the
     cosine — the band rows never carry the vector payload through the
     exchange."""
-    if bits_per_band is None:
-        bits_per_band = min(
-            dim // bands,
-            adaptive_nbits(df.count(), target_bucket_size, min_bits=4),
-        )
+    bits = min(
+        dim // bands,
+        adaptive_nbits(df.count(), target_bucket_size, min_bits=4),
+    )
     v = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
@@ -1140,8 +1138,8 @@ def embedding_banded_near_dup_pairs(
                 F.struct(
                     F.lit(b).alias("band"),
                     vectors.sign_bucket(
-                        F.slice(F.col("vec"), b * bits_per_band + 1, bits_per_band),
-                        bits_per_band,
+                        F.slice(F.col("vec"), b * bits + 1, bits),
+                        bits,
                     ).alias("bucket"),
                 )
                 for b in range(bands)

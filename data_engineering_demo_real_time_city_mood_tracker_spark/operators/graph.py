@@ -205,9 +205,6 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    dangling_free: bool = False,
-    converge_quantum: float | None = None,
-    assert_dangling_free: bool = False,
 ) -> DataFrame:
     """(id, rank) PageRank over a DIRECTED edge list (symmetrize first
     for undirected graphs). The standard power iteration as the
@@ -220,77 +217,16 @@ def pagerank(
     :func:`connected_components`. At 100 TB scale the rank frame is
     vertex-sized — the edges frame is the big side and it is scanned
     once per round from its (persisted) shuffle-partitioned form.
-
-    ``dangling_free=True`` is a CALLER PROMISE that every vertex has
-    at least one out-edge (true by construction for kNN graphs: each
-    vector emits k edges). It drops the per-round dangling-mass
-    aggregation + broadcast entirely; the result is bitwise identical
-    when the promise holds (dangling mass is exactly 0.0, and
-    ``inflow + 0.0`` / ``0.0 / n`` are IEEE identities on the
-    positive inflows) and WRONG when it doesn't — and since the
-    vertex set becomes exactly the out-degree keys, a violating graph
-    does not produce wrong ranks for its sinks, it DROPS them from the
-    output entirely (missing-row, not wrong-value). Only pass it for
-    graphs whose construction guarantees out-degree ≥ 1, or pair it
-    with ``assert_dangling_free=True`` (r6 ADVICE): one up-front
-    anti-join count of dst-only vertices, raising with the
-    would-be-dropped count if the promise is violated — cheap (one
-    edge-sized job before the rounds start) but not free, so it stays
-    opt-in. The promise also makes the vertex set
-    exactly the out-degree keys (no union+distinct over both edge
-    ends) and lets each round pre-divide against the PREJOINED
-    (src, dst, outdeg) frame — one edge join per round instead of two
-    (r6; the r5 verdict's pagerank_topk tail item).
-
-    ``converge_quantum`` (opt-in): stop early when the largest
-    per-vertex rank move, quantized at the given resolution
-    (floor(rank/q) deltas — the fixed-point-twin idiom), reaches
-    ZERO, i.e. the iteration is stationary at that resolution. Each
-    round then materializes eagerly plus one vertex-sized agg (never
-    a corpus job). Worth it only for graphs that actually reach
-    stationarity within the budget (regular/structured graphs do in
-    O(1) rounds); on expander-ish kNN graphs the delta decays ~0.55×
-    per round (measured at sf0.1: 6.8e-4 → 3.8e-5 over rounds 1→5),
-    so a 1e-12 zero-delta needs ~40 rounds and the check is pure
-    overhead — leave it None there.
     """
     spark = edges.sparkSession
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).persist()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    if dangling_free:
-        if assert_dangling_free:
-            # dst-only vertices are exactly the rows dangling_free
-            # would silently drop — count them once, loudly
-            dropped = (
-                e.select(F.col("dst").alias("id"))
-                .distinct()
-                .join(
-                    outdeg.select(F.col("src").alias("id")),
-                    "id",
-                    "left_anti",
-                )
-                .count()
-            )
-            if dropped:
-                for fr in (outdeg, e):
-                    fr.unpersist()
-                raise ValueError(
-                    "pagerank: dangling_free=True but the graph has "
-                    f"{dropped} sink vertex(es) with no out-edges — "
-                    "they would be dropped from the output entirely; "
-                    "symmetrize the graph or run with "
-                    "dangling_free=False"
-                )
-        # out-degree >= 1 everywhere => the vertex set IS the
-        # out-degree keys; skip the union+distinct over both ends
-        verts = outdeg.select(F.col("src").alias("id")).persist()
-    else:
-        verts = (
-            e.select(F.col("src").alias("id"))
-            .union(e.select(F.col("dst").alias("id")))
-            .distinct()
-            .persist()
-        )
+    verts = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+        .persist()
+    )
     n = verts.count()
     if n == 0:
         for fr in (verts, outdeg, e):
@@ -298,57 +234,9 @@ def pagerank(
         return spark.createDataFrame([], "id long, rank double")
     ranks = verts.select("id", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
-    contrib_base = None
     try:
         with _vertex_sized_shuffle(spark, n):
-            if dangling_free:
-                # (src, dst, outdeg) once — each round then needs ONE
-                # edge join instead of ranks->outdeg->edges chained
-                contrib_base = e.join(outdeg, "src").persist()
             for _ in range(iterations):
-                if dangling_free:
-                    contribs = (
-                        contrib_base.join(
-                            ranks.select(F.col("id").alias("src"), "rank"),
-                            "src",
-                        )
-                        .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-                        .groupBy("dst")
-                        .agg(F.sum("c").alias("inflow"))
-                    )
-                    # ranks is vertex-sized and complete, so joining it
-                    # (not verts) costs the same and carries the PREV
-                    # rank for the optional convergence delta
-                    nxt = ranks.join(
-                        contribs, ranks.id == contribs.dst, "left"
-                    ).select(
-                        ranks.id,
-                        (
-                            F.lit(base)
-                            + F.lit(damping)
-                            * F.coalesce(F.col("inflow"), F.lit(0.0))
-                        ).alias("rank"),
-                        F.col("rank").alias("_prev"),
-                    )
-                    if converge_quantum is not None:
-                        nxt = nxt.localCheckpoint(eager=True)
-                        q = float(converge_quantum)
-                        delta = nxt.agg(
-                            F.max(
-                                F.abs(
-                                    F.floor(F.col("rank") / q)
-                                    - F.floor(F.col("_prev") / q)
-                                )
-                            )
-                        ).collect()[0][0]
-                        ranks = nxt.select("id", "rank")
-                        if not delta:
-                            break
-                    else:
-                        ranks = nxt.select("id", "rank").localCheckpoint(
-                            eager=False
-                        )
-                    continue
                 with_deg = ranks.join(
                     outdeg, ranks.id == outdeg.src, "left"
                 ).select("id", "rank", "outdeg")
@@ -396,8 +284,6 @@ def pagerank(
         verts.unpersist()
         outdeg.unpersist()
         e.unpersist()
-        if contrib_base is not None:
-            contrib_base.unpersist()
     return ranks
 
 

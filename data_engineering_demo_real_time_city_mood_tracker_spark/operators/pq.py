@@ -79,7 +79,6 @@ def train_pq(
     m: int = 4,
     ksub: int = 16,
     max_iter: int = 3,
-    seed_vecs: list[list[float]] | None = None,
     np_rounds: bool | None = None,
 ) -> list[list[list[float]]]:
     """codebooks[m][ksub][dsub]: k-means per subspace slice, with all
@@ -96,13 +95,6 @@ def train_pq(
     codebooks to m independent kmeans() runs (test-asserted), at
     1/m-th the job count; the per-round shuffle payload is m × ksub ×
     dsub partials per task — corpus-size-independent.
-
-    ``seed_vecs`` (ksub full-dim vectors) skips the seed-collect job
-    when the caller already holds the ksub smallest-md5(id) vectors of
-    ``df`` — build_ivfpq_index derives them driver-side from its one
-    combined seed collect (clustering.py_assign replicates the JVM
-    argmin bitwise, so the residual seeds are byte-identical to what
-    this function would have collected).
     """
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
 
@@ -119,20 +111,17 @@ def train_pq(
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import _no_aqe
 
     with _no_aqe(df.sparkSession):
-        if seed_vecs is not None:
-            seeds = [{"_v": list(v)} for v in seed_vecs]
-        else:
-            seeds = (
-                base.select(F.md5(F.col("id").cast("string")).alias("h"), "_v")
-                .orderBy("h")
-                .limit(ksub)
-                .collect()
-            )
+        seeds = (
+            base.select(F.md5(F.col("id").cast("string")).alias("h"), "_v")
+            .orderBy("h")
+            .limit(ksub)
+            .collect()
+        )
         books, dim = _lloyd_rounds(base, seeds, m, ksub, max_iter, np_rounds)
     return books
 
 
-def _pq_round_partials_np(base, books, m, dsub):
+def _pq_round_partials_np(base, books, dsub):
     """One fused PQ Lloyd round's (subspace, cluster, pos) →
     (quantized sum, count) partials as a fold-exact numpy pass — the
     product-quantizer twin of clustering._round_partials_np (see its
@@ -204,7 +193,7 @@ def _lloyd_rounds(base, seeds, m, ksub, max_iter,
         if np_rounds:
             # fold-exact numpy partials; same final double divisions as
             # _portable_mean (Python float division is IEEE double)
-            for r in _pq_round_partials_np(base, books, m, dsub):
+            for r in _pq_round_partials_np(base, books, dsub):
                 new_books[r.j][r.cluster][r.pos] = float(r.s) / r.n / 1e10
         else:
             per_sub = []
@@ -336,7 +325,7 @@ def pq_topk(
 # FAISS IVFPQ layout, lake-native)
 
 
-def _pq_lloyd_np(resid, seeds, m, ksub, max_iter):
+def _pq_lloyd_np(resid, seeds, m, max_iter):
     """driver-side fused-subspace PQ Lloyd over an in-memory residual
     sample — bitwise-identical to _lloyd_rounds on the same vectors
     (see clustering.lloyd_np for the arithmetic argument; the global
@@ -449,7 +438,7 @@ def build_ivfpq_index(
     ]
     # PQ seeds: residuals of the ksub smallest-md5 ids, exactly as the
     # distributed trainer would have collected them
-    books = _pq_lloyd_np(resid_sample, resid_sample[:ksub], m, ksub, max_iter)
+    books = _pq_lloyd_np(resid_sample, resid_sample[:ksub], m, max_iter)
 
     # a BUILD is a full rebuild: wipe any prior index (stale segments
     # or an incompatible layout must not survive into the new one —

@@ -30,6 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_TARGET_BUCKET_ROWS = 2_000_000
+
+
+def _adaptive_n_buckets(df: DataFrame, target_bucket_rows: int) -> int:
+    return max(1024, -(-df.count() // target_bucket_rows))
+
 
 def exact_quantiles(
     df: DataFrame,
@@ -37,7 +43,7 @@ def exact_quantiles(
     value_col: str,
     pcts: list[float],
     n_buckets: int | None = None,
-    target_bucket_rows: int = 2_000_000,
+    target_bucket_rows: int = _TARGET_BUCKET_ROWS,
 ) -> DataFrame:
     """(group, pct, q_value): the exact pct-quantile of ``value_col``
     per group, rank = floor(pct * (n-1)) into the ascending order.
@@ -53,7 +59,7 @@ def exact_quantiles(
     quadratic rule as adaptive_nbits. Bucketing is internal: the
     result (and the SQL oracle) is bucket-count-independent."""
     if n_buckets is None:
-        n_buckets = max(1024, -(-df.count() // target_bucket_rows))
+        n_buckets = _adaptive_n_buckets(df, target_bucket_rows)
     v = F.col(value_col)
     stats = df.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n"),
@@ -355,10 +361,7 @@ def conformal_rank_select(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    key_col: str,
     alphas: list[float],
-    n_buckets: int | None = None,
-    target_bucket_rows: int = 2_000_000,
 ) -> DataFrame:
     """(group, n_calib, alpha, threshold): the split-conformal
     calibration threshold per group — the value at 1-BASED ascending
@@ -370,10 +373,9 @@ def conformal_rank_select(
     sort); only the rank arithmetic differs, and it is one identical
     IEEE multiply + ceil in the SQL oracle. Ties on value are
     harmless for the OUTPUT (any row at the target rank carries the
-    same threshold value), so phase 2 orders by value alone;
-    ``key_col`` documents the total order the oracle uses."""
-    if n_buckets is None:
-        n_buckets = max(1024, -(-df.count() // target_bucket_rows))
+    same threshold value), so phase 2 orders by value alone even where
+    the oracle breaks ties on a key."""
+    n_buckets = _adaptive_n_buckets(df, _TARGET_BUCKET_ROWS)
     v = F.col(value_col)
     stats = df.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n"),

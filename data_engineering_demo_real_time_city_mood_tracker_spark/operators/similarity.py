@@ -230,7 +230,6 @@ def lsh_ann_topk(
     id_col: str,
     k: int = 5,
     nbits: int = 4,
-    hamming_probe: int = 0,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: probe the query's sign-LSH bucket.
@@ -238,24 +237,12 @@ def lsh_ann_topk(
     Same output shape as brute_force_topk; recall < 1 by design (the
     scale path — candidates per query drop ~2^nbits-fold).
 
-    ``hamming_probe`` is the multi-probe recall knob: the query side
-    additionally probes every bucket within that Hamming distance of
-    its own (sum of C(nbits, d) for d ≤ hamming_probe buckets). Each
-    corpus vector lives in exactly one bucket, so probes never produce
-    duplicate candidate pairs and need no dedup. Candidate volume —
-    and recall — scales with the probe count while the corpus-side
-    layout (ONE bucket per vector, the thing that makes this cheaper
-    than brute force at 100 TB) is untouched; only the small query
-    side fans out.
-
     ``broadcast_queries=False`` drops the broadcast hint and lets AQE
     choose the bucket-join strategy — REQUIRED for self-kNN callers
     (queries == corpus), where the "query side" is corpus-sized and a
     forced broadcast would OOM at scale; AQE still broadcasts it
     whenever it actually fits (results are join-strategy independent).
     """
-    from itertools import combinations
-
     # Norms are hoisted to per-VECTOR columns on each join side (r6):
     # cosine(q, c) = dot/(norm(q)*norm(c)) evaluated per PAIR runs
     # three un-codegen'd HOF folds per candidate; precomputing the two
@@ -278,20 +265,6 @@ def lsh_ann_topk(
         .withColumn("bucket", vectors.sign_bucket(F.col("qvec"), nbits))
         .withColumn("qnorm", vectors.norm(F.col("qvec")))
     )
-    if hamming_probe > 0:
-        masks = [0] + [
-            sum(1 << p for p in pos)
-            for d in range(1, hamming_probe + 1)
-            for pos in combinations(range(nbits), d)
-        ]
-        q = q.select(
-            "query_id",
-            "qvec",
-            "qnorm",
-            F.explode(
-                F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])
-            ).alias("bucket"),
-        )
     scored = (
         c.join(F.broadcast(q) if broadcast_queries else q, "bucket")
         .filter(F.col("query_id") != F.col("corpus_id"))

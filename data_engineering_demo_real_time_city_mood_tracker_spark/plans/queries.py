@@ -2148,10 +2148,10 @@ def q_pagerank_portable(spark, sf_dir):
     partition-order-free, so the 5 power-iteration rounds unroll into
     the same portable CTE pattern as label_propagation. Runs on the
     shared user co-activity graph; symmetrized, so the dangling-mass
-    machinery drops out. pagerank_topk (float, kNN similarity graph)
-    stays registered as the production variant; this twin moves the
-    ALGORITHM itself onto the oracle-verified surface. Top-20 by
-    (rank_fp desc, id) — integer ties break deterministically."""
+    machinery drops out. pagerank_topk runs the same fixed-point
+    operator over the kNN similarity graph; the float graph.pagerank
+    stays the operator for directed graphs. Top-20 by (rank_fp desc,
+    id) — integer ties break deterministically."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators import graph as graph_ops
 
     edges = _coactivity_edges(spark, sf_dir)
@@ -3055,7 +3055,7 @@ def q_kmeans_embeddings(spark, sf_dir):
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import kmeans
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned, _ = kmeans(emb, "embedding", "vec_id", k=8, max_iter=3, dim=64)
+    assigned, _ = kmeans(emb, "embedding", "vec_id", k=8, max_iter=3)
     return assigned
 
 
@@ -7883,7 +7883,7 @@ def q_tokenizer_fertility(spark, sf_dir):
             docs.filter(F.col("doc_id") % 4 == 0), "text", 8
         )
     ]
-    return bpe.subword_counts(docs, "text", "doc_id", merges, "lang").select(
+    return bpe.subword_counts(docs, "text", merges, "lang").select(
         F.col("grp").alias("lang"),
         "n_docs",
         "total_words",
@@ -11835,9 +11835,7 @@ def q_conformal_thresholds(spark, sf_dir):
         F.round(F.col("value") * 100, 0).cast("long").alias("score"),
         "event_id",
     )
-    out = conformal_rank_select(
-        s, "event_type", "score", "event_id", [0.1, 0.05]
-    )
+    out = conformal_rank_select(s, "event_type", "score", [0.1, 0.05])
     return out.select(
         "event_type",
         "n_calib",
@@ -13427,7 +13425,7 @@ def q_stratified_conformal(spark, sf_dir):
     )
     calib = base.filter(F.col("event_id") % 10 < 3)
     ev_split = base.filter(F.col("event_id") % 10 >= 7)
-    thr = conformal_rank_select(calib, "grp", "score", "event_id", [0.1, 0.05])
+    thr = conformal_rank_select(calib, "grp", "score", [0.1, 0.05])
     evg = ev_split.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_eval")
     )

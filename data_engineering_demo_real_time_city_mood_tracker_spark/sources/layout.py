@@ -24,11 +24,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _bucket_rank(col: str, boundaries: list[float], bits: int) -> Column:
-    """0..2^bits-1 equi-depth rank of ``col`` given interior quantile
-    boundaries (len == 2^bits - 1): an array fold counting boundaries
-    below the value — one codegen'd expression, no UDF. Nulls rank 0
-    (cluster together, prunable)."""
+def _bucket_rank(col: str, boundaries: list[float]) -> Column:
+    """0..len(boundaries) equi-depth rank of ``col`` given interior
+    quantile boundaries: an array fold counting boundaries below the
+    value — one codegen'd expression, no UDF. Nulls rank 0 (cluster
+    together, prunable)."""
     arr = F.array(*[F.lit(float(b)) for b in boundaries])
     v = F.col(col).cast("double")
     return F.aggregate(
@@ -55,7 +55,7 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> Column:
     # bit 31 (sign flip) and wraps mod 32 — silently breaking the
     # hyper-rectangle property for bits*len(cols) > 31
     ranks = [
-        _bucket_rank(c, qs, bits).cast("long") for c, qs in zip(cols, quantiles)
+        _bucket_rank(c, qs).cast("long") for c, qs in zip(cols, quantiles)
     ]
     # interleave: output bit (b*len + i) takes bit b of rank i
     parts = []

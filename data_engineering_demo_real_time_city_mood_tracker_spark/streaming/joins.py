@@ -77,7 +77,6 @@ def enrich_with_static(
     dim: DataFrame,
     on: list[str] | str,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream-static enrichment join — the streaming twin of every
     consumer's dimension lookup (the reference does this per event in
@@ -87,12 +86,9 @@ def enrich_with_static(
     The static side is re-resolved per micro-batch, so a dim table
     refreshed in place (e.g. a parquet dir overwritten by a slow-moving
     upsert job) is picked up without restarting the query. At 100 TB
-    the stream side never exchanges: broadcast keeps the join map-side;
-    set ``broadcast_dim=False`` only if the dim outgrows executor
-    memory (Spark then requires stateful handling or a bucketed dim).
+    the stream side never exchanges: broadcast keeps the join map-side.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on, how)
+    return stream.join(F.broadcast(dim), on, how)
 
 
 def join_windowed_aggs(

@@ -23,3 +23,18 @@ def test_time_queries_reports_minima_and_layers(spark, sf_dir):
         assert abs(row["construct_sec"] + row["exec_sec"] - timings[name]) <= 0.0015
         assert row["n_jobs"] >= 1
         assert row["n_tasks"] >= row["n_stages"] >= 1
+
+
+def test_stream_probe_reports_throughput_and_stops_on_timeout(spark, sf_dir, monkeypatch):
+    probe = bench._stream_throughput(spark, sf_dir)
+    assert list(probe) == [
+        "pipeline", "source_rows", "output_rows", "wall_sec", "rows_per_sec",
+    ]
+    assert probe["output_rows"] > 0 and probe["rows_per_sec"] > 0
+
+    # a probe that outlives the timeout is stopped and reported as an
+    # error, not as source_rows over the timeout
+    monkeypatch.setattr(bench, "STREAM_TIMEOUT_S", 0.001)
+    probe = bench._stream_throughput(spark, sf_dir)
+    assert list(probe) == ["error"]
+    assert not spark.streams.active

@@ -191,76 +191,6 @@ def test_pagerank_invariants_and_known_graphs(spark):
     assert sr == sr2, "pagerank must be deterministic"
 
 
-@pytest.mark.slow  # excluded from the driver-window gate (pytest.ini); run via -m slow
-def test_pagerank_convergence_detection_stops_at_stationarity(spark):
-    """converge_quantum (r6): on a graph whose uniform start IS the
-    stationary distribution (a d-regular ring), the first round moves
-    nothing at the quantum, the loop must stop immediately, and the
-    output must equal the full-budget run bitwise. On a star-with-
-    chords graph that is NOT stationary, the knob must not change the
-    result within the budget it runs."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.graph import pagerank
-
-    ring = spark.createDataFrame(
-        [(i, (i + 1) % 6) for i in range(6)], "src long, dst long"
-    )
-    full = {r.id: r.rank for r in pagerank(
-        ring, iterations=20, dangling_free=True
-    ).collect()}
-    early = {r.id: r.rank for r in pagerank(
-        ring, iterations=20, dangling_free=True, converge_quantum=1e-12
-    ).collect()}
-    assert early == full  # stationary => identical, regardless of rounds
-
-    # non-stationary graph, quantum too fine to trigger in 3 rounds:
-    # results must match the plain 3-round run bitwise
-    chords = spark.createDataFrame(
-        [(i, (i + 1) % 5) for i in range(5)] + [(0, 2), (1, 3)],
-        "src long, dst long",
-    )
-    plain = {r.id: r.rank for r in pagerank(
-        chords, iterations=3, dangling_free=True
-    ).collect()}
-    knob = {r.id: r.rank for r in pagerank(
-        chords, iterations=3, dangling_free=True, converge_quantum=1e-12
-    ).collect()}
-    assert knob == plain
-
-
-def test_pagerank_assert_dangling_free_guard(spark):
-    """assert_dangling_free (r6 ADVICE): on a graph violating the
-    out-degree>=1 promise it must raise loudly with the would-be-
-    dropped sink count instead of silently dropping rows; on a clean
-    graph the assertion run must be bitwise identical to the
-    unasserted one."""
-    import pytest
-
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.graph import pagerank
-
-    # star: leaves 1..4 -> 0, and 0 has NO out-edges (a sink).
-    # Without the assertion, dangling_free=True would DROP vertex 0.
-    star = spark.createDataFrame([(i, 0) for i in range(1, 5)], "src long, dst long")
-    silent = {r.id: r.rank for r in pagerank(
-        star, iterations=3, dangling_free=True
-    ).collect()}
-    assert 0 not in silent  # the documented missing-row failure mode
-    with pytest.raises(ValueError, match=r"1 sink vertex"):
-        pagerank(star, iterations=3, dangling_free=True,
-                 assert_dangling_free=True)
-
-    # clean ring: assertion passes and changes nothing, bitwise
-    ring = spark.createDataFrame(
-        [(i, (i + 1) % 5) for i in range(5)], "src long, dst long"
-    )
-    plain = {r.id: r.rank for r in pagerank(
-        ring, iterations=5, dangling_free=True
-    ).collect()}
-    checked = {r.id: r.rank for r in pagerank(
-        ring, iterations=5, dangling_free=True, assert_dangling_free=True
-    ).collect()}
-    assert checked == plain
-
-
 def test_containment_catches_asymmetric_duplication(spark):
     """a short doc quoted wholesale inside a long one scores
     containment 1.0 while its Jaccard is far below any useful
@@ -498,15 +428,12 @@ def test_fused_pq_training_equals_sequential_kmeans(spark):
 
 
 def test_driver_side_seeding_bitwise_equals_collect_path(spark):
-    """build_ivfpq_index's r4 job fusion: ONE TakeOrdered collect
-    seeds both trainings, with the PQ residual seeds derived on the
-    driver (py_assign/py_sq_dist). Pins the two contracts that make
-    that safe: (a) the python fold/argmin replicas match the JVM
-    Column expressions bitwise, and (b) train_pq(seed_vecs=derived)
-    returns BYTE-identical codebooks to its own seed-collect path."""
+    """build_ivfpq_index assigns and derives the PQ residuals on the
+    driver (py_assign/py_sq_dist). Pins the contract that makes that
+    safe: the python fold/argmin replicas match the JVM Column
+    expressions bitwise."""
     from pyspark.sql import functions as F
 
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import pq
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import (
         assign_clusters,
         py_assign,
@@ -520,7 +447,7 @@ def test_driver_side_seeding_bitwise_equals_collect_path(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = [[float(((c * 11 + j * 3) % 19) - 9) / 7.0 for j in range(8)] for c in range(4)]
 
-    # (a) the python replica matches the JVM fold+argmin on every row
+    # the python replica matches the JVM fold+argmin on every row
     jvm_assign = {
         r.id: (r.cluster, list(r.vec))
         for r in assign_clusters(df, "embedding", "vec_id", cents).collect()
@@ -541,23 +468,6 @@ def test_driver_side_seeding_bitwise_equals_collect_path(spark):
     }
     for i, (_, vec) in jvm_assign.items():
         assert py_sq_dist(vec, cents[0]) == spark_d[i], f"fold diverged on id {i}"
-
-    # (b) seeded train_pq == collect-path train_pq, byte-identical
-    want = pq.train_pq(df, "embedding", "vec_id", m=2, ksub=4, max_iter=2)
-    seed_rows = (
-        df.select(
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("_v"),
-        )
-        .orderBy("h")
-        .limit(4)
-        .collect()
-    )
-    got = pq.train_pq(
-        df, "embedding", "vec_id", m=2, ksub=4, max_iter=2,
-        seed_vecs=[list(r["_v"]) for r in seed_rows],
-    )
-    assert got == want
 
 
 def test_bpe_encode_applies_merges_in_rank_order(spark):

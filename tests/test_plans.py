@@ -675,6 +675,17 @@ def test_plan_audit_sort_vs_agg_discrimination(spark, sf_dir):
     bhj = pa.audit_plan(plan_of(a.join(b.hint("broadcast"), "id")))
     assert bhj["BroadcastHashJoin"] == 1 and bhj["exchanges"] == 0
     assert bhj["SortMergeJoin"] == bhj["ShuffledHashJoin"] == 0
+    assert smj["tree"] != bhj["tree"]
+
+    # an aggregate moved across a join changes no counter, only the
+    # operator-tree signature
+    agg = F.count(F.lit(1)).alias("n")
+    below = pa.audit_plan(plan_of(a.groupBy("id").agg(agg).join(b.hint("broadcast"), "id")))
+    above = pa.audit_plan(plan_of(a.join(b.hint("broadcast"), "id").groupBy("id").agg(agg)))
+    below_tree, above_tree = below.pop("tree"), above.pop("tree")
+    assert below == above
+    assert below_tree != above_tree
+    assert sorted(below_tree) == sorted(above_tree)
 
 
 def test_sql_defined_queries_load_only_the_tables_they_scan(spark, sf_dir, monkeypatch):

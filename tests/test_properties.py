@@ -135,8 +135,8 @@ def test_kmeans_deterministic_and_converging(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
 
-    a1, c1 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=3, dim=64)
-    a2, c2 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=3, dim=64)
+    a1, c1 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=3)
+    a2, c2 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=3)
     r1 = {(r.id, r.cluster) for r in a1.collect()}
     r2 = {(r.id, r.cluster) for r in a2.collect()}
     assert r1 == r2, "same input must give identical clusterings"
@@ -157,8 +157,8 @@ def test_kmeans_deterministic_and_converging(spark, sf_dir):
             F.sum(F.aggregate(d, F.lit(0.0), lambda a, x: a + x)).alias("s")
         ).first().s
 
-    _, c_it1 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=1, dim=64)
-    _, c_it3 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=3, dim=64)
+    _, c_it1 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=1)
+    _, c_it3 = kmeans(emb, "embedding", "vec_id", k=4, max_iter=3)
     assert sse(c_it3) <= sse(c_it1) + 1e-9
 
 
@@ -263,8 +263,7 @@ def test_quantile_sketch_rank_error_bound(spark, sf_dir):
 
 def test_lsh_recall_floor_and_multiprobe_gain(spark, sf_dir):
     """recall@5 of sign-LSH vs brute-force ground truth: the single-
-    bucket probe must beat the random-candidate baseline, and Hamming-1
-    multi-probe must strictly improve recall (the documented knob)."""
+    bucket probe must beat the random-candidate baseline."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators import similarity
     from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
 
@@ -280,19 +279,10 @@ def test_lsh_recall_floor_and_multiprobe_gain(spark, sf_dir):
             emb, q, "embedding", "vec_id", k=5, nbits=4
         ).collect()
     }
-    got1 = {
-        (r.query_id, r.corpus_id)
-        for r in similarity.lsh_ann_topk(
-            emb, q, "embedding", "vec_id", k=5, nbits=4, hamming_probe=1
-        ).collect()
-    }
     r0 = len(got0 & exact) / len(exact)
-    r1 = len(got1 & exact) / len(exact)
     # one bucket of 2^4 holds ~1/16 of the corpus; random top-5 picks
     # from that candidate set would land ~1/16 of true neighbors
     assert r0 >= 0.08, f"single-probe recall {r0} below random baseline"
-    assert r1 > r0, f"multi-probe recall {r1} did not improve on {r0}"
-    assert r1 >= 0.25, f"Hamming-1 recall suspiciously low: {r1}"
 
 
 def test_ivf_recall_floor(spark, sf_dir):

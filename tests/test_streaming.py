@@ -1033,6 +1033,52 @@ def test_document_sink_idempotent_batch_replay(spark, sf_dir, tmp_path):
     assert len(_read_recorded(str(out))) == 2 * n1
 
 
+def test_dedup_ingest_stream_skips_committed_batch_replay(spark, tmp_path):
+    """with a commit log, a batch Spark replays after a restart (its
+    output landed but Spark's own commit did not) is a no-op: the
+    output parquet and the dedup index gain no rows. Without the log
+    the replay re-appends its survivors, since the probe ignores a
+    doc's match with its own index rows."""
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import dedup as D
+    from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.dedup import dedup_ingest_stream
+
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
+    )
+    index = str(tmp_path / "index")
+    D.build_dedup_index(corpus, "text", "doc_id", index, k=3, bands=4, rows_per_band=2)
+    batch = spark.createDataFrame(
+        [(100, "a fresh document with words of its own"),
+         (101, "another novel text that matches nothing here")],
+        "doc_id long, text string",
+    )
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    batch.coalesce(1).write.parquet(src)
+    ckpt = tmp_path / "ckpt"
+
+    def run():
+        stream = spark.readStream.schema(batch.schema).parquet(src)
+        q = dedup_ingest_stream(
+            stream, "text", "doc_id", index, out, str(ckpt),
+            commit_log_dir=str(tmp_path / "commits"),
+        )
+        q.awaitTermination(120)
+        return (
+            spark.read.parquet(out).count(),
+            *(spark.read.parquet(f"{index}/{t}").count()
+              for t in ("fingerprints", "postings", "shingles")),
+        )
+
+    first = run()
+    assert first[:2] == (2, 3), first
+    # crash between the sink's delivery and Spark's commit: batch 0
+    # is replayed under the same id on restart
+    for f in ("0", ".0.crc"):
+        (ckpt / "commits" / f).unlink(missing_ok=True)
+    assert run() == first, "replayed batch must be skipped"
+    assert (ckpt / "commits" / "0").exists(), "restart must have replayed batch 0"
+
+
 @pytest.mark.slow  # excluded from the driver-window gate (pytest.ini); run via -m slow
 def test_windowed_full_outer_join_matches_batch(spark, tmp_path):
     """full-outer windowed-agg stream-stream join (chained stateful

@@ -18,6 +18,10 @@ can't cover exhaustively:
 - one counter per join strategy (SortMergeJoin, BroadcastHashJoin,
   ShuffledHashJoin, BroadcastNestedLoopJoin), so two audit JSONs
   diff as a plan-equivalence check
+- tree:           the tree's node names in order — the operator-tree
+                  signature, so two audits also diff a node that
+                  moved without changing any counter (an aggregate
+                  pushed below a join)
 
 Counting happens in the TREE section only (blocks[0] — "formatted"
 repeats every node in the detail blocks); the SinglePartition
@@ -92,6 +96,9 @@ GLOBAL_SORT_OK = {
     # literals (zero global sorts; the r7 verdict's ask)
 }
 
+# a tree line: indentation and edge/codegen marks, the node name, its id
+NODE = re.compile(r"[\s:+\-*]*([A-Za-z][\w ]*?)\s*\(\d+\)")
+
 JOIN_STRATEGIES = (
     "SortMergeJoin",
     "BroadcastHashJoin",
@@ -141,6 +148,11 @@ def audit_plan(plan: str) -> dict:
         "scans": tree.count("Scan parquet"),
         "exchanges": len(re.findall(r"\bExchange \(\d+\)", tree)),
         **{j: len(re.findall(rf"\b{j}\b", tree)) for j in JOIN_STRATEGIES},
+        "tree": [
+            m.group(1)
+            for m in (NODE.match(ln) for ln in lines)
+            if m
+        ],
     }
 
 
