@@ -57,6 +57,15 @@ def _merge_pair(syms, left: str, right: str):
     )
 
 
+def _segment(word, merges):
+    """``word`` split into characters, then every merge applied in
+    rank order."""
+    syms = F.split(word, "")
+    for left, right in merges:
+        syms = _merge_pair(syms, left, right)
+    return syms
+
+
 def _pair_counts(words: DataFrame) -> DataFrame:
     """(pair_left, pair_right, n) weighted adjacent-pair counts."""
     pairs = F.when(
@@ -172,12 +181,6 @@ def encode_bpe(
     re-assemble with sort_array over (pos, subs) structs.
     """
 
-    def seg(word):
-        syms = F.split(word, "")
-        for left, right in merges:
-            syms = _merge_pair(syms, left, right)
-        return syms
-
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
 
     toked = _spread(docs).select(
@@ -193,7 +196,7 @@ def encode_bpe(
     # every output value is unchanged.
     inst = toked.select("id", F.posexplode_outer("_toks").alias("pos", "word"))
     vocab = inst.select("word").where(F.col("word").isNotNull()).distinct()
-    segd = vocab.select("word", seg(F.col("word")).alias("subs"))
+    segd = vocab.select("word", _segment(F.col("word"), merges).alias("subs"))
     return (
         inst.join(segd, "word", "left")
         .groupBy("id")
@@ -239,12 +242,6 @@ def subword_counts(
     and a group-keyed agg with map-side combine — none carries
     subword arrays."""
 
-    def seg(word):
-        syms = F.split(word, "")
-        for left, right in merges:
-            syms = _merge_pair(syms, left, right)
-        return syms
-
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
 
     inst = _spread(docs).select(
@@ -256,7 +253,7 @@ def subword_counts(
     segd = (
         inst.select("word")
         .distinct()
-        .select("word", F.size(seg(F.col("word"))).alias("n_subs"))
+        .select("word", F.size(_segment(F.col("word"), merges)).alias("n_subs"))
     )
     per_grp = (
         inst.join(segd, "word")

@@ -21,14 +21,14 @@ the lowest centroid index (array_position finds the first minimum).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import scoped_conf
 
-@contextmanager
+
 def _no_aqe(spark):
     """Scope trainer-friendly shuffle settings around an iterative
     trainer's tiny fixed-shape aggs.
@@ -48,21 +48,7 @@ def _no_aqe(spark):
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.shuffle.partitions": "8",
     }
-    old = {}
-    for key, val in keys.items():
-        try:
-            old[key] = spark.conf.get(key)
-        except Exception:
-            old[key] = None
-        spark.conf.set(key, val)
-    try:
-        yield
-    finally:
-        for key, val in old.items():
-            if val is not None:
-                spark.conf.set(key, val)
-            else:
-                spark.conf.unset(key)
+    return scoped_conf(spark, keys)
 
 
 def _portable_mean(x):
@@ -367,6 +353,24 @@ def py_assign(vec: list[float], centroids: list[list[float]]) -> int:
     return best
 
 
+def _sq_dist_np(v, cents: list[list[float]]):
+    """(n, k) squared distances from each row of ``v`` to each of
+    ``cents``, accumulated sequentially over dimensions: the same
+    IEEE ops in the same order as the :func:`_sq_dist` fold (see
+    _round_partials_np)."""
+    import numpy as np
+
+    n, dim = v.shape
+    d = np.empty((n, len(cents)), dtype=np.float64)
+    for ci, c in enumerate(cents):
+        acc = np.zeros(n, dtype=np.float64)
+        for t in range(dim):
+            diff = v[:, t] - c[t]
+            acc = acc + diff * diff
+        d[:, ci] = acc
+    return d
+
+
 def _round_partials_np(base: DataFrame, centroids: list[list[float]]):
     """One Lloyd round's (cluster, pos) → (quantized sum, count)
     partials via a FOLD-EXACT numpy pass — bitwise-identical to the
@@ -390,23 +394,14 @@ def _round_partials_np(base: DataFrame, centroids: list[list[float]]):
     import pandas as pd
 
     cmat = [list(map(float, c)) for c in centroids]
-    k = len(cmat)
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             v = np.asarray(list(pdf["vec"]), dtype=np.float64)
-            n, dim = v.shape
-            d = np.empty((n, k), dtype=np.float64)
-            for ci in range(k):
-                c = cmat[ci]
-                acc = np.zeros(n, dtype=np.float64)
-                for t in range(dim):
-                    diff = v[:, t] - c[t]
-                    acc = acc + diff * diff
-                d[:, ci] = acc
-            cl = np.argmin(d, axis=1)
+            dim = v.shape[1]
+            cl = np.argmin(_sq_dist_np(v, cmat), axis=1)
             q = np.floor(v * 1e10).astype(np.int64)
             out = {"cluster": [], "pos": [], "s": [], "n": []}
             for ci in np.unique(cl):
@@ -442,20 +437,10 @@ def lloyd_np(vecs: list[list[float]], seeds: list[list[float]],
     import numpy as np
 
     v = np.asarray([list(map(float, x)) for x in vecs], dtype=np.float64)
-    n, dim = v.shape
     cents = [list(map(float, c)) for c in seeds]
     q = np.floor(v * 1e10).astype(np.int64)
     for _ in range(max_iter):
-        k = len(cents)
-        d = np.empty((n, k), dtype=np.float64)
-        for ci in range(k):
-            c = cents[ci]
-            acc = np.zeros(n, dtype=np.float64)
-            for t in range(dim):
-                diff = v[:, t] - c[t]
-                acc = acc + diff * diff
-            d[:, ci] = acc
-        cl = np.argmin(d, axis=1)
+        cl = np.argmin(_sq_dist_np(v, cents), axis=1)
         new = [list(c) for c in cents]
         for ci in np.unique(cl):
             sel = q[cl == ci]
@@ -475,17 +460,8 @@ def assign_np(vecs, centroids: list[list[float]]):
     import numpy as np
 
     v = np.asarray([list(map(float, x)) for x in vecs], dtype=np.float64)
-    n, dim = v.shape
-    k = len(centroids)
-    d = np.empty((n, k), dtype=np.float64)
-    for ci in range(k):
-        c = list(map(float, centroids[ci]))
-        acc = np.zeros(n, dtype=np.float64)
-        for t in range(dim):
-            diff = v[:, t] - c[t]
-            acc = acc + diff * diff
-        d[:, ci] = acc
-    return np.argmin(d, axis=1)
+    cents = [list(map(float, c)) for c in centroids]
+    return np.argmin(_sq_dist_np(v, cents), axis=1)
 
 
 def kmeans(

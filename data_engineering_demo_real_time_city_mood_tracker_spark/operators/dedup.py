@@ -67,9 +67,7 @@ def ngram_jaccard_pairs(
     driver memory.
     """
     sh = _sized_shingle_rows(df, text_col, id_col, k, max_df)
-    a = sh.alias("a")
-    b = sh.alias("b")
-    cond = (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id"))
+    cond = _shared_shingle()
     if threshold > 0:
         # lossless length filter: J ≥ τ forces τ·|B| ≤ |A| ≤ |B|/τ —
         # prune size-mismatched pairs inside the join, before the
@@ -79,7 +77,25 @@ def ngram_jaccard_pairs(
             F.col("b.n") >= tau * F.col("a.n")
         )
     return (
-        a.join(b, cond)
+        _overlap_counts(sh, cond)
+        .select("id_a", "id_b", _jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _shared_shingle():
+    """Self-join condition of the ``a``/``b`` aliases in
+    :func:`_overlap_counts`: same shingle, each pair once."""
+    return (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id"))
+
+
+def _overlap_counts(sh: DataFrame, cond) -> DataFrame:
+    """(id_a, id_b, n_a, n_b, n_common): the shingle-keyed self-join
+    of :func:`_sized_shingle_rows` output, then the pair-keyed overlap
+    count with both set sizes carried as grouping keys."""
+    return (
+        sh.alias("a")
+        .join(sh.alias("b"), cond)
         .groupBy(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -87,15 +103,15 @@ def ngram_jaccard_pairs(
             F.col("b.n").alias("n_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
+
+
+def _jaccard():
+    return F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+
+
+def _containment():
+    return F.col("n_common") / F.least("n_a", "n_b")
 
 
 def _sized_shingle_rows(
@@ -198,23 +214,9 @@ def containment_pairs(
     (id_a, id_b, containment) with id_a < id_b.
     """
     sh = _sized_shingle_rows(df, text_col, id_col, k, max_df)
-    a = sh.alias("a")
-    b = sh.alias("b")
-    cond = (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id"))
     return (
-        a.join(b, cond)
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("n_common") / F.least("n_a", "n_b")).alias("containment"),
-        )
+        _overlap_counts(sh, _shared_shingle())
+        .select("id_a", "id_b", _containment().alias("containment"))
         .filter(F.col("containment") >= threshold)
     )
 
@@ -248,26 +250,8 @@ def set_pair_measures(
     the fusion is the user-facing API for one-pass pipelines).
     """
     sh = _sized_shingle_rows(df, text_col, id_col, k, max_df)
-    a = sh.alias("a")
-    b = sh.alias("b")
-    cond = (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id"))
-    return (
-        a.join(b, cond)
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-            (F.col("n_common") / F.least("n_a", "n_b")).alias("containment"),
-        )
+    return _overlap_counts(sh, _shared_shingle()).select(
+        "id_a", "id_b", _jaccard().alias("jaccard"), _containment().alias("containment")
     )
 
 
@@ -341,6 +325,26 @@ def repeated_span_mass(
     )
 
 
+def _word_segments(df: DataFrame, text_col: str, id_col: str, seg_words: int):
+    """(base, nseg, segs): ``base`` is (doc_id, _w), each doc's words
+    split once; ``nseg`` and ``segs`` are the Columns of its segment
+    count and its consecutive ``seg_words``-word segments over ``_w``. The word array is bound in its own
+    projection: an inline split(text) in the segment lambda re-splits
+    the whole doc per segment once CollapseProject inlines it (the
+    O(tokens²) hazard measured in dedup_exact_substrings; see its
+    comment)."""
+    base = df.select(
+        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("_w")
+    )
+    w = F.col("_w")
+    nseg = F.expr(f"(size(_w) + {seg_words - 1}) div {seg_words}")
+    segs = F.transform(
+        F.sequence(F.lit(0), nseg - 1),
+        lambda i: F.array_join(F.slice(w, i * seg_words + 1, seg_words), " "),
+    )
+    return base, nseg, segs
+
+
 def remove_boilerplate_segments(
     df: DataFrame,
     text_col: str,
@@ -367,19 +371,7 @@ def remove_boilerplate_segments(
     and AQE broadcasts it whenever it fits. Reassembly
     groups per doc (bounded rows per doc). All linear in corpus
     size; no pair blowup at any scale."""
-    # token array bound in its own projection — inline split(text) in
-    # the segment lambda re-splits the whole doc per segment (the
-    # O(tokens²) CollapseProject hazard measured in
-    # dedup_exact_substrings; see its comment)
-    base = df.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("_w")
-    )
-    w = F.col("_w")
-    nseg = F.expr(f"(size(_w) + {seg_words - 1}) div {seg_words}")
-    segs = F.transform(
-        F.sequence(F.lit(0), nseg - 1),
-        lambda i: F.array_join(F.slice(w, i * seg_words + 1, seg_words), " "),
-    )
+    base, nseg, segs = _word_segments(df, text_col, id_col, seg_words)
     seg_rows = (
         base.select("doc_id", F.posexplode(segs).alias("pos", "seg"))
         .withColumn("h", F.md5("seg"))
@@ -440,18 +432,7 @@ def dedup_paragraphs_keepfirst(
     equi-join back on the hash, left to AQE. Linear in corpus size,
     no pair blowup."""
     # token array bound in its own (multi-referenced) projection — an
-    # inline split(text) in the segment lambda re-splits the whole doc
-    # per segment once CollapseProject inlines it (the O(tokens²)
-    # hazard measured in dedup_exact_substrings; see its comment)
-    base = df.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("_w")
-    )
-    w = F.col("_w")
-    nseg = F.expr(f"(size(_w) + {seg_words - 1}) div {seg_words}")
-    segs = F.transform(
-        F.sequence(F.lit(0), nseg - 1),
-        lambda i: F.array_join(F.slice(w, i * seg_words + 1, seg_words), " "),
-    )
+    base, _, segs = _word_segments(df, text_col, id_col, seg_words)
     # seg_rows feeds BOTH the first-occurrence agg and the join back —
     # persist so the corpus is segmented+hashed once; _spread so a
     # single parquet split doesn't pin the explode to one core.

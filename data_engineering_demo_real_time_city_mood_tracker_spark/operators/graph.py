@@ -12,13 +12,12 @@ one shuffle join + one aggregation, all keyed on vertex id.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import scoped_conf
 
-@contextmanager
+
 def _vertex_sized_shuffle(spark, n_vertices: int):
     """Scope shuffle settings for power-iteration rounds, sized by the
     DATA the rounds actually move: every round's reduce side is a
@@ -34,21 +33,7 @@ def _vertex_sized_shuffle(spark, n_vertices: int):
     keys = {"spark.sql.shuffle.partitions": str(parts)}
     if n_vertices < 1_000_000:
         keys["spark.sql.adaptive.enabled"] = "false"
-    old = {}
-    for key, val in keys.items():
-        try:
-            old[key] = spark.conf.get(key)
-        except Exception:
-            old[key] = None
-        spark.conf.set(key, val)
-    try:
-        yield
-    finally:
-        for key, val in old.items():
-            if val is not None:
-                spark.conf.set(key, val)
-            else:
-                spark.conf.unset(key)
+    return scoped_conf(spark, keys)
 
 
 def connected_components(
@@ -326,6 +311,39 @@ def cooccurrence_edges(
     )
 
 
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """(u, v) with u < v: each undirected edge once, self-loops
+    dropped."""
+    return (
+        edges.select(
+            F.least(src_col, dst_col).alias("u"),
+            F.greatest(src_col, dst_col).alias("v"),
+        )
+        .filter(F.col("u") < F.col("v"))
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame, name: str) -> DataFrame:
+    """(id, name): each vertex's degree in the (u, v) edge frame."""
+    return (
+        e.select(F.explode(F.array("u", "v")).alias("id"))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
+
+
+def _peel(cur: DataFrame, k: int) -> DataFrame:
+    """One k-core peel round: keep the edges whose endpoints both have
+    degree >= k in ``cur``."""
+    good = _degrees(cur, "d").filter(F.col("d") >= k).select("id")
+    return (
+        cur.join(good, cur.u == good.id, "left_semi")
+        .join(good, F.col("v") == good.id, "left_semi")
+        .localCheckpoint(eager=False)
+    )
+
+
 def triangle_counts(
     edges: DataFrame, src_col: str = "id_a", dst_col: str = "id_b"
 ) -> DataFrame:
@@ -344,19 +362,8 @@ def triangle_counts(
     Emits (id, n_triangles) for every vertex in ≥1 triangle; the
     global triangle count is sum(n_triangles)/3.
     """
-    e0 = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") < F.col("v"))
-        .distinct()
-    )
-    deg = (
-        e0.select(F.explode(F.array("u", "v")).alias("id"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    e0 = _undirected(edges, src_col, dst_col)
+    deg = _degrees(e0, "d")
     du = deg.alias("du")
     dv = deg.alias("dv")
     a_first = (F.col("du.d") < F.col("dv.d")) | (
@@ -427,31 +434,13 @@ def k_core(
     their predecessor. Emits (id, core_degree) — each surviving
     vertex's degree WITHIN the core.
     """
-    cur = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") < F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    cur = _undirected(edges, src_col, dst_col).localCheckpoint(eager=False)
     n_edges = cur.count()
     converged = n_edges == 0
     for _ in range(max_iter):
         if converged:
             break
-        deg = (
-            cur.select(F.explode(F.array("u", "v")).alias("id"))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        good = deg.filter(F.col("d") >= k).select("id")
-        nxt = (
-            cur.join(good, cur.u == good.id, "left_semi")
-            .join(good, F.col("v") == good.id, "left_semi")
-            .localCheckpoint(eager=False)
-        )
+        nxt = _peel(cur, k)
         n_next = nxt.count()  # materializes the checkpoint blocks
         cur = nxt  # superseded rounds are ContextCleaner-reclaimed
         if n_next == n_edges or n_next == 0:
@@ -467,11 +456,7 @@ def k_core(
         )
     # cur's checkpoint blocks back the returned frame and are
     # ContextCleaner-reclaimed once the caller drops it
-    return (
-        cur.select(F.explode(F.array("u", "v")).alias("id"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
+    return _degrees(cur, "core_degree")
 
 
 def label_propagation(
@@ -619,31 +604,10 @@ def k_core_rounds(
     documented ``rounds``-bounded peel, and :func:`k_core` (which
     raises on non-convergence rather than lying) is the right tool.
     Emits (id, core_degree) within the surviving subgraph."""
-    cur = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .filter(F.col("u") < F.col("v"))
-        .distinct()
-    )
+    cur = _undirected(edges, src_col, dst_col)
     for _ in range(rounds):
-        deg = (
-            cur.select(F.explode(F.array("u", "v")).alias("id"))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        good = deg.filter(F.col("d") >= k).select("id")
-        cur = (
-            cur.join(good, cur.u == good.id, "left_semi")
-            .join(good, F.col("v") == good.id, "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    return (
-        cur.select(F.explode(F.array("u", "v")).alias("id"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
+        cur = _peel(cur, k)
+    return _degrees(cur, "core_degree")
 
 
 def common_neighbor_link_prediction(

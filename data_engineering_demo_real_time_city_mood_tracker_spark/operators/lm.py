@@ -155,6 +155,20 @@ def score_bigram_lm(docs: DataFrame, text_col: str = "text",
     )
 
 
+def _target_tokens(docs: DataFrame, is_target, text_col: str, id_col: str) -> DataFrame:
+    """(id, _tgt, token): one row per token occurrence, each carrying
+    its document's target flag — the DSIR tokenize pass."""
+    toked = (
+        docs.withColumn("_tgt", is_target)
+        .select(F.col(id_col).alias("id"), "_tgt", F.col(text_col).alias("_txt"))
+    )
+    return (
+        _spread(toked)
+        .select("id", "_tgt", tokens(F.col("_txt")).alias("_toks"))
+        .select("id", "_tgt", F.explode("_toks").alias("token"))
+    )
+
+
 def dsir_scores(docs: DataFrame, is_target, text_col: str = "text",
                 id_col: str = "doc_id", n_buckets: int = 4096,
                 scale: int = FP_SCALE) -> DataFrame:
@@ -173,15 +187,7 @@ def dsir_scores(docs: DataFrame, is_target, text_col: str = "text",
     unlike the unbounded stats frame the r3 advice flagged in
     exact_quantiles).
     """
-    toked = (
-        docs.withColumn("_tgt", is_target)
-        .select(F.col(id_col).alias("id"), "_tgt", F.col(text_col).alias("_txt"))
-    )
-    tok = (
-        _spread(toked)
-        .select("id", "_tgt", tokens(F.col("_txt")).alias("_toks"))
-        .select("id", "_tgt", F.explode("_toks").alias("token"))
-    )
+    tok = _target_tokens(docs, is_target, text_col, id_col)
     b = hex4(F.md5(F.col("token")), 1, n_buckets)
     # No persist (r4 ADVICE): tb is an aggregation — its three
     # references (source totals, target totals, the scoring join)
@@ -225,15 +231,7 @@ def dsir_weight_table(docs: DataFrame, is_target, text_col: str = "text",
     docs. Unseen buckets smooth to (scale * 1) div (0 + 1) = scale,
     matching the batch LEFT-join smoothing for a bucket with no source
     occurrences."""
-    toked = (
-        docs.withColumn("_tgt", is_target)
-        .select(F.col(id_col).alias("id"), "_tgt", F.col(text_col).alias("_txt"))
-    )
-    tok = (
-        _spread(toked)
-        .select("id", "_tgt", tokens(F.col("_txt")).alias("_toks"))
-        .select("id", "_tgt", F.explode("_toks").alias("token"))
-    )
+    tok = _target_tokens(docs, is_target, text_col, id_col)
     b = hex4(F.md5(F.col("token")), 1, n_buckets)
     tb = tok.select("_tgt", b.alias("b"))
     agg = (

@@ -212,6 +212,30 @@ def dhash_image(payload: bytes) -> int:
     return bits
 
 
+def _band_candidates(df: DataFrame, bands, fp_col: str, out: str) -> DataFrame:
+    """(id_a, id_b, <out>_a, <out>_b): media pairs, id_a < id_b, that
+    share a value in any band of ``bands`` (an array of (band, val)
+    structs over ``fp_col``), carrying both fingerprints for the
+    caller's verify step. May repeat a pair that shares several
+    bands."""
+    banded = df.select(
+        "media_id", fp_col, F.explode(bands).alias("b")
+    ).select("media_id", fp_col, F.col("b.band").alias("band"), F.col("b.val").alias("val"))
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.val") == F.col("b.val"))
+        & (F.col("a.media_id") < F.col("b.media_id")),
+    ).select(
+        F.col("a.media_id").alias("id_a"),
+        F.col("b.media_id").alias("id_b"),
+        F.col(f"a.{fp_col}").alias(f"{out}_a"),
+        F.col(f"b.{fp_col}").alias(f"{out}_b"),
+    )
+
+
 def image_near_dup_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
     """perceptual near-dup pairs: Arrow-batched dHash (map-only Python,
     the unavoidable decode step) → 4×16-bit band LSH candidate join →
@@ -255,25 +279,9 @@ def image_near_dup_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
             for i in range(4)
         ]
     )
-    banded = hashed.select(
-        "media_id", "dhash", F.explode(bands).alias("b")
-    ).select("media_id", "dhash", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
-    a = banded.alias("a")
-    b = banded.alias("b")
     ham = F.bit_count(F.col("dh_a").bitwiseXOR(F.col("dh_b")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.col("a.dhash").alias("dh_a"),
-            F.col("b.dhash").alias("dh_b"),
-        )
+        _band_candidates(hashed, bands, "dhash", "dh")
         # verify BEFORE the distinct: far pairs (random cross-band
         # collisions) die on the map side instead of riding the
         # distinct shuffle with two 8-byte hash columns
@@ -411,11 +419,6 @@ def audio_near_dup_pairs(media: DataFrame, max_diff_windows: int = 1) -> DataFra
             for i in range(2)
         ]
     )
-    banded = fped.select(
-        "media_id", "fp", F.explode(bands).alias("b")
-    ).select("media_id", "fp", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
-    a = banded.alias("a")
-    b = banded.alias("b")
     n_diff = F.aggregate(
         F.zip_with(
             F.col("fp_a"), F.col("fp_b"), lambda x, y: F.when(x != y, 1).otherwise(0)
@@ -424,18 +427,7 @@ def audio_near_dup_pairs(media: DataFrame, max_diff_windows: int = 1) -> DataFra
         lambda acc, x: acc + x,
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
+        _band_candidates(fped, bands, "fp", "fp")
         .distinct()
         .withColumn("n_diff_windows", n_diff)
         .filter(F.col("n_diff_windows") <= max_diff_windows)

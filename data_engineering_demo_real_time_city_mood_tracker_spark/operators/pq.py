@@ -38,6 +38,7 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clusterin
     _centroid_array,
     _dists_sql,
     _portable_mean,
+    _sq_dist_np,
     kmeans,
 )
 
@@ -141,18 +142,10 @@ def _pq_round_partials_np(base, books, dsub):
             if not len(pdf):
                 continue
             v = np.asarray(list(pdf["_v"]), dtype=np.float64)
-            n = v.shape[0]
             out = {"j": [], "cluster": [], "pos": [], "s": [], "n": []}
             for j, book in enumerate(bks):
                 sub = v[:, j * dsub : (j + 1) * dsub]
-                d = np.empty((n, len(book)), dtype=np.float64)
-                for ci, c in enumerate(book):
-                    acc = np.zeros(n, dtype=np.float64)
-                    for t in range(dsub):
-                        diff = sub[:, t] - c[t]
-                        acc = acc + diff * diff
-                    d[:, ci] = acc
-                cl = np.argmin(d, axis=1)
+                cl = np.argmin(_sq_dist_np(sub, book), axis=1)
                 q = np.floor(sub * 1e10).astype(np.int64)
                 for ci in np.unique(cl):
                     sel = q[cl == ci]
@@ -333,7 +326,7 @@ def _pq_lloyd_np(resid, seeds, m, max_iter):
     import numpy as np
 
     v = np.asarray([list(map(float, x)) for x in resid], dtype=np.float64)
-    n, dim = v.shape
+    dim = v.shape[1]
     assert dim % m == 0
     dsub = dim // m
     books = [
@@ -344,14 +337,7 @@ def _pq_lloyd_np(resid, seeds, m, max_iter):
         new_books = [[list(c) for c in book] for book in books]
         for j, book in enumerate(books):
             sub = v[:, j * dsub : (j + 1) * dsub]
-            d = np.empty((n, len(book)), dtype=np.float64)
-            for ci, c in enumerate(book):
-                acc = np.zeros(n, dtype=np.float64)
-                for t in range(dsub):
-                    diff = sub[:, t] - c[t]
-                    acc = acc + diff * diff
-                d[:, ci] = acc
-            cl = np.argmin(d, axis=1)
+            cl = np.argmin(_sq_dist_np(sub, book), axis=1)
             q = np.floor(sub * 1e10).astype(np.int64)
             for ci in np.unique(cl):
                 sel = q[cl == ci]

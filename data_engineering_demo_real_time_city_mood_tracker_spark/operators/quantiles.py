@@ -33,63 +33,35 @@ from pyspark.sql import functions as F
 _TARGET_BUCKET_ROWS = 2_000_000
 
 
-def _adaptive_n_buckets(df: DataFrame, target_bucket_rows: int) -> int:
-    return max(1024, -(-df.count() // target_bucket_rows))
+def _adaptive_n_buckets(df: DataFrame) -> int:
+    return max(1024, -(-df.count() // _TARGET_BUCKET_ROWS))
 
 
-def exact_quantiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    pcts: list[float],
-    n_buckets: int | None = None,
-    target_bucket_rows: int = _TARGET_BUCKET_ROWS,
-) -> DataFrame:
-    """(group, pct, q_value): the exact pct-quantile of ``value_col``
-    per group, rank = floor(pct * (n-1)) into the ascending order.
-
-    ``n_buckets`` defaults to ADAPTIVE — ceil(total_rows /
-    target_bucket_rows), floored at 1024: with a fixed width, phase
-    2's per-(group, pct) window sees ~n/n_buckets rows through ONE
-    sorted partition, which quietly regrows the single-reducer
-    bottleneck the operator exists to avoid (at 10¹¹ rows, fixed 1024
-    buckets → 10⁸-row windows). Sizing buckets off a cheap driver-side
-    count pins the phase-2 window near ``target_bucket_rows``
-    regardless of corpus size — the same fixed-parameter-is-a-latent-
-    quadratic rule as adaptive_nbits. Bucketing is internal: the
-    result (and the SQL oracle) is bucket-count-independent."""
-    if n_buckets is None:
-        n_buckets = _adaptive_n_buckets(df, target_bucket_rows)
-    v = F.col(value_col)
-    stats = df.groupBy(group_col).agg(
+def _group_stats(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """(group, n, mn, mx) per group."""
+    return df.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n"),
         F.min(value_col).alias("mn"),
         F.max(value_col).alias("mx"),
     )
-    targets = (
-        stats.select(
-            group_col,
-            "n",
-            F.explode(F.array(*[F.lit(float(p)) for p in pcts])).alias("pct"),
-        )
-        .withColumn("rk", F.floor(F.col("pct") * (F.col("n") - 1)).cast("long"))
-    )
 
+
+def _bucket_histogram(
+    df: DataFrame, stats: DataFrame, group_col: str, value_col: str, n_buckets: int
+) -> tuple[DataFrame, DataFrame]:
+    """Phase 1 of the two-phase selection: (binned, cum). ``binned`` is
+    ``df`` with each row's fixed-width bucket ``_b`` in its group's
+    [mn, mx] range; ``cum`` is (group, _b, cnt, cum, cum_prev), the
+    per-bucket counts with their cumulative count over the bounded
+    groups x n_buckets frame."""
     width = (F.col("mx") - F.col("mn")) / F.lit(n_buckets)
-    bucket = F.when(F.col("mx") == F.col("mn"), F.lit(0)).otherwise(
-        F.least(
-            F.floor((v - F.col("mn")) / width), F.lit(n_buckets - 1)
+    bucket = (
+        F.when(F.col("mx") == F.col("mn"), F.lit(0))
+        .otherwise(
+            F.least(F.floor((F.col(value_col) - F.col("mn")) / width), F.lit(n_buckets - 1))
         )
-    ).cast("long")
-
-    # phase 1: per-(group, bucket) counts — map-side combine bounds the
-    # shuffle at groups × n_buckets rows regardless of corpus size;
-    # the cumulative window runs over that bounded frame only.
-    # no forced broadcast on stats/tb: both are one-row-per-(group[,pct])
-    # frames — tiny for dashboard-style groupings but O(groups) by
-    # construction, so a forced broadcast becomes a driver OOM at
-    # high-cardinality group_col (ADVICE r3). AQE broadcasts them
-    # whenever they fit the threshold and shuffles otherwise.
+        .cast("long")
+    )
     binned = df.join(stats, group_col).withColumn("_b", bucket)
     hist = binned.groupBy(group_col, "_b").agg(F.count(F.lit(1)).alias("cnt"))
     cw = (
@@ -100,6 +72,51 @@ def exact_quantiles(
     cum = hist.withColumn("cum", F.sum("cnt").over(cw)).withColumn(
         "cum_prev", F.col("cum") - F.col("cnt")
     )
+    return binned, cum
+
+
+def exact_quantiles(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    pcts: list[float],
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """(group, pct, q_value): the exact pct-quantile of ``value_col``
+    per group, rank = floor(pct * (n-1)) into the ascending order.
+
+    ``n_buckets`` defaults to ADAPTIVE — ceil(total_rows /
+    _TARGET_BUCKET_ROWS), floored at 1024: with a fixed width, phase
+    2's per-(group, pct) window sees ~n/n_buckets rows through ONE
+    sorted partition, which quietly regrows the single-reducer
+    bottleneck the operator exists to avoid (at 10¹¹ rows, fixed 1024
+    buckets → 10⁸-row windows). Sizing buckets off a cheap driver-side
+    count pins the phase-2 window near ``_TARGET_BUCKET_ROWS``
+    regardless of corpus size — the same fixed-parameter-is-a-latent-
+    quadratic rule as adaptive_nbits. Bucketing is internal: the
+    result (and the SQL oracle) is bucket-count-independent."""
+    if n_buckets is None:
+        n_buckets = _adaptive_n_buckets(df)
+    v = F.col(value_col)
+    stats = _group_stats(df, group_col, value_col)
+    targets = (
+        stats.select(
+            group_col,
+            "n",
+            F.explode(F.array(*[F.lit(float(p)) for p in pcts])).alias("pct"),
+        )
+        .withColumn("rk", F.floor(F.col("pct") * (F.col("n") - 1)).cast("long"))
+    )
+
+    # phase 1: per-(group, bucket) counts — map-side combine bounds the
+    # shuffle at groups × n_buckets rows regardless of corpus size;
+    # the cumulative window runs over that bounded frame only.
+    # no forced broadcast on stats/tb: both are one-row-per-(group[,pct])
+    # frames — tiny for dashboard-style groupings but O(groups) by
+    # construction, so a forced broadcast becomes a driver OOM at
+    # high-cardinality group_col (ADVICE r3). AQE broadcasts them
+    # whenever they fit the threshold and shuffles otherwise.
+    binned, cum = _bucket_histogram(df, stats, group_col, value_col, n_buckets)
 
     # locate each target rank's bucket + how many values precede it
     tb = (
@@ -122,7 +139,7 @@ def ntile_boundary_values(
     df: DataFrame,
     specs: list[tuple[str, str, int]],
     pos_long_sql: list[str] | None = None,
-    target_bucket_rows: int = 2_000_000,
+    target_bucket_rows: int = _TARGET_BUCKET_ROWS,
     max_refine: int = 6,
 ) -> dict[str, list[tuple]]:
     """EXACT NTILE bucket-start boundary pairs for each ``(value_col,
@@ -375,13 +392,9 @@ def conformal_rank_select(
     harmless for the OUTPUT (any row at the target rank carries the
     same threshold value), so phase 2 orders by value alone even where
     the oracle breaks ties on a key."""
-    n_buckets = _adaptive_n_buckets(df, _TARGET_BUCKET_ROWS)
+    n_buckets = _adaptive_n_buckets(df)
     v = F.col(value_col)
-    stats = df.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(value_col).alias("mn"),
-        F.max(value_col).alias("mx"),
-    )
+    stats = _group_stats(df, group_col, value_col)
     targets = stats.select(
         group_col,
         "n",
@@ -395,25 +408,7 @@ def conformal_rank_select(
             F.col("n"),
         ),
     )
-
-    width = (F.col("mx") - F.col("mn")) / F.lit(n_buckets)
-    bucket = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(F.floor((v - F.col("mn")) / width), F.lit(n_buckets - 1))
-        )
-        .cast("long")
-    )
-    binned = df.join(stats, group_col).withColumn("_b", bucket)
-    hist = binned.groupBy(group_col, "_b").agg(F.count(F.lit(1)).alias("cnt"))
-    cw = (
-        Window.partitionBy(group_col)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.withColumn("cum", F.sum("cnt").over(cw)).withColumn(
-        "cum_prev", F.col("cum") - F.col("cnt")
-    )
+    binned, cum = _bucket_histogram(df, stats, group_col, value_col, n_buckets)
     tb = (
         targets.select(group_col, F.col("n").alias("_nc"), "alpha", "rk")
         .join(cum, group_col)

@@ -13,14 +13,32 @@ bit-for-bit reproducible by the DuckDB oracle via list_reduce.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions import vectors
+from data_engineering_demo_real_time_city_mood_tracker_spark.operators.windows import topk_per_key
 
 
 def _as_double(vec):
     return F.transform(vec, lambda x: x.cast("double"))
+
+
+def _cosine(a: str, b: str, a_norm: str, b_norm: str) -> Column:
+    """cos(a, b) over norm columns hoisted below the join: one dot
+    fold per pair, bitwise identical to three folds (see
+    lsh_ann_topk)."""
+    return vectors.dot(F.col(a), F.col(b)) / (F.col(a_norm) * F.col(b_norm))
+
+
+def _rank_pairs(pairs: DataFrame, k: int) -> DataFrame:
+    """Score (query, corpus) candidate pairs carrying qvec/cvec and
+    their norms by cosine; keep each query's top k, ties on corpus
+    id."""
+    scored = pairs.select(
+        "query_id", "corpus_id", _cosine("qvec", "cvec", "qnorm", "cnorm").alias("cos_sim")
+    )
+    return topk_per_key(scored, "query_id", "cos_sim", "corpus_id", k)
 
 
 def brute_force_topk(
@@ -44,25 +62,7 @@ def brute_force_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")
     ).withColumn("qnorm", vectors.norm(F.col("qvec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            (
-                vectors.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "corpus_id", "cos_sim", "rnk")
-    )
+    return _rank_pairs(c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id")), k)
 
 
 def ivf_assignments(
@@ -83,10 +83,7 @@ def ivf_assignments(
         .select(
             id_col,
             "cid",
-            (
-                vectors.dot(F.col(vec_col), F.col("cvec"))
-                / (F.col("_vnorm") * F.col("_cnorm"))
-            ).alias("c_sim"),
+            _cosine(vec_col, "cvec", "_vnorm", "_cnorm").alias("c_sim"),
         )
     )
     w = Window.partitionBy(id_col).orderBy(F.col("c_sim").desc(), F.col("cid").asc())
@@ -150,20 +147,10 @@ def ivf_topk(
         .select(
             "query_id",
             "corpus_id",
-            (
-                vectors.dot(F.col("qvec"), F.col("cvec_full"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
+            _cosine("qvec", "cvec_full", "qnorm", "cnorm").alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "corpus_id", "cos_sim", "rnk")
-    )
+    return topk_per_key(scored, "query_id", "cos_sim", "corpus_id", k)
 
 
 def ivf_trained_topk(
@@ -200,27 +187,12 @@ def ivf_trained_topk(
     q = assign_top_cells(queries, vec_col, id_col, cents, n_probe).select(
         F.col("id").alias("query_id"), F.col("vec").alias("qvec"), "cluster"
     )
-    scored = (
+    pairs = (
         c.withColumn("cnorm", vectors.norm(F.col("cvec")))
         .join(F.broadcast(q.withColumn("qnorm", vectors.norm(F.col("qvec")))), "cluster")
         .filter(F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            (
-                vectors.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "corpus_id", "cos_sim", "rnk")
-    )
+    return _rank_pairs(pairs, k)
 
 
 def lsh_ann_topk(
@@ -265,26 +237,11 @@ def lsh_ann_topk(
         .withColumn("bucket", vectors.sign_bucket(F.col("qvec"), nbits))
         .withColumn("qnorm", vectors.norm(F.col("qvec")))
     )
-    scored = (
+    pairs = (
         c.join(F.broadcast(q) if broadcast_queries else q, "bucket")
         .filter(F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            (
-                vectors.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "corpus_id", "cos_sim", "rnk")
-    )
+    return _rank_pairs(pairs, k)
 
 
 def build_ivf_index(
@@ -374,27 +331,12 @@ def query_ivf_index(
         .filter(F.col("cluster").isin(probed))
         .select(F.col("id").alias("corpus_id"), F.col("vec").alias("cvec"), "cluster")
     )
-    scored = (
+    pairs = (
         cells.withColumn("cnorm", vectors.norm(F.col("cvec")))
         .join(F.broadcast(q.withColumn("qnorm", vectors.norm(F.col("qvec")))), "cluster")
         .filter(F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            (
-                vectors.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "corpus_id", "cos_sim", "rnk")
-    )
+    return _rank_pairs(pairs, k)
 
 
 def hard_negative_mining(
@@ -433,10 +375,7 @@ def hard_negative_mining(
         "anchor_label",
         "negative_id",
         "negative_label",
-        (
-            vectors.dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("qnorm") * F.col("cnorm"))
-        ).alias("cos_sim"),
+        _cosine("qvec", "cvec", "qnorm", "cnorm").alias("cos_sim"),
     )
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cos_sim").desc(), F.col("negative_id").asc()
@@ -575,24 +514,8 @@ def rp_rerank_topk(
         v.alias("qvec"),
         vectors.norm(v).alias("qnorm"),
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        cvecs.join(F.broadcast(cands), "corpus_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "corpus_id",
-            (
-                vectors.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
-        )
-        .withColumn("rnk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "corpus_id", "cos_sim", "rnk")
-    )
+    pairs = cvecs.join(F.broadcast(cands), "corpus_id").join(F.broadcast(qvecs), "query_id")
+    return _rank_pairs(pairs, k).withColumn("rnk", F.col("rnk").cast("long"))
 
 
 def ivf_multiprobe_recall(
@@ -645,10 +568,7 @@ def ivf_multiprobe_recall(
             "query_id",
             "qvec",
             "cid",
-            (
-                vectors.dot(F.col("qvec"), F.col("centv"))
-                / (F.col("_qn") * F.col("_cn"))
-            ).alias("c_sim"),
+            _cosine("qvec", "centv", "_qn", "_cn").alias("c_sim"),
         )
     )
     qw = Window.partitionBy("query_id").orderBy(
@@ -676,10 +596,7 @@ def ivf_multiprobe_recall(
             "query_id",
             "corpus_id",
             "cell_rank",
-            (
-                vectors.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("_qn") * F.col("_cn"))
-            ).alias("cos_sim"),
+            _cosine("qvec", "cvec", "_qn", "_cn").alias("cos_sim"),
         )
         .join(np_frame, F.col("cell_rank") <= F.col("nprobe"))
     )

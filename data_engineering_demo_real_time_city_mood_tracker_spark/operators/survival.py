@@ -28,6 +28,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _risk_table(per_subject: DataFrame, g: str, t: str, e: str) -> DataFrame:
+    """(g, t, d, c, n_risk) per distinct duration: events, censorings
+    and the >=-cumulative at-risk count, a broadcast self-join over
+    the distinct-duration frame."""
+    km = per_subject.groupBy(g, t).agg(
+        F.sum(e).cast("long").alias("d"),
+        F.sum(1 - F.col(e)).cast("long").alias("c"),
+    )
+    k2 = km.select(
+        F.col(g).alias("_g2"),
+        F.col(t).alias("_tj"),
+        (F.col("d") + F.col("c")).alias("_w"),
+    )
+    return (
+        km.join(
+            F.broadcast(k2),
+            (F.col("_g2") == F.col(g)) & (F.col("_tj") >= F.col(t)),
+        )
+        .groupBy(g, t, "d", "c")
+        .agg(F.sum("_w").cast("long").alias("n_risk"))
+    )
+
+
 def km_curve(
     per_subject: DataFrame,
     group_col: str,
@@ -48,24 +71,8 @@ def km_curve(
     as broadcast self-joins over the distinct-duration frame (bounded
     by the observation span) — never over subjects.
     """
-    g, t, e = group_col, duration_col, event_col
-    km = per_subject.groupBy(g, t).agg(
-        F.sum(e).cast("long").alias("d"),
-        F.sum(1 - F.col(e)).cast("long").alias("c"),
-    )
-    k2 = km.select(
-        F.col(g).alias("_g2"),
-        F.col(t).alias("_tj"),
-        (F.col("d") + F.col("c")).alias("_w"),
-    )
-    nr = (
-        km.join(
-            F.broadcast(k2),
-            (F.col("_g2") == F.col(g)) & (F.col("_tj") >= F.col(t)),
-        )
-        .groupBy(g, t, "d", "c")
-        .agg(F.sum("_w").cast("long").alias("n_risk"))
-    )
+    g, t = group_col, duration_col
+    nr = _risk_table(per_subject, g, t, event_col)
     fct = nr.withColumn(
         "_f", (F.col("n_risk") - F.col("d")).cast("double") / F.col("n_risk")
     )
@@ -120,24 +127,8 @@ def na_curve(
     ``list_reduce(list(0.0 + x ORDER BY t), +)`` — 0.0+x₁ == x₁
     bitwise), so the whole curve is oracle-portable.
     """
-    g, t, e = group_col, duration_col, event_col
-    km = per_subject.groupBy(g, t).agg(
-        F.sum(e).cast("long").alias("d"),
-        F.sum(1 - F.col(e)).cast("long").alias("c"),
-    )
-    k2 = km.select(
-        F.col(g).alias("_g2"),
-        F.col(t).alias("_tj"),
-        (F.col("d") + F.col("c")).alias("_w"),
-    )
-    nr = (
-        km.join(
-            F.broadcast(k2),
-            (F.col("_g2") == F.col(g)) & (F.col("_tj") >= F.col(t)),
-        )
-        .groupBy(g, t, "d", "c")
-        .agg(F.sum("_w").cast("long").alias("n_risk"))
-    )
+    g, t = group_col, duration_col
+    nr = _risk_table(per_subject, g, t, event_col)
     fct = nr.withColumn(
         "_h", F.col("d").cast("double") / F.col("n_risk")
     ).withColumn(

@@ -620,10 +620,10 @@ def q_mood_rollup(spark, sf_dir):
 # --------------------------------------------------------------------------
 # window / temporal
 
-
-@register(
-    "sliding_window_events",
-    f"""SELECT window_start, event_type,
+# 5-minute windows sliding by 1 minute: each event lands in the 5
+# windows starting at its minute and the 4 before
+# (sliding_window_events, paned_sliding_window)
+_SLIDING_WINDOW_SQL = f"""SELECT window_start, event_type,
        COUNT(*) AS n_events, {davg_sql('value')} AS avg_value
 FROM (
   SELECT date_trunc('minute', ts) - o * INTERVAL 1 MINUTE AS window_start,
@@ -631,7 +631,12 @@ FROM (
   FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) ev
   CROSS JOIN (SELECT unnest(range(0, 5)) AS o) offs
 ) sub
-GROUP BY window_start, event_type""",
+GROUP BY window_start, event_type"""
+
+
+@register(
+    "sliding_window_events",
+    _SLIDING_WINDOW_SQL,
 )
 def q_sliding_window(spark, sf_dir):
     """5-minute window / 1-minute slide via built-in F.window (the
@@ -1607,22 +1612,28 @@ def q_dedup_exact(spark, sf_dir):
 
 
 _SH3 = T.word_shingles_sql("text", 3)
-
-@register(
-    "dedup_ngram_topk",
-    f"""WITH sh0 AS (
+# each doc's distinct 3-shingles, minus shingles in more than 50 docs
+# (the max_df=50 hot-shingle cap)
+_CAPPED_SH3_CTES = f"""sh0 AS (
   SELECT DISTINCT doc_id AS id, unnest({_SH3}) AS shingle FROM documents
 ),
 sh AS (
   SELECT id, shingle FROM sh0
   QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= 50
-),
-sizes AS (SELECT id, COUNT(*) AS n_sh FROM sh GROUP BY id),
+)"""
+# set sizes and pairwise shingle overlaps over sh
+_SH_OVERLAP_CTES = """sizes AS (SELECT id, COUNT(*) AS n_sh FROM sh GROUP BY id),
 inter AS (
   SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS n_common
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
   GROUP BY a.id, b.id
-),
+)"""
+
+
+@register(
+    "dedup_ngram_topk",
+    f"""WITH {_CAPPED_SH3_CTES},
+{_SH_OVERLAP_CTES},
 scored AS (
   SELECT id_a, id_b,
          n_common / (sa.n_sh + sb.n_sh - n_common) AS jaccard
@@ -1653,12 +1664,7 @@ def q_dedup_ngram_topk(spark, sf_dir):
     f"""WITH sh AS (
   SELECT DISTINCT doc_id AS id, unnest({_SH3}) AS shingle FROM documents
 ),
-sizes AS (SELECT id, COUNT(*) AS n_sh FROM sh GROUP BY id),
-inter AS (
-  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY a.id, b.id
-)
+{_SH_OVERLAP_CTES}
 SELECT id_a, id_b, n_common / (sa.n_sh + sb.n_sh - n_common) AS jaccard
 FROM inter
 JOIN sizes sa ON id_a = sa.id
@@ -1677,19 +1683,8 @@ def q_dedup_prefix_filter(spark, sf_dir):
 
 @register(
     "dedup_containment",
-    f"""WITH sh0 AS (
-  SELECT DISTINCT doc_id AS id, unnest({_SH3}) AS shingle FROM documents
-),
-sh AS (
-  SELECT id, shingle FROM sh0
-  QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= 50
-),
-sizes AS (SELECT id, COUNT(*) AS n_sh FROM sh GROUP BY id),
-inter AS (
-  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY a.id, b.id
-)
+    f"""WITH {_CAPPED_SH3_CTES},
+{_SH_OVERLAP_CTES}
 SELECT id_a, id_b, n_common / LEAST(sa.n_sh, sb.n_sh) AS containment
 FROM inter
 JOIN sizes sa ON id_a = sa.id
@@ -1744,19 +1739,18 @@ def q_repeated_ngram_spans(spark, sf_dir):
     return dedup.repeated_span_mass(docs, "text", "doc_id", k=5)
 
 
-@register(
-    "boilerplate_removal",
-    """WITH d AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
+# Each doc's non-overlapping 5-word segments s (doc_id, pos, seg, h)
+# and, over the kept segments, the reassembled clean_text with the
+# removed-segment count (boilerplate_removal, paragraph_dedup).
+_SEG5_CTES = """d AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 s AS (
   SELECT doc_id, u['pos'] AS pos, u['seg'] AS seg, md5(u['seg']) AS h FROM (
     SELECT doc_id,
            unnest(list_transform(range(0, (len(words) + 4) // 5),
              i -> {'pos': i, 'seg': array_to_string(list_slice(words, i * 5 + 1, i * 5 + 5), ' ')})) AS u
     FROM d) t
-),
-bo AS (SELECT h FROM s GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 3),
-kept AS (SELECT s.* FROM s ANTI JOIN bo USING (h)),
-cl AS (
+)"""
+_SEG5_REASSEMBLY_SQL = """cl AS (
   SELECT doc_id, array_to_string(list(seg ORDER BY pos), ' ') AS clean_text,
          COUNT(*) AS n_kept
   FROM kept GROUP BY doc_id
@@ -1769,7 +1763,15 @@ base AS (
 SELECT base.doc_id, COALESCE(cl.clean_text, '') AS clean_text,
        CAST(base.n_segments - COALESCE(cl.n_kept, 0) AS BIGINT) AS n_removed,
        base.n_segments
-FROM base LEFT JOIN cl ON cl.doc_id = base.doc_id""",
+FROM base LEFT JOIN cl ON cl.doc_id = base.doc_id"""
+
+
+@register(
+    "boilerplate_removal",
+    f"""WITH {_SEG5_CTES},
+bo AS (SELECT h FROM s GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 3),
+kept AS (SELECT s.* FROM s ANTI JOIN bo USING (h)),
+{_SEG5_REASSEMBLY_SQL}""",
 )
 def q_boilerplate_removal(spark, sf_dir):
     """RefinedWeb/CCNet-style repeated-segment removal (Penedo et al.
@@ -1802,7 +1804,8 @@ def q_minhash_signatures(spark, sf_dir):
     return dedup.minhash_signatures(docs, "text", "doc_id", k=3, num_hashes=8)
 
 
-_MINHASH_CTES = (
+# shingles, the 8 md5 minhashes and the 4 LSH band keys per doc
+_MINHASH_BANDED_CTES = (
     f"""sh AS (
   SELECT DISTINCT doc_id AS id, unnest({_SH3}) AS shingle FROM documents
 ),
@@ -1818,7 +1821,11 @@ banded AS (
       (2, md5(h4 || '|' || h5)), (3, md5(h6 || '|' || h7))
     ) AS v(band, sig)
   ) b
-),
+)"""
+)
+# ... with the verified near-dup pairs mh_pairs (Jaccard >= 0.2)
+_MINHASH_CTES = (
+    f"""{_MINHASH_BANDED_CTES},
 cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM banded a JOIN banded b
@@ -1843,6 +1850,29 @@ mh_pairs AS (
 )
 
 
+# the near-dup pair graph's closure: reach(a, b) holds every b in a's
+# connected component (dedup_clusters, cluster_representatives,
+# connected_components_star)
+_MINHASH_REACH_SQL = f"""WITH RECURSIVE {_MINHASH_CTES},
+und AS (
+  SELECT id_a AS a, id_b AS b FROM mh_pairs
+  UNION
+  SELECT id_b, id_a FROM mh_pairs
+),
+reach(a, b) AS (
+  SELECT a, a FROM und
+  UNION
+  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
+)"""
+
+
+def _minhash_pairs(docs):
+    """The builder twin of mh_pairs in _MINHASH_CTES."""
+    return dedup.minhash_dedup_pairs(
+        docs, "text", "doc_id", k=3, bands=4, rows_per_band=2, threshold=0.2
+    )
+
+
 @register(
     "dedup_minhash_pairs",
     f"WITH {_MINHASH_CTES} SELECT id_a, id_b, jaccard FROM mh_pairs",
@@ -1851,35 +1881,20 @@ def q_dedup_minhash_pairs(spark, sf_dir):
     """MinHash-LSH (b=4 bands × r=2 rows) candidates verified with
     exact Jaccard ≥ 0.2. md5-string minhash is reproduced exactly by
     the oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_dedup_pairs(
-        docs, "text", "doc_id", k=3, bands=4, rows_per_band=2, threshold=0.2
-    )
+    return _minhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
 @register(
     "dedup_clusters",
-    f"""WITH RECURSIVE {_MINHASH_CTES},
-und AS (
-  SELECT id_a AS a, id_b AS b FROM mh_pairs
-  UNION
-  SELECT id_b, id_a FROM mh_pairs
-),
-reach(a, b) AS (
-  SELECT a, a FROM und
-  UNION
-  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-)
-SELECT a AS id, MIN(b) AS cluster FROM reach GROUP BY a""",
+    _MINHASH_REACH_SQL
+    + "\nSELECT a AS id, MIN(b) AS cluster FROM reach GROUP BY a",
 )
 def q_dedup_clusters(spark, sf_dir):
     """near-dup clustering: minhash pair graph → connected components
     (iterative min-label propagation, operators/graph.py). Oracle is a
     recursive-CTE transitive closure — same canonical min-id labels."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_dedup_pairs(
-        docs, "text", "doc_id", k=3, bands=4, rows_per_band=2, threshold=0.2
-    )
+    pairs = _minhash_pairs(docs)
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.graph import connected_components
 
     return connected_components(pairs, "id_a", "id_b")
@@ -1887,17 +1902,8 @@ def q_dedup_clusters(spark, sf_dir):
 
 @register(
     "cluster_representatives",
-    f"""WITH RECURSIVE {_MINHASH_CTES},
-und AS (
-  SELECT id_a AS a, id_b AS b FROM mh_pairs
-  UNION
-  SELECT id_b, id_a FROM mh_pairs
-),
-reach(a, b) AS (
-  SELECT a, a FROM und
-  UNION
-  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-),
+    _MINHASH_REACH_SQL
+    + """,
 cl AS (SELECT a AS id, MIN(b) AS cluster FROM reach GROUP BY a),
 memb AS (
   SELECT cl.cluster, cl.id, d.n_chars
@@ -1921,9 +1927,7 @@ def q_cluster_representatives(spark, sf_dir):
     cluster-keyed shuffle serves both the member count and the
     rank-1 pick."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_dedup_pairs(
-        docs, "text", "doc_id", k=3, bands=4, rows_per_band=2, threshold=0.2
-    )
+    pairs = _minhash_pairs(docs)
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.graph import connected_components
 
     cl = connected_components(pairs, "id_a", "id_b")
@@ -2040,17 +2044,60 @@ l{r} AS (
 )"""
 
 
-# the co-activity graph (mirror of _coactivity_edges + symmetrize) as
-# a reusable CTE chain — shared by every oracle-backed iterative graph
-# op so they can never drift onto different graphs
-_COACT_CTES = """g0 AS (
+# the co-activity groups (users active in one (event_type, minute),
+# capped at 32): the first two CTEs of every co-activity graph oracle
+_COACT_G_CTES = """g0 AS (
   SELECT DISTINCT user_id AS id, event_type, date_trunc('minute', ts) AS m
   FROM events
 ),
 g AS (
   SELECT id, event_type, m FROM g0
   QUALIFY COUNT(*) OVER (PARTITION BY event_type, m) <= 32
+)"""
+# ... with the undirected edges e0 (u < v)
+_COACT_E0_CTES = f"""{_COACT_G_CTES},
+e0 AS (
+  SELECT DISTINCT a.id AS u, b.id AS v
+  FROM g a JOIN g b ON a.event_type = b.event_type AND a.m = b.m
+                   AND a.id < b.id
+)"""
+# ... with the degree-ordered wedge enumeration: triangles as (x, y, z)
+# rows (triangle_count, clustering_coefficient)
+_WEDGE_CTES = f"""{_COACT_E0_CTES},
+deg AS (
+  SELECT id, COUNT(*) AS d
+  FROM (SELECT u AS id FROM e0 UNION ALL SELECT v AS id FROM e0)
+  GROUP BY id
 ),
+dir AS (
+  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS src,
+         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS dst,
+         CASE WHEN (du.d, u) < (dv.d, v) THEN dv.d ELSE du.d END AS ddeg
+  FROM e0 JOIN deg du ON u = du.id JOIN deg dv ON v = dv.id
+),
+tri AS (
+  SELECT e1.src AS x, e1.dst AS y, e2.dst AS z
+  FROM dir e1
+  JOIN dir e2 ON e1.src = e2.src
+             AND (e1.ddeg, e1.dst) < (e2.ddeg, e2.dst)
+  JOIN dir e3 ON e3.src = e1.dst AND e3.dst = e2.dst
+)"""
+# ... with e0 and the vertex degrees, in one compact layout
+# (degree_assortativity, degree_distribution)
+_COACT_DEG_CTES = """g0 AS (
+  SELECT DISTINCT user_id AS id, event_type, date_trunc('minute', ts) AS m
+  FROM events),
+g AS (SELECT id, event_type, m FROM g0
+      QUALIFY COUNT(*) OVER (PARTITION BY event_type, m) <= 32),
+e0 AS (SELECT DISTINCT a.id AS u, b.id AS v
+       FROM g a JOIN g b ON a.event_type=b.event_type AND a.m=b.m AND a.id<b.id),
+deg AS (SELECT id, COUNT(*) AS d
+        FROM (SELECT u AS id FROM e0 UNION ALL SELECT v FROM e0) GROUP BY id)"""
+
+# the co-activity graph (mirror of _coactivity_edges + symmetrize) as
+# a reusable CTE chain — shared by every oracle-backed iterative graph
+# op so they can never drift onto different graphs
+_COACT_CTES = f"""{_COACT_G_CTES},
 e0 AS (
   SELECT DISTINCT a.id AS u, b.id AS v
   FROM g a JOIN g b ON a.event_type = b.event_type AND a.m = b.m AND a.id < b.id
@@ -2130,14 +2177,27 @@ pr{r} AS (
 
 _PR_ROUNDS = 5
 _PR_SCALE = 10**12
-_PAGERANK_ORACLE = f"""WITH {_COACT_CTES},
-deg AS (SELECT src AS id, COUNT(*) AS d FROM und GROUP BY src),
+# the fixed-point PageRank rounds over und/verts and the top-20
+# (pagerank_portable, pagerank_topk)
+_PR_TOP20_SQL = f"""deg AS (SELECT src AS id, COUNT(*) AS d FROM und GROUP BY src),
 tele AS (SELECT (15 * {_PR_SCALE}) // (100 * (SELECT COUNT(*) FROM verts)) AS t),
 pr0 AS (SELECT id, {_PR_SCALE} // (SELECT COUNT(*) FROM verts) AS r FROM verts),
 {",".join(_pr_round_sql(r) for r in range(1, _PR_ROUNDS + 1))}
 SELECT id, CAST(r AS BIGINT) AS rank_fp, CAST(rn AS BIGINT) AS rnk FROM (
   SELECT id, r, ROW_NUMBER() OVER (ORDER BY r DESC, id) AS rn FROM pr{_PR_ROUNDS}) t
 WHERE rn <= 20"""
+_PAGERANK_ORACLE = f"""WITH {_COACT_CTES},
+{_PR_TOP20_SQL}"""
+
+
+def _top20_ranks(ranks):
+    """(id, rank_fp, rnk): the 20 highest fixed-point ranks, ties on
+    id — the builder twin of _PR_TOP20_SQL's last step."""
+    top = ranks.orderBy(F.col("rank_fp").desc(), F.col("id")).limit(20)
+    w = Window.orderBy(F.col("rank_fp").desc(), F.col("id"))
+    return top.select(
+        "id", "rank_fp", F.row_number().over(w).cast("long").alias("rnk")
+    )
 
 
 @register("pagerank_portable", _PAGERANK_ORACLE)
@@ -2158,11 +2218,7 @@ def q_pagerank_portable(spark, sf_dir):
     ranks = graph_ops.pagerank_fixed_point(
         edges, rounds=_PR_ROUNDS, scale=_PR_SCALE
     )
-    top = ranks.orderBy(F.col("rank_fp").desc(), F.col("id")).limit(20)
-    w = Window.orderBy(F.col("rank_fp").desc(), F.col("id"))
-    return top.select(
-        "id", "rank_fp", F.row_number().over(w).cast("long").alias("rnk")
-    )
+    return _top20_ranks(ranks)
 
 
 @register("label_propagation", _LPA_ORACLE)
@@ -2181,27 +2237,21 @@ def q_label_propagation(spark, sf_dir):
     return graph_ops.label_propagation(edges, rounds=3)
 
 
+# the number of the 8 minhashes two docs share
+_MH_MATCHES_SQL = (
+    "("
+    + "\n        + ".join(f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(8))
+    + ")"
+)
+
+
 @register(
     "minhash_estimate_accuracy",
     f"""WITH {_MINHASH_CTES}
 SELECT c.id_a, c.id_b,
-       (CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h2 = sb.h2 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h3 = sb.h3 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h4 = sb.h4 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h5 = sb.h5 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h6 = sb.h6 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h7 = sb.h7 THEN 1 ELSE 0 END) / 8 AS est_jaccard,
+       {_MH_MATCHES_SQL} / 8 AS est_jaccard,
        i.n_common / (za.n_sh + zb.n_sh - i.n_common) AS jaccard,
-       ABS((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h2 = sb.h2 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h3 = sb.h3 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h4 = sb.h4 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h5 = sb.h5 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h6 = sb.h6 THEN 1 ELSE 0 END
-        + CASE WHEN sa.h7 = sb.h7 THEN 1 ELSE 0 END) / 8
+       ABS({_MH_MATCHES_SQL} / 8
         - i.n_common / (za.n_sh + zb.n_sh - i.n_common)) AS abs_err
 FROM cand c
 JOIN sig sa ON sa.id = c.id_a
@@ -2423,9 +2473,9 @@ def q_hard_negative_mining(spark, sf_dir):
     )
 
 
-@register(
-    "embedding_topk",
-    f"""WITH v AS (
+# cosine of each query vector (vec_id < 10) against every other vector
+# (embedding_topk, knn_classify)
+_QUERY_COS_CTES = f"""v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
   FROM embeddings
 ),
@@ -2433,7 +2483,12 @@ scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS corpus_id, {_COS_SQL} AS cos_sim
   FROM v q JOIN v c ON q.vec_id != c.vec_id
   WHERE q.vec_id < 10
-)
+)"""
+
+
+@register(
+    "embedding_topk",
+    f"""WITH {_QUERY_COS_CTES}
 SELECT query_id, corpus_id, cos_sim, rnk FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, corpus_id) AS rnk
   FROM scored
@@ -2616,6 +2671,33 @@ def _pred_lang_sql() -> str:
     return "CASE " + " ".join(clauses) + " END"
 
 
+def _lang_hit_cols():
+    """n_<lang> stopword-hit counts over the ``_toks`` column."""
+    scores = T.lang_scores_from_tokens(F.col("_toks"))
+    return [scores[lang].cast("long").alias(f"n_{lang}") for lang in _LANGS]
+
+
+def _pred_lang():
+    """The builder twin of :func:`_pred_lang_sql` over the n_<lang>
+    columns."""
+    pred = None
+    for i, lang in enumerate(_LANGS):
+        cond = F.lit(True)
+        for other in _LANGS[i + 1 :]:
+            cond = cond & (F.col(f"n_{lang}") >= F.col(f"n_{other}"))
+        pred = F.when(cond, F.lit(lang)) if pred is None else pred.when(cond, F.lit(lang))
+    return pred
+
+
+def _labeled_lang_preds(spark, sf_dir):
+    """(lang, pred_lang) per document: the labeled language next to
+    lang_id's prediction (lang_confusion, lang_id_kappa)."""
+    docs = load_table(spark, sf_dir, "documents")
+    toked = docs.select("doc_id", "lang", T.tokens(F.col("text")).alias("_toks"))
+    hits = toked.select("doc_id", "lang", *_lang_hit_cols())
+    return hits.select("lang", _pred_lang().alias("pred_lang"))
+
+
 @register(
     "lang_id",
     f"""WITH hits AS (
@@ -2631,16 +2713,8 @@ def q_lang_id(spark, sf_dir):
     tie-break)."""
     docs = load_table(spark, sf_dir, "documents")
     toked = docs.select("doc_id", T.tokens(F.col("text")).alias("_toks"))
-    scores = T.lang_scores_from_tokens(F.col("_toks"))
-    hit_cols = [scores[lang].cast("long").alias(f"n_{lang}") for lang in _LANGS]
-    hits = toked.select("doc_id", *hit_cols)
-    pred = None
-    for i, lang in enumerate(_LANGS):
-        cond = F.lit(True)
-        for other in _LANGS[i + 1 :]:
-            cond = cond & (F.col(f"n_{lang}") >= F.col(f"n_{other}"))
-        pred = F.when(cond, F.lit(lang)) if pred is None else pred.when(cond, F.lit(lang))
-    return hits.select("doc_id", *[f"n_{lang}" for lang in _LANGS], pred.alias("pred_lang"))
+    hits = toked.select("doc_id", *_lang_hit_cols())
+    return hits.select("doc_id", *[f"n_{lang}" for lang in _LANGS], _pred_lang().alias("pred_lang"))
 
 
 @register(
@@ -3701,6 +3775,20 @@ _PII_IPV4 = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
 _PII_DIGITS = "[0-9]{6,}"
 
 
+def _pii_redacted():
+    """``text`` with emails, IPv4s and long digit runs replaced by
+    typed markers, in that order."""
+    return F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace(F.col("text"), _PII_EMAIL, "<EMAIL>"),
+            _PII_IPV4,
+            "<IP>",
+        ),
+        _PII_DIGITS,
+        "<NUM>",
+    )
+
+
 @register(
     "pii_redaction",
     f"""SELECT doc_id,
@@ -3726,15 +3814,7 @@ def q_pii_redaction(spark, sf_dir):
     byte-for-byte. Returns match counts + md5 of the redacted text so
     the redaction itself (not just the counts) is correctness-gated."""
     docs = load_table(spark, sf_dir, "documents")
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _PII_EMAIL, "<EMAIL>"),
-            _PII_IPV4,
-            "<IP>",
-        ),
-        _PII_DIGITS,
-        "<NUM>",
-    )
+    red = _pii_redacted()
     return docs.select(
         "doc_id",
         F.regexp_count("text", F.lit(_PII_EMAIL)).cast("long").alias("n_emails"),
@@ -3958,15 +4038,7 @@ def q_heavy_hitters_cms(spark, sf_dir):
 
 @register(
     "paned_sliding_window",
-    f"""SELECT window_start, event_type,
-       COUNT(*) AS n_events, {davg_sql('value')} AS avg_value
-FROM (
-  SELECT date_trunc('minute', ts) - o * INTERVAL 1 MINUTE AS window_start,
-         event_type, value
-  FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) ev
-  CROSS JOIN (SELECT unnest(range(0, 5)) AS o) offs
-) sub
-GROUP BY window_start, event_type""",
+    _SLIDING_WINDOW_SQL,
 )
 def q_paned_sliding_window(spark, sf_dir):
     """pane-optimized sliding windows ('no pane, no gain' / CPiX-style
@@ -4105,15 +4177,7 @@ def q_corpus_prep_pipeline(spark, sf_dir):
     before shuffle). Returns the surviving docs with their clean-text
     fingerprint and duplicate-group size."""
     docs = load_table(spark, sf_dir, "documents")
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _PII_EMAIL, "<EMAIL>"),
-            _PII_IPV4,
-            "<IP>",
-        ),
-        _PII_DIGITS,
-        "<NUM>",
-    )
+    red = _pii_redacted()
     staged = docs.select("doc_id", "lang", T.normalize(red).alias("norm"))
     quality = staged.withColumn(
         "n_tokens", F.size(F.split("norm", " ")).cast("long")
@@ -4185,6 +4249,25 @@ def q_hll_merge_rollup(spark, sf_dir):
     )
 
 
+def _hll_register_sql() -> str:
+    """The idx and rnk select items of the md5 HLL register over the
+    hex hash column hh: the first byte picks the register, rnk is the
+    leading-zero count of the next 64 bits plus one (65 when all are
+    zero), computed with string ops."""
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.sketches import HLL_M
+
+    lt = "ltrim(substr(hh, 3, 16), '0')"
+    clz4 = (
+        f"(CASE substr({lt}, 1, 1) WHEN '1' THEN 3 WHEN '2' THEN 2 "
+        f"WHEN '3' THEN 2 WHEN '4' THEN 1 WHEN '5' THEN 1 "
+        f"WHEN '6' THEN 1 WHEN '7' THEN 1 ELSE 0 END)"
+    )
+    return f"""((instr('0123456789abcdef', substr(hh, 1, 1)) - 1) * 16
+          + (instr('0123456789abcdef', substr(hh, 2, 1)) - 1)) % {HLL_M} AS idx,
+         CASE WHEN {lt} = '' THEN 65
+              ELSE (16 - length({lt})) * 4 + {clz4} + 1 END AS rnk"""
+
+
 def _hll_oracle_sql() -> str:
     """DuckDB twin of operators/sketches.py's portable HLL — same md5
     registers, same string-op rank, same 2^40-scaled exact-integer
@@ -4195,12 +4278,6 @@ def _hll_oracle_sql() -> str:
         HLL_SCALE_BITS,
     )
 
-    lt = "ltrim(substr(hh, 3, 16), '0')"
-    clz4 = (
-        f"(CASE substr({lt}, 1, 1) WHEN '1' THEN 3 WHEN '2' THEN 2 "
-        f"WHEN '3' THEN 2 WHEN '4' THEN 1 WHEN '5' THEN 1 "
-        f"WHEN '6' THEN 1 WHEN '7' THEN 1 ELSE 0 END)"
-    )
     est = lambda t: (
         f"{HLL_NUMER} / CAST({t}.s_present + ({HLL_M} - {t}.nreg) * "
         f"(CAST(1 AS BIGINT) << {HLL_SCALE_BITS}) AS DOUBLE)"
@@ -4218,10 +4295,7 @@ def _hll_oracle_sql() -> str:
 ),
 r AS (
   SELECT event_type, day,
-         ((instr('0123456789abcdef', substr(hh, 1, 1)) - 1) * 16
-          + (instr('0123456789abcdef', substr(hh, 2, 1)) - 1)) % {HLL_M} AS idx,
-         CASE WHEN {lt} = '' THEN 65
-              ELSE (16 - length({lt})) * 4 + {clz4} + 1 END AS rnk
+         {_hll_register_sql()}
   FROM h
 ),
 daily AS (SELECT event_type, day, idx, MAX(rnk) AS m FROM r GROUP BY 1, 2, 3),
@@ -4716,37 +4790,7 @@ ORDER BY ABS(e.value - p.expected) DESC, e.event_id LIMIT 50""",
 
 @register(
     "triangle_count",
-    """WITH g0 AS (
-  SELECT DISTINCT user_id AS id, event_type, date_trunc('minute', ts) AS m
-  FROM events
-),
-g AS (
-  SELECT id, event_type, m FROM g0
-  QUALIFY COUNT(*) OVER (PARTITION BY event_type, m) <= 32
-),
-e0 AS (
-  SELECT DISTINCT a.id AS u, b.id AS v
-  FROM g a JOIN g b ON a.event_type = b.event_type AND a.m = b.m
-                   AND a.id < b.id
-),
-deg AS (
-  SELECT id, COUNT(*) AS d
-  FROM (SELECT u AS id FROM e0 UNION ALL SELECT v AS id FROM e0)
-  GROUP BY id
-),
-dir AS (
-  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS src,
-         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS dst,
-         CASE WHEN (du.d, u) < (dv.d, v) THEN dv.d ELSE du.d END AS ddeg
-  FROM e0 JOIN deg du ON u = du.id JOIN deg dv ON v = dv.id
-),
-tri AS (
-  SELECT e1.src AS x, e1.dst AS y, e2.dst AS z
-  FROM dir e1
-  JOIN dir e2 ON e1.src = e2.src
-             AND (e1.ddeg, e1.dst) < (e2.ddeg, e2.dst)
-  JOIN dir e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-)
+    f"""WITH {_WEDGE_CTES}
 SELECT id, COUNT(*) AS n_triangles
 FROM (SELECT x AS id FROM tri UNION ALL SELECT y FROM tri
       UNION ALL SELECT z FROM tri)
@@ -4779,37 +4823,7 @@ def q_triangle_count(spark, sf_dir):
 
 @register(
     "clustering_coefficient",
-    """WITH g0 AS (
-  SELECT DISTINCT user_id AS id, event_type, date_trunc('minute', ts) AS m
-  FROM events
-),
-g AS (
-  SELECT id, event_type, m FROM g0
-  QUALIFY COUNT(*) OVER (PARTITION BY event_type, m) <= 32
-),
-e0 AS (
-  SELECT DISTINCT a.id AS u, b.id AS v
-  FROM g a JOIN g b ON a.event_type = b.event_type AND a.m = b.m
-                   AND a.id < b.id
-),
-deg AS (
-  SELECT id, COUNT(*) AS d
-  FROM (SELECT u AS id FROM e0 UNION ALL SELECT v AS id FROM e0)
-  GROUP BY id
-),
-dir AS (
-  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS src,
-         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS dst,
-         CASE WHEN (du.d, u) < (dv.d, v) THEN dv.d ELSE du.d END AS ddeg
-  FROM e0 JOIN deg du ON u = du.id JOIN deg dv ON v = dv.id
-),
-tri AS (
-  SELECT e1.src AS x, e1.dst AS y, e2.dst AS z
-  FROM dir e1
-  JOIN dir e2 ON e1.src = e2.src
-             AND (e1.ddeg, e1.dst) < (e2.ddeg, e2.dst)
-  JOIN dir e3 ON e3.src = e1.dst AND e3.dst = e2.dst
-),
+    f"""WITH {_WEDGE_CTES},
 tcnt AS (
   SELECT id, COUNT(*) AS n_tri
   FROM (SELECT x AS id FROM tri UNION ALL SELECT y FROM tri
@@ -5003,14 +5017,62 @@ def q_shard_export(spark, sf_dir):
 # retrieval + semantic dedup (LLM-pipeline late additions)
 
 
-@register(
-    "hybrid_search",
-    f"""WITH side AS (
+# per doc: distinct normalized tokens and the embedding as doubles
+# (hybrid_search, rrf_fusion)
+_HYBRID_SIDE_CTE = f"""side AS (
   SELECT d.doc_id AS id,
          list_distinct(string_split({T.normalize_sql('d.text')}, ' ')) AS dt,
          list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS vec
   FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-),
+)"""
+
+
+def _hybrid_pairs(spark, sf_dir):
+    """(query_id, corpus_id, lex_sim, cos_sim) for the query docs
+    (id < 5) against every other doc: token-set Jaccard and embedding
+    cosine, the norms hoisted below the join."""
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
+    side = (
+        docs.select(
+            F.col("doc_id").alias("id"),
+            F.array_distinct(T.tokens(F.col("text"))).alias("dt"),
+        )
+        .join(
+            emb.select(
+                F.col("vec_id").alias("id"),
+                F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
+            ),
+            "id",
+        )
+    )
+    q = side.filter(F.col("id") < 5).select(
+        F.col("id").alias("query_id"),
+        F.col("dt").alias("qdt"),
+        F.col("vec").alias("qvec"),
+        V.norm(F.col("vec")).alias("qnorm"),
+    )
+    c = side.select(
+        F.col("id").alias("corpus_id"),
+        F.col("dt").alias("cdt"),
+        F.col("vec").alias("cvec"),
+        V.norm(F.col("vec")).alias("cnorm"),
+    )
+    inter = F.size(F.array_intersect(F.col("qdt"), F.col("cdt")))
+    lex = inter / (F.size("qdt") + F.size("cdt") - inter).cast("double")
+    return c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id")).select(
+        "query_id",
+        "corpus_id",
+        lex.alias("lex_sim"),
+        (V.dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm"))).alias(
+            "cos_sim"
+        ),
+    )
+
+
+@register(
+    "hybrid_search",
+    f"""WITH {_HYBRID_SIDE_CTE},
 pairs AS (
   SELECT q.id AS query_id, c.id AS corpus_id,
          len(list_intersect(q.dt, c.dt)) AS inter,
@@ -5042,49 +5104,11 @@ def q_hybrid_search(spark, sf_dir):
     the corpus itself; at scale the corpus side would come from the
     cell-partitioned IVF index (build_ivf_index) with this same
     scoring applied to the probed cells only."""
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    side = (
-        docs.select(
-            F.col("doc_id").alias("id"),
-            F.array_distinct(T.tokens(F.col("text"))).alias("dt"),
-        )
-        .join(
-            emb.select(
-                F.col("vec_id").alias("id"),
-                F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-            ),
-            "id",
-        )
-    )
-    q = side.filter(F.col("id") < 5).select(
-        F.col("id").alias("query_id"),
-        F.col("dt").alias("qdt"),
-        F.col("vec").alias("qvec"),
-        V.norm(F.col("vec")).alias("qnorm"),
-    )
-    c = side.select(
-        F.col("id").alias("corpus_id"),
-        F.col("dt").alias("cdt"),
-        F.col("vec").alias("cvec"),
-        V.norm(F.col("vec")).alias("cnorm"),
-    )
-    inter = F.size(F.array_intersect(F.col("qdt"), F.col("cdt")))
-    lex = inter / (F.size("qdt") + F.size("cdt") - inter).cast("double")
-    # norms hoisted below the join and cos_sim computed ONCE (the fused
-    # score recomputed the whole fold — HOF lambdas never CSE);
-    # referencing the column yields the same doubles, bitwise
+    # cos_sim is computed ONCE (the fused score recomputed the whole
+    # fold — HOF lambdas never CSE); referencing the column yields the
+    # same doubles, bitwise
     scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            lex.alias("lex_sim"),
-            (
-                V.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
-        )
+        _hybrid_pairs(spark, sf_dir)
         .select(
             "*",
             (0.5 * F.col("lex_sim") + 0.5 * F.col("cos_sim")).alias("score"),
@@ -5486,15 +5510,7 @@ def q_stratified_kfold(spark, sf_dir):
 
 @register(
     "knn_classify",
-    f"""WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id, {_COS_SQL} AS cos_sim
-  FROM v q JOIN v c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 10
-),
+    f"""WITH {_QUERY_COS_CTES},
 topk AS (
   SELECT query_id, corpus_id FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, corpus_id) AS rnk
@@ -5814,6 +5830,36 @@ c{j}_{r} AS (
 )"""
 
 
+# ADC: the four subspace LUT distances summed in F.aggregate's fold
+# order, and each query's 5 nearest by it
+_ADC_SQL = "(((CAST(0.0 AS DOUBLE) + l0.d) + l1.d) + l2.d) + l3.d"
+_ADC_TOP5_SQL = """SELECT query_id, corpus_id, approx_dist, CAST(rn AS BIGINT) AS rnk FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                               ORDER BY approx_dist, corpus_id) AS rn
+  FROM sc) t
+WHERE rn <= 5"""
+
+
+def _pq_codebook_sql(j: int, src: str, seeds: str, iters: int) -> list[str]:
+    """Subspace ``j``'s CTEs: its slice of ``src`` (sv<j>) and of the
+    ``seeds`` centroids (c<j>_0), ``iters`` portable Lloyd rounds and
+    every row's nearest final centroid (code<j>)."""
+    lo = j * _PQ_DSUB + 1
+    hi = (j + 1) * _PQ_DSUB
+    return [
+        f"sv{j} AS (SELECT id, list_slice(vec, {lo}, {hi}) AS vec FROM {src})",
+        f"c{j}_0 AS (SELECT cid, list_slice(vec, {lo}, {hi}) AS vec FROM {seeds})",
+        *(_pqo_round_sql(j, r) for r in range(1, iters + 1)),
+        f"""code{j} AS (
+  SELECT id, cid FROM (
+    SELECT s.id, c.cid,
+           ROW_NUMBER() OVER (PARTITION BY s.id
+                              ORDER BY {_pqo_dist_sql('s.vec', 'c.vec')}, c.cid) AS rn
+    FROM sv{j} s, c{j}_{iters} c) t WHERE rn = 1
+)""",
+    ]
+
+
 def _ivfpq_oracle_sql() -> str:
     """the persistent IVF-PQ pipeline unrolled: coarse 8-cell k-means
     (2 portable Lloyd rounds) → residuals against the trained cells →
@@ -5849,25 +5895,7 @@ def _ivfpq_oracle_sql() -> str:
 )"""
     )
     for j in range(_PQ_M):
-        lo = j * _PQ_DSUB + 1
-        hi = (j + 1) * _PQ_DSUB
-        parts.append(
-            f"sv{j} AS (SELECT id, list_slice(vec, {lo}, {hi}) AS vec FROM resid)"
-        )
-        parts.append(
-            f"c{j}_0 AS (SELECT cid, list_slice(vec, {lo}, {hi}) AS vec FROM pseeds)"
-        )
-        for r in range(1, iters + 1):
-            parts.append(_pqo_round_sql(j, r))
-        parts.append(
-            f"""code{j} AS (
-  SELECT id, cid FROM (
-    SELECT s.id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY s.id
-                              ORDER BY {_pqo_dist_sql('s.vec', 'c.vec')}, c.cid) AS rn
-    FROM sv{j} s, c{j}_{iters} c) t WHERE rn = 1
-)"""
-        )
+        parts += _pq_codebook_sql(j, "resid", "pseeds", iters)
     parts.append(
         f"""qv AS (SELECT id AS query_id, vec FROM v WHERE id < 10),
 qcell AS (
@@ -5893,7 +5921,6 @@ qres AS (
   FROM qres r, c{j}_{iters} c
 )"""
         )
-    adc = "(((CAST(0.0 AS DOUBLE) + l0.d) + l1.d) + l2.d) + l3.d"
     joins = "\n  ".join(
         f"JOIN code{j} k{j} ON k{j}.id = cd.id "
         f"JOIN plut{j} l{j} ON l{j}.query_id = r.query_id AND l{j}.cell = r.cell "
@@ -5905,16 +5932,12 @@ qres AS (
         + ",\n".join(parts)
         + f""",
 sc AS (
-  SELECT r.query_id, cd.id AS corpus_id, {adc} AS approx_dist
+  SELECT r.query_id, cd.id AS corpus_id, {_ADC_SQL} AS approx_dist
   FROM resid cd
   JOIN qres r ON r.cell = cd.cell
   {joins}
 )
-SELECT query_id, corpus_id, approx_dist, CAST(rn AS BIGINT) AS rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY approx_dist, corpus_id) AS rn
-  FROM sc) t
-WHERE rn <= 5"""
+{_ADC_TOP5_SQL}"""
     )
 
 
@@ -6045,6 +6068,18 @@ SELECT d.doc_id, COALESCE(pd.n_words, 0) AS n_words,
 FROM (SELECT doc_id FROM documents) d LEFT JOIN pd ON pd.doc_id = d.doc_id"""
 
 
+def _bpe_merges(docs):
+    """The 8 BPE merges (left, right) learned on every 4th doc, in rank
+    order; the trainer's merge list is already driver-side, so no
+    createDataFrame → orderBy → collect round-trip."""
+    return [
+        (left, right)
+        for _rank, left, right, _n in bpe.train_bpe_merge_list(
+            docs.filter(F.col("doc_id") % 4 == 0), "text", 8
+        )
+    ]
+
+
 @register("bpe_encode", _bpe_encode_oracle_sql())
 def q_bpe_encode(spark, sf_dir):
     """the APPLY side of the BPE tokenizer: learn 8 merges on a
@@ -6058,14 +6093,7 @@ def q_bpe_encode(spark, sf_dir):
     same delimiter encoding; segmentation correctness on known merges
     stays test-asserted."""
     docs = load_table(spark, sf_dir, "documents")
-    # the trainer's merge list is already driver-side in rank order —
-    # no createDataFrame → orderBy → collect round-trip
-    merges = [
-        (left, right)
-        for _rank, left, right, _n in bpe.train_bpe_merge_list(
-            docs.filter(F.col("doc_id") % 4 == 0), "text", 8
-        )
-    ]
+    merges = _bpe_merges(docs)
     enc = bpe.encode_bpe(docs, "text", "doc_id", merges)
     return enc.select(
         F.col("id").alias("doc_id"),
@@ -6090,23 +6118,7 @@ def _pq_oracle_sql() -> str:
     for j in range(_PQ_M):
         lo = j * _PQ_DSUB + 1
         hi = (j + 1) * _PQ_DSUB
-        parts.append(
-            f"sv{j} AS (SELECT id, list_slice(vec, {lo}, {hi}) AS vec FROM v)"
-        )
-        parts.append(
-            f"c{j}_0 AS (SELECT cid, list_slice(vec, {lo}, {hi}) AS vec FROM seeds)"
-        )
-        for r in range(1, _PQ_ITERS + 1):
-            parts.append(_pqo_round_sql(j, r))
-        parts.append(
-            f"""code{j} AS (
-  SELECT id, cid FROM (
-    SELECT s.id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY s.id
-                              ORDER BY {_pqo_dist_sql('s.vec', 'c.vec')}, c.cid) AS rn
-    FROM sv{j} s, c{j}_{_PQ_ITERS} c) t WHERE rn = 1
-)"""
-        )
+        parts += _pq_codebook_sql(j, "v", "seeds", _PQ_ITERS)
         parts.append(
             f"""lut{j} AS (
   SELECT q.id AS query_id, c.cid,
@@ -6114,7 +6126,6 @@ def _pq_oracle_sql() -> str:
   FROM v q, c{j}_{_PQ_ITERS} c WHERE q.id < 10
 )"""
         )
-    adc = "(((CAST(0.0 AS DOUBLE) + l0.d) + l1.d) + l2.d) + l3.d"
     joins = "\n".join(
         f"JOIN lut{j} l{j} ON l{j}.query_id = q.query_id AND l{j}.cid = code{j}_c.cid"
         for j in range(_PQ_M)
@@ -6128,17 +6139,13 @@ def _pq_oracle_sql() -> str:
         + f""",
 q AS (SELECT DISTINCT id AS query_id FROM v WHERE id < 10),
 sc AS (
-  SELECT q.query_id, cd.id AS corpus_id, {adc} AS approx_dist
+  SELECT q.query_id, cd.id AS corpus_id, {_ADC_SQL} AS approx_dist
   FROM v cd
   {code_joins}
   CROSS JOIN q
   {joins}
 )
-SELECT query_id, corpus_id, approx_dist, CAST(rn AS BIGINT) AS rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY approx_dist, corpus_id) AS rn
-  FROM sc) t
-WHERE rn <= 5"""
+{_ADC_TOP5_SQL}"""
     )
 
 
@@ -6458,12 +6465,7 @@ def q_data_quality_report(spark, sf_dir):
 
 @register(
     "rrf_fusion",
-    f"""WITH side AS (
-  SELECT d.doc_id AS id,
-         list_distinct(string_split({T.normalize_sql('d.text')}, ' ')) AS dt,
-         list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-),
+    f"""WITH {_HYBRID_SIDE_CTE},
 pairs AS (
   SELECT q.id AS query_id, c.id AS corpus_id,
          len(list_intersect(q.dt, c.dt))
@@ -6506,41 +6508,7 @@ def q_rrf_fusion(spark, sf_dir):
     hazard. Plan: ONE persisted pair frame feeds both arm rankings
     (two windows over the same query_id partitioning); the fusion
     full-outer join runs on two ≤20-row-per-query frames."""
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    side = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(T.tokens(F.col("text"))).alias("dt"),
-    ).join(
-        emb.select(
-            F.col("vec_id").alias("id"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-        ),
-        "id",
-    )
-    q = side.filter(F.col("id") < 5).select(
-        F.col("id").alias("query_id"), F.col("dt").alias("qdt"),
-        F.col("vec").alias("qvec"), V.norm(F.col("vec")).alias("qnorm"),
-    )
-    c = side.select(
-        F.col("id").alias("corpus_id"), F.col("dt").alias("cdt"),
-        F.col("vec").alias("cvec"), V.norm(F.col("vec")).alias("cnorm"),
-    )
-    inter = F.size(F.array_intersect(F.col("qdt"), F.col("cdt")))
-    lex = inter / (F.size("qdt") + F.size("cdt") - inter).cast("double")
-    pairs = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            lex.alias("lex_sim"),
-            (
-                V.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos_sim"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    pairs = _hybrid_pairs(spark, sf_dir).localCheckpoint(eager=False)
     wl = Window.partitionBy("query_id").orderBy(F.col("lex_sim").desc(), "corpus_id")
     wd = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "corpus_id")
     lexr = (
@@ -6663,13 +6631,7 @@ und AS (
   ) u
 ),
 verts AS (SELECT DISTINCT src AS id FROM und),
-deg AS (SELECT src AS id, COUNT(*) AS d FROM und GROUP BY src),
-tele AS (SELECT (15 * {_PR_SCALE}) // (100 * (SELECT COUNT(*) FROM verts)) AS t),
-pr0 AS (SELECT id, {_PR_SCALE} // (SELECT COUNT(*) FROM verts) AS r FROM verts),
-{",".join(_pr_round_sql(r) for r in range(1, _PR_ROUNDS + 1))}
-SELECT id, CAST(r AS BIGINT) AS rank_fp, CAST(rn AS BIGINT) AS rnk FROM (
-  SELECT id, r, ROW_NUMBER() OVER (ORDER BY r DESC, id) AS rn FROM pr{_PR_ROUNDS}) t
-WHERE rn <= 20"""
+{_PR_TOP20_SQL}"""
 
 
 @register("pagerank_topk", _PAGERANK_KNN_ORACLE)
@@ -6716,27 +6678,13 @@ def q_pagerank_topk(spark, sf_dir):
     ranks = graph_ops.pagerank_fixed_point(
         edges, src_col="src", dst_col="dst", rounds=_PR_ROUNDS, scale=_PR_SCALE
     )
-    top = ranks.orderBy(F.col("rank_fp").desc(), F.col("id")).limit(20)
-    w = Window.orderBy(F.col("rank_fp").desc(), F.col("id"))
-    return top.select(
-        "id", "rank_fp", F.row_number().over(w).cast("long").alias("rnk")
-    )
+    return _top20_ranks(ranks)
 
 
 @register(
     "connected_components_star",
-    f"""WITH RECURSIVE {_MINHASH_CTES},
-und AS (
-  SELECT id_a AS a, id_b AS b FROM mh_pairs
-  UNION
-  SELECT id_b, id_a FROM mh_pairs
-),
-reach(a, b) AS (
-  SELECT a, a FROM und
-  UNION
-  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-)
-SELECT a AS id, MIN(b) AS cluster FROM reach GROUP BY a""",
+    _MINHASH_REACH_SQL
+    + "\nSELECT a AS id, MIN(b) AS cluster FROM reach GROUP BY a",
 )
 def q_connected_components_star(spark, sf_dir):
     """two-phase (large-star/small-star, Kiveris et al. 2014)
@@ -6750,9 +6698,7 @@ def q_connected_components_star(spark, sf_dir):
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.graph import connected_components_star
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_dedup_pairs(
-        docs, "text", "doc_id", k=3, bands=4, rows_per_band=2, threshold=0.2
-    )
+    pairs = _minhash_pairs(docs)
     return connected_components_star(pairs)
 
 
@@ -6817,22 +6763,7 @@ def q_snapshot_time_travel(spark, sf_dir):
 
 @register(
     "dedup_index_probe",
-    f"""WITH sh AS (
-  SELECT DISTINCT doc_id AS id, unnest({_SH3}) AS shingle FROM documents
-),
-sig AS (
-  SELECT id, """
-    + ", ".join(f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(8))
-    + """ FROM sh GROUP BY id
-),
-banded AS (
-  SELECT id, b.band, b.sig FROM sig, LATERAL (
-    SELECT * FROM (VALUES
-      (0, md5(h0 || '|' || h1)), (1, md5(h2 || '|' || h3)),
-      (2, md5(h4 || '|' || h5)), (3, md5(h6 || '|' || h7))
-    ) AS v(band, sig)
-  ) b
-),
+    f"""WITH {_MINHASH_BANDED_CTES},
 fps AS (
   SELECT doc_id AS id, md5("""
     + _docs_norm_sql()
@@ -6911,18 +6842,21 @@ pairs AS (
   WHERE p[2] IS NOT NULL
 ),
 dbc AS (SELECT id, w1, w2, COUNT(*) AS c FROM pairs GROUP BY id, w1, w2)"""
-
-
-@register(
-    "bigram_lm_score",
-    f"""WITH {_BIGRAM_PAIRS_CTE.format(norm=_docs_norm_sql())},
+# ... with the corpus-trained Laplace bigram model (fixed-point
+# conditional probabilities cond_fp)
+_BIGRAM_MODEL_CTES = f"""{_BIGRAM_PAIRS_CTE.format(norm=_docs_norm_sql())},
 bg AS (SELECT w1, w2, SUM(c) AS cb FROM dbc GROUP BY w1, w2),
 lft AS (SELECT w1, SUM(cb) AS c1 FROM bg GROUP BY w1),
 vcnt AS (SELECT COUNT(*) AS v FROM lft),
 model AS (
   SELECT bg.w1, bg.w2, (1000000000 * (bg.cb + 1)) // (lft.c1 + vcnt.v) AS cond_fp
   FROM bg JOIN lft ON bg.w1 = lft.w1 CROSS JOIN vcnt
-),
+)"""
+
+
+@register(
+    "bigram_lm_score",
+    f"""WITH {_BIGRAM_MODEL_CTES},
 ds AS (
   SELECT id, SUM(c * cond_fp) AS s, SUM(c) AS nb
   FROM dbc JOIN model USING (w1, w2) GROUP BY id
@@ -7350,6 +7284,16 @@ def q_quality_classifier(spark, sf_dir):
     return lm.quality_probe_topk(docs, F.col("lang") == "en", k=20)
 
 
+# embeddings floor-quantized at 1e6 to exact BIGINT coordinates
+# (kcenter_select, mmr_select)
+_QV_CTE = """q AS MATERIALIZED (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
+  FROM embeddings
+)"""
+
+
 def _kc_dist_sql(a: str, b: str) -> str:
     """exact integer squared-L2 between two quantized DuckDB lists —
     1-based indexing; integer adds commute so this equals Spark's
@@ -7363,12 +7307,7 @@ def _kc_dist_sql(a: str, b: str) -> str:
 def _kc_oracle(k: int) -> str:
     d = _kc_dist_sql
     parts = [
-        f"""WITH q AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-  FROM embeddings
-),
+        f"""WITH {_QV_CTE},
 c1 AS MATERIALIZED (SELECT vec_id, qv FROM q ORDER BY vec_id LIMIT 1),
 d1 AS MATERIALIZED (
   SELECT q.vec_id, q.qv, {d("q.qv", "c.qv")} AS dd FROM q, c1 c
@@ -7439,12 +7378,7 @@ def _dot_fp_sql(a: str, b: str) -> str:
 def _mmr_oracle(k: int) -> str:
     dot = _dot_fp_sql
     parts = [
-        f"""WITH q AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-  FROM embeddings
-),
+        f"""WITH {_QV_CTE},
 qry AS MATERIALIZED (SELECT vec_id, qv FROM q ORDER BY vec_id LIMIT 1),
 d0 AS MATERIALIZED (
   SELECT t.vec_id, t.qv, {dot("t.qv", "y.qv")} AS rel
@@ -7627,17 +7561,22 @@ def q_ts_analog_topk(spark, sf_dir):
     )
 
 
-@register(
-    "embedding_sq8_topk",
-    """WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
-dims AS (SELECT UNNEST(range(1, 65)) AS i),
+# per-dimension min and range of the 64-dim vectors v: the SQ8
+# quantizer's training state (embedding_sq8_topk, sq8_recon_error)
+_SQ8_RANGE_CTES = """dims AS (SELECT UNNEST(range(1, 65)) AS i),
 st AS (
   SELECT d.i, MIN(v.vec[d.i]) AS mn, MAX(v.vec[d.i]) - MIN(v.vec[d.i]) AS rg
   FROM v CROSS JOIN dims d GROUP BY d.i
+)"""
+
+
+@register(
+    "embedding_sq8_topk",
+    f"""WITH v AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
+  FROM embeddings
 ),
+{_SQ8_RANGE_CTES},
 cr AS (
   SELECT v.vec_id, st.i,
          CASE WHEN st.rg > 0 THEN LEAST(255, GREATEST(0,
@@ -7682,34 +7621,14 @@ def q_embedding_sq8_topk(spark, sf_dir):
 
 @register(
     "paragraph_dedup",
-    """WITH d AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-s AS (
-  SELECT doc_id, u['pos'] AS pos, u['seg'] AS seg, md5(u['seg']) AS h FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(0, (len(words) + 4) // 5),
-             i -> {'pos': i, 'seg': array_to_string(list_slice(words, i * 5 + 1, i * 5 + 5), ' ')})) AS u
-    FROM d) t
-),
+    f"""WITH {_SEG5_CTES},
 kept AS (
   SELECT doc_id, pos, seg FROM (
     SELECT s.*, ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
     FROM s
   ) r WHERE rn = 1
 ),
-cl AS (
-  SELECT doc_id, array_to_string(list(seg ORDER BY pos), ' ') AS clean_text,
-         COUNT(*) AS n_kept
-  FROM kept GROUP BY doc_id
-),
-base AS (
-  SELECT doc_id,
-         CAST((len(string_split(text, ' ')) + 4) // 5 AS BIGINT) AS n_segments
-  FROM documents
-)
-SELECT base.doc_id, COALESCE(cl.clean_text, '') AS clean_text,
-       CAST(base.n_segments - COALESCE(cl.n_kept, 0) AS BIGINT) AS n_removed,
-       base.n_segments
-FROM base LEFT JOIN cl ON cl.doc_id = base.doc_id""",
+{_SEG5_REASSEMBLY_SQL}""",
 )
 def q_paragraph_dedup(spark, sf_dir):
     """CCNet's paragraph-level dedup proper (Wenzek et al. 2020 §3.1):
@@ -7877,12 +7796,7 @@ def q_tokenizer_fertility(spark, sf_dir):
     fixed-point ratio keeps the whole chain — trainer, segmentation,
     and the eval arithmetic — bitwise oracle-portable."""
     docs = load_table(spark, sf_dir, "documents")
-    merges = [
-        (left, right)
-        for _rank, left, right, _n in bpe.train_bpe_merge_list(
-            docs.filter(F.col("doc_id") % 4 == 0), "text", 8
-        )
-    ]
+    merges = _bpe_merges(docs)
     return bpe.subword_counts(docs, "text", merges, "lang").select(
         F.col("grp").alias("lang"),
         "n_docs",
@@ -8100,14 +8014,7 @@ def q_vocab_coverage(spark, sf_dir):
 
 @register(
     "ccnet_buckets",
-    f"""WITH {_BIGRAM_PAIRS_CTE.format(norm=_docs_norm_sql())},
-bg AS (SELECT w1, w2, SUM(c) AS cb FROM dbc GROUP BY w1, w2),
-lft AS (SELECT w1, SUM(cb) AS c1 FROM bg GROUP BY w1),
-vcnt AS (SELECT COUNT(*) AS v FROM lft),
-model AS (
-  SELECT bg.w1, bg.w2, (1000000000 * (bg.cb + 1)) // (lft.c1 + vcnt.v) AS cond_fp
-  FROM bg JOIN lft ON bg.w1 = lft.w1 CROSS JOIN vcnt
-),
+    f"""WITH {_BIGRAM_MODEL_CTES},
 ds AS (
   SELECT id, CAST(SUM(c * cond_fp) // SUM(c) AS BIGINT) AS score_fp
   FROM dbc JOIN model USING (w1, w2) GROUP BY id
@@ -8953,9 +8860,10 @@ def q_benford_quality(spark, sf_dir):
     )
 
 
-@register(
-    "acf_lag",
-    """WITH m AS (
+# Per-type minute counts on a dense grid — every minute from the
+# type's first to last active one, zero-filled (acf_lag,
+# burst_detection, stl_decompose).
+_DENSE_MINUTES_CTES = """m AS (
   SELECT event_type, date_trunc('minute', ts) AS minute, COUNT(*) AS x
   FROM events GROUP BY 1, 2
 ),
@@ -8967,7 +8875,32 @@ grid AS (
 dense AS (
   SELECT g.event_type, g.minute, COALESCE(m.x, 0) AS x
   FROM grid g LEFT JOIN m ON g.event_type = m.event_type AND g.minute = m.minute
-),
+)"""
+
+
+def _dense_minutes(spark, sf_dir):
+    """(event_type, minute, x): the builder twin of
+    _DENSE_MINUTES_CTES."""
+    ev = load_table(spark, sf_dir, "events")
+    m = (
+        ev.groupBy("event_type", F.date_trunc("minute", "ts").alias("minute"))
+        .agg(F.count(F.lit(1)).alias("x"))
+    )
+    span = m.groupBy("event_type").agg(
+        F.min("minute").alias("lo"), F.max("minute").alias("hi")
+    )
+    grid = span.select(
+        "event_type",
+        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 MINUTE"))).alias("minute"),
+    )
+    return grid.join(m, ["event_type", "minute"], "left").select(
+        "event_type", "minute", F.coalesce("x", F.lit(0)).alias("x")
+    )
+
+
+@register(
+    "acf_lag",
+    f"""WITH {_DENSE_MINUTES_CTES},
 led AS (
   SELECT event_type, x,
          LEAD(x, 1) OVER w AS b1, LEAD(x, 2) OVER w AS b2, LEAD(x, 3) OVER w AS b3
@@ -9022,23 +8955,7 @@ def q_acf_lag(spark, sf_dir):
     partition, and the grid explode is bounded by the time span, not
     the row count. Constant series yield NULL acf identically in both
     engines (guarded, no div-by-zero)."""
-    ev = load_table(spark, sf_dir, "events")
-    m = (
-        ev.groupBy("event_type", F.date_trunc("minute", "ts").alias("minute"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    span = m.groupBy("event_type").agg(
-        F.min("minute").alias("lo"), F.max("minute").alias("hi")
-    )
-    grid = span.select(
-        "event_type",
-        F.explode(
-            F.sequence("lo", "hi", F.expr("INTERVAL 1 MINUTE"))
-        ).alias("minute"),
-    )
-    dense = grid.join(m, ["event_type", "minute"], "left").select(
-        "event_type", "minute", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    dense = _dense_minutes(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("minute")
     led = dense.select(
         "event_type",
@@ -9102,19 +9019,7 @@ def q_acf_lag(spark, sf_dir):
 
 @register(
     "burst_detection",
-    """WITH m AS (
-  SELECT event_type, date_trunc('minute', ts) AS minute, COUNT(*) AS x
-  FROM events GROUP BY 1, 2
-),
-span AS (SELECT event_type, MIN(minute) AS lo, MAX(minute) AS hi FROM m GROUP BY 1),
-grid AS (
-  SELECT event_type, unnest(generate_series(lo, hi, INTERVAL 1 MINUTE)) AS minute
-  FROM span
-),
-dense AS (
-  SELECT g.event_type, g.minute, COALESCE(m.x, 0) AS x
-  FROM grid g LEFT JOIN m ON g.event_type = m.event_type AND g.minute = m.minute
-),
+    f"""WITH {_DENSE_MINUTES_CTES},
 base AS (
   SELECT event_type, minute, x,
          SUM(x) OVER w AS s, COUNT(x) OVER w AS c,
@@ -9153,21 +9058,7 @@ def q_burst_detection(spark, sf_dir):
     CUSUM twin (cusum_alert_stream) would page on. One minute-grain
     pre-agg + two sorts per type partition; linear in minutes at any
     scale."""
-    ev = load_table(spark, sf_dir, "events")
-    m = (
-        ev.groupBy("event_type", F.date_trunc("minute", "ts").alias("minute"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    span = m.groupBy("event_type").agg(
-        F.min("minute").alias("lo"), F.max("minute").alias("hi")
-    )
-    grid = span.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 MINUTE"))).alias("minute"),
-    )
-    dense = grid.join(m, ["event_type", "minute"], "left").select(
-        "event_type", "minute", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    dense = _dense_minutes(spark, sf_dir)
     wo = Window.partitionBy("event_type").orderBy("minute")
     wt = wo.rowsBetween(-10, -1)
     base = dense.select(
@@ -9199,19 +9090,7 @@ def q_burst_detection(spark, sf_dir):
 
 @register(
     "stl_decompose",
-    """WITH m AS (
-  SELECT event_type, date_trunc('minute', ts) AS minute, COUNT(*) AS x
-  FROM events GROUP BY 1, 2
-),
-span AS (SELECT event_type, MIN(minute) AS lo, MAX(minute) AS hi FROM m GROUP BY 1),
-grid AS (
-  SELECT event_type, unnest(generate_series(lo, hi, INTERVAL 1 MINUTE)) AS minute
-  FROM span
-),
-dense AS (
-  SELECT g.event_type, g.minute, COALESCE(m.x, 0) AS x
-  FROM grid g LEFT JOIN m ON g.event_type = m.event_type AND g.minute = m.minute
-),
+    f"""WITH {_DENSE_MINUTES_CTES},
 tr AS (
   SELECT event_type, minute, x,
          (1000000 * SUM(x) OVER w) // (COUNT(x) OVER w) AS trend_ppm
@@ -9252,21 +9131,7 @@ def q_stl_decompose(spark, sf_dir):
     one 60-row-per-type seasonal agg broadcast back — linear in
     minutes; the decomposition never touches the raw fact rows
     twice."""
-    ev = load_table(spark, sf_dir, "events")
-    m = (
-        ev.groupBy("event_type", F.date_trunc("minute", "ts").alias("minute"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    span = m.groupBy("event_type").agg(
-        F.min("minute").alias("lo"), F.max("minute").alias("hi")
-    )
-    grid = span.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 MINUTE"))).alias("minute"),
-    )
-    dense = grid.join(m, ["event_type", "minute"], "left").select(
-        "event_type", "minute", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    dense = _dense_minutes(spark, sf_dir)
     wc = (
         Window.partitionBy("event_type").orderBy("minute").rowsBetween(-5, 5)
     )
@@ -9319,19 +9184,7 @@ def q_stl_decompose(spark, sf_dir):
 
 @register(
     "linkpred_topk",
-    """WITH g0 AS (
-  SELECT DISTINCT user_id AS id, event_type, date_trunc('minute', ts) AS m
-  FROM events
-),
-g AS (
-  SELECT id, event_type, m FROM g0
-  QUALIFY COUNT(*) OVER (PARTITION BY event_type, m) <= 32
-),
-e0 AS (
-  SELECT DISTINCT a.id AS u, b.id AS v
-  FROM g a JOIN g b ON a.event_type = b.event_type AND a.m = b.m
-                   AND a.id < b.id
-),
+    f"""WITH {_COACT_E0_CTES},
 sym AS (SELECT u AS w, v AS x FROM e0 UNION ALL SELECT v, u FROM e0),
 deg AS (SELECT w, COUNT(*) AS d FROM sym GROUP BY w),
 dist AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS c FROM deg GROUP BY d),
@@ -10039,6 +9892,22 @@ def q_chi2_independence(spark, sf_dir):
     )
 
 
+def _weekly_cents(spark, sf_dir):
+    """(wk, cents): order revenue in integer cents per epoch week
+    (epoch-day div 7)."""
+    o = load_table(spark, sf_dir, "orders")
+    return (
+        o.select(
+            F.expr(
+                "datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') div 7"
+            ).alias("wk"),
+            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
+        )
+        .groupBy("wk")
+        .agg(F.sum("cents").alias("cents"))
+    )
+
+
 @register(
     "theil_sen_trend",
     """WITH wk AS (
@@ -10072,17 +9941,7 @@ def q_theil_sen_trend(spark, sf_dir):
     one corpus-sized job is the week pre-agg with map-side combine.
     Integer week index via epoch-day div 7 (both engines truncate,
     positive domain) rather than date_trunc-week names."""
-    o = load_table(spark, sf_dir, "orders")
-    wk = (
-        o.select(
-            F.expr(
-                "datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') div 7"
-            ).alias("wk"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-        )
-        .groupBy("wk")
-        .agg(F.sum("cents").alias("cents"))
-    )
+    wk = _weekly_cents(spark, sf_dir)
     a, b = wk.alias("a"), wk.alias("b")
     p = a.join(b, F.col("a.wk") < F.col("b.wk")).select(
         (
@@ -10158,15 +10017,7 @@ def q_event_transition_matrix(spark, sf_dir):
 
 @register(
     "degree_assortativity",
-    """WITH g0 AS (
-  SELECT DISTINCT user_id AS id, event_type, date_trunc('minute', ts) AS m
-  FROM events),
-g AS (SELECT id, event_type, m FROM g0
-      QUALIFY COUNT(*) OVER (PARTITION BY event_type, m) <= 32),
-e0 AS (SELECT DISTINCT a.id AS u, b.id AS v
-       FROM g a JOIN g b ON a.event_type=b.event_type AND a.m=b.m AND a.id<b.id),
-deg AS (SELECT id, COUNT(*) AS d
-        FROM (SELECT u AS id FROM e0 UNION ALL SELECT v FROM e0) GROUP BY id),
+    f"""WITH {_COACT_DEG_CTES},
 sym AS (
   SELECT du.d AS x, dv.d AS y FROM e0 JOIN deg du ON u=du.id JOIN deg dv ON v=dv.id
   UNION ALL
@@ -10201,18 +10052,10 @@ def q_degree_assortativity(spark, sf_dir):
     moment agg is ONE pass over edges after two degree joins keyed on
     the edge endpoints, output is a single row. The final combination
     runs in doubles precisely so m2·Σxy never needs int128."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import graph as graph_ops
-
-    ev = load_table(spark, sf_dir, "events")
-    edges = graph_ops.cooccurrence_edges(
-        ev.select("user_id", "event_type", F.date_trunc("minute", "ts").alias("m")),
-        "user_id",
-        ["event_type", "m"],
-        max_group=32,
-        # four consumers (degree agg + two endpoint joins + the
-        # symmetrizing union) — materialize once, not 28 re-inlined
-        # builder lineages (r8, triangle_count's argument)
-    ).localCheckpoint(eager=True)
+    # four consumers (degree agg + two endpoint joins + the
+    # symmetrizing union) — materialize once, not 28 re-inlined
+    # builder lineages (r8, triangle_count's argument)
+    edges = _coactivity_edges(spark, sf_dir).localCheckpoint(eager=True)
     deg = (
         edges.select(F.explode(F.array("id_a", "id_b")).alias("id"))
         .groupBy("id")
@@ -10461,17 +10304,22 @@ def q_domain_token_lift(spark, sf_dir):
 # changepoint, and RFM customer segmentation.
 
 
-# Doubled midranks keep ties in int64; the cumsum runs over distinct cents values.
-register_sql(
-    "mann_whitney_u",
-    """WITH j AS (
+# distinct order-cents values with their BUILDING-segment (ca) and
+# other-segment (cb) counts (mann_whitney_u, ks_test)
+_SEGMENT_CENTS_CTES = """j AS (
   SELECT CAST(round(o_totalprice*100,0) AS BIGINT) AS cents,
          c_mktsegment = 'BUILDING' AS ga
   FROM orders JOIN customer ON o_custkey = c_custkey),
 v AS (SELECT cents AS val,
              CAST(SUM(CASE WHEN ga THEN 1 ELSE 0 END) AS BIGINT) AS ca,
              CAST(SUM(CASE WHEN ga THEN 0 ELSE 1 END) AS BIGINT) AS cb
-      FROM j GROUP BY 1),
+      FROM j GROUP BY 1)"""
+
+
+# Doubled midranks keep ties in int64; the cumsum runs over distinct cents values.
+register_sql(
+    "mann_whitney_u",
+    f"""WITH {_SEGMENT_CENTS_CTES},
 w AS (SELECT val, ca, cb, ca+cb AS t,
              CAST(SUM(ca+cb) OVER (ORDER BY val) - (ca+cb) AS BIGINT) AS below
       FROM v),
@@ -10544,17 +10392,7 @@ def q_changepoint_detection(spark, sf_dir):
     candidate frame IS the span-bounded week frame (343 rows at any
     corpus size; theil_sen_trend's argument), the corpus pays one
     week pre-agg; the winner is a 1-row TakeOrdered."""
-    o = load_table(spark, sf_dir, "orders")
-    wk = (
-        o.select(
-            F.expr(
-                "datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') div 7"
-            ).alias("wk"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-        )
-        .groupBy("wk")
-        .agg(F.sum("cents").alias("cents"))
-    )
+    wk = _weekly_cents(spark, sf_dir)
     w = Window.orderBy("wk")
     pre = wk.select(
         "wk",
@@ -10847,15 +10685,7 @@ def q_haar_energy(spark, sf_dir):
 
 @register(
     "degree_distribution",
-    """WITH g0 AS (
-  SELECT DISTINCT user_id AS id, event_type, date_trunc('minute', ts) AS m
-  FROM events),
-g AS (SELECT id, event_type, m FROM g0
-      QUALIFY COUNT(*) OVER (PARTITION BY event_type, m) <= 32),
-e0 AS (SELECT DISTINCT a.id AS u, b.id AS v
-       FROM g a JOIN g b ON a.event_type=b.event_type AND a.m=b.m AND a.id<b.id),
-deg AS (SELECT id, COUNT(*) AS d
-        FROM (SELECT u AS id FROM e0 UNION ALL SELECT v FROM e0) GROUP BY id),
+    f"""WITH {_COACT_DEG_CTES},
 h AS (SELECT d AS degree, CAST(COUNT(*) AS BIGINT) AS n_vertices FROM deg GROUP BY 1),
 n AS (SELECT CAST(SUM(n_vertices) AS BIGINT) AS n FROM h),
 c AS (SELECT degree, n_vertices,
@@ -10878,15 +10708,7 @@ def q_degree_distribution(spark, sf_dir):
     distinct-DEGREE frame (dimension-bounded — distinct degrees, not
     vertices), CCDF as floor-ppm (both engines' integer div). Output
     rows = distinct degrees."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import graph as graph_ops
-
-    ev = load_table(spark, sf_dir, "events")
-    edges = graph_ops.cooccurrence_edges(
-        ev.select("user_id", "event_type", F.date_trunc("minute", "ts").alias("m")),
-        "user_id",
-        ["event_type", "m"],
-        max_group=32,
-    )
+    edges = _coactivity_edges(spark, sf_dir)
     deg = (
         edges.select(F.explode(F.array("id_a", "id_b")).alias("id"))
         .groupBy("id")
@@ -10917,14 +10739,10 @@ def q_degree_distribution(spark, sf_dir):
 
 @register(
     "sq8_recon_error",
-    """WITH v AS (
+    f"""WITH v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
   FROM embeddings),
-dims AS (SELECT UNNEST(range(1, 65)) AS i),
-st AS (
-  SELECT d.i, MIN(v.vec[d.i]) AS mn, MAX(v.vec[d.i]) - MIN(v.vec[d.i]) AS rg
-  FROM v CROSS JOIN dims d GROUP BY d.i
-),
+{_SQ8_RANGE_CTES},
 cr AS (
   SELECT v.vec_id, st.i,
          v.vec[st.i] - st.mn
@@ -10996,14 +10814,7 @@ def q_sq8_recon_error(spark, sf_dir):
 
 @register(
     "ks_test",
-    """WITH j AS (
-  SELECT CAST(round(o_totalprice*100,0) AS BIGINT) AS cents,
-         c_mktsegment = 'BUILDING' AS ga
-  FROM orders JOIN customer ON o_custkey = c_custkey),
-v AS (SELECT cents AS val,
-             CAST(SUM(CASE WHEN ga THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             CAST(SUM(CASE WHEN ga THEN 0 ELSE 1 END) AS BIGINT) AS cb
-      FROM j GROUP BY 1),
+    f"""WITH {_SEGMENT_CENTS_CTES},
 cum AS (SELECT CAST(SUM(ca) OVER (ORDER BY val) AS BIGINT) AS cuma,
                CAST(SUM(cb) OVER (ORDER BY val) AS BIGINT) AS cumb
         FROM v),
@@ -11556,9 +11367,16 @@ def q_time_decay_ltv(spark, sf_dir):
 
 
 # Exact centi-unit sums off one agg, one float tree; degenerate sides give NULL.
+# day (hour < 12) and night count, cents sum and sum of squares
+_DAY_NIGHT_MOMENTS_SQL = """CAST(SUM(is_day) AS BIGINT) AS n1,
+         CAST(SUM(CASE WHEN is_day = 1 THEN cv ELSE 0 END) AS BIGINT) AS s1,
+         CAST(SUM(CASE WHEN is_day = 1 THEN cv * cv ELSE 0 END) AS BIGINT) AS q1,
+         CAST(SUM(1 - is_day) AS BIGINT) AS n2,
+         CAST(SUM(CASE WHEN is_day = 0 THEN cv ELSE 0 END) AS BIGINT) AS s2,
+         CAST(SUM(CASE WHEN is_day = 0 THEN cv * cv ELSE 0 END) AS BIGINT) AS q2"""
 register_sql(
     "welch_ttest",
-    """WITH q AS (
+    f"""WITH q AS (
   SELECT event_type,
          CASE WHEN EXTRACT(hour FROM ts) < 12 THEN 1 ELSE 0 END AS is_day,
          CAST(round(value * 100, 0) AS BIGINT) AS cv
@@ -11566,12 +11384,7 @@ register_sql(
 ),
 s AS (
   SELECT event_type,
-         CAST(SUM(is_day) AS BIGINT) AS n1,
-         CAST(SUM(CASE WHEN is_day = 1 THEN cv ELSE 0 END) AS BIGINT) AS s1,
-         CAST(SUM(CASE WHEN is_day = 1 THEN cv * cv ELSE 0 END) AS BIGINT) AS q1,
-         CAST(SUM(1 - is_day) AS BIGINT) AS n2,
-         CAST(SUM(CASE WHEN is_day = 0 THEN cv ELSE 0 END) AS BIGINT) AS s2,
-         CAST(SUM(CASE WHEN is_day = 0 THEN cv * cv ELSE 0 END) AS BIGINT) AS q2
+         {_DAY_NIGHT_MOMENTS_SQL}
   FROM q GROUP BY event_type
 )
 SELECT event_type, n1, n2,
@@ -11693,19 +11506,8 @@ def q_sample_allocation(spark, sf_dir):
 
 @register(
     "dedup_threshold_sweep",
-    f"""WITH sh0 AS (
-  SELECT DISTINCT doc_id AS id, unnest({_SH3}) AS shingle FROM documents
-),
-sh AS (
-  SELECT id, shingle FROM sh0
-  QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= 50
-),
-sizes AS (SELECT id, COUNT(*) AS n_sh FROM sh GROUP BY id),
-inter AS (
-  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY a.id, b.id
-),
+    f"""WITH {_CAPPED_SH3_CTES},
+{_SH_OVERLAP_CTES},
 scored AS (
   SELECT id_a, id_b,
          LEAST(CAST(FLOOR((n_common / (sa.n_sh + sb.n_sh - n_common)) * 10)
@@ -12022,19 +11824,25 @@ def q_decile_lift(spark, sf_dir):
 # backtesting, sketch-payload joins, and split scoring (VERDICT r8 item 5).
 
 
-@register(
-    "kaplan_meier",
-    """WITH u AS (
+# User tenure shared by kaplan_meier, nelson_aalen and log_rank: a
+# user's first and last event day (u) and the data's last day (mx);
+# tenure t runs first to last day, and a user is churned when the last
+# event is 3+ days before mx (else right-censored).
+_TENURE_CTES = """u AS (
   SELECT user_id, MIN(CAST(ts AS DATE)) AS fd, MAX(CAST(ts AS DATE)) AS ld
   FROM events GROUP BY 1
 ),
-mx AS (SELECT MAX(CAST(ts AS DATE)) AS mxd FROM events),
-u2 AS (
-  SELECT date_diff('day', DATE '1970-01-05', fd) % 7 AS cohort_dow,
-         date_diff('day', fd, ld) AS t,
+mx AS (SELECT MAX(CAST(ts AS DATE)) AS mxd FROM events)"""
+_TENURE_COLS = """date_diff('day', fd, ld) AS t,
          CASE WHEN date_diff('day', ld, (SELECT mxd FROM mx)) >= 3
               THEN 1 ELSE 0 END AS churned
-  FROM u
+  FROM u"""
+# signup-weekday cohorts (days since Monday 1970-01-05 mod 7) and the
+# >=-cumulative at-risk count per (cohort, t)
+_COHORT_RISK_CTES = f"""{_TENURE_CTES},
+u2 AS (
+  SELECT date_diff('day', DATE '1970-01-05', fd) % 7 AS cohort_dow,
+         {_TENURE_COLS}
 ),
 km AS (
   SELECT cohort_dow, t, CAST(SUM(churned) AS BIGINT) AS d,
@@ -12047,7 +11855,41 @@ nr AS (
                WHERE k2.cohort_dow = k.cohort_dow AND k2.t >= k.t) AS BIGINT)
            AS n_risk
   FROM km k
-),
+)"""
+
+
+def _user_tenure(spark, sf_dir):
+    """(user_id, fd, ld, mxd): the builder twin of _TENURE_CTES."""
+    ev = load_table(spark, sf_dir, "events")
+    u = ev.groupBy("user_id").agg(
+        F.min(F.to_date("ts")).alias("fd"), F.max(F.to_date("ts")).alias("ld")
+    )
+    mx = ev.agg(F.max(F.to_date("ts")).alias("mxd"))
+    return u.join(F.broadcast(mx))
+
+
+def _tenure_cols():
+    """[t, churned] over :func:`_user_tenure`, as in _TENURE_COLS."""
+    return [
+        F.datediff("ld", "fd").cast("long").alias("t"),
+        F.when(F.datediff("mxd", "ld") >= 3, 1).otherwise(0).alias("churned"),
+    ]
+
+
+def _dow_cohort_tenure(spark, sf_dir):
+    """(cohort_dow, t, churned) per user: the per-subject frame of
+    km_curve / na_curve."""
+    return _user_tenure(spark, sf_dir).select(
+        (F.datediff("fd", F.lit("1970-01-05").cast("date")) % 7)
+        .cast("long")
+        .alias("cohort_dow"),
+        *_tenure_cols(),
+    )
+
+
+@register(
+    "kaplan_meier",
+    f"""WITH {_COHORT_RISK_CTES},
 f AS (SELECT cohort_dow, t, d, c, n_risk,
              CAST(n_risk - d AS DOUBLE) / n_risk AS fct FROM nr)
 SELECT a.cohort_dow, a.t AS t_days, a.n_risk AS n_at_risk,
@@ -12076,24 +11918,17 @@ def q_kaplan_meier(spark, sf_dir):
     the oracle surface."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.survival import km_curve
 
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("fd"), F.max(F.to_date("ts")).alias("ld")
-    )
-    mx = ev.agg(F.max(F.to_date("ts")).alias("mxd"))
-    per_user = u.join(F.broadcast(mx)).select(
-        (F.datediff("fd", F.lit("1970-01-05").cast("date")) % 7)
-        .cast("long")
-        .alias("cohort_dow"),
-        F.datediff("ld", "fd").cast("long").alias("t"),
-        F.when(F.datediff("mxd", "ld") >= 3, 1).otherwise(0).alias("churned"),
-    )
+    per_user = _dow_cohort_tenure(spark, sf_dir)
     return km_curve(per_user, "cohort_dow", "t", "churned")
 
 
-@register(
-    "bh_fdr",
-    """WITH q AS (
+def _shift_perm_ctes(rank: str) -> str:
+    """CTEs through ``m`` of the circular-shift permutation family that
+    bh_fdr and holm_stepdown correct: per-(type, shift) day/night
+    stats, the observed stat (shift 0) against the null pool (shifts
+    1-23), each type's count of null stats >= its own, its ``rank``
+    by that count (ties on type), and the family size ``m``."""
+    return f"""q AS (
   SELECT event_type, EXTRACT(hour FROM ts) AS h,
          CAST(round(value * 100, 0) AS BIGINT) AS cv
   FROM events
@@ -12133,44 +11968,17 @@ rk AS (
   SELECT a.event_type, a.stat, a.n_null_ge,
          CAST(1 + COALESCE(SUM(CASE WHEN b.n_null_ge < a.n_null_ge
                   OR (b.n_null_ge = a.n_null_ge AND b.event_type < a.event_type)
-              THEN 1 ELSE 0 END), 0) AS BIGINT) AS bh_rank
+              THEN 1 ELSE 0 END), 0) AS BIGINT) AS {rank}
   FROM cnt a LEFT JOIN cnt b ON b.event_type != a.event_type
   GROUP BY 1, 2, 3
 ),
-m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM rk),
-sc AS (
-  SELECT event_type, stat, n_null_ge, bh_rank,
-         CAST(1 + n_null_ge AS DOUBLE) / (1 + (SELECT nn FROM nn)) AS p_emp,
-         CASE WHEN (1 + n_null_ge) * (SELECT m FROM m) * 10
-                   <= (1 + (SELECT nn FROM nn)) * bh_rank THEN 1 ELSE 0 END AS cond
-  FROM rk
-),
-ks AS (SELECT MAX(CASE WHEN cond = 1 THEN bh_rank END) AS kstar FROM sc)
-SELECT event_type, stat, n_null_ge, p_emp, bh_rank,
-       CAST(CASE WHEN bh_rank <= (SELECT kstar FROM ks) THEN 1 ELSE 0 END
-            AS BIGINT) AS reject
-FROM sc""",
-)
-def q_bh_fdr(spark, sf_dir):
-    """Benjamini–Hochberg FDR control over the day-vs-night test
-    family (VERDICT r8 item 5b): welch_ttest asks "is this type's
-    day/night mean shift real?" per type; running five such tests
-    needs a multiple-comparisons correction before anyone acts on
-    them. Closed-form p-values need erf/gamma (ln/exp — not
-    cross-engine portable), so p is the standard CIRCULAR-SHIFT
-    permutation p-value instead: the observed statistic |mean_day −
-    mean_night| is compared against the null pool of the SAME
-    statistic under all 23 rotated day-window labelings × all types
-    (a deterministic negative-control family; p = (1 + #null ≥
-    stat)/(1 + n_null), the add-one permutation estimator). BH
-    step-up at q = 0.10 then reduces to PURE INTEGER arithmetic:
-    p_(k) ≤ q·k/m ⟺ (1+c_(k))·m·10 ≤ (1+n_null)·k — no float
-    enters the rejection decision at all. Scale: one map-side
-    conditional agg to the (type × 24h) frame is the only corpus
-    pass; shifts, ranks (count-below self-join, no window sort) and
-    the step-up max all run on ≤types×24 rows. Exactness: counts
-    BIGINT; stat and p_emp are single mirrored IEEE trees; NULL-stat
-    guard (an empty day or night side) mirrored in both engines."""
+m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM rk)"""
+
+
+def _shift_perm_counts(spark, sf_dir):
+    """(cnt, nn): the builder twin of :func:`_shift_perm_ctes` through
+    ``cnt`` — each type's observed stat with its count of null stats
+    >= it (n_null_ge), and the null pool size nn."""
     ev = load_table(spark, sf_dir, "events")
     hs = (
         ev.select(
@@ -12220,20 +12028,66 @@ def q_bh_fdr(spark, sf_dir):
         .groupBy("event_type", "stat")
         .agg(F.count(F.col("nstat")).cast("long").alias("n_null_ge"))
     )
+    return cnt, nn
+
+
+def _rank_by_null_count(cnt):
+    """``cnt`` grouped per type after the count-below self-join: each
+    type's rank is 1 + the types with a smaller n_null_ge (ties on
+    type) — a self-join over the types-sized frame, no window sort."""
     o2 = cnt.select(
         F.col("n_null_ge").alias("c2"), F.col("event_type").alias("et2")
     )
+    return cnt.join(
+        F.broadcast(o2),
+        (F.col("c2") < F.col("n_null_ge"))
+        | (
+            (F.col("c2") == F.col("n_null_ge"))
+            & (F.col("et2") < F.col("event_type"))
+        ),
+        "left",
+    ).groupBy("event_type", "stat", "n_null_ge")
+
+
+@register(
+    "bh_fdr",
+    f"""WITH {_shift_perm_ctes("bh_rank")},
+sc AS (
+  SELECT event_type, stat, n_null_ge, bh_rank,
+         CAST(1 + n_null_ge AS DOUBLE) / (1 + (SELECT nn FROM nn)) AS p_emp,
+         CASE WHEN (1 + n_null_ge) * (SELECT m FROM m) * 10
+                   <= (1 + (SELECT nn FROM nn)) * bh_rank THEN 1 ELSE 0 END AS cond
+  FROM rk
+),
+ks AS (SELECT MAX(CASE WHEN cond = 1 THEN bh_rank END) AS kstar FROM sc)
+SELECT event_type, stat, n_null_ge, p_emp, bh_rank,
+       CAST(CASE WHEN bh_rank <= (SELECT kstar FROM ks) THEN 1 ELSE 0 END
+            AS BIGINT) AS reject
+FROM sc""",
+)
+def q_bh_fdr(spark, sf_dir):
+    """Benjamini–Hochberg FDR control over the day-vs-night test
+    family (VERDICT r8 item 5b): welch_ttest asks "is this type's
+    day/night mean shift real?" per type; running five such tests
+    needs a multiple-comparisons correction before anyone acts on
+    them. Closed-form p-values need erf/gamma (ln/exp — not
+    cross-engine portable), so p is the standard CIRCULAR-SHIFT
+    permutation p-value instead: the observed statistic |mean_day −
+    mean_night| is compared against the null pool of the SAME
+    statistic under all 23 rotated day-window labelings × all types
+    (a deterministic negative-control family; p = (1 + #null ≥
+    stat)/(1 + n_null), the add-one permutation estimator). BH
+    step-up at q = 0.10 then reduces to PURE INTEGER arithmetic:
+    p_(k) ≤ q·k/m ⟺ (1+c_(k))·m·10 ≤ (1+n_null)·k — no float
+    enters the rejection decision at all. Scale: one map-side
+    conditional agg to the (type × 24h) frame is the only corpus
+    pass; shifts, ranks (count-below self-join, no window sort) and
+    the step-up max all run on ≤types×24 rows. Exactness: counts
+    BIGINT; stat and p_emp are single mirrored IEEE trees; NULL-stat
+    guard (an empty day or night side) mirrored in both engines."""
+    cnt, nn = _shift_perm_counts(spark, sf_dir)
     rk = (
-        cnt.join(
-            F.broadcast(o2),
-            (F.col("c2") < F.col("n_null_ge"))
-            | (
-                (F.col("c2") == F.col("n_null_ge"))
-                & (F.col("et2") < F.col("event_type"))
-            ),
-            "left",
-        )
-        .groupBy("event_type", "stat", "n_null_ge")
+        _rank_by_null_count(cnt)
         .agg((F.count(F.col("et2")) + 1).cast("long").alias("bh_rank"))
     )
     mtot = rk.agg(F.count(F.lit(1)).cast("long").alias("m"))
@@ -12371,22 +12225,13 @@ def _hll_join_oracle_sql() -> str:
         HLL_SCALE_BITS,
     )
 
-    lt = "ltrim(substr(hh, 3, 16), '0')"
-    clz4 = (
-        f"(CASE substr({lt}, 1, 1) WHEN '1' THEN 3 WHEN '2' THEN 2 "
-        f"WHEN '3' THEN 2 WHEN '4' THEN 1 WHEN '5' THEN 1 "
-        f"WHEN '6' THEN 1 WHEN '7' THEN 1 ELSE 0 END)"
-    )
     return f"""WITH h AS (
   SELECT l_suppkey, md5('hll:' || CAST(l_partkey AS VARCHAR)) AS hh
   FROM lineitem
 ),
 r AS (
   SELECT l_suppkey,
-         ((instr('0123456789abcdef', substr(hh, 1, 1)) - 1) * 16
-          + (instr('0123456789abcdef', substr(hh, 2, 1)) - 1)) % {HLL_M} AS idx,
-         CASE WHEN {lt} = '' THEN 65
-              ELSE (16 - length({lt})) * 4 + {clz4} + 1 END AS rnk
+         {_hll_register_sql()}
   FROM h
 ),
 sregs AS (SELECT l_suppkey, idx, MAX(rnk) AS m FROM r GROUP BY 1, 2),
@@ -12570,18 +12415,11 @@ def q_best_split_gini(spark, sf_dir):
 
 @register(
     "log_rank",
-    """WITH u AS (
-  SELECT user_id, MIN(CAST(ts AS DATE)) AS fd, MAX(CAST(ts AS DATE)) AS ld
-  FROM events GROUP BY 1
-),
-mx AS (SELECT MAX(CAST(ts AS DATE)) AS mxd FROM events),
+    f"""WITH {_TENURE_CTES},
 per AS (
   SELECT CASE WHEN date_diff('day', DATE '1970-01-05', fd) % 7 <= 4
               THEN 1 ELSE 0 END AS g,
-         date_diff('day', fd, ld) AS t,
-         CASE WHEN date_diff('day', ld, (SELECT mxd FROM mx)) >= 3
-              THEN 1 ELSE 0 END AS churned
-  FROM u
+         {_TENURE_COLS}
 ),
 km AS (
   SELECT t,
@@ -12641,19 +12479,13 @@ def q_log_rank(spark, sf_dir):
     so even Σfloat is bitwise on the oracle surface. n_t=1 degenerate
     → vt=0, V=0 → NULL χ² in both engines. Scale: one user-keyed agg
     is the only corpus pass; everything else is span-bounded."""
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("fd"), F.max(F.to_date("ts")).alias("ld")
-    )
-    mx = ev.agg(F.max(F.to_date("ts")).alias("mxd"))
-    per = u.join(F.broadcast(mx)).select(
+    per = _user_tenure(spark, sf_dir).select(
         F.when(
             F.datediff("fd", F.lit("1970-01-05").cast("date")) % 7 <= 4, 1
         )
         .otherwise(0)
         .alias("g"),
-        F.datediff("ld", "fd").cast("long").alias("t"),
-        F.when(F.datediff("mxd", "ld") >= 3, 1).otherwise(0).alias("churned"),
+        *_tenure_cols(),
     )
     km = per.groupBy("t").agg(
         F.sum(F.when(F.col("g") == 1, F.col("churned")).otherwise(0))
@@ -12778,7 +12610,7 @@ FROM g2 GROUP BY event_type""",
 
 @register(
     "group_sequential",
-    """WITH mn AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
+    f"""WITH mn AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
 q AS (
   SELECT event_type,
          date_diff('day', (SELECT d0 FROM mn), CAST(ts AS DATE)) + 1 AS dayidx,
@@ -12789,12 +12621,7 @@ q AS (
 lk AS (SELECT CAST(UNNEST([6, 12, 18, 24, 30]) AS BIGINT) AS look_day),
 cum AS (
   SELECT event_type, look_day,
-         CAST(SUM(is_day) AS BIGINT) AS n1,
-         CAST(SUM(CASE WHEN is_day = 1 THEN cv ELSE 0 END) AS BIGINT) AS s1,
-         CAST(SUM(CASE WHEN is_day = 1 THEN cv * cv ELSE 0 END) AS BIGINT) AS q1,
-         CAST(SUM(1 - is_day) AS BIGINT) AS n2,
-         CAST(SUM(CASE WHEN is_day = 0 THEN cv ELSE 0 END) AS BIGINT) AS s2,
-         CAST(SUM(CASE WHEN is_day = 0 THEN cv * cv ELSE 0 END) AS BIGINT) AS q2
+         {_DAY_NIGHT_MOMENTS_SQL}
   FROM q JOIN lk ON q.dayidx <= lk.look_day
   GROUP BY 1, 2
 ),
@@ -13283,30 +13110,7 @@ JOIN ties ON s.event_type = ties.event_type""",
 
 @register(
     "nelson_aalen",
-    """WITH u AS (
-  SELECT user_id, MIN(CAST(ts AS DATE)) AS fd, MAX(CAST(ts AS DATE)) AS ld
-  FROM events GROUP BY 1
-),
-mx AS (SELECT MAX(CAST(ts AS DATE)) AS mxd FROM events),
-u2 AS (
-  SELECT date_diff('day', DATE '1970-01-05', fd) % 7 AS cohort_dow,
-         date_diff('day', fd, ld) AS t,
-         CASE WHEN date_diff('day', ld, (SELECT mxd FROM mx)) >= 3
-              THEN 1 ELSE 0 END AS churned
-  FROM u
-),
-km AS (
-  SELECT cohort_dow, t, CAST(SUM(churned) AS BIGINT) AS d,
-         CAST(SUM(1 - churned) AS BIGINT) AS c
-  FROM u2 GROUP BY 1, 2
-),
-nr AS (
-  SELECT k.cohort_dow, k.t, k.d, k.c,
-         CAST((SELECT SUM(k2.d + k2.c) FROM km k2
-               WHERE k2.cohort_dow = k.cohort_dow AND k2.t >= k.t) AS BIGINT)
-           AS n_risk
-  FROM km k
-),
+    f"""WITH {_COHORT_RISK_CTES},
 f AS (SELECT cohort_dow, t, d, n_risk,
              CAST(d AS DOUBLE) / n_risk AS h,
              CAST(d AS DOUBLE) / (CAST(n_risk AS DOUBLE) * n_risk) AS v
@@ -13335,18 +13139,7 @@ def q_nelson_aalen(spark, sf_dir):
     curve is oracle-portable despite being float sums."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.survival import na_curve
 
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("fd"), F.max(F.to_date("ts")).alias("ld")
-    )
-    mx = ev.agg(F.max(F.to_date("ts")).alias("mxd"))
-    per_user = u.join(F.broadcast(mx)).select(
-        (F.datediff("fd", F.lit("1970-01-05").cast("date")) % 7)
-        .cast("long")
-        .alias("cohort_dow"),
-        F.datediff("ld", "fd").cast("long").alias("t"),
-        F.when(F.datediff("mxd", "ld") >= 3, 1).otherwise(0).alias("churned"),
-    )
+    per_user = _dow_cohort_tenure(spark, sf_dir)
     return na_curve(per_user, "cohort_dow", "t", "churned")
 # ---- batch 4 additions for plans/queries.py (append after review) ----
 
@@ -13663,23 +13456,8 @@ def q_lang_confusion(spark, sf_dir):
     corpus pass; row_frac one IEEE division against the broadcast
     ≤|langs|-row total frame. Output ≤ |langs|² rows. Linear scan,
     no joins on the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", "lang", T.tokens(F.col("text")).alias("_toks"))
-    scores = T.lang_scores_from_tokens(F.col("_toks"))
-    hit_cols = [scores[lang].cast("long").alias(f"n_{lang}") for lang in _LANGS]
-    hits = toked.select("doc_id", "lang", *hit_cols)
-    pred = None
-    for i, lang in enumerate(_LANGS):
-        cond = F.lit(True)
-        for other in _LANGS[i + 1 :]:
-            cond = cond & (F.col(f"n_{lang}") >= F.col(f"n_{other}"))
-        pred = (
-            F.when(cond, F.lit(lang))
-            if pred is None
-            else pred.when(cond, F.lit(lang))
-        )
     c = (
-        hits.select("lang", pred.alias("pred_lang"))
+        _labeled_lang_preds(spark, sf_dir)
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
@@ -13754,9 +13532,7 @@ def q_minhash_band_scurve(spark, sf_dir):
     and four literal projections. Scale: LSH-bounded candidate
     volume (the minhash family bound); output is 4 rows."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_dedup_pairs(
-        docs, "text", "doc_id", k=3, bands=4, rows_per_band=2, threshold=0.2
-    )
+    pairs = _minhash_pairs(docs)
     s = F.col("jaccard")
     sum_cols = []
     for b, r in _SCURVE_CONFIGS:
@@ -14520,16 +14296,10 @@ FROM s""",
 )
 
 
-@register(
-    "anova_f",
-    """WITH g AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS ng,
-         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sg,
-         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)
-                  * CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS qg
-  FROM events GROUP BY 1
-),
-tot AS (SELECT CAST(SUM(ng) AS BIGINT) AS n, CAST(SUM(sg) AS BIGINT) AS s,
+# One-way ANOVA tail shared by anova_f and levene_test: from the
+# per-type (event_type, ng, sg, qg) frame g to the ordered SSB/SSW
+# folds and the F statistic.
+_ANOVA_SS_CTES = """tot AS (SELECT CAST(SUM(ng) AS BIGINT) AS n, CAST(SUM(sg) AS BIGINT) AS s,
                CAST(COUNT(*) AS BIGINT) AS k FROM g),
 s2 AS (
   SELECT tot.n, tot.k,
@@ -14545,41 +14315,18 @@ s2 AS (
            (x, y) -> x + y) AS ssw
   FROM g CROSS JOIN tot
   GROUP BY 1, 2
-)
-SELECT n AS n_total, k AS n_groups, ssb AS ss_between, ssw AS ss_within,
+)"""
+_ANOVA_F_SQL = """SELECT n AS n_total, k AS n_groups, ssb AS ss_between, ssw AS ss_within,
        CASE WHEN k > 1 AND n > k AND ssw > 0
             THEN (ssb / CAST(k - 1 AS DOUBLE))
                  / (ssw / CAST(n - k AS DOUBLE))
-            ELSE NULL END AS f_stat,
-       CASE WHEN ssb + ssw > 0 THEN ssb / (ssb + ssw) ELSE NULL END AS eta_sq
-FROM s2""",
-)
-def q_anova_f(spark, sf_dir):
-    """one-way ANOVA F across the k=5 event types (+ η² effect size,
-    the variance-explained share) — the PARAMETRIC omnibus twin of
-    kruskal_wallis, exactly as welch_ttest twins mann_whitney_u at
-    k=2: a pipeline runs both before trusting a between-group mean
-    spread. Exactness: per-group counts/sums/squares exact BIGINTs
-    off ONE map-side-combined agg (the only corpus pass); SSB and
-    SSW are the two cross-group float sums and ride ORDERED
-    0.0-seeded folds over the type-sorted k=5 array (F.aggregate ≡
-    list_reduce); F and η² one mirrored IEEE tree each; degenerate
-    (k ≤ 1, n ≤ k, zero within-variance) → NULL both engines.
-    int64 headroom: Σcv² ≤ 1e8·rows (welch_ttest's documented
-    bound). Single-row output."""
-    ev = load_table(spark, sf_dir, "events")
-    g = (
-        ev.select(
-            "event_type",
-            F.round(F.col("value") * 100, 0).cast("long").alias("cv"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("ng"),
-            F.sum("cv").cast("long").alias("sg"),
-            F.sum(F.col("cv") * F.col("cv")).cast("long").alias("qg"),
-        )
-    )
+            ELSE NULL END"""
+
+
+def _anova_ss(g):
+    """(s2, f): the builder twin of _ANOVA_SS_CTES / _ANOVA_F_SQL over
+    the per-type (event_type, ng, sg, qg) frame ``g`` — s2 is the
+    one-row (n, k, ssb, ssw) frame, f the F-statistic Column."""
     tot = g.agg(
         F.sum("ng").cast("long").alias("n"),
         F.sum("sg").cast("long").alias("s"),
@@ -14614,6 +14361,50 @@ def q_anova_f(spark, sf_dir):
         (F.col("ssb") / (F.col("k") - 1).cast("double"))
         / (F.col("ssw") / (F.col("n") - F.col("k")).cast("double")),
     ).otherwise(F.lit(None).cast("double"))
+    return s2, f
+
+
+@register(
+    "anova_f",
+    f"""WITH g AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS ng,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sg,
+         CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)
+                  * CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS qg
+  FROM events GROUP BY 1
+),
+{_ANOVA_SS_CTES}
+{_ANOVA_F_SQL} AS f_stat,
+       CASE WHEN ssb + ssw > 0 THEN ssb / (ssb + ssw) ELSE NULL END AS eta_sq
+FROM s2""",
+)
+def q_anova_f(spark, sf_dir):
+    """one-way ANOVA F across the k=5 event types (+ η² effect size,
+    the variance-explained share) — the PARAMETRIC omnibus twin of
+    kruskal_wallis, exactly as welch_ttest twins mann_whitney_u at
+    k=2: a pipeline runs both before trusting a between-group mean
+    spread. Exactness: per-group counts/sums/squares exact BIGINTs
+    off ONE map-side-combined agg (the only corpus pass); SSB and
+    SSW are the two cross-group float sums and ride ORDERED
+    0.0-seeded folds over the type-sorted k=5 array (F.aggregate ≡
+    list_reduce); F and η² one mirrored IEEE tree each; degenerate
+    (k ≤ 1, n ≤ k, zero within-variance) → NULL both engines.
+    int64 headroom: Σcv² ≤ 1e8·rows (welch_ttest's documented
+    bound). Single-row output."""
+    ev = load_table(spark, sf_dir, "events")
+    g = (
+        ev.select(
+            "event_type",
+            F.round(F.col("value") * 100, 0).cast("long").alias("cv"),
+        )
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("ng"),
+            F.sum("cv").cast("long").alias("sg"),
+            F.sum(F.col("cv") * F.col("cv")).cast("long").alias("qg"),
+        )
+    )
+    s2, f = _anova_ss(g)
     eta2 = F.when(
         F.col("ssb") + F.col("ssw") > 0,
         F.col("ssb") / (F.col("ssb") + F.col("ssw")),
@@ -14630,7 +14421,7 @@ def q_anova_f(spark, sf_dir):
 
 @register(
     "levene_test",
-    """WITH v AS (
+    f"""WITH v AS (
   SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS cv FROM events
 ),
 o AS (
@@ -14655,28 +14446,8 @@ g AS (
          CAST(SUM(z * z) AS BIGINT) AS qg
   FROM z GROUP BY 1
 ),
-tot AS (SELECT CAST(SUM(ng) AS BIGINT) AS n, CAST(SUM(sg) AS BIGINT) AS s,
-               CAST(COUNT(*) AS BIGINT) AS k FROM g),
-s2 AS (
-  SELECT tot.n, tot.k,
-         list_reduce(
-           list(0.0 + (CAST(sg AS DOUBLE) / ng - CAST(tot.s AS DOUBLE) / tot.n)
-                      * (CAST(sg AS DOUBLE) / ng
-                         - CAST(tot.s AS DOUBLE) / tot.n) * ng
-                ORDER BY event_type),
-           (x, y) -> x + y) AS ssb,
-         list_reduce(
-           list(0.0 + (CAST(qg AS DOUBLE) - CAST(sg AS DOUBLE) * sg / ng)
-                ORDER BY event_type),
-           (x, y) -> x + y) AS ssw
-  FROM g CROSS JOIN tot
-  GROUP BY 1, 2
-)
-SELECT n AS n_total, k AS n_groups, ssb AS ss_between, ssw AS ss_within,
-       CASE WHEN k > 1 AND n > k AND ssw > 0
-            THEN (ssb / CAST(k - 1 AS DOUBLE))
-                 / (ssw / CAST(n - k AS DOUBLE))
-            ELSE NULL END AS bf_stat
+{_ANOVA_SS_CTES}
+{_ANOVA_F_SQL} AS bf_stat
 FROM s2""",
 )
 def q_levene_test(spark, sf_dir):
@@ -14711,40 +14482,7 @@ def q_levene_test(spark, sf_dir):
         F.sum("z").cast("long").alias("sg"),
         F.sum(F.col("z") * F.col("z")).cast("long").alias("qg"),
     )
-    tot = g.agg(
-        F.sum("ng").cast("long").alias("n"),
-        F.sum("sg").cast("long").alias("s"),
-        F.count(F.lit(1)).cast("long").alias("k"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    j = g.join(F.broadcast(tot))
-    ssb_term = (
-        (d("sg") / F.col("ng") - d("s") / F.col("n"))
-        * (d("sg") / F.col("ng") - d("s") / F.col("n"))
-        * F.col("ng")
-    )
-    ssw_term = d("qg") - d("sg") * F.col("sg") / F.col("ng")
-    s2 = j.groupBy("n", "k").agg(
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(F.struct("event_type", ssb_term.alias("b")))
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x["b"],
-        ).alias("ssb"),
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(F.struct("event_type", ssw_term.alias("w")))
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x["w"],
-        ).alias("ssw"),
-    )
-    f = F.when(
-        (F.col("k") > 1) & (F.col("n") > F.col("k")) & (F.col("ssw") > 0),
-        (F.col("ssb") / (F.col("k") - 1).cast("double"))
-        / (F.col("ssw") / (F.col("n") - F.col("k")).cast("double")),
-    ).otherwise(F.lit(None).cast("double"))
+    s2, f = _anova_ss(g)
     return s2.select(
         F.col("n").alias("n_total"),
         F.col("k").alias("n_groups"),
@@ -14804,27 +14542,8 @@ def q_lang_id_kappa(spark, sf_dir):
     margin joins); p_o, p_e, κ one mirrored IEEE division tree;
     p_e = 1 (degenerate single-class) → NULL κ both engines.
     Single-row output."""
-    docs = load_table(spark, sf_dir, "documents")
-    toked = docs.select(
-        "doc_id", "lang", T.tokens(F.col("text")).alias("_toks")
-    )
-    scores = T.lang_scores_from_tokens(F.col("_toks"))
-    hit_cols = [
-        scores[lang].cast("long").alias(f"n_{lang}") for lang in _LANGS
-    ]
-    hits = toked.select("doc_id", "lang", *hit_cols)
-    pred = None
-    for i, lang in enumerate(_LANGS):
-        cond = F.lit(True)
-        for other in _LANGS[i + 1 :]:
-            cond = cond & (F.col(f"n_{lang}") >= F.col(f"n_{other}"))
-        pred = (
-            F.when(cond, F.lit(lang))
-            if pred is None
-            else pred.when(cond, F.lit(lang))
-        )
     c = (
-        hits.select("lang", pred.alias("pred_lang"))
+        _labeled_lang_preds(spark, sf_dir)
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
@@ -15429,51 +15148,7 @@ def q_poisson_dispersion(spark, sf_dir):
 
 @register(
     "holm_stepdown",
-    """WITH q AS (
-  SELECT event_type, EXTRACT(hour FROM ts) AS h,
-         CAST(round(value * 100, 0) AS BIGINT) AS cv
-  FROM events
-),
-hs AS (
-  SELECT event_type, h, CAST(SUM(cv) AS BIGINT) AS s,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM q GROUP BY 1, 2
-),
-g AS (
-  SELECT event_type, shift,
-         CAST(SUM(CASE WHEN (h - shift + 24) % 24 < 12 THEN s ELSE 0 END) AS BIGINT) AS s1,
-         CAST(SUM(CASE WHEN (h - shift + 24) % 24 < 12 THEN n ELSE 0 END) AS BIGINT) AS n1,
-         CAST(SUM(CASE WHEN (h - shift + 24) % 24 >= 12 THEN s ELSE 0 END) AS BIGINT) AS s2,
-         CAST(SUM(CASE WHEN (h - shift + 24) % 24 >= 12 THEN n ELSE 0 END) AS BIGINT) AS n2
-  FROM hs CROSS JOIN (SELECT CAST(range AS BIGINT) AS shift FROM range(24)) sh
-  GROUP BY 1, 2
-),
-gs AS (
-  SELECT event_type, shift,
-         CASE WHEN n1 > 0 AND n2 > 0
-              THEN ABS(CAST(s1 AS DOUBLE) / n1 - CAST(s2 AS DOUBLE) / n2)
-              ELSE NULL END AS stat
-  FROM g
-),
-obs AS (SELECT event_type, stat FROM gs WHERE shift = 0),
-np AS (SELECT stat AS nstat FROM gs WHERE shift > 0 AND stat IS NOT NULL),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn FROM np),
-cnt AS (
-  SELECT o.event_type, o.stat,
-         CAST(COALESCE(SUM(CASE WHEN np.nstat >= o.stat THEN 1 ELSE 0 END), 0)
-              AS BIGINT) AS n_null_ge
-  FROM obs o LEFT JOIN np ON np.nstat >= o.stat
-  GROUP BY 1, 2
-),
-rk AS (
-  SELECT a.event_type, a.stat, a.n_null_ge,
-         CAST(1 + COALESCE(SUM(CASE WHEN b.n_null_ge < a.n_null_ge
-                  OR (b.n_null_ge = a.n_null_ge AND b.event_type < a.event_type)
-              THEN 1 ELSE 0 END), 0) AS BIGINT) AS holm_rank
-  FROM cnt a LEFT JOIN cnt b ON b.event_type != a.event_type
-  GROUP BY 1, 2, 3
-),
-m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM rk),
+    f"""WITH {_shift_perm_ctes("holm_rank")},
 sc AS (
   SELECT event_type, stat, n_null_ge, holm_rank,
          CAST(1 + n_null_ge AS DOUBLE) / (1 + (SELECT nn FROM nn)) AS p_emp,
@@ -15508,65 +15183,9 @@ def q_holm_stepdown(spark, sf_dir):
     ≤types frame (no window sort); one conditional agg to the
     types×24 frame is the only corpus pass. Holm never rejects more
     than BH on the same family — test-asserted against bh_fdr."""
-    ev = load_table(spark, sf_dir, "events")
-    hs = (
-        ev.select(
-            "event_type",
-            F.hour("ts").alias("h"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("cv"),
-        )
-        .groupBy("event_type", "h")
-        .agg(
-            F.sum("cv").cast("long").alias("s"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
-    )
-    shifts = spark.range(24).select(F.col("id").cast("long").alias("shift"))
-    st = hs.join(F.broadcast(shifts)).withColumn(
-        "is_day", ((F.col("h") - F.col("shift") + 24) % 24 < 12).cast("int")
-    )
-    g = st.groupBy("event_type", "shift").agg(
-        F.sum(F.when(F.col("is_day") == 1, F.col("s")).otherwise(0))
-        .cast("long").alias("s1"),
-        F.sum(F.when(F.col("is_day") == 1, F.col("n")).otherwise(0))
-        .cast("long").alias("n1"),
-        F.sum(F.when(F.col("is_day") == 0, F.col("s")).otherwise(0))
-        .cast("long").alias("s2"),
-        F.sum(F.when(F.col("is_day") == 0, F.col("n")).otherwise(0))
-        .cast("long").alias("n2"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    g = g.withColumn(
-        "stat",
-        F.when(
-            (F.col("n1") > 0) & (F.col("n2") > 0),
-            F.abs(d("s1") / F.col("n1") - d("s2") / F.col("n2")),
-        ).otherwise(F.lit(None).cast("double")),
-    )
-    obs = g.filter(F.col("shift") == 0).select("event_type", "stat")
-    nullp = g.filter((F.col("shift") > 0) & F.col("stat").isNotNull()).select(
-        F.col("stat").alias("nstat")
-    )
-    nn = nullp.agg(F.count(F.lit(1)).cast("long").alias("nn"))
-    cnt = (
-        obs.join(F.broadcast(nullp), F.col("nstat") >= F.col("stat"), "left")
-        .groupBy("event_type", "stat")
-        .agg(F.count(F.col("nstat")).cast("long").alias("n_null_ge"))
-    )
-    o2 = cnt.select(
-        F.col("n_null_ge").alias("c2"), F.col("event_type").alias("et2")
-    )
+    cnt, nn = _shift_perm_counts(spark, sf_dir)
     rk = (
-        cnt.join(
-            F.broadcast(o2),
-            (F.col("c2") < F.col("n_null_ge"))
-            | (
-                (F.col("c2") == F.col("n_null_ge"))
-                & (F.col("et2") < F.col("event_type"))
-            ),
-            "left",
-        )
-        .groupBy("event_type", "stat", "n_null_ge")
+        _rank_by_null_count(cnt)
         .agg((1 + F.count("et2")).cast("long").alias("holm_rank"))
     )
     m = rk.agg(F.count(F.lit(1)).cast("long").alias("m"))

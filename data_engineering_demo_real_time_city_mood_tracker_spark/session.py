@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import sys
 import zipimport
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -80,6 +81,27 @@ def ensure_shipped(spark: SparkSession) -> None:
                     z.write(full, os.path.relpath(full, root))
     sc.addPyFile(zpath)
     sc._data_engineering_demo_pkg_shipped = True
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set ``settings`` on the session for the ``with`` body, then put
+    back each key's previous value (unset if it had none)."""
+    old = {}
+    for key, val in settings.items():
+        try:
+            old[key] = spark.conf.get(key)
+        except Exception:
+            old[key] = None
+        spark.conf.set(key, val)
+    try:
+        yield
+    finally:
+        for key, val in old.items():
+            if val is not None:
+                spark.conf.set(key, val)
+            else:
+                spark.conf.unset(key)
 
 
 def get_spark(app_name: str = "data_engineering_demo_real_time_city_mood_tracker_spark", shuffle_partitions: int | None = None) -> SparkSession:

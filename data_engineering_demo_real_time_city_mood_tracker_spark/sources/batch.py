@@ -83,6 +83,16 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
+def _valid_rows(df: DataFrame, timestamp_col: str | None) -> DataFrame:
+    """Drop the rows a PERMISSIVE parse flagged in ``_corrupt_record``,
+    then parse ``timestamp_col`` when given and present."""
+    if "_corrupt_record" in df.columns:
+        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+    if timestamp_col is not None and timestamp_col in df.columns:
+        df = df.withColumn(timestamp_col, F.to_timestamp(F.col(timestamp_col)))
+    return df
+
+
 def read_jsonl_valid(
     spark: SparkSession,
     path: str,
@@ -97,12 +107,7 @@ def read_jsonl_valid(
     )
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.json(path)
-    if "_corrupt_record" in df.columns:
-        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    if timestamp_col is not None and timestamp_col in df.columns:
-        df = df.withColumn(timestamp_col, F.to_timestamp(F.col(timestamp_col)))
-    return df
+    return _valid_rows(reader.json(path), timestamp_col)
 
 
 def read_csv_valid(
@@ -125,12 +130,7 @@ def read_csv_valid(
         reader = reader.schema(schema)
     else:
         reader = reader.option("inferSchema", "true")
-    df = reader.csv(path)
-    if "_corrupt_record" in df.columns:
-        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    if timestamp_col is not None and timestamp_col in df.columns:
-        df = df.withColumn(timestamp_col, F.to_timestamp(F.col(timestamp_col)))
-    return df
+    return _valid_rows(reader.csv(path), timestamp_col)
 
 
 def read_binary_files(

@@ -14,6 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.transitions import (
+    ordered_rows,
+    per_user_append,
+)
+
 
 def attribution_stream(
     events: DataFrame,
@@ -54,7 +59,7 @@ def attribution_stream(
     report."""
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     out_schema = (
         f"{user_col} long, {id_col} long, {ts_col} timestamp, "
@@ -65,11 +70,7 @@ def attribution_stream(
     def step(key, pdf_iter, state: GroupState):
         import numpy as np
 
-        pdf = (
-            pd.concat(list(pdf_iter))
-            .sort_values([ts_col, id_col])
-            .reset_index(drop=True)
-        )
+        pdf = ordered_rows(pdf_iter, ts_col, id_col)
         if not len(pdf):
             return
         # vectorized walk (no row-at-a-time Python): forward-fill the
@@ -123,13 +124,7 @@ def attribution_stream(
             }
         )
 
-    credited = events.groupBy(user_col).applyInPandasWithState(
-        step,
-        outputStructType=out_schema,
-        stateStructType="t string, us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    credited = per_user_append(events, user_col, step, out_schema, "t string, us long")
     # JVM-side half-up decimal rounding == the batch query's cents
     return credited.select(
         user_col,

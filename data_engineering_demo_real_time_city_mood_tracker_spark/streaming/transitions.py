@@ -15,6 +15,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def ordered_rows(pdf_iter, ts_col: str, id_col: str):
+    """One user's micro-batch rows as a single pandas frame, sorted on
+    (ts, id) and re-indexed from 0."""
+    import pandas as pd
+
+    return pd.concat(list(pdf_iter)).sort_values([ts_col, id_col]).reset_index(drop=True)
+
+
+def per_user_append(
+    events: DataFrame, user_col: str, step, out_schema: str, state_schema: str
+) -> DataFrame:
+    """``step`` run per user on ``applyInPandasWithState`` in append
+    mode, with no state timeout."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return events.groupBy(user_col).applyInPandasWithState(
+        step,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def transition_stream(
     events: DataFrame,
     user_col: str = "user_id",
@@ -48,7 +72,7 @@ def transition_stream(
     mode — aggregate downstream for the transition matrix."""
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     out_schema = (
         f"{user_col} long, from_type string, to_type string, "
@@ -56,11 +80,7 @@ def transition_stream(
     )
 
     def step(key, pdf_iter, state: GroupState):
-        pdf = (
-            pd.concat(list(pdf_iter))
-            .sort_values([ts_col, id_col])
-            .reset_index(drop=True)
-        )
+        pdf = ordered_rows(pdf_iter, ts_col, id_col)
         if not len(pdf):
             return
         (prev,) = state.get if state.exists else (None,)
@@ -88,10 +108,4 @@ def transition_stream(
             }
         )
 
-    return events.groupBy(user_col).applyInPandasWithState(
-        step,
-        outputStructType=out_schema,
-        stateStructType="t string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return per_user_append(events, user_col, step, out_schema, "t string")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import duckdb
+
 import bench
 
 
@@ -31,6 +33,12 @@ def test_stream_probe_reports_throughput_and_stops_on_timeout(spark, sf_dir, mon
         "pipeline", "source_rows", "output_rows", "wall_sec", "rows_per_sec",
     ]
     assert probe["output_rows"] > 0 and probe["rows_per_sec"] > 0
+    # the stream reads only the click, view and error events
+    (n_stream,) = duckdb.sql(
+        f"SELECT COUNT(*) FROM read_parquet('{sf_dir}/events.parquet') "
+        "WHERE event_type IN ('click', 'view', 'error')"
+    ).fetchone()
+    assert probe["source_rows"] == n_stream
 
     # a probe that outlives the timeout is stopped and reported as an
     # error, not as source_rows over the timeout

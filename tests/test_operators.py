@@ -898,6 +898,40 @@ def test_paragraph_dedup_keepfirst_semantics(spark):
         assert all_txt.count(seg) == 1
 
 
+def test_brute_force_topk_breaks_cosine_ties_on_corpus_id(spark):
+    """duplicate vectors tie on cos_sim: the lower corpus_id ranks
+    first, ranks run 1..k, and the cut at k drops the rest of the tie
+    (the windows.topk_per_key ranking the similarity operators
+    share)."""
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import similarity
+
+    dup = [1.0, 1.0, 0.0, 0.0]
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),  # query 0
+        (1, [0.0, 0.0, 1.0, 0.0]),  # query 1
+        (2, [0.0, 1.0, 0.0, 0.0]),
+        (7, dup),
+        (3, dup),
+        (5, dup),
+        (9, [1.0, 0.1, 0.0, 0.0]),
+        (8, [0.0, 0.0, 2.0, 0.0]),
+        (6, [0.0, 0.0, 2.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    qs = df.filter("vec_id < 2")
+    out = similarity.brute_force_topk(df, qs, "embedding", "vec_id", k=3).collect()
+    got = {
+        q: [(r.corpus_id, r.rnk) for r in sorted(out, key=lambda r: r.rnk) if r.query_id == q]
+        for q in (0, 1)
+    }
+    # query 0: 9 is nearest, then the three-way tie 3/5/7 cut after 5
+    assert got[0] == [(9, 1), (3, 2), (5, 3)]
+    # query 1: 6 and 8 tie at cos 1.0, then the cos-0.0 tie opens at 0
+    assert got[1] == [(6, 1), (8, 2), (0, 3)]
+    cos = {(r.query_id, r.corpus_id): r.cos_sim for r in out}
+    assert cos[(0, 3)] == cos[(0, 5)] and cos[(1, 6)] == cos[(1, 8)] == 1.0
+
+
 def test_rp_rerank_clustered_corpus_recall_is_perfect(spark):
     """on a corpus with real cluster structure (0.05-noise planted
     clusters), 16 projected dims recover the exact cosine top-5

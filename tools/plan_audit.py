@@ -22,6 +22,9 @@ can't cover exhaustively:
                   signature, so two audits also diff a node that
                   moved without changing any counter (an aggregate
                   pushed below a join)
+- oracle_md5:     md5 of the query's ORACLES string (null for a
+                  rows-only query), so one diff of two audits checks
+                  plan identity and oracle identity together
 
 Counting happens in the TREE section only (blocks[0] — "formatted"
 repeats every node in the detail blocks); the SinglePartition
@@ -40,6 +43,7 @@ lands so rounds can diff counters.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -157,7 +161,7 @@ def audit_plan(plan: str) -> dict:
 
 
 def main() -> int:
-    from data_engineering_demo_real_time_city_mood_tracker_spark.plans.queries import QUERIES
+    from data_engineering_demo_real_time_city_mood_tracker_spark.plans.queries import ORACLES, QUERIES
     from data_engineering_demo_real_time_city_mood_tracker_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -172,6 +176,10 @@ def main() -> int:
             df._jdf.queryExecution(), "formatted"
         )
         r = audit_plan(plan)
+        oracle = ORACLES.get(name)
+        r["oracle_md5"] = (
+            hashlib.md5(oracle.encode()).hexdigest() if oracle is not None else None
+        )
         report[name] = r
         if r["cartesian"]:
             hard.append(f"{name}: CartesianProduct x{r['cartesian']}")
