@@ -37,6 +37,27 @@ def sign_bucket(a: Column, nbits: int) -> Column:
     return F.aggregate(bits, F.lit(0), lambda acc, b: acc * 2 + b)
 
 
+def f64_sql(x) -> str:
+    """exact double literal: repr is the shortest round-trip form, so
+    ``CAST('repr' AS DOUBLE)`` restores every bit."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def i64_sql(x) -> str:
+    """BIGINT literal."""
+    return f"{int(x)}L"
+
+
+def array_sql(values, elem=f64_sql) -> str:
+    """(nested) list of numbers as ONE literal ``array(...)`` SQL
+    string, each leaf written by ``elem``. Parsed JVM-side in one
+    ``F.expr`` call, where nested F.lit/F.array would cost one py4j
+    round-trip per element (~1 s per plan at 8×64)."""
+    if isinstance(values, (list, tuple)):
+        return "array(" + ",".join(array_sql(v, elem) for v in values) + ")"
+    return elem(values)
+
+
 def sign_bucket_sql(a: str, nbits: int) -> str:
     """DuckDB rendering of :func:`sign_bucket`."""
     terms = " + ".join(

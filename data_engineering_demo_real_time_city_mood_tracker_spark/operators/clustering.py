@@ -1,15 +1,17 @@
 """Distributed k-means (Lloyd's) over an embedding column — the
-training step behind IVF ANN indexes and corpus clustering.
+training step behind IVF ANN indexes and corpus clustering, and the
+one Lloyd trainer that product quantization (pq.py) shares: PQ is
+k-means on each of ``m`` subspaces, k-means is PQ with one.
 
 Execution shape per iteration:
 - assignment is a MAP-ONLY pass: the k×dim centroid matrix is tiny
   (k=64, dim=1024 → 512 KB), so it is embedded in the plan as
   literals — the Spark equivalent of a broadcast variable, with zero
   shuffle and full codegen on the distance math.
-- the centroid update is ONE groupBy(cluster) shuffle whose payload is
-  dim partial-sum columns — map-side partial aggregation reduces each
-  executor's contribution to k rows before the exchange, so the
-  shuffle volume is k × dim × executors, independent of corpus size.
+- the centroid update is ONE groupBy(subspace, cluster, pos) shuffle —
+  map-side partial aggregation reduces each executor's contribution to
+  k × dim rows before the exchange, so the shuffle volume is
+  independent of corpus size.
 - the new centroids (k rows) are collected to the driver; O(k×dim)
   bytes, never the data.
 
@@ -26,6 +28,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import (
+    array_sql,
+    i64_sql,
+)
 from data_engineering_demo_real_time_city_mood_tracker_spark.session import scoped_conf
 
 
@@ -72,52 +78,21 @@ def _portable_mean(x):
     )
 
 
-def _sq_dist(vec, centroid_lit):
-    d = F.zip_with(vec, centroid_lit, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _cents_sql(centroids: list[list[float]]) -> str:
-    """k×dim literal matrix as SQL text (see _centroid_array for why
-    one parsed string beats k·dim py4j Column calls)."""
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in c) + ")"
-            for c in centroids
-        )
-        + ")"
-    )
-
-
 def _dists_sql(vec_sql: str, centroids: list[list[float]]) -> str:
-    """per-centroid squared-distance array as ONE SQL string — the
-    same zip_with/aggregate fold as :func:`_sq_dist` (0.0-seeded,
-    index order, one IEEE add per dim), but parsed JVM-side in one
-    call. Measured per trainer round at bench SF vs the py4j-lambda
-    tree: plan build 0.22 → 0.12 s AND exec 0.6 → 0.3 s (the parsed
-    lambda produces a leaner expression tree); assignments verified
-    identical, and every oracle row downstream guards the arithmetic
-    bitwise."""
+    """per-centroid squared-distance array as ONE SQL string: the
+    0.0-seeded, index-order zip_with/aggregate fold, one IEEE add per
+    dim. This is the one squared-distance fold of every plan here
+    (training, assignment, multi-probe, PQ encoding); _sq_dist_np is
+    its numpy twin. Parsed JVM-side in one call: measured per trainer
+    round at bench SF vs the same fold as a py4j-lambda tree, plan
+    build 0.22 → 0.12 s AND exec 0.6 → 0.3 s (the parsed lambda
+    produces a leaner expression tree); every oracle row downstream
+    guards the arithmetic bitwise."""
     return (
-        f"transform({_cents_sql(centroids)}, c -> "
+        f"transform({array_sql(centroids)}, c -> "
         f"aggregate(zip_with({vec_sql}, c, (x, y) -> (x - y) * (x - y)), "
         f"0.0D, (acc, x) -> acc + x))"
     )
-
-
-def _centroid_array(centroids: list[list[float]]):
-    """k×dim literal matrix as ONE parsed SQL expression. Building it
-    from nested F.lit/F.array would cost k·dim py4j round-trips per
-    plan (~1 s at k=8, dim=64, per iteration); a single F.expr hands
-    the whole tree to the JVM parser in one call. CAST('repr' AS
-    DOUBLE) round-trips every float bit-exactly (repr is shortest
-    round-trip form)."""
-    inner = ",".join(
-        "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in c) + ")"
-        for c in centroids
-    )
-    return F.expr(f"array({inner})")
 
 
 _LITERAL_K_MAX = 32
@@ -293,13 +268,10 @@ def assign_top_cells(
     multi-probe side of an IVF index. Map-only, like assign_clusters:
     centroids ride the plan as literals."""
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cents = _centroid_array(centroids)
-    # (dist, cid) structs sorted by field order → distance, then index
-    scored = F.transform(
-        cents,
-        lambda c, i: F.struct(
-            _sq_dist(F.col("vec"), c).alias("d"), i.cast("int").alias("cid")
-        ),
+    # (d, cid) structs sort by field order → distance, then index
+    scored = F.expr(
+        f"transform({_dists_sql('vec', centroids)}, "
+        "(d, i) -> named_struct('d', d, 'cid', i))"
     )
     probes = F.slice(F.array_sort(scored), 1, n_probe)
     return (
@@ -309,55 +281,56 @@ def assign_top_cells(
     )
 
 
-def init_centroids(
-    df: DataFrame, vec_col: str, id_col: str, k: int
-) -> list[list[float]]:
-    """k seed vectors with the smallest md5(id) — a deterministic
-    uniform sample (hash order is independent of storage order)."""
+# --------------------------------------------------------------------------
+# The Lloyd trainer. Product quantization is k-means run on each of
+# ``m`` subspaces (Jégou, Douze, Schmid, TPAMI 2011), so k-means is PQ
+# with m = 1: kmeans, pq.train_pq and pq.build_ivfpq_index all train
+# here, through one md5-ordered seed collect (_md5_head), one iteration
+# loop (_lloyd) and one round per execution place:
+# - _round_col: Column expressions (the _dists_sql fold, posexplode,
+#   _portable_mean) — small k;
+# - _round_np: the numpy partials (_partials_np) per Arrow batch —
+#   large k, where the interpreted fold is catastrophic;
+# - lloyd_train_np: _partials_np on the driver over an in-memory sample.
+#
+# Why the three give the same bits: distances accumulate SEQUENTIALLY
+# over dimensions — ``acc = acc + diff*diff`` per dim is the same two
+# correctly-rounded IEEE ops in the same order as the zip_with/aggregate
+# fold (numpy elementwise ufuncs never fuse into FMA), unlike the BLAS
+# ``||v||²−2vc+||c||²`` expansion in _assign_clusters_np, which can
+# argmin differently on near-ties. np.argmin takes the FIRST minimum ==
+# array_position(array_min). The means floor-quantize at 1e10 exactly
+# like _portable_mean (multiply then floor, both correctly rounded), sum
+# as exact integers and end with the same two double divisions (Python
+# float division IS IEEE double division). Parity is test-asserted on
+# the real embeddings, and every downstream oracle hash re-checks it.
+
+
+def _vec_base(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(id, _v array<double>): the projection every trainer reads."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    )
+
+
+def _md5_head(base: DataFrame, n: int) -> list[list[float]]:
+    """the ``n`` vectors of an (id, _v) frame with the smallest md5(id)
+    — a deterministic uniform sample (hash order is independent of
+    storage order), collected by ONE TakeOrdered job."""
     rows = (
-        df.select(
-            F.md5(F.col(id_col).cast("string")).alias("h"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-        )
+        base.select(F.md5(F.col("id").cast("string")).alias("h"), "_v")
         .orderBy("h")
-        .limit(k)
+        .limit(n)
         .collect()
     )
-    return [list(r.vec) for r in rows]
-
-
-def py_sq_dist(vec: list[float], cent: list[float]) -> float:
-    """driver-side replica of :func:`_sq_dist`'s JVM fold — 0.0-seeded
-    left-to-right sum of (x−y)², one IEEE double add per dimension in
-    the same order, so it is bitwise equal to the Column expression on
-    the same doubles. Exists so tiny bounded frames (seed vectors) can
-    be assigned on the driver without a Spark job while keeping every
-    downstream hash-gated value identical."""
-    acc = 0.0
-    for x, y in zip(vec, cent):
-        d = x - y
-        acc += d * d
-    return acc
-
-
-def py_assign(vec: list[float], centroids: list[list[float]]) -> int:
-    """driver-side replica of :func:`assign_clusters`'s argmin —
-    ``array_position(dists, array_min(dists)) - 1`` picks the FIRST
-    index achieving the minimum, mirrored here with a strict ``<``
-    scan."""
-    best, best_d = 0, py_sq_dist(vec, centroids[0])
-    for i in range(1, len(centroids)):
-        d = py_sq_dist(vec, centroids[i])
-        if d < best_d:
-            best, best_d = i, d
-    return best
+    return [list(r["_v"]) for r in rows]
 
 
 def _sq_dist_np(v, cents: list[list[float]]):
     """(n, k) squared distances from each row of ``v`` to each of
     ``cents``, accumulated sequentially over dimensions: the same
-    IEEE ops in the same order as the :func:`_sq_dist` fold (see
-    _round_partials_np)."""
+    IEEE ops in the same order as the :func:`_dists_sql` fold."""
     import numpy as np
 
     n, dim = v.shape
@@ -371,97 +344,176 @@ def _sq_dist_np(v, cents: list[list[float]]):
     return d
 
 
-def _round_partials_np(base: DataFrame, centroids: list[list[float]]):
-    """One Lloyd round's (cluster, pos) → (quantized sum, count)
-    partials via a FOLD-EXACT numpy pass — bitwise-identical to the
-    assignment fold + posexplode + _portable_mean aggregation it
-    replaces, at a fraction of the cost (no interpreted HOF lambdas,
-    no dim-wide explode shuffle: the shuffle moves ≤ tasks × k × dim
-    partial rows instead of corpus_rows × dim exploded rows).
-
-    Why bitwise: distances accumulate SEQUENTIALLY over dimensions —
-    ``acc = acc + diff*diff`` per dim is the same two correctly-rounded
-    IEEE ops in the same order as the zip_with/aggregate fold (numpy
-    elementwise ufuncs never fuse into FMA), unlike the BLAS
-    ``||v||²−2vc+||c||²`` expansion in _assign_clusters_np which can
-    argmin differently on near-ties. np.argmin takes the FIRST minimum
-    == array_position(array_min). The mean partials floor-quantize at
-    1e10 exactly like _portable_mean (multiply then floor, both
-    correctly rounded) and sum as exact int64; the caller finishes
-    with the same double divisions. Parity is test-asserted on the
-    real embeddings and every downstream oracle hash re-checks it."""
+def _partials_np(v, books, dsub: int) -> dict[str, list[int]]:
+    """one Lloyd round's (j, cluster, pos) → (s, n) partials over the
+    rows of ``v``: subspace j's slices are assigned to their nearest
+    codeword of ``books[j]``, floor-quantized at 1e10 and summed as
+    exact int64 per (codeword, position)."""
     import numpy as np
-    import pandas as pd
 
-    cmat = [list(map(float, c)) for c in centroids]
+    out = {"j": [], "cluster": [], "pos": [], "s": [], "n": []}
+    for j, book in enumerate(books):
+        sub = v[:, j * dsub : (j + 1) * dsub]
+        cl = np.argmin(_sq_dist_np(sub, book), axis=1)
+        q = np.floor(sub * 1e10).astype(np.int64)
+        for ci in np.unique(cl):
+            sel = q[cl == ci]
+            out["j"].extend([j] * dsub)
+            out["cluster"].extend([int(ci)] * dsub)
+            out["pos"].extend(range(dsub))
+            out["s"].extend(int(x) for x in sel.sum(axis=0))
+            out["n"].extend([int(sel.shape[0])] * dsub)
+    return out
+
+
+def _means(partials) -> list[tuple[int, int, int, float]]:
+    """(j, cluster, pos, s, n) → (j, cluster, pos, mean): the two IEEE
+    double divisions _portable_mean performs."""
+    return [(j, c, pos, float(s) / n / 1e10) for j, c, pos, s, n in partials]
+
+
+def _round_col(base: DataFrame, books, dsub: int):
+    """one Lloyd round as Column expressions: each row's nearest
+    codeword per subspace is computed map-only over literal codewords
+    (each distance array once), then the update is keyed on (j,
+    cluster, pos) over the posexploded vector — a narrow agg instead
+    of a dim-wide one, so codegen stays in one small method and the
+    shuffle payload is m × k × dsub partials per map task."""
+    dists = ",".join(
+        _dists_sql(f"slice(_v, {j * dsub + 1}, {dsub})", book)
+        for j, book in enumerate(books)
+    )
+    cl = F.expr(
+        f"transform(array({dists}), "
+        "d -> cast(array_position(d, array_min(d)) - 1 as int))"
+    )
+    # cl in its own projection: beside the generator it would be
+    # evaluated once per exploded element, not once per row
+    rows = (
+        base.select(cl.alias("cl"), "_v")
+        .select("cl", F.posexplode("_v").alias("p", "x"))
+        .withColumn("j", F.expr(f"cast(p div {dsub} as int)"))
+        .groupBy(
+            "j",
+            F.element_at("cl", F.col("j") + 1).alias("cluster"),
+            (F.col("p") % dsub).alias("pos"),
+        )
+        .agg(_portable_mean(F.col("x")).alias("c"))
+        .collect()
+    )
+    return [(r.j, r.cluster, r.pos, r.c) for r in rows]
+
+
+def _round_np(base: DataFrame, books, dsub: int):
+    """one Lloyd round as the numpy partials pass: no interpreted HOF
+    lambdas, and the shuffle moves ≤ tasks × m × k × dsub partial rows
+    instead of corpus_rows × dim exploded rows."""
+    import numpy as np
 
     def gen(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.asarray(list(pdf["vec"]), dtype=np.float64)
-            dim = v.shape[1]
-            cl = np.argmin(_sq_dist_np(v, cmat), axis=1)
-            q = np.floor(v * 1e10).astype(np.int64)
-            out = {"cluster": [], "pos": [], "s": [], "n": []}
-            for ci in np.unique(cl):
-                sel = q[cl == ci]
-                sums = sel.sum(axis=0)
-                out["cluster"].extend([int(ci)] * dim)
-                out["pos"].extend(range(dim))
-                out["s"].extend(int(x) for x in sums)
-                out["n"].extend([int(sel.shape[0])] * dim)
-            yield pd.DataFrame(out)
+            if len(pdf):
+                v = np.asarray(list(pdf["_v"]), dtype=np.float64)
+                yield pd.DataFrame(_partials_np(v, books, dsub))
 
-    return (
-        base.select("vec")
-        .mapInPandas(gen, schema="cluster int, pos int, s long, n long")
-        .groupBy("cluster", "pos")
+    return _means(
+        base.select("_v")
+        .mapInPandas(gen, schema="j int, cluster int, pos int, s long, n long")
+        .groupBy("j", "cluster", "pos")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .collect()
     )
 
 
-def lloyd_np(vecs: list[list[float]], seeds: list[list[float]],
-             max_iter: int) -> list[list[float]]:
-    """DRIVER-side Lloyd iterations over an in-memory vector list —
-    bitwise-identical to :func:`kmeans`'s rounds on the same vectors
-    (same sequential-dim distance accumulation, first-min argmin, and
-    floor-quantized exact-integer means as _round_partials_np; the
-    final double divisions are the same IEEE ops _portable_mean
-    performs). Exists for SAMPLE-trained index builds: training on a
+def _lloyd(seeds: list[list[float]], m: int, max_iter: int, round_fn):
+    """THE Lloyd loop: split the seed vectors into ``m`` subspace
+    codebooks, then apply ``round_fn(books, dsub)``'s (j, cluster, pos,
+    mean) updates until no codeword moves (checked over all subspaces
+    at once) or ``max_iter`` rounds ran. An empty cluster keeps its
+    codeword."""
+    dim = len(seeds[0]) if seeds else 0
+    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
+    dsub = dim // m
+    books = [[s[j * dsub : (j + 1) * dsub] for s in seeds] for j in range(m)]
+    for _ in range(max_iter):
+        new_books = [[list(c) for c in book] for book in books]
+        for j, cluster, pos, c in round_fn(books, dsub):
+            new_books[j][cluster][pos] = c
+        if new_books == books:
+            break
+        books = new_books
+    return books
+
+
+def lloyd_train(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    m: int,
+    k: int,
+    max_iter: int,
+    np_rounds: bool | None = None,
+) -> list[list[list[float]]]:
+    """books[m][k][dim/m]: Lloyd's on each of ``m`` subspaces of
+    ``vec_col``, all subspaces trained in the SAME jobs — one seed
+    collect (the k smallest-md5(id) vectors, sliced per subspace), then
+    one pass per round. Nothing is persisted between rounds, and each
+    round's plan depends only on literal codewords, so there is no
+    lineage blow-up.
+
+    ``np_rounds`` (a test-only override) picks the round; ``None``
+    applies the measured crossover: numpy above _LITERAL_K_MAX (where
+    the interpreted fold is catastrophic — 30 s/round at k=156, and
+    numpy already wins 16-19% at k=32/sf1), Column rounds at small k
+    (the per-round mapInPandas overhead regressed the k=8 bench
+    trainers 1.2-1.9× at sf0.1 when numpy was unconditional)."""
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
+
+    # single-file corpora would otherwise run every round's distance
+    # math on one core; a no-op at real scale (scan splits > cores
+    # already). The projection is NOT persisted: measured at sf0.1 the
+    # cache materialization costs more than the per-round re-scan it
+    # saves (1.5 s → 2.3 s), and at real scale the training input is a
+    # bounded sample.
+    base = _vec_base(_spread(df), vec_col, id_col)
+    if np_rounds is None:
+        np_rounds = k > _LITERAL_K_MAX
+    round_fn = _round_np if np_rounds else _round_col
+    with _no_aqe(df.sparkSession):
+        seeds = _md5_head(base, k)
+        return _lloyd(seeds, m, max_iter, lambda books, dsub: round_fn(base, books, dsub))
+
+
+def lloyd_train_np(
+    vecs: list[list[float]], seeds: list[list[float]], m: int, max_iter: int
+) -> list[list[list[float]]]:
+    """DRIVER-side Lloyd over an in-memory vector list: the same loop
+    with _partials_np over the whole list as the round, so it is
+    bitwise-identical to :func:`lloyd_train` on the same vectors and
+    seeds. Exists for SAMPLE-trained index builds: training on a
     bounded md5-ordered sample is the FAISS-standard shape at scale,
     and whenever the sample covers the whole corpus (the correctness
-    gate SFs) the result is byte-identical to the distributed
-    trainer, so the oracles don't change."""
+    gate SFs) the result is byte-identical to the distributed trainer,
+    so the oracles don't change."""
     import numpy as np
 
     v = np.asarray([list(map(float, x)) for x in vecs], dtype=np.float64)
-    cents = [list(map(float, c)) for c in seeds]
-    q = np.floor(v * 1e10).astype(np.int64)
-    for _ in range(max_iter):
-        cl = np.argmin(_sq_dist_np(v, cents), axis=1)
-        new = [list(c) for c in cents]
-        for ci in np.unique(cl):
-            sel = q[cl == ci]
-            cnt = sel.shape[0]
-            sums = sel.sum(axis=0)
-            new[int(ci)] = [float(int(s)) / cnt / 1e10 for s in sums]
-        if new == cents:
-            break
-        cents = new
-    return cents
+    return _lloyd(
+        seeds,
+        m,
+        max_iter,
+        lambda books, dsub: _means(zip(*_partials_np(v, books, dsub).values())),
+    )
 
 
 def assign_np(vecs, centroids: list[list[float]]):
-    """driver-side batch argmin over an in-memory list — the numpy
-    twin of py_assign (sequential-dim accumulation, first-min), for
-    sample-sized frames where a Python loop would be the bottleneck."""
+    """driver-side batch argmin over an in-memory list — the numpy twin
+    of :func:`assign_clusters`' fold and first-min argmin, for
+    sample-sized frames."""
     import numpy as np
 
     v = np.asarray([list(map(float, x)) for x in vecs], dtype=np.float64)
-    cents = [list(map(float, c)) for c in centroids]
-    return np.argmin(_sq_dist_np(v, cents), axis=1)
+    return np.argmin(_sq_dist_np(v, centroids), axis=1)
 
 
 def kmeans(
@@ -472,67 +524,13 @@ def kmeans(
     max_iter: int = 5,
     np_rounds: bool | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Lloyd's iterations; returns (assignments df, final centroids).
-
-    The returned frame is (id, cluster) — re-derivable from the
-    centroids with one map-only pass, so nothing is persisted between
-    iterations and there is no lineage blow-up (each iteration's plan
-    depends only on literal centroids, not the previous plan).
-    ``np_rounds`` switches each Lloyd round to the
-    fold-exact numpy partials pass (_round_partials_np —
-    bitwise-identical centroids, test-asserted). Default ``None``
-    applies the measured crossover: numpy above _LITERAL_K_MAX (where
-    the interpreted fold is catastrophic — 30 s/round at k=156, and
-    numpy already wins 16-19% at k=32/sf1), Column rounds at small k
-    (the per-round mapInPandas overhead regressed the k=8 bench
-    trainers 1.2-1.9× at sf0.1 when numpy was unconditional — caught
-    and reverted in r5).
-    """
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
-
-    # single-file corpora would otherwise run every iteration's
-    # distance math on one core; a no-op at real scale (scan splits >
-    # cores already). The shared (id, double-vec) projection is NOT
-    # persisted: measured at sf0.1 the cache materialization costs
-    # more than the per-round re-scan it saves (1.5 s → 2.3 s), and at
-    # real scale the training input is a bounded sample, not 100 TB.
-    base = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    )
-    if np_rounds is None:
-        np_rounds = k > _LITERAL_K_MAX
-    with _no_aqe(df.sparkSession):
-        centroids = init_centroids(base, "vec", "id", k)
-        for _ in range(max_iter):
-            new_centroids = [list(c) for c in centroids]
-            if np_rounds:
-                # fold-exact numpy partials; the final mean is the same
-                # double(sum)/count/1e10 _portable_mean computes (Python
-                # float division IS IEEE double division)
-                for r in _round_partials_np(base, centroids):
-                    new_centroids[r.cluster][r.pos] = float(r.s) / r.n / 1e10
-            else:
-                assigned = assign_clusters(base, "vec", "id", centroids)
-                # per-dimension exact quantized-integer sums →
-                # partition-order-independent, engine-portable means (see
-                # _portable_mean). The update is keyed on (cluster, pos) —
-                # a narrow 3-column agg instead of a dim-wide one, so
-                # codegen stays in one small method and the shuffle payload
-                # is still k × dim partials per map task.
-                new_rows = (
-                    assigned.select(
-                        "cluster", F.posexplode("vec").alias("pos", "x")
-                    )
-                    .groupBy("cluster", "pos")
-                    .agg(_portable_mean(F.col("x")).alias("c"))
-                    .collect()
-                )
-                for r in new_rows:
-                    new_centroids[r.cluster][r.pos] = r.c
-            if new_centroids == centroids:
-                break
-            centroids = new_centroids
+    """Lloyd's k-means: product quantization with one subspace, i.e.
+    :func:`lloyd_train` with m = 1, then one map-only
+    :func:`assign_clusters` pass. Returns (assignments (id, cluster),
+    final centroids); the assignments are re-derivable from the
+    centroids, so nothing is persisted. ``np_rounds`` is
+    lloyd_train's test-only round override."""
+    centroids = lloyd_train(df, vec_col, id_col, 1, k, max_iter, np_rounds)[0]
     return (
         assign_clusters(df, vec_col, id_col, centroids).select("id", "cluster"),
         centroids,
@@ -569,21 +567,12 @@ def _kc_qvec(vec_col):
     )
 
 
-def _kc_cents_sql(cents: list[list[int]]) -> str:
-    """k x dim literal matrix of quantized centers as one parsed SQL
-    expression (the _centroid_array trick, integer flavor)."""
-    inner = ",".join(
-        "array(" + ",".join(f"{int(x)}L" for x in c) + ")" for c in cents
-    )
-    return f"array({inner})"
-
-
 def _kc_mindist_sql(cents: list[list[int]]) -> str:
     """min over chosen centers of the exact integer squared L2
     distance — integer adds commute, so fold order is irrelevant and
     the value matches any engine's sum over the same terms."""
     return (
-        f"array_min(transform({_kc_cents_sql(cents)}, c -> "
+        f"array_min(transform({array_sql(cents, i64_sql)}, c -> "
         "aggregate(zip_with(q, c, (x, y) -> (x - y) * (x - y)), "
         "cast(0 as bigint), (acc, x) -> acc + x)))"
     )
@@ -591,9 +580,9 @@ def _kc_mindist_sql(cents: list[list[int]]) -> str:
 
 def _kc_dist_to_sql(cent: list[int]) -> str:
     """exact integer squared L2 to ONE quantized center literal."""
-    arr = "array(" + ",".join(f"{int(x)}L" for x in cent) + ")"
     return (
-        f"aggregate(zip_with(q, {arr}, (x, y) -> (x - y) * (x - y)), "
+        f"aggregate(zip_with(q, {array_sql(cent, i64_sql)}, "
+        "(x, y) -> (x - y) * (x - y)), "
         "cast(0 as bigint), (acc, x) -> acc + x)"
     )
 
@@ -738,7 +727,7 @@ def kcenter_select(df: DataFrame, vec_col: str, id_col: str, k: int = 8,
         # the lexicographic argmin.
         asg = (
             "array_min(transform("
-            + _kc_cents_sql(cents)
+            + array_sql(cents, i64_sql)
             + ", (c, i) -> struct("
             "aggregate(zip_with(q, c, (x, y) -> (x - y) * (x - y)), "
             "cast(0 as bigint), (acc, x) -> acc + x) as d, "
@@ -770,9 +759,8 @@ def kcenter_select(df: DataFrame, vec_col: str, id_col: str, k: int = 8,
 
 def _kc_dot_to_sql(vec: list[int]) -> str:
     """exact integer dot product of ``q`` with ONE quantized literal."""
-    arr = "array(" + ",".join(f"{int(x)}L" for x in vec) + ")"
     return (
-        f"aggregate(zip_with(q, {arr}, (x, y) -> x * y), "
+        f"aggregate(zip_with(q, {array_sql(vec, i64_sql)}, (x, y) -> x * y), "
         "cast(0 as bigint), (acc, x) -> acc + x)"
     )
 

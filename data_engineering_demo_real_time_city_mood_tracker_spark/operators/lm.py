@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import hex4, tokens
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import array_sql, i64_sql
 from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread, _toked
 
 # Quantization scale for conditional probabilities / likelihood
@@ -325,10 +326,10 @@ def hashed_presence_features(docs: DataFrame, text_col: str = "text",
 def _qc_weight_expr(w: dict[int, int], n_buckets: int):
     """score contribution of feature row ``b`` under the current
     weights — the (B+1)-long weight vector rides the plan as ONE
-    parsed literal array (the _centroid_array trick; the b = -1
+    parsed literal array (functions.vectors.array_sql; the b = -1
     sentinel maps to index 1, pinned 0, so it never scores)."""
-    arr = ",".join(f"{w[b]}L" for b in range(-1, n_buckets))
-    return F.expr(f"element_at(array({arr}), cast(b as int) + 2)")
+    arr = array_sql([w[b] for b in range(-1, n_buckets)], i64_sql)
+    return F.expr(f"element_at({arr}, cast(b as int) + 2)")
 
 
 def train_quality_probe(docs: DataFrame, is_positive, text_col: str = "text",

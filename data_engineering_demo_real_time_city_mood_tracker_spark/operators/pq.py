@@ -9,10 +9,10 @@ precomputed into a lookup table, and a corpus vector's approximate
 distance is just ``m`` table lookups + adds.
 
 Spark shape:
-- training reuses :mod:`clustering`'s k-means per subspace — the same
-  map-only assignment / (cluster,pos)-keyed update discipline, m small
-  runs whose shuffle volume is ksub × dsub per task regardless of
-  corpus size.
+- training IS :mod:`clustering`'s Lloyd trainer (k-means is PQ with one
+  subspace): map-only assignment and a (subspace, cluster, pos)-keyed
+  update, all m subspaces in the same jobs, with a shuffle volume of
+  m × ksub × dsub per task regardless of corpus size.
 - encoding is MAP-ONLY: codebooks ride the plan as literals (m × ksub
   × dsub doubles — a few KB), argmin per subspace in codegen.
 - the ADC scan is map-only over the CODES table (the corpus vectors
@@ -34,12 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import array_sql
 from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import (
-    _centroid_array,
     _dists_sql,
-    _portable_mean,
-    _sq_dist_np,
-    kmeans,
+    lloyd_train,
 )
 
 _EMPTY_TOPK = "query_id int, corpus_id long, approx_dist double, rnk long"
@@ -49,28 +47,6 @@ _EMPTY_TOPK = "query_id int, corpus_id long, approx_dist double, rnk long"
 # (the 0.0-seeded index-order zip_with/aggregate fold) — shared by
 # training and encoding; train and encode disagreeing there would
 # silently corrupt every code.
-
-
-def _lut_literal(luts: list[list[list[float]]]):
-    """n × m × ksub lookup tables as ONE literal expression tree (same
-    repr-cast round-trip and single-parse rationale as
-    clustering._centroid_array) — shared by the flat and IVF ADC
-    paths."""
-    return F.expr(
-        "array("
-        + ",".join(
-            "array("
-            + ",".join(
-                "array("
-                + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in row)
-                + ")"
-                for row in lut
-            )
-            + ")"
-            for lut in luts
-        )
-        + ")"
-    )
 
 
 def train_pq(
@@ -83,141 +59,20 @@ def train_pq(
     np_rounds: bool | None = None,
 ) -> list[list[list[float]]]:
     """codebooks[m][ksub][dsub]: k-means per subspace slice, with all
-    ``m`` subspaces trained in the SAME jobs.
+    ``m`` subspaces trained in the SAME jobs by
+    :func:`clustering.lloyd_train`.
 
     Running :func:`clustering.kmeans` per subspace would cost m ×
     (init + iterations) separate Spark jobs over the same corpus; the
-    subspace problems are independent, so this fuses them — ONE
+    subspace problems are independent, so the trainer fuses them — ONE
     md5-ordered init collect seeds every subspace (identical seeds to
     the sequential form: the smallest-hash ids' slices), and each
-    Lloyd round is ONE pass computing every subspace's assignment
-    map-only and aggregating all means keyed on (subspace, cluster,
-    pos). Same exact-decimal update discipline ⇒ byte-identical
+    Lloyd round is ONE pass over every subspace. Byte-identical
     codebooks to m independent kmeans() runs (test-asserted), at
-    1/m-th the job count; the per-round shuffle payload is m × ksub ×
-    dsub partials per task — corpus-size-independent.
+    1/m-th the job count. ``np_rounds`` is lloyd_train's test-only
+    round override.
     """
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
-
-    # one (id, double-vec) projection feeds the seed collect and every
-    # Lloyd round; dim derives from the seed rows instead of its own
-    # first() job (one fewer fixed-overhead job per training). Not
-    # persisted — measured net-negative at bench SF (cache
-    # materialization > per-round re-scan), and ivfpq's resid input is
-    # already persisted by the caller.
-    base = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import _no_aqe
-
-    with _no_aqe(df.sparkSession):
-        seeds = (
-            base.select(F.md5(F.col("id").cast("string")).alias("h"), "_v")
-            .orderBy("h")
-            .limit(ksub)
-            .collect()
-        )
-        books, dim = _lloyd_rounds(base, seeds, m, ksub, max_iter, np_rounds)
-    return books
-
-
-def _pq_round_partials_np(base, books, dsub):
-    """One fused PQ Lloyd round's (subspace, cluster, pos) →
-    (quantized sum, count) partials as a fold-exact numpy pass — the
-    product-quantizer twin of clustering._round_partials_np (see its
-    docstring for the bitwise argument: sequential-dim accumulation ==
-    the zip_with/aggregate fold, first-min argmin == array_position,
-    floor-quantized int64 sums == _portable_mean's BIGINT partials).
-    Replaces the m-struct explode + posexplode + groupBy round: the
-    shuffle moves ≤ tasks × m × ksub × dsub partial rows instead of
-    corpus_rows × dim exploded rows, and no interpreted HOF runs."""
-    import numpy as np
-    import pandas as pd
-
-    bks = [[list(map(float, c)) for c in book] for book in books]
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.asarray(list(pdf["_v"]), dtype=np.float64)
-            out = {"j": [], "cluster": [], "pos": [], "s": [], "n": []}
-            for j, book in enumerate(bks):
-                sub = v[:, j * dsub : (j + 1) * dsub]
-                cl = np.argmin(_sq_dist_np(sub, book), axis=1)
-                q = np.floor(sub * 1e10).astype(np.int64)
-                for ci in np.unique(cl):
-                    sel = q[cl == ci]
-                    sums = sel.sum(axis=0)
-                    out["j"].extend([int(j)] * dsub)
-                    out["cluster"].extend([int(ci)] * dsub)
-                    out["pos"].extend(range(dsub))
-                    out["s"].extend(int(x) for x in sums)
-                    out["n"].extend([int(sel.shape[0])] * dsub)
-            yield pd.DataFrame(out)
-
-    return (
-        base.select("_v")
-        .mapInPandas(gen, schema="j int, cluster int, pos int, s long, n long")
-        .groupBy("j", "cluster", "pos")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .collect()
-    )
-
-
-def _lloyd_rounds(base, seeds, m, ksub, max_iter,
-                  np_rounds: bool | None = None):
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import _LITERAL_K_MAX
-
-    if np_rounds is None:
-        # same measured crossover as kmeans: numpy only past the
-        # codegen-budget k (small-ksub numpy rounds regressed the
-        # bench trainers ~15% at sf0.1 — per-round Arrow overhead)
-        np_rounds = ksub > _LITERAL_K_MAX
-    dim = len(seeds[0]["_v"])
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    dsub = dim // m
-    books = [
-        [list(r["_v"])[j * dsub : (j + 1) * dsub] for r in seeds] for j in range(m)
-    ]
-    for _ in range(max_iter):
-        new_books = [[list(c) for c in book] for book in books]
-        if np_rounds:
-            # fold-exact numpy partials; same final double divisions as
-            # _portable_mean (Python float division is IEEE double)
-            for r in _pq_round_partials_np(base, books, dsub):
-                new_books[r.j][r.cluster][r.pos] = float(r.s) / r.n / 1e10
-        else:
-            per_sub = []
-            for j, book in enumerate(books):
-                sub = F.slice(F.col("_v"), j * dsub + 1, dsub)
-                # one parsed SQL string per subspace instead of the py4j
-                # lambda tree — same fold, leaner plan (clustering._dists_sql)
-                dists = F.expr(
-                    _dists_sql(f"slice(_v, {j * dsub + 1}, {dsub})", book)
-                )
-                cluster = (
-                    F.array_position(dists, F.array_min(dists)) - 1
-                ).cast("int")
-                per_sub.append(
-                    F.struct(
-                        F.lit(j).alias("j"), cluster.alias("cluster"), sub.alias("sub")
-                    )
-                )
-            new_rows = (
-                base.select(F.explode(F.array(*per_sub)).alias("s"))
-                .select("s.j", "s.cluster", F.posexplode("s.sub").alias("pos", "x"))
-                .groupBy("j", "cluster", "pos")
-                .agg(_portable_mean(F.col("x")).alias("c"))
-                .collect()
-            )
-            for r in new_rows:
-                new_books[r.j][r.cluster][r.pos] = r.c
-        if new_books == books:
-            break
-        books = new_books
-    return books, dim
+    return lloyd_train(df, vec_col, id_col, m, ksub, max_iter, np_rounds)
 
 
 def encode_pq(
@@ -231,7 +86,6 @@ def encode_pq(
     code per subspace, codebooks as plan literals, ties → lowest code.
     ``carry`` columns ride through the projection so callers never
     need an id-keyed join to re-attach metadata (cell, source, ...)."""
-    m = len(codebooks)
     dsub = len(codebooks[0][0])
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     out = df.select(F.col(id_col).alias("id"), *carry, vec.alias("_v"))
@@ -264,7 +118,6 @@ def pq_topk(
 
     if not query_rows:
         return codes_df.sparkSession.createDataFrame([], _EMPTY_TOPK)
-    m = len(codebooks)
     dsub = len(codebooks[0][0])
     luts = []
     qids = []
@@ -281,7 +134,7 @@ def pq_topk(
             )
         luts.append(lut)
         qids.append(int(qid))
-    lut3 = _lut_literal(luts)
+    lut3 = F.expr(array_sql(luts))  # n × m × ksub
     qid_lit = F.array(*[F.lit(q) for q in qids])
     nq = len(qids)
     scan = codes_df.select(
@@ -318,40 +171,6 @@ def pq_topk(
 # FAISS IVFPQ layout, lake-native)
 
 
-def _pq_lloyd_np(resid, seeds, m, max_iter):
-    """driver-side fused-subspace PQ Lloyd over an in-memory residual
-    sample — bitwise-identical to _lloyd_rounds on the same vectors
-    (see clustering.lloyd_np for the arithmetic argument; the global
-    all-subspaces convergence check mirrors the distributed loop)."""
-    import numpy as np
-
-    v = np.asarray([list(map(float, x)) for x in resid], dtype=np.float64)
-    dim = v.shape[1]
-    assert dim % m == 0
-    dsub = dim // m
-    books = [
-        [list(map(float, s))[j * dsub : (j + 1) * dsub] for s in seeds]
-        for j in range(m)
-    ]
-    for _ in range(max_iter):
-        new_books = [[list(c) for c in book] for book in books]
-        for j, book in enumerate(books):
-            sub = v[:, j * dsub : (j + 1) * dsub]
-            cl = np.argmin(_sq_dist_np(sub, book), axis=1)
-            q = np.floor(sub * 1e10).astype(np.int64)
-            for ci in np.unique(cl):
-                sel = q[cl == ci]
-                cnt = sel.shape[0]
-                sums = sel.sum(axis=0)
-                new_books[j][int(ci)] = [
-                    float(int(s)) / cnt / 1e10 for s in sums
-                ]
-        if new_books == books:
-            break
-        books = new_books
-    return books
-
-
 def build_ivfpq_index(
     df: DataFrame,
     vec_col: str,
@@ -386,18 +205,19 @@ def build_ivfpq_index(
     assign+residual+encode+write pass over literal centroids/books.
     """
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import (
-        assign_clusters,
+        _md5_head,
+        _vec_base,
         assign_np,
-        lloyd_np,
+        lloyd_train_np,
     )
 
     # SAMPLE training (the FAISS-standard shape, r5): ONE TakeOrdered
     # job collects the `train_sample` smallest-md5(id) vectors; BOTH
-    # quantizers train on the driver over that sample with the
-    # bitwise-fold numpy Lloyd replicas (clustering.lloyd_np /
-    # _pq_lloyd_np). Whenever the sample covers the whole corpus —
+    # quantizers train on the driver over that sample with
+    # clustering.lloyd_train_np, the driver-side round of the same
+    # Lloyd trainer. Whenever the sample covers the whole corpus —
     # every correctness-gate SF — the centroids and codebooks are
-    # byte-identical to the distributed trainers, so the oracle is
+    # byte-identical to the distributed trainer, so the oracle is
     # unchanged; past the sample size, training on a bounded
     # deterministic sample IS the 100 TB design (you never Lloyd over
     # the full corpus to build an index — FAISS trains on ~max(k*39,
@@ -406,17 +226,8 @@ def build_ivfpq_index(
     # (sample collect, then one fused map-only assign+residual+
     # encode+write pass — no persist, nothing iterative cluster-side).
     n_take = max(train_sample, n_cells, ksub)
-    sample_rows = (
-        df.select(
-            F.md5(F.col(id_col).cast("string")).alias("h"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        )
-        .orderBy("h")
-        .limit(n_take)
-        .collect()
-    )
-    sample = [list(r["_v"]) for r in sample_rows]
-    cents = lloyd_np(sample, sample[:n_cells], max_iter)
+    sample = _md5_head(_vec_base(df, vec_col, id_col), n_take)
+    cents = lloyd_train_np(sample, sample[:n_cells], 1, max_iter)[0]
     asg = assign_np(sample, cents)
     resid_sample = [
         [x - c for x, c in zip(v, cents[int(a)])]
@@ -424,7 +235,7 @@ def build_ivfpq_index(
     ]
     # PQ seeds: residuals of the ksub smallest-md5 ids, exactly as the
     # distributed trainer would have collected them
-    books = _pq_lloyd_np(resid_sample, resid_sample[:ksub], m, max_iter)
+    books = lloyd_train_np(resid_sample, resid_sample[:ksub], m, max_iter)
 
     # a BUILD is a full rebuild: wipe any prior index (stale segments
     # or an incompatible layout must not survive into the new one —
@@ -472,7 +283,7 @@ def _write_ivfpq_codes(
     from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import write_json_meta
 
     assigned = assign_clusters(df, vec_col, id_col, cents)
-    cmat = _centroid_array(cents)
+    cmat = F.expr(array_sql(cents))
     resid = assigned.select(
         "id",
         F.col("cluster").alias("cell"),
@@ -576,7 +387,7 @@ def query_ivfpq_index(
             ]
             probes.append((int(qid), ci, lut))
 
-    lut3 = _lut_literal([lut for _, _, lut in probes])
+    lut3 = F.expr(array_sql([lut for _, _, lut in probes]))
     probes_df = spark.createDataFrame(
         [(q, c, i + 1) for i, (q, c, _) in enumerate(probes)],
         "query_id int, cell int, li int",
@@ -645,15 +456,6 @@ def train_sq8(df: DataFrame, vec_col: str, dim: int = 64):
     return mins, ranges
 
 
-def _dbl_array(vals):
-    """Literal double array via one parsed SQL string (repr-cast
-    round-trips every bit; single parse beats dim py4j calls — the
-    clustering._centroid_array rationale)."""
-    return F.expr(
-        "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in vals) + ")"
-    )
-
-
 def sq8_code_expr(vec_col, mins: list[float], ranges: list[float]):
     """uint8 code array: clamp(floor((x - min) * 255 / range), 0, 255)
     per dimension. Every step is ONE correctly-rounded IEEE op
@@ -661,7 +463,7 @@ def sq8_code_expr(vec_col, mins: list[float], ranges: list[float]):
     disagree on) and integer clamps — identical in Spark and DuckDB.
     Zero-range dimensions collapse to code 0. Runs in whole-stage
     codegen; the literal arrays constant-fold."""
-    mn, rg = _dbl_array(mins), _dbl_array(ranges)
+    mn, rg = F.expr(array_sql(mins)), F.expr(array_sql(ranges))
     v = F.transform(vec_col, lambda x: x.cast("double"))
     diff = F.zip_with(v, mn, lambda x, m: x - m)
     zero = F.lit(0).cast("long")

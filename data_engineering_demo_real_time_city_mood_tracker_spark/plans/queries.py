@@ -3097,7 +3097,6 @@ def q_embedding_outlier_score(spark, sf_dir):
     hash-gated. Map-only after training: centroids are plan literals,
     the distance is one codegen fold per row."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import (
-        _centroid_array,
         assign_clusters,
         kmeans,
     )
@@ -3105,7 +3104,7 @@ def q_embedding_outlier_score(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     _, cents = kmeans(emb, "embedding", "vec_id", k=8, max_iter=3)
     assigned = assign_clusters(emb, "embedding", "vec_id", cents)
-    cmat = _centroid_array(cents)
+    cmat = F.expr(V.array_sql(cents))
     dist = F.aggregate(
         F.zip_with(
             F.col("vec"),
@@ -10779,8 +10778,8 @@ def q_sq8_recon_error(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     mins, ranges = pq.train_sq8(emb, "embedding", 64)
-    mn = pq._dbl_array(mins)
-    rg = pq._dbl_array(ranges)
+    mn = F.expr(V.array_sql(mins))
+    rg = F.expr(V.array_sql(ranges))
     code = pq.sq8_code_expr(F.col("embedding"), mins, ranges)
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     adj = F.zip_with(

@@ -427,47 +427,63 @@ def test_fused_pq_training_equals_sequential_kmeans(spark):
     assert fused == seq
 
 
-def test_driver_side_seeding_bitwise_equals_collect_path(spark):
-    """build_ivfpq_index assigns and derives the PQ residuals on the
-    driver (py_assign/py_sq_dist). Pins the contract that makes that
-    safe: the python fold/argmin replicas match the JVM Column
-    expressions bitwise."""
+def test_driver_side_seeding_bitwise_equals_collect_path(spark, tmp_path):
+    """build_ivfpq_index trains both quantizers on the driver
+    (clustering.lloyd_train_np over the md5-ordered sample). When the
+    sample covers the frame, its centroids must equal kmeans() and its
+    codebooks must equal train_pq() over the Spark-built residual frame,
+    bit for bit: the driver-side round of the Lloyd trainer agrees with
+    the distributed one."""
     from pyspark.sql import functions as F
 
+    from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import array_sql
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import pq
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import (
         assign_clusters,
-        py_assign,
-        py_sq_dist,
+        kmeans,
     )
+    from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import read_json_meta
 
     rows = [
         (i, [float(((i * 29 + j * 7) % 23) - 11) / 3.0 for j in range(8)])
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = [[float(((c * 11 + j * 3) % 19) - 9) / 7.0 for j in range(8)] for c in range(4)]
+    path = str(tmp_path / "ivfpq")
+    pq.build_ivfpq_index(
+        df, "embedding", "vec_id", path, n_cells=4, m=2, ksub=4, max_iter=3,
+        train_sample=100,
+    )
+    meta = read_json_meta(spark, f"{path}/meta.json")
 
-    # the python replica matches the JVM fold+argmin on every row
-    jvm_assign = {
-        r.id: (r.cluster, list(r.vec))
-        for r in assign_clusters(df, "embedding", "vec_id", cents).collect()
-    }
-    for i, (cl, vec) in jvm_assign.items():
-        assert py_assign(vec, cents) == cl, f"argmin diverged on id {i}"
-        d = F.aggregate(
-            F.zip_with(
-                F.transform("embedding", lambda x: x.cast("double")),
-                F.array(*[F.lit(c) for c in cents[0]]),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    spark_d = {
-        r.vec_id: r.d for r in df.select("vec_id", d.alias("d")).collect()
-    }
-    for i, (_, vec) in jvm_assign.items():
-        assert py_sq_dist(vec, cents[0]) == spark_d[i], f"fold diverged on id {i}"
+    _, cents = kmeans(df, "embedding", "vec_id", k=4, max_iter=3)
+    assert meta["centroids"] == cents  # exact float equality, not approx
+
+    assigned = assign_clusters(df, "embedding", "vec_id", cents)
+    cmat = F.expr(array_sql(cents))
+    resid = assigned.select(
+        "id",
+        F.zip_with(
+            "vec", F.element_at(cmat, F.col("cluster") + 1), lambda x, c: x - c
+        ).alias("res"),
+    )
+    books = pq.train_pq(resid, "res", "id", m=2, ksub=4, max_iter=3)
+    assert meta["codebooks"] == books
+
+
+def test_array_sql_text_is_exact():
+    """functions.vectors.array_sql: doubles round-trip through
+    CAST('repr' AS DOUBLE), BIGINTs print as nL, nesting follows the
+    list (the text every literal centroid, codebook, LUT and weight
+    array in a plan is built from)."""
+    from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import (
+        array_sql,
+        i64_sql,
+    )
+
+    assert array_sql([0.1, 2]) == "array(CAST('0.1' AS DOUBLE),CAST('2.0' AS DOUBLE))"
+    assert array_sql([[1, -2], [3]], i64_sql) == "array(array(1L,-2L),array(3L))"
+    assert array_sql([[[0.5]], []]) == "array(array(array(CAST('0.5' AS DOUBLE))),array())"
 
 
 def test_bpe_encode_applies_merges_in_rank_order(spark):

@@ -98,8 +98,8 @@ def test_embedding_near_dup_symmetric_threshold(spark):
 
 
 def test_lloyd_np_rounds_bitwise_equal_fold_rounds(spark, sf_dir):
-    """The numpy Lloyd rounds (r5: _round_partials_np /
-    _pq_round_partials_np) must produce BITWISE-identical centroids
+    """The numpy Lloyd round (clustering._round_np) must produce
+    BITWISE-identical centroids
     and codebooks to the Column-expression rounds on the real
     embeddings — sequential-dim accumulation is the same IEEE op
     sequence as the zip_with/aggregate fold, np.argmin's first-min is
@@ -1245,7 +1245,8 @@ def test_ivfpq_append_lifecycle(spark, tmp_path):
     replayed append repairs it in place with no duplicate codes."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators import pq
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import assign_clusters
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.pq import _centroid_array, encode_pq
+    from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import array_sql
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.pq import encode_pq
     from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import read_json_meta
     from pyspark.sql import functions as F
 
@@ -1279,7 +1280,7 @@ def test_ivfpq_append_lifecycle(spark, tmp_path):
     meta = read_json_meta(spark, f"{path}/meta.json")
     cents, books = meta["centroids"], meta["codebooks"]
     assigned = assign_clusters(crawl, "embedding", "vec_id", cents)
-    cmat = _centroid_array(cents)
+    cmat = F.expr(array_sql(cents))
     resid = assigned.select(
         "id", F.col("cluster").alias("cell"),
         F.zip_with("vec", F.element_at(cmat, F.col("cluster") + 1), lambda x, c: x - c).alias("res"),
