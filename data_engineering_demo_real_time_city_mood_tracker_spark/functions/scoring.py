@@ -17,7 +17,35 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Weather taxonomy — spark_mood_tracker.py:81-90 / weather_producer.py:17-40.
+# Weather code taxonomy — order matches the reference producer's map
+# (weather_producer.py:17-40); the weather producers and the registry's
+# weather decode pick codes by index into it.
+WEATHER_CODES = [
+    "clear",
+    "mainly_clear",
+    "partly_cloudy",
+    "overcast",
+    "fog",
+    "depositing_rime_fog",
+    "drizzle_light",
+    "drizzle_moderate",
+    "drizzle_dense",
+    "rain_slight",
+    "rain_moderate",
+    "rain_heavy",
+    "snow_slight",
+    "snow_moderate",
+    "snow_heavy",
+    "rain_showers_slight",
+    "rain_showers_moderate",
+    "rain_showers_heavy",
+    "snow_showers_slight",
+    "snow_showers_heavy",
+    "thunderstorm",
+    "thunderstorm_with_hail",
+]
+
+# Mood rule weather classes — spark_mood_tracker.py:81-90.
 RELAXING_WEATHER = ["clear", "mainly_clear", "partly_cloudy"]
 STRESSFUL_WEATHER = [
     "overcast",
@@ -105,4 +133,15 @@ def traffic_condition_sql(speed: str) -> str:
     return (
         f"CASE WHEN {speed} < 30 THEN 'heavy' "
         f"WHEN {speed} < 60 THEN 'moderate' ELSE 'light' END"
+    )
+
+
+def valid_mood_record() -> Column:
+    """The mood export's validity predicate (ref load_to_postgres):
+    non-null event_time, intersection and weather, avg_speed > 0."""
+    return (
+        F.col("event_time").isNotNull()
+        & F.col("intersection").isNotNull()
+        & F.col("weather").isNotNull()
+        & (F.col("avg_speed") > 0)
     )

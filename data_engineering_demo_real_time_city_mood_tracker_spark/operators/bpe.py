@@ -20,15 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions import text as T
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import small_shuffle, spread
 
 
 def word_frequencies(docs: DataFrame, text_col: str) -> DataFrame:
     """(word, weight) — the one corpus-wide shuffle (map-side combined).
-    ``_spread`` first: a single-split scan would pin the tokenize +
-    explode map stage to one core (dedup._spread's guard)."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
+    ``spread`` first: a single-split scan would pin the tokenize +
+    explode map stage to one core."""
 
-    toked = _spread(docs).select(T.tokens(F.col(text_col)).alias("_toks"))
+    toked = spread(docs).select(T.tokens(F.col(text_col)).alias("_toks"))
     return (
         toked.select(F.explode("_toks").alias("word"))
         .filter(F.length("word") > 0)
@@ -102,8 +102,6 @@ def train_bpe_merge_list(
     trainer already holds — the apply-side callers (encode, fertility)
     need plan literals, so round-tripping the 8-row list through
     createDataFrame → orderBy → collect was two pure-overhead jobs."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import _no_aqe
-
     from contextlib import ExitStack
 
     words = word_frequencies(docs, text_col).withColumn(
@@ -112,7 +110,7 @@ def train_bpe_merge_list(
     words = words.persist()
     merges: list[tuple[int, str, str, int]] = []
     live, prev = words, None
-    # _no_aqe scoped to rounds 2+ (r10): from round 2 every round's job
+    # small_shuffle scoped to rounds 2+ (r10): from round 2 every round's job
     # runs over the CACHED vocabulary frame — bounded by distinct
     # words, tiny at any corpus scale — so AQE's per-exchange
     # re-planning and the session's corpus-sized shuffle.partitions are
@@ -129,7 +127,7 @@ def train_bpe_merge_list(
         with ExitStack() as scope:
             for rank in range(1, n_merges + 1):
                 if rank == 2:
-                    scope.enter_context(_no_aqe(docs.sparkSession))
+                    scope.enter_context(small_shuffle(docs.sparkSession))
                 # this collect is the round's ONLY job: it computes the pair
                 # counts AND populates `live`'s cache as a side effect, so
                 # no separate materialization pass is needed (a per-round
@@ -181,9 +179,8 @@ def encode_bpe(
     re-assemble with sort_array over (pos, subs) structs.
     """
 
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
 
-    toked = _spread(docs).select(
+    toked = spread(docs).select(
         F.col(id_col).alias("id"),
         F.filter(T.tokens(F.col(text_col)), lambda w: F.length(w) > 0).alias("_toks"),
     )
@@ -242,9 +239,8 @@ def subword_counts(
     and a group-keyed agg with map-side combine — none carries
     subword arrays."""
 
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
 
-    inst = _spread(docs).select(
+    inst = spread(docs).select(
         F.col(group_col).alias("grp"),
         F.explode(
             F.filter(T.tokens(F.col(text_col)), lambda w: F.length(w) > 0)

@@ -32,29 +32,7 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors i
     array_sql,
     i64_sql,
 )
-from data_engineering_demo_real_time_city_mood_tracker_spark.session import scoped_conf
-
-
-def _no_aqe(spark):
-    """Scope trainer-friendly shuffle settings around an iterative
-    trainer's tiny fixed-shape aggs.
-
-    - AQE off: AQE re-plans after every shuffle by splitting the query
-      into sub-jobs — pure scheduling overhead when the reduce side is
-      a known k×dim rows (measured: train_pq 3 rounds 4.1 s → 2.9 s at
-      bench SF).
-    - 8 reduce partitions: the trainer's reduce side is ≤ k×dim rows
-      AT ANY CORPUS SCALE (map-side partial agg collapses each task to
-      k rows first), so the session's corpus-sized shuffle.partitions
-      buys nothing but task-scheduling latency here.
-
-    Both saved/restored so the session's settings — which ARE right
-    for the corpus-sized queries — are untouched."""
-    keys = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "8",
-    }
-    return scoped_conf(spark, keys)
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import release_after, small_shuffle, spread
 
 
 def _portable_mean(x):
@@ -92,6 +70,22 @@ def _dists_sql(vec_sql: str, centroids: list[list[float]]) -> str:
         f"transform({array_sql(centroids)}, c -> "
         f"aggregate(zip_with({vec_sql}, c, (x, y) -> (x - y) * (x - y)), "
         f"0.0D, (acc, x) -> acc + x))"
+    )
+
+
+def _nearest_codes(books, dsub: int):
+    """array<int>: each row's nearest codeword per subspace of ``_v``
+    (subspace j is the ``dsub``-wide slice j against ``books[j]``),
+    ties to the lowest index. Each distance array is folded once: the
+    argmin reads it through the lambda variable. The one assignment
+    of the Lloyd round and of PQ encoding."""
+    dists = ",".join(
+        _dists_sql(f"slice(_v, {j * dsub + 1}, {dsub})", book)
+        for j, book in enumerate(books)
+    )
+    return F.expr(
+        f"transform(array({dists}), "
+        "d -> cast(array_position(d, array_min(d)) - 1 as int))"
     )
 
 
@@ -379,18 +373,10 @@ def _round_col(base: DataFrame, books, dsub: int):
     cluster, pos) over the posexploded vector — a narrow agg instead
     of a dim-wide one, so codegen stays in one small method and the
     shuffle payload is m × k × dsub partials per map task."""
-    dists = ",".join(
-        _dists_sql(f"slice(_v, {j * dsub + 1}, {dsub})", book)
-        for j, book in enumerate(books)
-    )
-    cl = F.expr(
-        f"transform(array({dists}), "
-        "d -> cast(array_position(d, array_min(d)) - 1 as int))"
-    )
     # cl in its own projection: beside the generator it would be
     # evaluated once per exploded element, not once per row
     rows = (
-        base.select(cl.alias("cl"), "_v")
+        base.select(_nearest_codes(books, dsub).alias("cl"), "_v")
         .select("cl", F.posexplode("_v").alias("p", "x"))
         .withColumn("j", F.expr(f"cast(p div {dsub} as int)"))
         .groupBy(
@@ -467,19 +453,17 @@ def lloyd_train(
     numpy already wins 16-19% at k=32/sf1), Column rounds at small k
     (the per-round mapInPandas overhead regressed the k=8 bench
     trainers 1.2-1.9× at sf0.1 when numpy was unconditional)."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
-
     # single-file corpora would otherwise run every round's distance
     # math on one core; a no-op at real scale (scan splits > cores
     # already). The projection is NOT persisted: measured at sf0.1 the
     # cache materialization costs more than the per-round re-scan it
     # saves (1.5 s → 2.3 s), and at real scale the training input is a
     # bounded sample.
-    base = _vec_base(_spread(df), vec_col, id_col)
+    base = _vec_base(spread(df), vec_col, id_col)
     if np_rounds is None:
         np_rounds = k > _LITERAL_K_MAX
     round_fn = _round_np if np_rounds else _round_col
-    with _no_aqe(df.sparkSession):
+    with small_shuffle(df.sparkSession):
         seeds = _md5_head(base, k)
         return _lloyd(seeds, m, max_iter, lambda books, dsub: round_fn(base, books, dsub))
 
@@ -742,7 +726,6 @@ def kcenter_select(df: DataFrame, vec_col: str, id_col: str, k: int = 8,
         [(int(r), int(i), int(d)) for r, i, d, _ in chosen],
         "sel_rank long, vec_id long, dist_fp long",
     )
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import release_after
 
     out = (
         meta.join(counts, "sel_rank", "left")
@@ -868,6 +851,5 @@ def mmr_select(df: DataFrame, vec_col: str, id_col: str, k: int = 8):
         [(r, i, rl, sc) for r, i, rl, sc in chosen],
         "sel_rank long, vec_id long, rel_fp long, mmr_fp long",
     ).orderBy("sel_rank")
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import release_after
 
     return release_after(out, base)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions import vectors
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import fingerprint
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import release_after, spread
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -24,7 +25,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     shuffle tiny. Returns the surviving rows' ids + the group size.
     """
     return (
-        _spread(df)
+        spread(df)
         .select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
         .groupBy("fp")
         .agg(
@@ -221,40 +222,6 @@ def containment_pairs(
     )
 
 
-def set_pair_measures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    max_df: int | None = 50,
-) -> DataFrame:
-    """BOTH set-similarity measures — Jaccard and Broder containment —
-    from ONE shingle front end and ONE candidate join.
-
-    :func:`ngram_jaccard_pairs` and :func:`containment_pairs` share
-    their entire plan up to the pair-keyed overlap count (tokenize →
-    shingle explode → hot-shingle cap → shingle-keyed self-join →
-    (id_a, id_b) agg); only the final scoring expression differs. A
-    pipeline that wants both measures (symmetric near-dups AND
-    quote/boilerplate containment — the standard corpus-cleaning
-    combination) should call this instead of both operators: measured
-    at sf0.1, the fused plan runs ~9.3 s vs ~12.1 s for the two
-    separate queries (the shared front end + pair join is ~25% of the
-    total, paid once instead of twice).
-
-    Emits (id_a, id_b, jaccard, containment) for every candidate pair
-    sharing ≥1 (post-cap) shingle, id_a < id_b — filter on either
-    column downstream. Same two-shuffle scale shape as the parents;
-    registry-level per-query gates keep the parents registered (each
-    harness isolates queries, so cross-QUERY sharing cannot land —
-    the fusion is the user-facing API for one-pass pipelines).
-    """
-    sh = _sized_shingle_rows(df, text_col, id_col, k, max_df)
-    return _overlap_counts(sh, _shared_shingle()).select(
-        "id_a", "id_b", _jaccard().alias("jaccard"), _containment().alias("containment")
-    )
-
-
 def repeated_span_mass(
     df: DataFrame, text_col: str, id_col: str, k: int = 5
 ) -> DataFrame:
@@ -434,10 +401,10 @@ def dedup_paragraphs_keepfirst(
     # token array bound in its own (multi-referenced) projection — an
     base, _, segs = _word_segments(df, text_col, id_col, seg_words)
     # seg_rows feeds BOTH the first-occurrence agg and the join back —
-    # persist so the corpus is segmented+hashed once; _spread so a
+    # persist so the corpus is segmented+hashed once; spread so a
     # single parquet split doesn't pin the explode to one core.
     seg_rows = (
-        _spread(base)
+        spread(base)
         .select("doc_id", F.posexplode(segs).alias("pos", "seg"))
         .withColumn("h", F.md5("seg"))
         .drop("seg")
@@ -544,11 +511,11 @@ def dedup_exact_substrings(
         lambda i: F.array_join(F.slice(w, i + 1, min_len), " "),
     )
     # occ feeds BOTH the stats agg and the join back — persist it so
-    # the corpus is sliding-gram-hashed once, not twice, and _spread
+    # the corpus is sliding-gram-hashed once, not twice, and spread
     # first so a single parquet split doesn't pin the explode+md5 to
     # one core (the repo-wide single-file-input pattern).
     occ = (
-        _spread(base)
+        spread(base)
         .select("doc_id", F.posexplode(grams).alias("pos", "g"))
         .withColumn("h", F.md5("g"))
         .drop("g")
@@ -626,53 +593,13 @@ def dedup_exact_substrings(
     )
 
 
-def release_after(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize a BOUNDED result frame once (eager localCheckpoint)
-    and unpersist the cached intermediates that fed it, returning the
-    checkpointed frame. Closes the r4-ADVICE cache leak: DataFrame
-    ``persist`` registers in the session CacheManager and is NEVER
-    reclaimed by the ContextCleaner (that only collects unreferenced
-    RDDs/broadcasts), so a long registry run accumulates every
-    trainer's feature cache until explicit unpersist. Only use where
-    ``result`` is strictly bounded (top-k frames, k-row metadata) —
-    the checkpoint stores the rows in executor storage, so a
-    corpus-sized result would trade a cache leak for a full
-    materialization."""
-    out = result.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure at least defaultParallelism partitions before expensive
-    per-row compute. A tiny scan (one small parquet split) otherwise
-    pins the whole shingle/hash pipeline to one core; at real scale
-    inputs already have more splits than cores and this is a no-op.
-
-    Uses the input-file count as the partition proxy: ``df.rdd`` would
-    be exact but costs ~1 s of Python-RDD conversion per plan, while
-    the file listing is already cached by the file index. File count
-    underestimates splits (large files split further), so this only
-    ever adds a repartition that AQE-scale jobs don't need."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files < p:
-        return df.repartition(p)
-    return df
-
-
 def _toked(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, _toks) with the token array bound in its own projection —
     every downstream expression references ``_toks``, never
     ``tokens(text)`` inline (see shingles_from_tokens docstring)."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import tokens
 
-    return _spread(df).select(
+    return spread(df).select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks")
     )
 
@@ -721,22 +648,6 @@ def minhash_signatures(
     a map-only stage — the old explode→groupBy shuffle is gone.
     """
     return _shingle_arrays(df, text_col, id_col, k).select("id", *_sig_cols(num_hashes))
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """LSH candidate pairs: band signature = md5(concat of r minhashes);
-    pair is a candidate if any band matches. P(candidate) =
-    1-(1-s^r)^b. Shuffle keyed on (band, signature).
-    """
-    sig = minhash_signatures(df, text_col, id_col, k, bands * rows_per_band)
-    return _lsh_candidates_from_signatures(sig, bands, rows_per_band)
 
 
 def _band_signatures(
@@ -998,7 +909,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, nbits: int = 32) -> DataF
     """
     from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import tokens
 
-    tok = _spread(df).select(
+    tok = spread(df).select(
         F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("tok")
     )
     h = tok.select("id", F.xxhash64("tok").alias("h"))
@@ -1174,7 +1085,7 @@ def build_dedup_index(
     rows_per_band: int = 2,
 ) -> None:
     """Build a PERSISTENT dedup index — the lake-native twin of
-    :func:`build_ivf_index` for the text-dedup path:
+    :func:`pq.build_ivfpq_index` for the text-dedup path:
 
         path/fingerprints/  (fp, id)        exact-dup membership
         path/postings/      (band, sig, id) minhash-LSH postings
@@ -1292,33 +1203,16 @@ def query_dedup_index(
     ContextCleaner-reclaimed once the caller drops it — no
     CacheManager leak in long registry/streaming runs.
 
-    Batch-size contract: probe batches are crawl-sized (not the
-    standing corpus), so the exact-pair frame — batch×exact-match
-    bounded — fits a broadcast. Callers probing a pathological batch
-    (bulk re-crawl of a heavily duplicated corpus) should set
-    ``spark.graft.dedup.broadcastExactPairs=false`` to keep the
-    sort-merge anti join; results are identical either way.
+    The exact-pair anti join carries no broadcast hint: AQE sizes the
+    batch×exact-match bounded frame at runtime, so a crawl-sized batch
+    gets a broadcast join and a bulk re-crawl of a heavily duplicated
+    corpus keeps the sort-merge join instead of failing a forced
+    broadcast; results are identical either way.
     """
     result, _ = _query_dedup_index_with_cleanup(
         spark, path, batch, text_col, id_col, threshold
     )
     return result
-
-
-def _maybe_broadcast_pairs(spark, pairs: DataFrame) -> DataFrame:
-    """Broadcast hint for the probe's exact-pair anti join, gated by
-    ``spark.graft.dedup.broadcastExactPairs`` (default true). The frame
-    is batch×exact-match bounded under the crawl-sized-batch contract;
-    the conf is the documented escape hatch for bulk re-crawls of
-    heavily duplicated corpora, where the bound degenerates to the
-    batch size and a forced broadcast would fail instead of falling
-    back to sort-merge."""
-    flag = "true"
-    try:
-        flag = spark.conf.get("spark.graft.dedup.broadcastExactPairs", "true")
-    except Exception:
-        pass
-    return F.broadcast(pairs) if str(flag).lower() != "false" else pairs
 
 
 def _query_dedup_index_with_cleanup(
@@ -1417,18 +1311,9 @@ def _query_dedup_index_with_cleanup(
         # byte-identical, so they produce identical near rows —
         # collapse them on the match-bounded frame
         .dropDuplicates(["doc_id", "match_id"])
-        # exact_pairs is a checkpointed RDD (no stats → the planner
-        # falls back to sort-merge for the anti join, shuffling+sorting
-        # both match-bounded frames). It is batch×exact-match bounded —
-        # the same bound as the near frame itself — so broadcast it by
-        # default. The bound rests on the probe contract (crawl-sized
-        # batches); a pathological batch — a bulk re-crawl of a heavily
-        # duplicated corpus — makes exact_pairs grow with the batch and
-        # a FORCED broadcast would fail hard at broadcastTimeout /
-        # driver memory instead of degrading. Such callers set
-        # spark.graft.dedup.broadcastExactPairs=false to keep the
-        # sort-merge anti join (same rows, no broadcast build).
-        .join(_maybe_broadcast_pairs(spark, exact_pairs),
-              ["doc_id", "match_id"], "left_anti")
+        # exact_pairs is a checkpointed RDD with no static stats, so the
+        # planner starts from sort-merge; AQE measures the materialized
+        # frame and switches to a broadcast join when it is small
+        .join(exact_pairs, ["doc_id", "match_id"], "left_anti")
     )
     return exact.unionByName(near), [base, exact_pairs]

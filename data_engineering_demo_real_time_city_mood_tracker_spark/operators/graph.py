@@ -15,25 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_engineering_demo_real_time_city_mood_tracker_spark.session import scoped_conf
-
-
-def _vertex_sized_shuffle(spark, n_vertices: int):
-    """Scope shuffle settings for power-iteration rounds, sized by the
-    DATA the rounds actually move: every round's reduce side is a
-    VERTEX-sized frame (ranks, inflows), not the corpus, so partition
-    count follows n/65536 (floor 8) instead of the session's
-    corpus-sized default, and AQE turns off below 10^6 vertices —
-    its per-shuffle sub-job re-planning is pure scheduling overhead
-    on frames that small (measured: pagerank_portable at sf0.1
-    7.2 s → 4.3 s), while at larger n its coalescing pays and stays
-    on. Saved/restored so corpus-sized queries keep their settings."""
-    parts = max(8, min(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                       (n_vertices + 65535) // 65536))
-    keys = {"spark.sql.shuffle.partitions": str(parts)}
-    if n_vertices < 1_000_000:
-        keys["spark.sql.adaptive.enabled"] = "false"
-    return scoped_conf(spark, keys)
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import release_after, small_shuffle
 
 
 def connected_components(
@@ -182,94 +164,6 @@ def connected_components_star(
         if rid in live:
             live[rid].unpersist()
     return labels
-
-
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
-    """(id, rank) PageRank over a DIRECTED edge list (symmetrize first
-    for undirected graphs). The standard power iteration as the
-    GraphX/Pregel DataFrame pattern: each round joins ranks to edges
-    on src (contribution = rank/out-degree), sums contributions per
-    dst, and applies the damping update; dangling vertices (no
-    out-edges) redistribute their mass uniformly so the ranks keep
-    summing to 1. Per-round cost is one vertex-keyed join + one
-    aggregation; ``localCheckpoint`` truncates lineage like
-    :func:`connected_components`. At 100 TB scale the rank frame is
-    vertex-sized — the edges frame is the big side and it is scanned
-    once per round from its (persisted) shuffle-partitioned form.
-    """
-    spark = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).persist()
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    n = verts.count()
-    if n == 0:
-        for fr in (verts, outdeg, e):
-            fr.unpersist()
-        return spark.createDataFrame([], "id long, rank double")
-    ranks = verts.select("id", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    try:
-        with _vertex_sized_shuffle(spark, n):
-            for _ in range(iterations):
-                with_deg = ranks.join(
-                    outdeg, ranks.id == outdeg.src, "left"
-                ).select("id", "rank", "outdeg")
-                # dangling mass (ranks of vertices with no out-edges)
-                # rides a broadcast 1-row frame instead of a per-round
-                # driver collect: the whole round stays ONE lazy plan, no
-                # extra job per iteration (measured 13.8 s → 4.3 s on the
-                # 5k-vertex kNN-graph query at 5 iterations)
-                dangling = with_deg.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("outdeg").isNull(), F.col("rank"))),
-                        F.lit(0.0),
-                    ).alias("_dangling")
-                )
-                contribs = (
-                    with_deg.filter(F.col("outdeg").isNotNull())
-                    .join(e, F.col("id") == e.src)
-                    .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-                    .groupBy("dst")
-                    .agg(F.sum("c").alias("inflow"))
-                )
-                ranks = (
-                    verts.join(contribs, verts.id == contribs.dst, "left")
-                    .crossJoin(F.broadcast(dangling))
-                    .select(
-                        "id",
-                        (
-                            F.lit(base)
-                            + F.lit(damping)
-                            * (
-                                F.coalesce(F.col("inflow"), F.lit(0.0))
-                                + F.col("_dangling") / n
-                            )
-                        ).alias("rank"),
-                    )
-                    .localCheckpoint(eager=False)
-                )
-            # eager checkpoint, NOT persist: blocks back the returned
-            # frame lineage-free (so the input unpersists below are
-            # safe) and the ContextCleaner reclaims them once the
-            # caller drops the frame — a persist here would sit in the
-            # CacheManager forever (the r4-ADVICE leak class).
-            ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        verts.unpersist()
-        outdeg.unpersist()
-        e.unpersist()
-    return ranks
 
 
 def cooccurrence_edges(
@@ -524,7 +418,7 @@ def pagerank_fixed_point(
     scale: int = 10**12,
 ) -> DataFrame:
     """(id, rank_fp) PageRank over the symmetrized graph in FIXED-POINT
-    integer arithmetic — the hash-gateable twin of :func:`pagerank`.
+    integer arithmetic, so it can be hash-gated.
 
     Float PageRank can't ride a SQL oracle: the per-vertex inflow sums
     doubles in partition order. Quantizing rank to an integer at
@@ -537,10 +431,9 @@ def pagerank_fixed_point(
     (every vertex has out-edges), so the dangling-mass machinery drops
     out entirely.
 
-    Scale shape matches :func:`pagerank`: per round one vertex-keyed
-    join + one agg, rank frame vertex-sized, lineage truncated via
-    localCheckpoint; the single driver scalar is n (one count, before
-    the loop)."""
+    Scale shape: per round one vertex-keyed join + one agg, rank frame
+    vertex-sized, lineage truncated via localCheckpoint; the single
+    driver scalar is n (one count, before the loop)."""
     e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     und = e0.union(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -559,7 +452,7 @@ def pagerank_fixed_point(
     ranks = deg.select(
         F.col("src").alias("id"), F.lit(scale // n).cast("long").alias("r")
     )
-    with _vertex_sized_shuffle(spark, n):
+    with small_shuffle(spark, n):
         for _ in range(rounds):
             c = (
                 contrib_base.join(
@@ -662,8 +555,6 @@ def common_neighbor_link_prediction(
        frame's lineage is truncated at a LogicalRDD and further
        composition happens on the k-row result, not a lazy plan.
     """
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import release_after
-
     # the edge plan feeds sym (×2), the wedge self-join (×2), the
     # anti-join, and both degree lookups — persist it once instead of
     # re-running the co-occurrence builder's distinct+self-join ~7×;

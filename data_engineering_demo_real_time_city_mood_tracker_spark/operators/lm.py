@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import hex4, tokens
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import array_sql, i64_sql
-from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread, _toked
+from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _toked
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import release_after, spread
 
 # Quantization scale for conditional probabilities / likelihood
 # ratios (every ratio is ≤ 1, so quantized values are ≤ scale and a
@@ -76,7 +77,7 @@ def doc_bigram_counts(docs: DataFrame, text_col: str = "text",
         "transform(slice(_toks, 1, size(_toks) - 1),"
         " (x, i) -> struct(x AS w1, _toks[i + 1] AS w2))"
     )
-    base = _spread(docs).select(
+    base = spread(docs).select(
         F.col(id_col).alias("id"), *carry, _tokens(F.col(text_col)).alias("_toks")
     )
     return (
@@ -164,7 +165,7 @@ def _target_tokens(docs: DataFrame, is_target, text_col: str, id_col: str) -> Da
         .select(F.col(id_col).alias("id"), "_tgt", F.col(text_col).alias("_txt"))
     )
     return (
-        _spread(toked)
+        spread(toked)
         .select("id", "_tgt", tokens(F.col("_txt")).alias("_toks"))
         .select("id", "_tgt", F.explode("_toks").alias("token"))
     )
@@ -458,8 +459,6 @@ def quality_probe_topk(docs: DataFrame, is_positive, k: int = 20,
     doc_id tiebreak (total order). The closing step of the GPT-3-style
     curation recipe: train on labeled exemplars, score the whole
     corpus, keep the head."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import release_after
-
     w, kc, feats, ydf = train_quality_probe(
         docs, is_positive, text_col, id_col, n_buckets, rounds, scale
     )
@@ -518,8 +517,6 @@ def grad_match_select(docs: DataFrame, is_positive, is_val, k: int = 20,
     B-bounded literals plus one ≤(B+1)-row collect; no corpus
     self-join, no new tokenize pass (the trainer's cached feature
     table feeds every aggregate). All caches released on return."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import release_after
-
     fit = train_quality_probe(
         docs, is_positive, text_col, id_col, n_buckets, rounds, scale
     )

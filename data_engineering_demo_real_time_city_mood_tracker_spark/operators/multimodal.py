@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import spread
+
 DECODED_SCHEMA = (
     "media_id long, kind string, n_bytes long, checksum string, "
     "width int, height int, duration_ms int"
@@ -165,13 +167,11 @@ def synthesize_bmp_media(
 ) -> DataFrame:
     """(media_id, kind, payload) with REAL BMP bytes, Arrow-batched.
 
-    Input is ``_spread`` first: the per-row Python synthesis (and the
+    Input is ``spread`` first: the per-row Python synthesis (and the
     decode stage that always follows it) is the expensive part, and a
     single-split scan would otherwise pin it to one core — the same
     guard the shingle pipelines use."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
-
-    df = _spread(df)
+    df = spread(df)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -341,10 +341,8 @@ def synthesize_wav_media(
     df: DataFrame, id_col: str, group_col: str, variant_col: str
 ) -> DataFrame:
     """(media_id, kind, payload) with REAL WAV bytes, Arrow-batched.
-    ``_spread`` first — see :func:`synthesize_bmp_media`."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
-
-    df = _spread(df)
+    ``spread`` first — see :func:`synthesize_bmp_media`."""
+    df = spread(df)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

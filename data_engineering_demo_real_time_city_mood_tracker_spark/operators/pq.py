@@ -20,8 +20,8 @@ Spark shape:
   the 4-byte codes, not the 256-byte vectors); per-query LUTs are
   driver-computed (m × ksub flops) and ride as one literal.
 - at 100 TB, compose with IVF: partition the codes table by coarse
-  cell (build_ivf_index) so ADC scans only the probed cells. This
-  module keeps the flat scan as the verifiable baseline.
+  cell (build_ivfpq_index) so ADC scans only the probed cells. The
+  flat scan stays as the verifiable baseline.
 
 Determinism: subspace k-means inherits clustering.py's md5-seeded
 init + exact-decimal updates; assignment ties break to the lowest
@@ -36,17 +36,18 @@ from pyspark.sql import functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import array_sql
 from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import (
-    _dists_sql,
+    _nearest_codes,
     lloyd_train,
 )
 
 _EMPTY_TOPK = "query_id int, corpus_id long, approx_dist double, rnk long"
 
 
-# PQ's distance arithmetic has ONE definition — clustering._dists_sql
-# (the 0.0-seeded index-order zip_with/aggregate fold) — shared by
-# training and encoding; train and encode disagreeing there would
-# silently corrupt every code.
+# PQ's distance arithmetic and codeword assignment have ONE definition
+# each — clustering._dists_sql (the 0.0-seeded index-order
+# zip_with/aggregate fold) and clustering._nearest_codes (its argmin per
+# subspace) — shared by training and encoding; train and encode
+# disagreeing there would silently corrupt every code.
 
 
 def train_pq(
@@ -89,13 +90,7 @@ def encode_pq(
     dsub = len(codebooks[0][0])
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     out = df.select(F.col(id_col).alias("id"), *carry, vec.alias("_v"))
-    codes = []
-    for j, book in enumerate(codebooks):
-        dists = F.expr(_dists_sql(f"slice(_v, {j * dsub + 1}, {dsub})", book))
-        codes.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    return out.select("id", *carry, F.array(*codes).alias("code"))
+    return out.select("id", *carry, _nearest_codes(codebooks, dsub).alias("code"))
 
 
 def pq_topk(

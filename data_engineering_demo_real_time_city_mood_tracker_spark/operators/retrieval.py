@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import release_after, spread
+
 K1 = 1.2
 B = 0.75
 
@@ -126,7 +128,6 @@ def bm25_rank(
         # eager checkpoint truncates it at a LogicalRDD); the caller
         # owns tf's unpersist
         return out
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import release_after
 
     return release_after(out, tf)
 
@@ -239,7 +240,6 @@ def build_text_index(
     from pyspark.sql import Observation
 
     from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import tokens
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import _spread
     from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import write_json_meta
 
     spark = docs.sparkSession
@@ -257,7 +257,7 @@ def build_text_index(
     _fs_delete(spark, f"{path}/postings/seg={segment}")
     obs = Observation()
     base = (
-        _spread(docs)
+        spread(docs)
         .select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_toks"))
         .observe(
             obs,

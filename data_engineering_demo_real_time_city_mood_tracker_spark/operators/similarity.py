@@ -244,101 +244,6 @@ def lsh_ann_topk(
     return _rank_pairs(pairs, k)
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    n_centroids: int = 8,
-    n_probe_default: int = 2,
-    max_iter: int = 3,
-) -> list[list[float]]:
-    """Build a PERSISTENT IVF index: train k-means centroids, assign
-    the corpus, and write it as a lake-native layout:
-
-        path/meta.json    centroids + params (zero-job sidecar)
-        path/cells/       corpus vectors partitioned BY CLUSTER
-                          (``cluster=<c>/`` hive directories)
-
-    The partitioning is the index: probing n cells at query time is a
-    partition filter, so the scan physically reads only those cells'
-    directories — storage-level cell selection, no post-hoc filter
-    over the full corpus. Build once, query many (the vector-DB usage
-    pattern); rebuilds are full rewrites, matching IVF's batch-index
-    nature. Returns the trained centroids.
-    """
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import (
-        assign_clusters,
-        kmeans,
-    )
-
-    from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import write_json_meta
-
-    _, cents = kmeans(corpus, vec_col, id_col, k=n_centroids, max_iter=max_iter)
-    spark = corpus.sparkSession
-    # centroids + params as one zero-job JSON sidecar (floats
-    # round-trip exactly); a 1-row parquet write per table cost a full
-    # job's fixed overhead on every build
-    write_json_meta(
-        spark,
-        f"{path}/meta.json",
-        {
-            "centroids": cents,
-            "n_centroids": n_centroids,
-            "n_probe_default": n_probe_default,
-            "max_iter": max_iter,
-        },
-    )
-    assign_clusters(corpus, vec_col, id_col, cents).write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(f"{path}/cells")
-    return cents
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 5,
-    n_probe: int | None = None,
-) -> DataFrame:
-    """Query a :func:`build_ivf_index` layout: centroids load as a
-    k×dim literal (map-only query assignment), and the corpus scan
-    carries ``cluster IN (probed cells)`` — a PartitionFilter that
-    prunes unprobed cell directories at planning time (plan-asserted
-    in tests). Same output shape/ordering as ivf_trained_topk.
-    ``n_probe=None`` uses the default stored in the index meta at
-    build time.
-    """
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.clustering import assign_top_cells
-
-    from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import read_json_meta
-
-    meta = read_json_meta(spark, f"{path}/meta.json")
-    if meta is None:
-        raise ValueError(f"no IVF index at {path} (meta.json missing)")
-    if n_probe is None:
-        n_probe = int(meta["n_probe_default"])
-    cents = meta["centroids"]
-    q = assign_top_cells(queries, vec_col, id_col, cents, n_probe).select(
-        F.col("id").alias("query_id"), F.col("vec").alias("qvec"), "cluster"
-    )
-    probed = sorted({r.cluster for r in q.select("cluster").distinct().collect()})
-    cells = (
-        spark.read.parquet(f"{path}/cells")
-        .filter(F.col("cluster").isin(probed))
-        .select(F.col("id").alias("corpus_id"), F.col("vec").alias("cvec"), "cluster")
-    )
-    pairs = (
-        cells.withColumn("cnorm", vectors.norm(F.col("cvec")))
-        .join(F.broadcast(q.withColumn("qnorm", vectors.norm(F.col("qvec")))), "cluster")
-        .filter(F.col("query_id") != F.col("corpus_id"))
-    )
-    return _rank_pairs(pairs, k)
-
-
 def hard_negative_mining(
     corpus: DataFrame,
     queries: DataFrame,

@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import davg
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import davg, valid_mood_record
 from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import read_jsonl_valid
 
 REQUIRED_FIELDS = ("event_time", "intersection", "weather", "avg_speed")
@@ -74,12 +74,9 @@ def load_valid(spark: SparkSession, path: str) -> DataFrame:
     """Re-ingest the export: corrupt-record drop, validity predicate,
     timestamp parse (ref load_to_postgres)."""
     df = read_jsonl_valid(spark, path, schema=MOOD_EXPORT_DDL)
-    return df.filter(
-        F.col("event_time").isNotNull()
-        & F.col("intersection").isNotNull()
-        & F.col("weather").isNotNull()
-        & (F.col("avg_speed") > 0)
-    ).withColumn("event_time", F.to_timestamp("event_time"))
+    return df.filter(valid_mood_record()).withColumn(
+        "event_time", F.to_timestamp("event_time")
+    )
 
 
 def daily_summary_job(mood_df: DataFrame, for_date: str) -> DataFrame:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions import text as T
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions import vectors as V
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import (
+    WEATHER_CODES,
     davg,
     davg_sql,
     dsum,
@@ -43,6 +44,7 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring i
     mood_label_sql,
     traffic_condition,
     traffic_condition_sql,
+    valid_mood_record,
 )
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.sentiment import sentiment, sentiment_sql
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import hex4, hex4_sql
@@ -57,7 +59,7 @@ from data_engineering_demo_real_time_city_mood_tracker_spark.operators import (
     windows,
 )
 from data_engineering_demo_real_time_city_mood_tracker_spark.schemas import TESTDATA_TABLES
-from data_engineering_demo_real_time_city_mood_tracker_spark.session import ensure_shipped
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import ensure_shipped, release_after, spread
 from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -104,32 +106,6 @@ def register_sql(name: str, sql: str) -> None:
 # --------------------------------------------------------------------------
 # shared helpers
 
-# Weather code taxonomy — order matches the reference producer's map
-# (/root/reference/weather_producer.py:17-40).
-WEATHER_CODES = [
-    "clear",
-    "mainly_clear",
-    "partly_cloudy",
-    "overcast",
-    "fog",
-    "depositing_rime_fog",
-    "drizzle_light",
-    "drizzle_moderate",
-    "drizzle_dense",
-    "rain_slight",
-    "rain_moderate",
-    "rain_heavy",
-    "snow_slight",
-    "snow_moderate",
-    "snow_heavy",
-    "rain_showers_slight",
-    "rain_showers_moderate",
-    "rain_showers_heavy",
-    "snow_showers_slight",
-    "snow_showers_heavy",
-    "thunderstorm",
-    "thunderstorm_with_hail",
-]
 _CODES_SQL = "[" + ", ".join(f"'{c}'" for c in WEATHER_CODES) + "]"
 
 
@@ -424,12 +400,7 @@ def q_quality_filter(spark, sf_dir):
     avg_speed > 0)."""
     m = _mood_df(spark, sf_dir)
     return (
-        m.filter(
-            F.col("event_time").isNotNull()
-            & F.col("intersection").isNotNull()
-            & F.col("weather").isNotNull()
-            & (F.col("avg_speed") > 0)
-        )
+        m.filter(valid_mood_record())
         .groupBy(F.to_date("event_time").alias("event_date"))
         .agg(F.count(F.lit(1)).alias("valid_records"))
     )
@@ -2209,8 +2180,7 @@ def q_pagerank_portable(spark, sf_dir):
     the same portable CTE pattern as label_propagation. Runs on the
     shared user co-activity graph; symmetrized, so the dangling-mass
     machinery drops out. pagerank_topk runs the same fixed-point
-    operator over the kNN similarity graph; the float graph.pagerank
-    stays the operator for directed graphs. Top-20 by (rank_fp desc,
+    operator over the kNN similarity graph. Top-20 by (rank_fp desc,
     id) — integer ties break deterministically."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators import graph as graph_ops
 
@@ -2865,7 +2835,7 @@ def q_tfidf_topk(spark, sf_dir):
     from data_engineering_demo_real_time_city_mood_tracker_spark.functions.text import tokens as _tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    tok = dedup._spread(docs).select(
+    tok = spread(docs).select(
         F.col("doc_id").alias("id"), F.explode(_tokens(F.col("text"))).alias("token")
     )
     tf = tok.groupBy("id", "token").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint(
@@ -3408,7 +3378,7 @@ def q_edit_distance_pairs(spark, sf_dir):
     distance runs on a 64-char normalized prefix to cap per-pair cost.
     """
     docs = load_table(spark, sf_dir, "documents")
-    d = dedup._spread(docs).select(
+    d = spread(docs).select(
         "doc_id",
         "lang",
         F.floor(F.size(T.tokens(F.col("text"))) / 5).alias("tok_bucket"),
@@ -5101,7 +5071,7 @@ def q_hybrid_search(spark, sf_dir):
     a hybrid ranker. Plan: the 5-query side broadcasts against the
     (documents ⋈ embeddings) corpus — one corpus pass, no shuffle of
     the corpus itself; at scale the corpus side would come from the
-    cell-partitioned IVF index (build_ivf_index) with this same
+    cell-partitioned IVF-PQ index (build_ivfpq_index) with this same
     scoring applied to the probed cells only."""
     # cos_sim is computed ONCE (the fused score recomputed the whole
     # fold — HOF lambdas never CSE); referencing the column yields the
@@ -5452,7 +5422,7 @@ def q_dedup_report(spark, sf_dir):
     fp)-keyed distinct inside a source-keyed agg; source cardinality
     is tiny so the final agg is a broadcast-scale frame."""
     docs = load_table(spark, sf_dir, "documents")
-    normd = dedup._spread(docs).select(
+    normd = spread(docs).select(
         "source", T.fingerprint(F.col("text")).alias("fp")
     )
     g = normd.groupBy("source").agg(
@@ -5599,11 +5569,11 @@ def q_bloom_dedup(spark, sf_dir):
     quartets the oracle reproduces; no false negatives by
     construction (true_dup ⇒ maybe_dup, test-asserted)."""
     docs = load_table(spark, sf_dir, "documents")
-    # _spread matters here: the fingerprint pipeline runs 3x (bitmap
+    # spread matters here: the fingerprint pipeline runs 3x (bitmap
     # build, probe, exact verify) and a single-file corpus would pin
     # all of it to 1-2 tasks (measured 21 s vs 6 s at a 50k-doc 10x
     # stress; costs ~0.1 s of repartition at the 5k bench SF)
-    fps = dedup._spread(docs).select(
+    fps = spread(docs).select(
         "doc_id", T.fingerprint(F.col("text")).alias("fp")
     )
     pos = fps.select(
@@ -5729,7 +5699,7 @@ def q_bm25_topk(spark, sf_dir, _release=True):
     sorted term order so the double sum is partition-order
     independent and bitwise equal to the oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    base = dedup._spread(docs).select(
+    base = spread(docs).select(
         "doc_id", T.tokens(F.col("text")).alias("_toks")
     )
     # the term filter runs INSIDE the token array, before the explode:
@@ -6969,7 +6939,7 @@ def q_filter_funnel_report(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     s0 = (
-        dedup._spread(docs.filter(F.col("doc_id") % 97 != 0))
+        spread(docs.filter(F.col("doc_id") % 97 != 0))
         .select("doc_id", "lang", "text", normalize(F.col("text")).alias("_norm"))
         .select(
             "doc_id", "lang", "text",
@@ -7024,7 +6994,7 @@ def q_filter_funnel_report(spark, sf_dir):
     )
     # 5-row report: checkpoint eagerly and release the two stage caches
     # (CacheManager never reclaims persisted frames — r4 ADVICE)
-    return dedup.release_after(out, s0, s3)
+    return release_after(out, s0, s3)
 
 
 @register(
@@ -7096,10 +7066,10 @@ def q_token_budget_mixture(spark, sf_dir):
     # 3-column frame — the source totals and the rank/cumsum window —
     # reuse the same shuffle output (ReuseExchange), and the window's
     # required distribution is satisfied by the same exchange. The
-    # tokenize itself still runs in the _spread-parallelized stage
+    # tokenize itself still runs in the spread-parallelized stage
     # below the shuffle.
     nt = (
-        dedup._spread(docs)
+        spread(docs)
         .select("doc_id", "source", F.size(T.tokens(F.col("text"))).alias("nt"))
         .repartition("source")
     )
@@ -7987,7 +7957,7 @@ def q_vocab_coverage(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        dedup._spread(docs)
+        spread(docs)
         .select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -8201,7 +8171,7 @@ def q_embedding_dim_stats(spark, sf_dir):
     correctly-rounded IEEE ops on identical doubles in both engines."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = (
-        dedup._spread(emb)
+        spread(emb)
         .select(F.posexplode("embedding").alias("pos", "_xf"))
         .select("pos", F.col("_xf").cast("double").alias("x"))
         .withColumn("qx", F.floor(F.col("x") * F.lit(1e6)))
@@ -8576,7 +8546,7 @@ def q_char_gini_quality(spark, sf_dir):
     DuckDB string_split(text, '') incl. the [''] empty-string case
     (measured), which the len ≥ 1 filter excludes on both sides."""
     docs = load_table(spark, sf_dir, "documents")
-    base = dedup._spread(docs).select("doc_id", "text")
+    base = spread(docs).select("doc_id", "text")
     cc = (
         base.filter(F.length("text") >= 1)
         .select("doc_id", F.explode(F.split("text", "")).alias("ch"))

@@ -33,6 +33,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import WEATHER_CODES
 from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.producers import INTERSECTIONS, SAMPLE_NEWS
 
 SCHEMAS = {
@@ -55,13 +56,6 @@ def _pick(choices, salt: str, i: int) -> str:
     return choices[_hash_long(salt, i) % len(choices)]
 
 
-def _weather_codes() -> list[str]:
-    # lazy: plans.queries is a large module; only the weather kind needs it
-    from data_engineering_demo_real_time_city_mood_tracker_spark.plans.queries import WEATHER_CODES
-
-    return WEATHER_CODES
-
-
 def _ts(start: datetime, i: int, interval_sec: int) -> str:
     t = (start + timedelta(seconds=i * interval_sec)).replace(
         second=0, microsecond=0
@@ -81,7 +75,7 @@ def _gen(kind: str, lo: int, hi: int, start: datetime, interval_sec: int):
                 _ts(start, i, interval_sec),
             )
     elif kind == "weather":
-        codes = _weather_codes()
+        codes = WEATHER_CODES
         for i in range(lo, hi):
             yield (
                 _ts(start, i, interval_sec),

@@ -1,33 +1,18 @@
-"""Streaming deduplication: exactly-once event delivery on top of
-at-least-once sources (Kafka replays, producer retries).
+"""Streaming deduplication: crawl ingestion against the persistent
+dedup index.
 
 The reference stack tolerates duplicate events end-to-end (Mongo
 upserts hide them, cf. reference mongo_to_storage.py's re-ingest
-path); the Spark-first treatment removes them at ingest with
-``dropDuplicatesWithinWatermark``: state holds one entry per key only
-until the watermark passes the event's time, so state is bounded by
-(event-rate × watermark horizon) — safe for unbounded streams, unlike
-``dropDuplicates`` whose state grows forever.
+path). Exact re-deliveries of one event key are the engine's own
+operator, ``withWatermark(...).dropDuplicatesWithinWatermark(keys)``:
+state holds one entry per key only until the watermark passes the
+event's time. This module covers what that operator cannot: near
+duplicates of documents already in the standing corpus.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def dedup_stream(
-    df: DataFrame,
-    keys: list[str],
-    time_col: str = "event_time",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Drop re-deliveries of the same ``keys`` within the watermark
-    horizon. Works on both streaming and batch frames (batch falls
-    back to plain dropDuplicates so tests can diff the two paths).
-    """
-    if not df.isStreaming:
-        return df.dropDuplicates(keys)
-    return df.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def dedup_ingest_stream(

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import WEATHER_CODES
+
 # ref traffic_producer.py:14 — main streets in Yerevan
 INTERSECTIONS = ["north_avenue", "mashtots", "komitas", "tumanyan"]
 
@@ -71,8 +73,6 @@ def weather_events(src: DataFrame, id_col: str = "id", ts_col: str = "ts") -> Da
     """{timestamp, temp, windspeed, weather} — ref
     weather_producer.py:50-70 (22-code map; temp/windspeed plausible
     open-meteo ranges, deterministic)."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.plans.queries import WEATHER_CODES
-
     rid = F.col(id_col)
     return src.select(
         F.date_format(F.date_trunc("minute", F.col(ts_col)), "yyyy-MM-dd HH:mm:ss").alias("timestamp"),

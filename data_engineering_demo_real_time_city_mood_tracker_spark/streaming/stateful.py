@@ -30,7 +30,7 @@ STATE_SCHEMA = "start_us long, end_us long, n long"
 
 
 def _advance_sessions(us, start_us, end_us, n, gap_us):
-    """Core session math, shared by both stateful operators: fold a
+    """Core session math of :func:`sessionize_stream`: fold a
     sorted int64-µs timestamp array into the (start, end, n) open
     session, returning (closed_sessions, new_open_state). Vectorized —
     boundary detection is one np.diff, never a Python row loop."""
@@ -93,9 +93,9 @@ def sessionize_stream(
 
     Caveat of this API: with NoTimeout, a user's LAST session can only
     be closed by a later event — at stream end it rides in state
-    forever. ``sessionize_stream_tws`` (transformWithState, event-time
-    timers) fixes that; this twin is kept for comparison and for
-    Spark versions without transformWithState."""
+    forever. Event-time timers (transformWithState) would close it at
+    the watermark, but that runtime needs ``google.protobuf`` in the
+    Python workers."""
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -121,107 +121,4 @@ def sessionize_stream(
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class SessionProcessor:
-    """transformWithState sessionizer (plain class — subclassed onto
-    StatefulProcessor inside :func:`sessionize_stream_tws` so the
-    logic stays drivable by a fake handle in unit tests).
-
-    Improvement over the applyInPandasWithState twin: an EVENT-TIME
-    TIMER at open-session end + gap closes trailing sessions when the
-    watermark passes, so a user who goes quiet still gets their last
-    session emitted — no stream-end flush caveat. One timer per key
-    (re-registered as the session extends; stale timers are checked
-    against state before emitting, so an out-of-date expiry is a
-    no-op). State per key stays the O(1) open-session triple.
-    """
-
-    def __init__(self, ts_col: str, gap_sec: float):
-        self._ts_col = ts_col
-        self._gap_us = int(gap_sec * 1_000_000)
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._session = handle.getValueState("session", STATE_SCHEMA)
-
-    def _retime(self, end_us: int) -> None:
-        expiry_ms = (end_us + self._gap_us) // 1000 + 1
-        for t in list(self._handle.listTimers()):
-            if t != expiry_ms:
-                self._handle.deleteTimer(t)
-        self._handle.registerTimer(expiry_ms)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        ts = pd.concat([pdf[self._ts_col] for pdf in rows]).sort_values()
-        us = (ts.astype("int64").to_numpy() // 1000).astype("int64")
-        if self._session.exists():
-            start_us, end_us, n = self._session.get()
-        else:
-            start_us, end_us, n = None, None, 0
-        closed, new_state = _advance_sessions(us, start_us, end_us, n, self._gap_us)
-        self._session.update(new_state)
-        self._retime(new_state[1])
-        if closed:
-            yield _sessions_pdf(key[0], closed)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        if not self._session.exists():
-            return
-        start_us, end_us, n = self._session.get()
-        # stale timer from before the session was extended → ignore
-        if expiredTimerInfo.getExpiryTimeInMs() < (end_us + self._gap_us) // 1000 + 1:
-            return
-        self._session.clear()
-        yield _sessions_pdf(key[0], [(start_us, end_us, n)])
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_stream_tws(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_sec: float = 1800.0,
-) -> DataFrame:
-    """Timer-driven sessionization on the transformWithState API.
-
-    Same closed-session semantics as ``sessionize_stream`` for
-    sessions closed by a successor event, PLUS watermark-driven close
-    of trailing sessions via event-time timers (see SessionProcessor).
-    Input must carry a watermark on ``ts_col``; output is append-mode.
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``).
-
-    Gated: Spark's transformWithState runtime speaks protobuf to the
-    Python workers, and ``google.protobuf`` is not installed in this
-    container — the processor logic itself is pure Python and unit-
-    tested directly (tests/test_streaming.py drives SessionProcessor
-    with a fake handle); the streaming integration test runs wherever
-    protobuf is present (any real cluster).
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "transformWithState needs google.protobuf (not in this container); "
-            "use sessionize_stream as the fallback sessionizer"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _P(SessionProcessor, StatefulProcessor):
-        pass
-
-    return events.groupBy(user_col).transformWithStateInPandas(
-        statefulProcessor=_P(ts_col, gap_sec),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
     )

@@ -94,14 +94,11 @@ def test_survey_checklist_matches_registry():
         "plans/pipelines.py", "run_with_alert", "plans/orchestration.py",
         "merge_agg_partials", "streaming/producers.py", "streaming/monitor.py",
         "sources/maintenance.py", "sources/layout.py", "register_tables",
-        "build_ivf_index", "build_dedup_index",
-        "sessionize_stream_tws", "streaming/app.py", "streaming/dedup.py",
+        "build_dedup_index", "streaming/app.py",
         "dedup_ingest_stream", "read_orc", "simhash_portable",
         "observed_write",
         "dedup_ngram_jaccard", "dedup_minhash_lsh",
         "dsir_score_stream", "citymood",  # streaming serve / data source API
-        "set_pair_measures",  # fused user-facing operator; the registry
-        # keeps the two per-measure parents as independent gates (r6)
         "cusum_alert_stream",  # streaming twin of cusum_alerts (r6)
     }
     # registered under a different name than the SURVEY label

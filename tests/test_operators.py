@@ -111,7 +111,7 @@ def test_bpe_learns_expected_merges(spark):
 
 
 def test_bpe_trainer_round1_runs_with_aqe_on(spark, monkeypatch):
-    """_no_aqe must NOT cover round 1: the first collect materializes
+    """small_shuffle must NOT cover round 1: the first collect materializes
     the corpus-wide word_frequencies shuffle, whose reduce side is
     vocabulary-cardinality-sized — it needs the session's shuffle
     partitions and AQE skew handling. Rounds 2+ run over the cached
@@ -133,7 +133,7 @@ def test_bpe_trainer_round1_runs_with_aqe_on(spark, monkeypatch):
     merges = bpe.train_bpe_merge_list(docs, "text", n_merges=3)
     assert len(merges) == 3
     assert seen[0] == "true"  # round 1: session settings, AQE on
-    assert set(seen[1:]) == {"false"}  # rounds 2+: _no_aqe scope
+    assert set(seen[1:]) == {"false"}  # rounds 2+: small_shuffle scope
     # scope restored after the trainer
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
@@ -167,27 +167,26 @@ def test_bpe_charization_has_no_empty_symbols(spark):
 
 @pytest.mark.slow  # excluded from the driver-window gate (pytest.ini); run via -m slow
 def test_pagerank_invariants_and_known_graphs(spark):
-    """PageRank: ranks sum to 1 (dangling mass redistributed), a ring
-    is uniform, a star's center outranks its leaves, and reruns are
-    deterministic."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.graph import pagerank
+    """Fixed-point PageRank: a ring is exactly uniform, a hub outranks
+    its leaves, and reruns are deterministic."""
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.graph import pagerank_fixed_point
 
-    # directed ring 0->1->2->3->0: perfectly symmetric => uniform
+    scale = 10**12
+    # ring 0-1-2-3-0: perfectly symmetric => uniform, with no rounding
+    # loss (every rank divides evenly by the degree)
     ring = spark.createDataFrame(
-        [(i, (i + 1) % 4) for i in range(4)], "src long, dst long"
+        [(i, (i + 1) % 4) for i in range(4)], "id_a long, id_b long"
     )
-    rr = {r.id: r.rank for r in pagerank(ring, iterations=20).collect()}
-    assert abs(sum(rr.values()) - 1.0) < 1e-9
-    for v in rr.values():
-        assert abs(v - 0.25) < 1e-9
+    rr = {r.id: r.rank_fp for r in pagerank_fixed_point(ring, rounds=20).collect()}
+    assert rr == {i: scale // 4 for i in range(4)}
 
-    # star: leaves 1..4 all point at 0; 0 has no out-edges (dangling)
-    star = spark.createDataFrame([(i, 0) for i in range(1, 5)], "src long, dst long")
-    sr = {r.id: r.rank for r in pagerank(star, iterations=20).collect()}
-    assert abs(sum(sr.values()) - 1.0) < 1e-9
-    assert sr[0] > max(sr[i] for i in range(1, 5))
-
-    sr2 = {r.id: r.rank for r in pagerank(star, iterations=20).collect()}
+    # star + tail: hub 0 linked to 1..4, tail 4-5
+    star = spark.createDataFrame(
+        [(0, i) for i in range(1, 5)] + [(4, 5)], "id_a long, id_b long"
+    )
+    sr = {r.id: r.rank_fp for r in pagerank_fixed_point(star, rounds=20).collect()}
+    assert sr[0] > max(sr[i] for i in range(1, 6))
+    sr2 = {r.id: r.rank_fp for r in pagerank_fixed_point(star, rounds=20).collect()}
     assert sr == sr2, "pagerank must be deterministic"
 
 
@@ -221,40 +220,6 @@ def test_containment_catches_asymmetric_duplication(spark):
         for r in ngram_jaccard_pairs(df, "text", "doc_id", k=3, threshold=0.0).collect()
     }
     assert jac[(1, 2)] < 0.5  # Jaccard alone would have missed it
-
-
-def test_set_pair_measures_matches_both_parents(spark):
-    """the fused one-pass operator is BITWISE the two parents: same
-    candidate pairs, same jaccard and containment values (identical
-    expressions over the identical shared front end) — the only
-    difference is that the shingle frame and the pair join run once."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.dedup import (
-        containment_pairs,
-        ngram_jaccard_pairs,
-        set_pair_measures,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    fused = {
-        (r.id_a, r.id_b): (r.jaccard, r.containment)
-        for r in set_pair_measures(docs, "text", "doc_id", k=3, max_df=50).collect()
-    }
-    jac = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            docs, "text", "doc_id", k=3, threshold=0.0, max_df=50
-        ).collect()
-    }
-    con = {
-        (r.id_a, r.id_b): r.containment
-        for r in containment_pairs(
-            docs, "text", "doc_id", k=3, threshold=0.0, max_df=50
-        ).collect()
-    }
-    assert fused, "fused operator found no candidate pairs at sf0.001"
-    assert set(fused) == set(jac) == set(con)
-    assert all(fused[p][0] == jac[p] for p in fused)
-    assert all(fused[p][1] == con[p] for p in fused)
 
 
 def test_repeated_span_mass_flags_stitched_docs(spark):

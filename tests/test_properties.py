@@ -39,7 +39,8 @@ def test_minhash_lsh_finds_planted_duplicates(spark):
     rows = [(i, f"document number {i} about topic {i % 7} " + "x " * i) for i in range(20)]
     rows += [(100, base), (101, base)]  # identical pair must be a candidate
     df = _docs(spark, rows)
-    cand = dedup.minhash_lsh_candidates(df, "text", "doc_id", k=3, bands=4, rows_per_band=2)
+    sig = dedup.minhash_signatures(df, "text", "doc_id", k=3, num_hashes=8)
+    cand = dedup._lsh_candidates_from_signatures(sig, bands=4, rows_per_band=2)
     pairs = {(r.id_a, r.id_b) for r in cand.collect()}
     assert (100, 101) in pairs, "identical docs share every band -> must be candidates"
     verified = dedup.minhash_dedup_pairs(
@@ -327,37 +328,6 @@ def test_sequence_packing_invariants(spark, sf_dir):
         running += r.n_tok
 
 
-def test_persistent_ivf_index_matches_inline(spark, sf_dir, tmp_path):
-    """build_ivf_index + query_ivf_index must return exactly the rows
-    ivf_trained_topk computes inline with the same parameters, and the
-    cell scan must be partition-pruned to the probed cells."""
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import similarity
-    from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    idx = str(tmp_path / "ivf")
-    similarity.build_ivf_index(
-        emb, "embedding", "vec_id", idx, n_centroids=8, max_iter=3
-    )
-    out = similarity.query_ivf_index(
-        spark, idx, q, "embedding", "vec_id", k=5, n_probe=2
-    )
-    inline = similarity.ivf_trained_topk(
-        emb, q, "embedding", "vec_id", k=5, n_centroids=8, n_probe=2, max_iter=3
-    )
-    got = {(r.query_id, r.corpus_id, r.rnk) for r in out.collect()}
-    want = {(r.query_id, r.corpus_id, r.rnk) for r in inline.collect()}
-    assert got == want
-
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan and "cluster" in plan
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert any("cluster" in l and ("IN" in l or "in(" in l.lower()) for l in pf), pf
-
-
 def test_hll_merge_rollup_properties(spark, sf_dir):
     """mergeable-sketch property: unioning per-day HLL sketches must
     estimate within the sketch error bound of both the one-pass
@@ -462,34 +432,40 @@ def test_audio_dedup_recovers_planted_groups(spark):
     assert all(r.n_diff_windows == 1 for r in pairs)
 
 
-def test_pagerank_fixed_point_tracks_float(spark):
-    """the fixed-point twin must agree with float pagerank on a known
-    asymmetric graph (star + tail): same ranking, values within the
-    accumulated quantization error (rounds × deg truncations at 1e-12
-    each ≪ 1e-6 relative), and total mass ≈ 1 (teleport floor-loss
-    only)."""
-    from pyspark.sql import functions as F
+def _power_iteration(edges, rounds, damping=0.85):
+    """Float PageRank over the symmetrized edge list in pure Python:
+    the independent reference for the fixed-point operator."""
+    nbrs = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    n = len(nbrs)
+    rank = {v: 1.0 / n for v in nbrs}
+    for _ in range(rounds):
+        rank = {
+            v: (1 - damping) / n
+            + damping * sum(rank[u] / len(nbrs[u]) for u in nbrs[v])
+            for v in nbrs
+        }
+    return rank
 
+
+def test_pagerank_fixed_point_tracks_float(spark):
+    """the fixed-point operator must agree with a float power iteration
+    on a known asymmetric graph (star + tail): same ranking, values
+    within the accumulated quantization error (rounds × deg truncations
+    at 1e-12 each ≪ 1e-6 relative), and total mass ≈ 1 (teleport
+    floor-loss only)."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators import graph as graph_ops
 
     # hub 0 connected to 1..5; tail 5-6-7
-    edges = spark.createDataFrame(
-        [(0, i) for i in range(1, 6)] + [(5, 6), (6, 7)],
-        "id_a long, id_b long",
-    )
+    pairs = [(0, i) for i in range(1, 6)] + [(5, 6), (6, 7)]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
     fp = {
         r.id: r.rank_fp / 1e12
         for r in graph_ops.pagerank_fixed_point(edges, rounds=8).collect()
     }
-    sym = edges.union(
-        edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    )
-    fl = {
-        r.id: r.rank
-        for r in graph_ops.pagerank(
-            sym, "id_a", "id_b", iterations=8
-        ).collect()
-    }
+    fl = _power_iteration(pairs, rounds=8)
     assert set(fp) == set(fl)
     for v in fp:
         assert abs(fp[v] - fl[v]) < 1e-6, (v, fp[v], fl[v])
@@ -789,10 +765,10 @@ def test_persistent_dedup_index_matches_direct_computation(spark, tmp_path):
 def test_dedup_index_probe_broadcast_escape_hatch(spark, tmp_path):
     """A bulk re-crawl batch (every doc exact-duplicates the corpus —
     the adversarial case where exact_pairs grows with the batch, so a
-    FORCED broadcast could fail at scale) must work with
-    spark.graft.dedup.broadcastExactPairs=false: the static plan keeps
-    the un-hinted anti join (no forced broadcast build) and the match
-    rows are identical to the default broadcast path."""
+    FORCED broadcast could fail at scale): the static plan keeps the
+    un-hinted anti join (no forced broadcast build; AQE may still pick
+    one at runtime, but only size-aware) and every batch doc finds its
+    exact corpus twin."""
     from data_engineering_demo_real_time_city_mood_tracker_spark.operators import dedup as D
 
     corpus = spark.createDataFrame(
@@ -800,7 +776,7 @@ def test_dedup_index_probe_broadcast_escape_hatch(spark, tmp_path):
         "doc_id long, text string",
     )
     # every batch doc is an exact dup of a corpus doc: exact_pairs is
-    # batch-sized, the worst case the contract warns about
+    # batch-sized
     batch = spark.createDataFrame(
         [(1000 + i, f"shared body text for document {i} alpha beta gamma") for i in range(30)],
         "doc_id long, text string",
@@ -808,27 +784,10 @@ def test_dedup_index_probe_broadcast_escape_hatch(spark, tmp_path):
     path = str(tmp_path / "dedup_index")
     D.build_dedup_index(corpus, "text", "doc_id", path, k=3, bands=4, rows_per_band=2)
 
-    def canon(df):
-        return sorted(
-            (r.doc_id, r.match_id, r.kind, round(r.jaccard, 12)) for r in df.collect()
-        )
-
-    rows_default = canon(
-        D.query_dedup_index(spark, path, batch, "text", "doc_id", threshold=0.2)
-    )
-    spark.conf.set("spark.graft.dedup.broadcastExactPairs", "false")
-    try:
-        got = D.query_dedup_index(spark, path, batch, "text", "doc_id", threshold=0.2)
-        # static plan (pre-AQE): the anti join must NOT carry a forced
-        # broadcast build — AQE may still pick one at runtime, but only
-        # size-aware, which is the safe degradation the conf buys
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin LeftAnti" not in plan
-        assert canon(got) == rows_default
-    finally:
-        spark.conf.unset("spark.graft.dedup.broadcastExactPairs")
-    exact = {(a, b) for a, b, kind, _ in rows_default if kind == "exact"}
-    # every batch doc found its exact corpus twin
+    got = D.query_dedup_index(spark, path, batch, "text", "doc_id", threshold=0.2)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin LeftAnti" not in plan
+    exact = {(r.doc_id, r.match_id) for r in got.collect() if r.kind == "exact"}
     assert exact == {(1000 + i, i) for i in range(30)}
 
 

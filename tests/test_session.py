@@ -7,6 +7,7 @@ import importlib
 import sys
 import zipfile
 import zipimport
+from contextlib import contextmanager
 
 from data_engineering_demo_real_time_city_mood_tracker_spark import session
 from data_engineering_demo_real_time_city_mood_tracker_spark.session import ensure_shipped
@@ -108,3 +109,43 @@ def test_python_worker_tasks_skip_unchanged_zip_rereads(spark):
             return
         seen.add(pid)
     raise AssertionError(f"no Python worker was reused across {len(seen)} tasks")
+
+
+def test_small_shuffle_scope_for_trainer_bpe_and_graph_callers(spark, monkeypatch):
+    """The Lloyd trainer, the BPE trainer's rounds and the fixed-point
+    PageRank each run inside ``small_shuffle``: 8 shuffle partitions and
+    AQE off, whatever the session's count, with the session's values
+    back once the scope exits. A graph of 10^6+ vertices gets
+    vertex-sized partitions and keeps AQE on."""
+    from data_engineering_demo_real_time_city_mood_tracker_spark.operators import bpe, clustering, graph
+
+    seen = {}
+
+    def recording(name):
+        @contextmanager
+        def scope(sp, *args):
+            with session.small_shuffle(sp, *args):
+                seen.setdefault(name, set()).add(
+                    (sp.conf.get("spark.sql.shuffle.partitions"),
+                     sp.conf.get("spark.sql.adaptive.enabled"))
+                )
+                yield
+        return scope
+
+    for mod in (clustering, bpe, graph):
+        monkeypatch.setattr(mod, "small_shuffle", recording(mod.__name__.rsplit(".", 1)[1]))
+    outer = {"spark.sql.shuffle.partitions": "64", "spark.sql.adaptive.enabled": "true"}
+    with session.scoped_conf(spark, outer):
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 5), float(i % 3)]) for i in range(20)], "id long, v array<double>"
+        )
+        clustering.lloyd_train(vecs, "v", "id", m=1, k=2, max_iter=1)
+        docs = spark.createDataFrame([(1, "low lower newest widest")], "doc_id long, text string")
+        bpe.train_bpe_merge_list(docs, "text", n_merges=2)
+        edges = spark.createDataFrame([(0, 1), (1, 2)], "id_a long, id_b long")
+        graph.pagerank_fixed_point(edges, rounds=1).collect()
+        assert seen == {name: {("8", "false")} for name in ("clustering", "bpe", "graph")}
+        with session.small_shuffle(spark, 2_000_000):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "31"
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert {k: spark.conf.get(k) for k in outer} == outer

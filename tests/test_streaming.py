@@ -12,7 +12,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from data_engineering_demo_real_time_city_mood_tracker_spark.plans.queries import WEATHER_CODES
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import WEATHER_CODES
 from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
 from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.mood_pipeline import (
     mood_from_unified,
@@ -276,208 +276,6 @@ def test_stateful_sessionization_matches_batch(spark, sf_dir, tmp_path):
     assert got == closed_expected
 
 
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def registerTimer(self, expiry_ms):
-        self.timers.add(expiry_ms)
-
-    def deleteTimer(self, expiry_ms):
-        self.timers.discard(expiry_ms)
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-class _FakeExpiredTimer:
-    def __init__(self, expiry_ms):
-        self._e = expiry_ms
-
-    def getExpiryTimeInMs(self):
-        return self._e
-
-
-def test_tws_session_processor_timer_semantics(spark, sf_dir):
-    """SessionProcessor (transformWithState) driven directly with a
-    fake handle — the runtime needs google.protobuf (absent here), but
-    the processor logic is pure Python: successor-closed sessions match
-    the batch oracle per key, the trailing session is closed by its
-    event-time timer, and a stale timer (session extended since it was
-    registered) is a no-op."""
-    import pandas as pd
-
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.sessions import session_stats
-    from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.stateful import SessionProcessor
-
-    GAP = 14400.0
-    gap_us = int(GAP * 1_000_000)
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    batch = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in session_stats(
-            ev.withColumn("event_id", F.monotonically_increasing_id()),
-            "user_id", "ts", "event_id", gap_sec=int(GAP),
-        ).collect()
-    }
-
-    emitted = set()
-    pdfs = {
-        uid: pdf.sort_values("ts")
-        for uid, pdf in ev.toPandas().groupby("user_id")
-    }
-    max_end_ms = 0
-    handles = {}
-    for uid, pdf in pdfs.items():
-        proc = SessionProcessor("ts", GAP)
-        h = _FakeHandle()
-        proc.init(h)
-        handles[uid] = (proc, h)
-        # two micro-batches per key: first half, second half
-        half = len(pdf) // 2 or 1
-        for chunk in (pdf.iloc[:half], pdf.iloc[half:]):
-            if chunk.empty:
-                continue
-            for out in proc.handleInputRows((uid,), iter([chunk]), None):
-                emitted.update(_rows_from_pdf(out))
-        assert len(h.timers) == 1, "exactly one live timer per key"
-        end_us = h.state.get()[1]
-        max_end_ms = max(max_end_ms, (end_us + gap_us) // 1000 + 1)
-
-    # watermark far past every expiry → every trailing session closes
-    for uid, (proc, h) in handles.items():
-        for expiry in sorted(h.listTimers()):
-            out_iter = proc.handleExpiredTimer(
-                (uid,), None, _FakeExpiredTimer(max_end_ms + 10_000)
-            )
-            if out_iter is not None:
-                for out in out_iter:
-                    emitted.update(_rows_from_pdf(out))
-        assert not h.state.exists(), "timer close must clear state"
-
-    assert emitted == batch, "stream (with timer flush) must equal batch"
-
-    # stale-timer no-op: an expiry earlier than end+gap leaves state alone
-    proc = SessionProcessor("ts", GAP)
-    h = _FakeHandle()
-    proc.init(h)
-    pdf = pd.DataFrame({"ts": pd.to_datetime([0, 1_000_000], unit="us")})
-    list(proc.handleInputRows((99,), iter([pdf]), None))
-    stale = list(proc.handleExpiredTimer((99,), None, _FakeExpiredTimer(1)) or [])
-    assert stale == [] and h.state.exists()
-
-
-def _rows_from_pdf(pdf):
-    return {
-        (int(r.user_id), str(r.session_start), str(r.session_end), int(r.n_events))
-        for r in pdf.itertuples()
-    }
-
-
-def test_tws_sessionizer_closes_trailing_sessions(spark, sf_dir, tmp_path):
-    """transformWithState sessionizer: successor-closed sessions match
-    the applyInPandasWithState twin AND event-time timers close
-    trailing sessions once the watermark passes end+gap — the
-    stream-end flush the older API cannot do. (Runs only where
-    google.protobuf exists — the TWS runtime needs it.)"""
-    import time as _time
-
-    pytest.importorskip("google.protobuf")
-
-    from pyspark.sql import Window
-
-    from data_engineering_demo_real_time_city_mood_tracker_spark.operators.sessions import session_stats
-    from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.stateful import sessionize_stream_tws
-
-    GAP = 14400.0
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-
-    batch = session_stats(ev, "user_id", "ts", "event_id", gap_sec=int(GAP))
-    batch_all = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in batch.collect()
-    }
-    w = Window.partitionBy("user_id")
-    closed_by_successor = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in batch.withColumn("last_end", F.max("session_end").over(w))
-        .filter(F.col("session_end") != F.col("last_end"))
-        .collect()
-    }
-    assert closed_by_successor and closed_by_successor < batch_all
-
-    d = str(tmp_path / "sessions_tws")
-    cut = ev.select(F.percentile(F.col("ts").cast("double"), 0.5)).first()[0]
-    ev.filter(F.col("ts").cast("double") <= cut).coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-    _time.sleep(1.1)
-    ev.filter(F.col("ts").cast("double") > cut).coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
-            .withWatermark("ts", "1 minute")
-        )
-        out = sessionize_stream_tws(stream, "user_id", "ts", gap_sec=GAP)
-        qname = f"sesstws_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    got = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.table(qname).collect()
-    }
-    assert got >= closed_by_successor, "successor-closed sessions must match"
-    assert got <= batch_all, "no phantom sessions"
-    timer_closed = got - closed_by_successor
-    assert timer_closed, "event-time timers should close trailing sessions"
-
-
 def test_builtin_session_window_stream_subset_of_batch(spark, sf_dir, tmp_path):
     """F.session_window streaming agg (append + watermark): emitted
     closed sessions must agree with the batch session_window result."""
@@ -598,50 +396,6 @@ def test_document_sink_parity_with_collect(spark, sf_dir, tmp_path):
         for row in df.collect()
     )
     assert len(got) == len(expected)
-    assert got == expected
-
-
-def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
-    """dropDuplicatesWithinWatermark removes same-micro-batch and
-    cross-micro-batch re-deliveries: a doubled replay of events yields
-    exactly the batch-distinct row set."""
-    import time as _time
-
-    from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.dedup import dedup_stream
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select(F.col("ts").alias("event_time"), "event_id", "user_id", "value")
-    )
-    expected = {
-        (r.event_id, str(r.event_time))
-        for r in dedup_stream(ev, ["event_id"]).collect()
-    }
-
-    d = str(tmp_path / "dup_events")
-    # chunk 1: the events; chunk 2: the same events again (replay)
-    ev.coalesce(1).write.mode("append").parquet(d)
-    _time.sleep(1.1)
-    ev.coalesce(1).write.mode("append").parquet(d)
-
-    stream = (
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    # watermark far wider than the data's time span so the replayed
-    # micro-batch is still inside the dedup horizon
-    out = dedup_stream(stream, ["event_id"], watermark="365 days")
-    qname = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.event_id, str(r.event_time)) for r in spark.table(qname).collect()
-    }
     assert got == expected
 
 
