@@ -48,9 +48,15 @@ def i64_sql(x) -> str:
     return f"{int(x)}L"
 
 
+def str_sql(x) -> str:
+    """STRING literal. Spark SQL reads backslash escapes inside string
+    literals, so ``\\`` and ``'`` are escaped."""
+    return "'" + str(x).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def array_sql(values, elem=f64_sql) -> str:
-    """(nested) list of numbers as ONE literal ``array(...)`` SQL
-    string, each leaf written by ``elem``. Parsed JVM-side in one
+    """(nested) list of numbers or strings as ONE literal ``array(...)``
+    SQL string, each leaf written by ``elem``. Parsed JVM-side in one
     ``F.expr`` call, where nested F.lit/F.array would cost one py4j
     round-trip per element (~1 s per plan at 8×64)."""
     if isinstance(values, (list, tuple)):

@@ -4,8 +4,9 @@ per-micro-batch progress (rows, throughput, state size, durations).
 The reference stack watches its pipeline from the outside (Kafka UI +
 Mongo Express containers in docker-compose.yml); Spark exposes richer
 engine-side signals — input rows per trigger, processedRowsPerSecond,
-stateOperators numRowsTotal/numRowsUpdated/memoryUsedBytes and
-late rows numRowsDroppedByWatermark, per-phase durationMs —
+stateOperators numRowsTotal/numRowsUpdated/memoryUsedBytes, the state
+checkpoint's commitTimeMs and late rows numRowsDroppedByWatermark,
+per-phase durationMs —
 through the listener API. ``ProgressRecorder`` turns those into plain
 dicts (in memory, optionally appended to a JSONL file) so tests,
 dashboards, or alert rules can consume them without scraping logs.
@@ -53,6 +54,7 @@ class ProgressRecorder(StreamingQueryListener):
             "state_rows_total": sum(s.numRowsTotal for s in ops),
             "state_rows_updated": sum(s.numRowsUpdated for s in ops),
             "state_memory_bytes": sum(s.memoryUsedBytes for s in ops),
+            "state_commit_ms": sum(s.commitTimeMs for s in ops),
             "rows_dropped_by_watermark": sum(
                 s.numRowsDroppedByWatermark for s in ops
             ),

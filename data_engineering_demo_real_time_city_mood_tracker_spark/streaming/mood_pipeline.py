@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import davg, mood_label
+from data_engineering_demo_real_time_city_mood_tracker_spark.functions.vectors import array_sql, str_sql
 
 
 def unified_events(
@@ -31,9 +32,10 @@ def unified_events(
 ) -> DataFrame:
     """Union the three typed streams into one frame; weather/news rows
     fan out over the intersection list so a single grouped aggregation
-    can produce the per-(minute, intersection) joined view.
+    can produce the per-(minute, intersection) joined view. The list is
+    one parsed array literal: one py4j call, not one per intersection.
     """
-    fanout = F.explode(F.array(*[F.lit(i) for i in intersections]))
+    fanout = F.explode(F.expr(array_sql(intersections, elem=str_sql)))
     t = traffic.select(
         "event_time",
         F.col("intersection"),

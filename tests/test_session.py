@@ -1,5 +1,6 @@
 """session.py: the per-process zip-directory fix that every Python
-worker installs by importing the package."""
+worker installs by importing the package, the execution scopes, and the
+checkpoint file manager every stream of the session writes through."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ import sys
 import zipfile
 import zipimport
 from contextlib import contextmanager
+
+import pytest
 
 from data_engineering_demo_real_time_city_mood_tracker_spark import session
 from data_engineering_demo_real_time_city_mood_tracker_spark.session import ensure_shipped
@@ -149,3 +152,44 @@ def test_small_shuffle_scope_for_trainer_bpe_and_graph_callers(spark, monkeypatc
             assert spark.conf.get("spark.sql.shuffle.partitions") == "31"
             assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
         assert {k: spark.conf.get(k) for k in outer} == outer
+
+
+def _checkpoint_file_manager(spark, path):
+    """The manager Spark's own factory builds for a checkpoint at ``path``
+    from the session's Hadoop conf, as every stream's logs and state do."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+
+
+def test_stream_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    """Guard: checkpoint files are renamed through the FileSystem API.
+    Spark's default FileContext manager forks `readlink` four times per
+    checkpoint file on a host without the native Hadoop library."""
+    fm = _checkpoint_file_manager(spark, str(tmp_path))
+    assert fm.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_checkpoint_manager_refuses_to_overwrite_a_written_file(spark, tmp_path):
+    """HDFSMetadataLog writes each batch id once: an atomic create
+    without overwrite must fail at close, with the Hadoop
+    FileAlreadyExistsException the log catches, when the file already
+    exists, and leave the first file's content in place."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    fm = _checkpoint_file_manager(spark, str(tmp_path))
+    target = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = fm.createAtomic(target, False)
+    first.write(ord("a"))
+    first.close()
+    second = fm.createAtomic(target, False)
+    second.write(ord("b"))
+    with pytest.raises(Py4JJavaError, match="FAILED_RENAME_PATH") as err:
+        second.close()
+    exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_text() == "a"

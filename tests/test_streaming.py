@@ -7,12 +7,15 @@ from __future__ import annotations
 
 import datetime
 import json
+import os
+import re
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_demo_real_time_city_mood_tracker_spark.functions.scoring import WEATHER_CODES
+from data_engineering_demo_real_time_city_mood_tracker_spark.session import scoped_conf
 from data_engineering_demo_real_time_city_mood_tracker_spark.sources.batch import load_table
 from data_engineering_demo_real_time_city_mood_tracker_spark.streaming.mood_pipeline import (
     mood_from_unified,
@@ -97,6 +100,19 @@ def test_stream_matches_batch(spark, sf_dir, tmp_path):
         tuple(str(v) for v in row) for row in spark.table(qname).collect()
     }
     assert got == expected
+
+
+def test_unified_events_fans_out_names_that_need_sql_escapes(spark):
+    """The intersection list is one SQL array literal: quotes,
+    backslashes, commas and non-ASCII names come through unchanged."""
+    names = ["a'b", "c\\d", "e,f", "ümlaut"]
+    ts = datetime.datetime(2025, 1, 1, 10, 0, 0)
+    traffic = spark.createDataFrame([], "event_time timestamp, intersection string, speed double")
+    weather = spark.createDataFrame([(ts, 20.0, "clear")], "event_time timestamp, temp double, weather string")
+    news = spark.createDataFrame([(ts, "neutral")], "event_time timestamp, sentiment string")
+    got = unified_events(traffic, weather, news, names).select("kind", "intersection").collect()
+    for kind in ("weather", "news"):
+        assert sorted(r.intersection for r in got if r.kind == kind) == sorted(names)
 
 
 def test_stream_append_mode_with_watermark(spark, sf_dir, tmp_path):
@@ -633,6 +649,58 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == 80
 
 
+def _checkpoint_names(chk_dir):
+    """Relative paths of every file under a checkpoint, UUIDs normalised."""
+    uid = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+    return sorted(
+        uid.sub("<uuid>", os.path.relpath(os.path.join(d, f), chk_dir))
+        for d, _dirs, files in os.walk(chk_dir)
+        for f in files
+    )
+
+
+def test_checkpoint_managers_write_the_same_files(spark, sf_dir, tmp_path):
+    """The session's FileSystem checkpoint manager leaves exactly the
+    files Spark's default FileContext manager does (logs, state deltas,
+    checksums, Hadoop's .crc files) over a multi-trigger mood replay,
+    and the replay emits the same rows."""
+    traffic, weather, news = _typed_frames(spark, sf_dir)
+    dirs = {}
+    for name, df in [("traffic", traffic), ("weather", weather), ("news", news)]:
+        d = str(tmp_path / name)
+        df.repartitionByRange(3, "event_time").write.parquet(d)
+        dirs[name] = (d, df.schema)
+
+    def replay(tag):
+        streams = {
+            name: spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
+            for name, (d, schema) in dirs.items()
+        }
+        out = mood_stream(streams["traffic"], streams["weather"], streams["news"], INTERSECTIONS)
+        qname = f"ckpt_{tag}_{uuid.uuid4().hex[:8]}"
+        chk = str(tmp_path / f"chk_{tag}")
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(qname)
+            .option("checkpointLocation", chk)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        assert q.lastProgress["batchId"] >= 2, "expected one trigger per input file"
+        return _checkpoint_names(chk), sorted(str(r) for r in spark.table(qname).collect())
+
+    names, rows = replay("filesystem")
+    file_context = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    with scoped_conf(spark, {"spark.sql.streaming.checkpointFileManagerClass": file_context}):
+        ref_names, ref_rows = replay("filecontext")
+    assert any(n.startswith("state/") and n.endswith(".delta") for n in names)
+    assert any(n.endswith(".crc") for n in names)
+    assert names == ref_names
+    assert rows and rows == ref_rows
+
+
 def test_progress_recorder_captures_metrics(spark, sf_dir, tmp_path):
     """the listener records per-batch input rows, throughput, and
     state-operator size for a stateful query — the engine-side
@@ -683,6 +751,9 @@ def test_progress_recorder_captures_metrics(spark, sf_dir, tmp_path):
     # one in-watermark pass over the table: no row is late
     assert all(p["rows_dropped_by_watermark"] == 0 for p in rec.progress)
     assert all("triggerExecution" in p["duration_ms"] for p in fed)
+    assert all(
+        isinstance(p["state_commit_ms"], int) and p["state_commit_ms"] >= 0 for p in fed
+    )
     with open(jsonl) as fh:
         lines = [json.loads(line) for line in fh]
     assert len(lines) == len(rec.progress)
