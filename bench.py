@@ -87,8 +87,10 @@ def time_queries(
 ) -> tuple[dict[str, float], dict[str, dict]]:
     """Per-query minimum over ``repeat`` passes of the timed region
     (builder call + noop save), and the layer split of that fastest
-    pass: construct vs exec seconds, and the Spark jobs, stages and
-    tasks the query ran end to end (read from its job group)."""
+    pass: construct vs exec seconds, the Spark jobs, stages and tasks
+    the query ran end to end (read from its job group), and the
+    generated classes Janino compiled in the timed region and the time
+    it took (nonzero on a later pass: generated code was rebuilt)."""
     sc = spark.sparkContext
     if plans_dir:
         os.makedirs(plans_dir, exist_ok=True)
@@ -98,11 +100,13 @@ def time_queries(
         for name in names:
             group = f"bench:{rep}:{name}"
             sc.setJobGroup(group, name)
+            codegen0 = _codegen(sc)
             t0 = time.time()
             df = QUERIES[name](spark, sf_dir)
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
+            codegen1 = _codegen(sc)
             sc.setJobGroup(None, None)
             dt = round(t2 - t0, 3)
             if name not in timings or dt < timings[name]:
@@ -113,6 +117,8 @@ def time_queries(
                     "construct_sec": round(t1 - t0, 3),
                     "exec_sec": round(t2 - t1, 3),
                     **_job_counts(sc, group),
+                    "codegen_ms": round((codegen1[0] - codegen0[0]) / 1e6, 1),
+                    "codegen_classes": codegen1[1] - codegen0[1],
                 }
             if plans_dir and rep == 0:
                 plan = sc._jvm.PythonSQLUtils.explainString(
@@ -131,9 +137,23 @@ def time_queries(
     return timings, layers
 
 
+def _codegen(sc) -> tuple[int, int]:
+    """Janino compile time (ns) and compiled classes so far in the JVM:
+    both grow only on a miss of Spark's generated-code cache."""
+    jvm = sc._jvm
+    return (
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime(),
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
+    )
+
+
 def _job_counts(sc, group: str) -> dict[str, int]:
     """Jobs of ``group`` and the stages and tasks they ran (skipped
-    stages, which reuse an earlier shuffle, are not counted)."""
+    stages, which reuse an earlier shuffle, are not counted). The
+    listener bus is drained first: the status tracker is fed by it, and
+    a job's last stage and task events may still be queued when the
+    query's action returns."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     job_ids = tracker.getJobIdsForGroup(group)
     n_stages = n_tasks = 0

@@ -25,6 +25,8 @@ def test_time_queries_reports_minima_and_layers(spark, sf_dir):
         assert abs(row["construct_sec"] + row["exec_sec"] - timings[name]) <= 0.0015
         assert row["n_jobs"] >= 1
         assert row["n_tasks"] >= row["n_stages"] >= 1
+        assert list(row)[-2:] == ["codegen_ms", "codegen_classes"]
+        assert row["codegen_classes"] >= 0 and row["codegen_ms"] >= 0
 
 
 def test_stream_probe_reports_throughput_and_stops_on_timeout(spark, sf_dir, monkeypatch):

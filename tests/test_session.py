@@ -1,6 +1,7 @@
 """session.py: the per-process zip-directory fix that every Python
-worker installs by importing the package, the execution scopes, and the
-checkpoint file manager every stream of the session writes through."""
+worker installs by importing the package, the execution scopes, the
+checkpoint file manager every stream of the session writes through, and
+the size of the JVM's generated-code cache."""
 
 from __future__ import annotations
 
@@ -193,3 +194,29 @@ def test_checkpoint_manager_refuses_to_overwrite_a_written_file(spark, tmp_path)
     exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
     assert exists.isInstance(err.value.java_exception)
     assert (tmp_path / "0").read_text() == "a"
+
+
+def _codegen_compilations(spark) -> int:
+    """Classes Janino has compiled in this JVM: one per miss of Spark's
+    JVM-global generated-code cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_holds_more_than_the_default_100_classes(spark):
+    """Guard: a working set of 120 generated classes is compiled once.
+    Each query inlines its literal, so each compiles its own class; a
+    100-entry LRU cycled over 120 entries misses on every access and
+    the second round would compile all of them again."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_MAX_ENTRIES
+    )
+    queries = [spark.range(1).select(F.col("id") + F.lit(i)) for i in range(120)]
+    for q in queries:
+        q.collect()
+    before = _codegen_compilations(spark)
+    for q in queries:
+        q.collect()
+    assert _codegen_compilations(spark) - before == 0
